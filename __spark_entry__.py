@@ -5,19 +5,10 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-Families:
-- pipeline_*   : the mimeograph extraction chain (SURVEY.md §2.1-2.2)
-                 over the derived interleaved corpus
-- relational   : standard operator categories (§2.4) on the TPC-H-ish
-                 tables — joins, windows, rollups, set ops, sessions
-- training-data: dedup (exact/minhash/LSH/simhash/embedding-cosine),
-                 similarity search (brute cosine / multi-probe LSH),
-                 text analysis (incl. UDAF percentiles + UDTF
-                 chunking), multimodal decode/frame-sample
-
-Every registered query has a DuckDB oracle — including the multimodal
-payloads, whose synthetic byte streams are deliberately closed-form
-over string md5 so SQL can replay them.
+The queries are the mimeograph extraction chain (SURVEY.md §2.1-2.2)
+over the derived interleaved corpus: the full pipeline, its branch
+decision, the span derivation, the page-level OCR fan-out and the
+interleaved example assembly.  Every one has a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -29,61 +20,21 @@ from pyspark.sql import functions as F
 
 from mimeograph_spark import sql_oracles
 from mimeograph_spark.corpus import derive_documents
-from mimeograph_spark.cacheutil import unpersist_deps
-from mimeograph_spark.functions.dedup import (
-    decontaminate,
-    exact_duplicates,
-    lsh_candidate_pairs,
-    resolve_clusters,
-    simhash_near_dups,
-    with_minhash,
-    with_simhash,
-)
-from mimeograph_spark.functions.multimodal import (
-    decode_metadata,
-    extract_features,
-    frame_sample,
-    resize_media,
-    with_media_blob,
-)
-from mimeograph_spark.functions.similarity import (
-    brute_force_topk,
-    embedding_near_dups,
-    ivf_topk,
-    lsh_topk,
-)
-from mimeograph_spark.functions.textstats import (
-    quality_percentiles_by_lang,
-    token_chunks_udtf_df,
-    with_textstats,
-)
-from mimeograph_spark.operators.asof import asof_join
-from mimeograph_spark.operators.hypertable import hypertable_rollup
-from mimeograph_spark.operators.rangejoin import binned_range_join
 from mimeograph_spark.operators.classify import (
     HAS_NATIVE,
     N_MEDIA,
     with_doc_class,
 )
 from mimeograph_spark.operators.ocr import ocr_page_udf
-from mimeograph_spark.plans import relational
-from mimeograph_spark.plans.pipeline import extract_flat
+from mimeograph_spark.plans.pipeline import assemble_interleaved, extract_flat
 from mimeograph_spark.schema import KIND_MEDIA
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return derive_documents(_read(spark, sf_dir, "documents"))
+    return derive_documents(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
-
-# ---------------------------------------------------------------------------
-# Pipeline family
-# ---------------------------------------------------------------------------
 
 def q_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full chain: classify -> branch -> OCR (pandas UDF) -> stitch.
@@ -139,32 +90,6 @@ def q_ocr_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pages.withColumn("ocr_text", ocr_page_udf("media_ref"))
 
 
-# ---------------------------------------------------------------------------
-# Training-data family
-# ---------------------------------------------------------------------------
-
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operators/asof.py): each purchase event matched to
-    the same user's most recent at-or-before view event; verified
-    against DuckDB's NATIVE ASOF JOIN.  The right side is deduped per
-    (user_id, ts) keeping max event_id — mirrored in the oracle — so
-    the tie rule at duplicate timestamps is pinned on both engines
-    (DuckDB ASOF picks arbitrarily among exact duplicates)."""
-    ev = _read(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("event_id"))
-    )
-    return asof_join(
-        purchases, views, time_col="ts", by=["user_id"],
-        value_cols=["event_id", "ts"],
-    )
-
-
 def q_interleaved_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-ready interleaved example assembly — the deliverable of
     an interleaved text+media corpus: per document, spans in offset
@@ -173,1807 +98,7 @@ def q_interleaved_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside in the same order for the loader to resolve.  Pure
     array expressions per row (sort, indexed transform, filter) —
     zero shuffle, zero Python."""
-    from mimeograph_spark.plans.pipeline import assemble_interleaved
-
     return assemble_interleaved(_documents(spark, sf_dir))
-
-
-def q_cogroup_asof_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cogrouped applyInPandas (operators/cogroup.py): per-user
-    purchase/view as-of merge via pd.merge_asof inside one cogrouped
-    Arrow UDF — the UDF surface for per-key logic needing both sides
-    at once.  The declarative asof operator is the production twin;
-    the oracle is DuckDB's native ASOF LEFT JOIN aggregated to the
-    same per-user lag totals, verifying the Arrow plumbing
-    end-to-end."""
-    from mimeograph_spark.operators.cogroup import cogrouped_asof_lag
-
-    ev = _read(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts"
-    )
-    return cogrouped_asof_lag(purchases, views)
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned range join (operators/rangejoin.py): orders matched to
-    overlapping price bands by containment — an equi-join on bins, not
-    a nested loop.  Bands are generated deterministically so the
-    oracle rebuilds them with generate_series."""
-    bands = spark.range(0, 50).select(
-        F.col("id").alias("band_id"),
-        (F.col("id") * 10000.0).alias("lo"),
-        (F.col("id") * 10000.0 + 15000.0).alias("hi"),
-    )
-    orders = _read(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    joined = binned_range_join(
-        orders, bands, "o_totalprice", "lo", "hi", bin_width=10000.0
-    )
-    return joined.groupBy("band_id").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 4).alias("revenue"),
-    )
-
-
-def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-resolution continuous aggregate (operators/hypertable.py):
-    10min/1h/1d event rollups where each coarser level re-aggregates
-    the finer level's partials — raw data read once."""
-    return hypertable_rollup(_read(spark, sf_dir, "events"))
-
-
-def q_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-class distribution + Shannon entropy
-    (textstats.char_class_stats): the cheap junk detector — base64 /
-    hex / digit-heavy content skews the 5-class distribution long
-    before token heuristics notice.  Pure codegen, zero shuffle."""
-    from mimeograph_spark.functions.textstats import char_class_stats
-
-    return char_class_stats(
-        _read(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-
-def q_decontaminate_graded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graded decontamination (dedup.decontaminate_graded): longest
-    shared word n-gram per (train, eval) doc pair, probed n=4..13 —
-    near-verbatim leakage graded by window length instead of the flat
-    5-gram hit count of `decontaminate`.  Eval triples broadcast; the
-    corpus streams once (tokens staged, all probe lengths off one
-    flattened explode)."""
-    from mimeograph_spark.cacheutil import ensure_compute_parallelism
-    from mimeograph_spark.functions.dedup import decontaminate_graded
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    ev = docs.filter(F.col("doc_id") % 50 == 0)
-    train = ensure_compute_parallelism(
-        docs.filter(F.col("doc_id") % 50 != 0)
-    )
-    return decontaminate_graded(train, ev, n_min=4, n_max=13)
-
-
-def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source boilerplate detection
-    (functions/boilerplate.boilerplate_ngrams): top-5 word bigrams by
-    within-source document frequency among those present in >=20% of
-    the source's documents — the corpus-side template catch that
-    complements the HTML-side link-density strip.  One scan; integer
-    doc-count ranking; WindowGroupLimit top-k.  min_ratio=0.12 here,
-    not the 0.2 operator default: the synthetic corpus has no true
-    template text, and its bigram doc-frequency concentrates toward
-    its ~0.11 mean as sources grow (0.2 selects variance outliers
-    that exist at sf0.01 but vanish by sf0.1 — the empties-at-scale
-    trap), so the fixture probes just above the mean to keep rows at
-    every SF."""
-    from mimeograph_spark.functions.boilerplate import boilerplate_ngrams
-
-    return boilerplate_ngrams(
-        _read(spark, sf_dir, "documents").select("doc_id", "source", "text"),
-        min_ratio=0.12,
-    )
-
-
-MIXTURE_FRACTIONS = {"en": 0.5, "de": 0.125, "es": 0.125, "fr": 0.125,
-                     "zh": 0.125}
-
-
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-mixture quota sampling (sampling.mixture_sample):
-    a 20%-of-corpus sample whose language composition is pinned to
-    50% en / 12.5% each remaining — integer quotas off one corpus
-    count, membership = the md5-order prefix per language, exactly
-    reproducible on any partitioning and in DuckDB."""
-    from mimeograph_spark.functions.sampling import mixture_sample
-
-    return mixture_sample(
-        _read(spark, sf_dir, "documents").select("doc_id", "lang"),
-        MIXTURE_FRACTIONS,
-        target_ratio=0.2,
-    )
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-global line-level dedup (dedup.line_dedup) — the C4
-    recipe: a line that repeats anywhere in the corpus survives only
-    at its first (doc, position) occurrence.  The synthetic documents
-    are single-line, so the fixture plants a 5-line page per doc —
-    own text, a whitespace-only line (dropped), a corpus-wide banner
-    (survives once, in the min doc), a footer shared per doc_id%7
-    (survives once per variant), then the own text again (intra-doc
-    repeat, dropped) — covering all three dedup scenarios with
-    deterministic expected outcomes.  Output hashes clean_text so the
-    driver's value compare covers the re-joined surviving lines, not
-    just the counts."""
-    from mimeograph_spark.functions.dedup import line_dedup
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.col("text"),
-            F.lit("   "),
-            F.lit("Subscribe to our newsletter for updates"),
-            F.concat(
-                F.lit("(c) example.org mirror "),
-                (F.col("doc_id") % F.lit(7)).cast("string"),
-            ),
-            F.col("text"),
-        ).alias("text"),
-    )
-    out = line_dedup(planted)
-    return out.select(
-        "doc_id",
-        "n_lines",
-        "n_kept",
-        F.md5("clean_text").alias("clean_md5"),
-    )
-
-
-def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM quality score (textstats.unigram_logprob): mean
-    token log-prob per document under the corpus's own unigram model
-    — the perplexity-style junk signal next to the Gopher rules.  One
-    corpus scan (persisted token frame), broadcast vocab join,
-    integer micro-nat arithmetic for cross-engine exactness."""
-    from mimeograph_spark.functions.textstats import unigram_logprob
-
-    return unigram_logprob(
-        _read(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection/redaction (functions/pii.pii_scrub): emails,
-    IPv4s, SSN-shaped ids, phone numbers, and long digit runs each
-    replaced by a typed placeholder, with per-class counts as the
-    audit side channel.  The testdata contains no organic PII, so the
-    fixture plants one instance of every class per document,
-    deterministically from doc_id (email local-part and IP octet
-    derive from doc_id/md5) — the oracle plants the identical text.
-    Output hashes the redacted text (md5, the shared hash) so the
-    driver's value compare covers the full redaction, not just the
-    counts."""
-    from mimeograph_spark.functions.pii import pii_scrub
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    octet = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 256
-    ).cast("string")
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com from 10.0."),
-            octet,
-            F.lit(".7 ssn 123-45-6789 card 4111222233334444"),
-            F.lit(" call +1 (555) 867-5309"),
-        ).alias("text"),
-    )
-    out = pii_scrub(planted)
-    return out.select(
-        "doc_id",
-        F.md5("redacted").alias("redacted_md5"),
-        "n_email", "n_ipv4", "n_ssn", "n_phone", "n_id", "n_pii",
-    )
-
-
-def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-resolution candidate pairs (dedup.fuzzy_name_pairs):
-    distinct part names within Levenshtein distance 3, blocked by
-    4-char prefix UNION 4-char reversed prefix (+ length band) — run
-    over the names plus a deterministic typo'd copy (first char ->
-    'x').  The first-char typo is exactly the edit a prefix-only
-    block can never see, so each original<->typo pair in the output
-    is direct evidence the suffix blocking pass works (the pairs
-    share their reversed prefix).  Oracle-exact: DuckDB's levenshtein
-    is the same unit-cost edit distance."""
-    from mimeograph_spark.functions.dedup import fuzzy_name_pairs
-
-    part = _read(spark, sf_dir, "part").select("p_name")
-    typo = part.select(
-        F.concat(F.lit("x"), F.expr("substr(p_name, 2)")).alias("p_name")
-    )
-    return fuzzy_name_pairs(part.unionByName(typo), "p_name")
-
-
-def q_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Re-aggregatable HLL distinct-count rollup
-    (operators/hypertable.hypertable_distinct_rollup): 10min/1h/1d
-    distinct users per event_type where coarse levels UNION the finer
-    level's sketches — distinct is not summable, sketches are; raw
-    ids are read once.  Rows-only driver check: sketch binaries (and
-    their estimates) aren't replayable in DuckDB SQL; accuracy (<=5%
-    vs exact at every level) and the single-raw-scan plan are pinned
-    by tests/test_functions.py."""
-    from mimeograph_spark.operators.hypertable import (
-        hypertable_distinct_rollup,
-    )
-
-    return hypertable_distinct_rollup(_read(spark, sf_dir, "events"))
-
-
-def q_sketch_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-bearing driver sibling of `sketch_rollup` (which is
-    rows-only because sketch binaries aren't DuckDB-replayable): for
-    every (resolution, window, event_type) cell the HLL estimate from
-    the rolled-up sketches is compared against the EXACT distinct
-    count computed in the same query, emitting the exact count plus a
-    within-5% boolean.  The oracle recomputes the exact counts and
-    emits TRUE — the hash matches iff every estimate is inside the
-    tolerance AND the rollup's cell structure (windows, keys) is
-    exactly right.  The FULL join makes structural drift visible:
-    a cell present on only one side surfaces a NULL and fails the
-    hash."""
-    from mimeograph_spark.operators.hypertable import (
-        hypertable_distinct_rollup,
-    )
-
-    events = _read(spark, sf_dir, "events")
-    est = hypertable_distinct_rollup(events)
-    exact = None
-    for res in ("10 minutes", "1 hour", "1 day"):
-        e = (
-            events.groupBy(F.window("ts", res).alias("w"), "event_type")
-            .agg(F.count_distinct("user_id").alias("exact_distinct"))
-            .select(
-                F.lit(res).alias("resolution"),
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "exact_distinct",
-            )
-        )
-        exact = e if exact is None else exact.unionByName(e)
-    return est.join(
-        exact, ["resolution", "window_start", "event_type"], "full"
-    ).select(
-        "resolution",
-        "window_start",
-        "event_type",
-        "exact_distinct",
-        (
-            F.abs(
-                F.col("approx_distinct").cast("double")
-                / F.col("exact_distinct")
-                - 1.0
-            )
-            <= 0.05
-        ).alias("within_5pct"),
-    )
-
-
-def q_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stats = with_textstats(_read(spark, sf_dir, "documents"))
-    return stats.select(
-        "doc_id", "n_tokens", "n_subword_tokens", "punct_ratio",
-        "stopword_ratio", "quality", "lang_pred", "fingerprint",
-    )
-
-
-def q_html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML main-content extraction (functions/html_extract): strip
-    script/style, segment into blocks, keep long link-sparse blocks
-    (readability-style text/link-density heuristics), with discarded
-    visible chars accounted.  Pages are synthesized closed-form around
-    each document's text so the DuckDB oracle replays byte-for-byte.
-    Pure codegen — zero Python, one pass per document."""
-    from mimeograph_spark.functions.html_extract import (
-        extract_main_content,
-        synth_html,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    page = docs.select(
-        "doc_id", synth_html(F.col("doc_id"), F.col("text")).alias("_html")
-    )
-    res = page.select(
-        "doc_id", extract_main_content(F.col("_html")).alias("r")
-    )
-    return res.select(
-        "doc_id",
-        "r.main_text",
-        "r.n_blocks_kept",
-        "r.n_blocks_total",
-        "r.boilerplate_chars",
-    )
-
-
-def q_html_scored_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Readability-SCORED main-content extraction
-    (extract_main_content_scored): additive block score of visible
-    chars minus 3x link chars, +/-30 for positive/negative DOM hints
-    (<article>/<main>/content-ish class names vs <nav>/<footer>/
-    <aside>/ad-ish) — the weighting real boilerplate removers use,
-    vs the hard cutoffs of `html_main_content`.  Same zero-Python
-    single-pass execution shape."""
-    from mimeograph_spark.functions.html_extract import (
-        extract_main_content_scored,
-        synth_html,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    page = docs.select(
-        "doc_id", synth_html(F.col("doc_id"), F.col("text")).alias("_html")
-    )
-    res = page.select(
-        "doc_id", extract_main_content_scored(F.col("_html")).alias("r")
-    )
-    return res.select(
-        "doc_id",
-        "r.main_text",
-        "r.n_blocks_kept",
-        "r.n_blocks_total",
-        "r.boilerplate_chars",
-        "r.top_score",
-    )
-
-
-def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layout analysis (operators/layout.py): reconstruct reading
-    order from word-box geometry — largest-gap column detection (one
-    X-Y-cut level) then (column, y, x) ordering, all per-doc windows.
-    Word boxes are synthesized deterministically (even docs
-    two-column, odd single-column) so the oracle replays geometry AND
-    recovery; a pytest separately pins text_rebuilt == original."""
-    from mimeograph_spark.operators.layout import (
-        reading_order,
-        synth_word_boxes,
-    )
-
-    docs = (
-        _read(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.length(F.trim("text")) > 0)
-    )
-    ordered = reading_order(synth_word_boxes(docs))
-    return ordered.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        (F.max("col") + 1).cast("long").alias("n_columns"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "word"))),
-                lambda s: s["word"],
-            ),
-            " ",
-        ).alias("text_rebuilt"),
-    )
-
-
-def q_curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation — the composed filter a training-data
-    pipeline actually ships: keep a document iff it is (a) the
-    canonical of its exact-duplicate group (min doc_id per normalized
-    fingerprint), (b) quality-scored >= 0.6, (c) predicted English,
-    (d) 5..2000 tokens.  Runs over documents UNION a shifted copy so
-    the dedup leg provably drops rows.  One textstats pass + one
-    window — no joins, one shuffle on the fingerprint."""
-    from pyspark.sql import Window
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    shifted = docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    stats = with_textstats(docs.unionByName(shifted))
-    w = Window.partitionBy("fingerprint")
-    return (
-        stats.withColumn("_canon", F.min("doc_id").over(w))
-        .filter(
-            (F.col("doc_id") == F.col("_canon"))
-            & (F.col("quality") >= 0.6)
-            & (F.col("lang_pred") == "en")
-            & F.col("n_tokens").between(5, 2000)
-        )
-        .select("doc_id", "lang_pred", "quality", "n_tokens")
-    )
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (dedup.decontaminate): train docs
-    sharing any distinct 5-gram with the pseudo-eval partition
-    (doc_id % 50 == 0).  Eval gram set is broadcast; the corpus
-    streams once — the only shuffle is the per-doc match count."""
-    from mimeograph_spark.cacheutil import ensure_compute_parallelism
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    ev = docs.filter(F.col("doc_id") % 50 == 0)
-    # the gram/md5 stage is CPU-bound; a single small input split
-    # would otherwise run it on one core (no-op at real split counts)
-    train = ensure_compute_parallelism(
-        docs.filter(F.col("doc_id") % 50 != 0)
-    )
-    return decontaminate(train, ev, n=5)
-
-
-def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split + 20% eval subsample
-    (functions/sampling.py): hash-based membership, reproducible on
-    any cluster size / partitioning — unlike seeded RNG sampling,
-    whose output changes with partition layout.  Output: per (split,
-    lang) doc counts, chars, and the subsample count."""
-    from mimeograph_spark.functions.sampling import hash_bucket, with_split
-
-    docs = _read(spark, sf_dir, "documents")
-    split = with_split(docs, id_col="doc_id")
-    sampled = hash_bucket(F.col("doc_id"), "sample") < 2000
-    return split.groupBy("split", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum(sampled.cast("long")).alias("n_sampled"),
-    )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (functions/packing.py): documents laid out
-    into 2048-token training sequences across 16 hash shards —
-    concat-with-separator then chop, the standard pretraining layout.
-    Per-doc (shard, seq_id, begin_offset, n_seqs), a pure function of
-    ids + token counts: no global window (one task per shard, shards
-    scale with the corpus), no RNG, identical on any cluster size."""
-    from mimeograph_spark.functions.packing import pack_sequences
-    from mimeograph_spark.functions.textstats import token_count
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.withColumn("n_tokens", token_count(F.col("text")))
-    packed = pack_sequences(docs, budget=2048, n_shards=16)
-    return packed.select(
-        "doc_id", "shard", "seq_id", "begin_offset", "n_seqs"
-    )
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition quality signals (functions/repetition.py) — the
-    Gopher-rule family: unique-token fraction (pure array codegen, no
-    shuffle), top word-bigram with deterministic tie-break, duplicate
-    bigram/trigram occurrence fractions.  Bigrams and trigrams are
-    tagged and unioned before ONE (doc, kind, gram) aggregation."""
-    from mimeograph_spark.cacheutil import ensure_compute_parallelism
-    from mimeograph_spark.functions.repetition import repetition_stats
-
-    docs = ensure_compute_parallelism(
-        _read(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    return repetition_stats(docs)
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language balanced downsampling
-    (sampling.stratified_sample): keep ~50 docs per language via a
-    per-group hash threshold — a broadcast count aggregate plus a
-    pure per-row filter, fully parallel (the exact-cap window form
-    would serialize each language through one task at 100 TB).
-    Output: per-lang totals and kept counts."""
-    from mimeograph_spark.functions.sampling import stratified_sample
-
-    docs = _read(spark, sf_dir, "documents")
-    kept = stratified_sample(docs, "lang", cap=50)
-    totals = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    k = kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept"))
-    return totals.join(k, "lang", "left").select(
-        "lang",
-        "n_docs",
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-    )
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF terms per document (functions/tfidf.py):
-    (doc,term) and term aggregations with map-side partials, the
-    vocabulary-sized df table joined back (AQE broadcasts it), smooth
-    IDF, deterministic (score desc, term asc) ranking."""
-    from mimeograph_spark.functions.tfidf import tfidf_top_terms
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return tfidf_top_terms(docs, k=3)
-
-
-def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-language length percentiles
-    (functions/quantiles.py): rank-arithmetic percentile_cont over a
-    partitioned disk-spilling sort — NOT Spark's percentile()
-    aggregate, which buffers each group in memory and dies first at
-    100 TB.  The oracle is DuckDB's native quantile_cont."""
-    from mimeograph_spark.functions.quantiles import exact_percentiles
-
-    docs = _read(spark, sf_dir, "documents")
-    return exact_percentiles(docs, "n_chars", "lang")
-
-
-def q_zorder_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton z-values (sources/zorder.py) of (doc_id, n_chars) —
-    the key behind the multi-dimensional file layout
-    (write_zordered); pure shift/and codegen, bit-identical across
-    engines.  The layout's pruning effect is pinned separately by
-    tests/test_plans.py over real parquet footers."""
-    from mimeograph_spark.sources.zorder import zvalue
-
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        zvalue(F.col("doc_id"), F.col("n_chars"), bits=16)
-        .cast("long")
-        .alias("z"),
-    )
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling without replacement
-    (sampling.weighted_sample_topk): top-50 documents by
-    Efraimidis-Spirakis priority ln(u)/w with w = n_chars and u
-    hash-derived — sampling proportional to length, reproducible on
-    any cluster and replayed exactly by the oracle.  Physically a
-    TakeOrderedAndProject: per-partition heaps, no global sort."""
-    from mimeograph_spark.functions.sampling import weighted_sample_topk
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return weighted_sample_topk(docs, "n_chars", k=50)
-
-
-def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiling (functions/profile.py): null/distinct/minmax/
-    mode per column via ONE unpivot scan — N columns cost one pass
-    over the table plus a (col, val) shuffle, not N passes.  Profiled
-    as strings (collation-identical across engines; the oracle may
-    afford per-column scans, the Spark side may not)."""
-    from mimeograph_spark.functions.profile import profile_columns
-
-    orders = _read(spark, sf_dir, "orders")
-    return profile_columns(
-        orders, ("o_orderstatus", "o_orderpriority", "o_custkey")
-    )
-
-
-def q_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense global row index (functions/ids.py): rank of doc_id as
-    contiguous 0..n-1 via two-phase range-bucket ranking — the only
-    single-partition window runs over the 256-row bucket-count frame,
-    never the data (a bare row_number() OVER (ORDER BY ...) would
-    collapse 100 TB into one task).  The oracle IS that naive global
-    window, which DuckDB can afford at sf0.01."""
-    from mimeograph_spark.functions.ids import with_global_index
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    return with_global_index(docs, "doc_id").select("doc_id", "global_idx")
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured ingestion: a JSON payload column (synthesized
-    closed-form from the flat columns) parsed with an explicit schema
-    via from_json, nested-field extraction, then aggregation.  The
-    oracle aggregates the RAW columns directly, so this checks the
-    whole JSON round-trip (serialize -> parse -> extract) end-to-end
-    against independent ground truth."""
-    docs = _read(spark, sf_dir, "documents")
-    js = F.concat(
-        F.lit('{"id": '),
-        F.col("doc_id").cast("string"),
-        F.lit(', "lang": "'),
-        F.col("lang"),
-        F.lit('", "meta": {"chars": '),
-        F.col("n_chars").cast("string"),
-        F.lit(', "source": "'),
-        F.col("source"),
-        F.lit('"}}'),
-    )
-    parsed = docs.select(
-        F.from_json(
-            js,
-            "id BIGINT, lang STRING, "
-            "meta STRUCT<chars: BIGINT, source: STRING>",
-        ).alias("j")
-    )
-    return parsed.groupBy(F.col("j.lang").alias("lang")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("j.meta.chars").alias("total_chars"),
-        F.max("j.id").alias("max_id"),
-        F.countDistinct("j.meta.source").cast("long").alias("n_sources"),
-    )
-
-
-def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VariantType round-trip (Spark 4 semi-structured type): the
-    same synthesized JSON payload as `json_extract`, but parsed into
-    an open VARIANT (parse_json) and field-extracted with typed
-    variant_get paths instead of a fixed from_json schema — the
-    schema-on-read path for payloads whose shape drifts.  Shares
-    json_extract's oracle: the aggregation over raw columns is
-    independent ground truth for the whole serialize -> parse ->
-    extract chain."""
-    docs = _read(spark, sf_dir, "documents")
-    js = F.concat(
-        F.lit('{"id": '),
-        F.col("doc_id").cast("string"),
-        F.lit(', "lang": "'),
-        F.col("lang"),
-        F.lit('", "meta": {"chars": '),
-        F.col("n_chars").cast("string"),
-        F.lit(', "source": "'),
-        F.col("source"),
-        F.lit('"}}'),
-    )
-    v = docs.select(F.parse_json(js).alias("v"))
-    return v.groupBy(
-        F.try_variant_get("v", "$.lang", "string").alias("lang")
-    ).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.try_variant_get("v", "$.meta.chars", "bigint")).alias(
-            "total_chars"
-        ),
-        F.max(F.try_variant_get("v", "$.id", "bigint")).alias("max_id"),
-        F.countDistinct(
-            F.try_variant_get("v", "$.meta.source", "string")
-        ).cast("long").alias("n_sources"),
-    )
-
-
-def q_map_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapType round-trip: per-user event-type counts packed into a
-    map column (map_from_entries), filtered with map_filter
-    (cnt >= 3), then exploded back to rows alongside the pre-filter
-    map size — exercises the map construction/HOF/explode surface the
-    other queries don't touch."""
-    ev = _read(spark, sf_dir, "events")
-    per = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    maps = per.groupBy("user_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("event_type", "cnt"))
-        ).alias("m")
-    )
-    exploded = maps.select(
-        "user_id",
-        F.size("m").cast("long").alias("n_types"),
-        F.explode(F.map_filter("m", lambda k, v: v >= 3)),
-    )
-    return exploded.select(
-        "user_id",
-        "n_types",
-        F.col("key").alias("event_type"),
-        F.col("value").alias("cnt"),
-    )
-
-
-def q_udaf_quality_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom grouped aggregate (UDAF) via applyInPandas: per-language
-    quality percentiles — SURVEY §2.4 UDF/UDAF/UDTF surface."""
-    return quality_percentiles_by_lang(_read(spark, sf_dir, "documents"))
-
-
-def q_udaf_arrow_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-native grouped aggregate (applyInArrow, the pandas-free
-    Spark 4 grouped-map API): same semantics as
-    udaf_quality_percentiles, groups arrive as pyarrow Tables — the
-    SAME oracle verifies both implementations row-for-row."""
-    from mimeograph_spark.functions.textstats import (
-        quality_percentiles_by_lang_arrow,
-    )
-
-    return quality_percentiles_by_lang_arrow(
-        _read(spark, sf_dir, "documents")
-    )
-
-
-def q_udtf_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF + LATERAL join (SURVEY §2.4 UDTF surface)."""
-    return token_chunks_udtf_df(_read(spark, sf_dir, "documents"))
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    shifted = docs.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    return exact_duplicates(docs.unionByName(shifted))
-
-
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = 8
-    mh = with_minhash(_read(spark, sf_dir, "documents"), k=k)
-    return mh.select(
-        "doc_id", *[F.col("minhash")[i].alias(f"mh{i}") for i in range(k)]
-    )
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return with_simhash(docs, "text").select("doc_id", "simhash")
-
-
-def q_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mimeograph_spark.cacheutil import ensure_compute_parallelism
-
-    docs = ensure_compute_parallelism(_read(spark, sf_dir, "documents"))
-    return lsh_candidate_pairs(docs, k=16, bands=4)
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairs -> clusters: resolve LSH near-dup pairs (jaccard >= 0.8)
-    into transitive connected components with one canonical per
-    cluster (dedup.resolve_clusters) — the keep-one-per-cluster
-    deliverable fuzzy dedup was missing.  Verified against a DuckDB
-    recursive-CTE transitive closure."""
-    from mimeograph_spark.cacheutil import ensure_compute_parallelism
-
-    docs = ensure_compute_parallelism(_read(spark, sf_dir, "documents"))
-    # Keep the operator's direct return: the _mimeo_persisted
-    # registration does not propagate to .filter() derivatives
-    # (cacheutil docstring), so unpersist must target raw_pairs.
-    raw_pairs = lsh_candidate_pairs(docs, k=16, bands=4)
-    pairs = raw_pairs.filter(F.col("jaccard") >= 0.8)
-    clusters = resolve_clusters(pairs)
-    # resolve_clusters materializes the edge list eagerly
-    # (localCheckpoint), so the LSH caches can be released right away.
-    unpersist_deps(raw_pairs)
-    return clusters
-
-
-def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (multi-table blocking) over documents
-    plus an id-shifted exact copy, so the corpus is guaranteed to
-    contain hamming-0 pairs alongside organic near-dups."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    shifted = docs.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    return simhash_near_dups(docs.unionByName(shifted))
-
-
-def q_simhash_cap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cap accounting ("no silent caps"): the drop-stats side output
-    of simhash_near_dups over documents plus a 3000-doc degenerate
-    clone block — the clones blow past max_block, and this query
-    surfaces exactly how many buckets/rows the cap discarded (on a
-    pathological corpus the pair output under-reports; this is the
-    signal that says so)."""
-    from mimeograph_spark.cacheutil import cap_stats
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    clones = spark.range(3000).select(
-        (F.col("id") + 2000000).alias("doc_id"),
-        F.lit(sql_oracles.CAP_STATS_CLONE_TEXT).alias("text"),
-    )
-    pairs = simhash_near_dups(docs.unionByName(clones))
-    return cap_stats(pairs)
-
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return brute_force_topk(emb, queries, k=5)
-
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table multi-probe LSH top-k: 6 independent hyperplane
-    tables, Hamming-radius-1 probing per table, union of candidates
-    (similarity.lsh_topk).  Measured recall 0.77 at ~20% candidate
-    budget on the bench corpus — up from 0.38 @ 15% for the old
-    1-table radius-2 point, and past IVF's 0.75 @ ~30% — because
-    L independent tables lift recall as 1-(1-p)^L while deeper
-    multiprobe flattens.  Corpus-side bucket fan-out is map-side
-    (the probe join is broadcast); duplicate candidates collapse in
-    one distinct on (query_id, vec_id, cosine)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return lsh_topk(
-        emb, queries, dim=64, n_planes=8, k=5, probe_radius=1,
-        n_tables=6,
-    )
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k via the PERSISTED index pair (similarity.
-    build_ivf_index + ivf_probe): Voronoi cells around a
-    k-means-refined centroid sample (3 Lloyd rounds) written
-    partitioned by cell, then the probe reads back only the nprobe
-    nearest cells (dynamic partition pruning).  nprobe=12 is the
-    default operating point — recall 0.75 at ~30% candidate budget on
-    the bench corpus (curve: 8/12/16 -> 0.66/0.75/0.83), vs 0.38 for
-    radius-2 LSH at ~15%."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/mimeograph_ivf/{tag}"
-    os.makedirs(path, exist_ok=True)
-    return ivf_topk(
-        _read(spark, sf_dir, "embeddings"),
-        k=5,
-        nprobe=12,
-        centroid_step=50,
-        dim=64,
-        refine_iters=3,
-        index_path=path,
-    )
-
-
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs over embeddings plus an
-    id-shifted exact copy (guaranteed cosine-1.0 duplicates), candidate
-    generation bucketed by hyperplane LSH."""
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    shifted = emb.select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-    )
-    return embedding_near_dups(emb.unionByName(shifted), dim=64)
-
-
-def _planted_url_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, url) with one planted URL per document, deterministic
-    from doc_id, covering every normalization rule — mixed-case
-    scheme/host, default vs non-default ports, two-level public
-    suffixes, trailing slashes, tracking params, unsorted params,
-    fragments.  The URL repeats every lcm(3,5,4,3,7,2) = 420 doc ids,
-    so any corpus beyond that size contains genuine canonical-URL
-    collisions for the dedup fixtures."""
-    did = F.col("doc_id")
-
-    def pick(m, *opts):
-        return F.element_at(
-            F.array(*[F.lit(o) for o in opts]),
-            (did % m + 1).cast("int"),
-        )
-
-    return _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            pick(3, "http", "https", "HTTP"),
-            F.lit("://WWW.Example"),
-            (did % 5).cast("string"),
-            pick(4, ".com", ".co.uk", ".org", ".com.au"),
-            pick(3, ":80", ":443", ":8080"),
-            F.lit("/A/b"),
-            (did % 7).cast("string"),
-            F.when(did % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-            F.when(did % 2 == 0, F.lit("?utm_campaign=c&z=9&a=1"))
-            .otherwise(F.lit("?b=2&a=1&fbclid=x")),
-            F.lit("#sec"),
-            (did % 3).cast("string"),
-        ).alias("url"),
-    )
-
-
-def q_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + registered-domain extraction
-    (functions/urls.normalize_urls).  The testdata has no URL column,
-    so the fixture plants one per doc covering every normalization
-    rule (see _planted_url_frame); the oracle re-implements the
-    normalization independently over the identical planted URL
-    (RE2 side), making this a semantics check, not an echo."""
-    from mimeograph_spark.functions.urls import normalize_urls
-
-    return normalize_urls(_planted_url_frame(spark, sf_dir))
-
-
-def q_url_dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-URL dedup keeping the best doc per URL
-    (functions/urls.url_dedup_best).  The planted URL repeats every
-    420 doc ids, so the sf0.01 corpus collapses ~500 docs onto 420
-    canonical URLs with real multi-doc groups; quality is an integer
-    md5-derived score so the arg-max (max over a (score, id) struct)
-    is value-exact on both engines."""
-    from mimeograph_spark.functions.urls import url_dedup_best
-
-    planted = _planted_url_frame(spark, sf_dir).select(
-        "doc_id",
-        "url",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 9, 8),
-                16,
-                10,
-            ).cast("long")
-            % 1000
-        ).alias("quality"),
-    )
-    return url_dedup_best(planted)
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental LSH dedup (functions/incremental.build_lsh_index +
-    lsh_increment): the corpus's first 90% of doc ids is indexed once,
-    then the newest 10% is deduped against the index and itself while
-    scanning only the delta (broadcast-delta probes, combined-count
-    bucket cap).  The oracle is the FULL-corpus LSH pair SQL
-    restricted to pairs touching a new doc — the equivalence the
-    incremental contract guarantees when new ids exceed indexed
-    ids."""
-    import hashlib
-
-    from mimeograph_spark.functions.incremental import (
-        build_lsh_index,
-        lsh_increment,
-    )
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/mimeograph_lshidx/{tag}"
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    cut = docs.agg(
-        F.floor((F.max("doc_id") * 9) / 10).cast("long").alias("_cut")
-    )
-    old = (
-        docs.crossJoin(F.broadcast(cut))
-        .filter(F.col("doc_id") <= F.col("_cut"))
-        .select("doc_id", "text")
-    )
-    new = (
-        docs.crossJoin(F.broadcast(cut))
-        .filter(F.col("doc_id") > F.col("_cut"))
-        .select("doc_id", "text")
-    )
-    build_lsh_index(old, path, k=16, bands=4)
-    return lsh_increment(spark, path, new, k=16, bands=4, update=False)
-
-
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shingle-containment near-dup pairs (dedup.containment_pairs):
-    C = |A∩B| / min(|A|,|B|) over distinct 3-gram shingle sets, exact
-    within a df-capped inverted index — catches contained documents
-    (quote expansion, reposts-with-wrapper) that symmetric Jaccard
-    under-scores as |A|/|B| and MinHash banding then misses."""
-    from mimeograph_spark.functions.dedup import containment_pairs
-
-    return containment_pairs(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        n=3, threshold=0.5, max_df=64,
-    )
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-graph PageRank (functions/linkgraph.pagerank), 5 rounds,
-    damping 0.85, over a planted edge list: each doc links to 3
-    md5-derived targets mod 520, so ids past the corpus range appear
-    only as destinations and exercise the dangling-mass path.  The
-    oracle unrolls the identical iteration as chained DuckDB CTEs
-    with the same per-round rounding (the determinism barrier both
-    engines share)."""
-    from mimeograph_spark.functions.linkgraph import pagerank
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    edges = docs.select(
-        "doc_id",
-        F.explode(F.array([F.lit(j) for j in range(3)])).alias("j"),
-    ).select(
-        F.col("doc_id").alias("src"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("doc_id"), F.col("j"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 520
-        ).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    return pagerank(edges, iterations=5, damping=0.85)
-
-
-def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hub/authority (functions/linkgraph.hits), 5 rounds,
-    L1-normalized, over the same planted md5 edge list as
-    `pagerank`.  Per-round rounding keeps both engines bit-identical;
-    the oracle unrolls the mutual recursion as chained CTEs."""
-    from mimeograph_spark.functions.linkgraph import hits
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    edges = docs.select(
-        "doc_id",
-        F.explode(F.array([F.lit(j) for j in range(3)])).alias("j"),
-    ).select(
-        F.col("doc_id").alias("src"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("doc_id"), F.col("j"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 520
-        ).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    return hits(edges, iterations=5)
-
-
-def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous label-propagation communities
-    (functions/linkgraph.lpa_communities), 4 rounds, min-label
-    tie-break, over a planted md5 edge list on 260 integer nodes
-    (src = h(doc_id) % 260, three dsts per doc).  Deterministic by
-    construction; the oracle unrolls the rounds as chained CTEs."""
-    from mimeograph_spark.functions.linkgraph import lpa_communities
-
-    def h(col: F.Column) -> F.Column:
-        return F.conv(
-            F.substring(F.md5(col.cast("string")), 1, 8), 16, 10
-        ).cast("long") % 260
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    edges = docs.select(
-        "doc_id",
-        F.explode(F.array([F.lit(j) for j in range(3)])).alias("j"),
-    ).select(
-        h(F.col("doc_id")).alias("src"),
-        h(F.concat_ws("#", F.col("doc_id"), F.col("j"))).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    return lpa_communities(edges, iterations=4)
-
-
-def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint overlap pairs (functions/winnow):
-    MOSS-style min-per-window selection over ordered 4-gram hashes
-    (guaranteed to catch any shared run of >= k+w-1 tokens), then
-    df-capped inverted-index pair counts — the local-overlap
-    detector MinHash's whole-document estimate cannot provide."""
-    from mimeograph_spark.functions.winnow import winnow_pairs
-
-    return winnow_pairs(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        k=4, w=4, min_shared=2, max_df=64,
-    )
-
-
-def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus Zipf-law fit (functions/textstats.zipf_fit): OLS of
-    ln(frequency) on ln(rank) over the term-frequency table, ranked
-    by the two-phase count-class scheme (no global window).  One row
-    (n_terms, slope, intercept, r2)."""
-    from mimeograph_spark.functions.textstats import zipf_fit
-
-    return zipf_fit(_read(spark, sf_dir, "documents"))
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    streams (functions/funnel.event_transitions): (src, dst,
-    n_transitions, prob) with ties broken by event_id and the row
-    normalizer broadcast (never a window over the tiny src key)."""
-    from mimeograph_spark.functions.funnel import event_transitions
-
-    return event_transitions(_read(spark, sf_dir, "events"))
-
-
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (similarity.pq_topk): m=8 subspace
-    codebooks of ksub=32 centroids (2 Lloyd rounds), micro-int ADC
-    shortlist of 100, exact cosine rerank to top-5.  The MEMORY axis
-    of the ANN trio: 256-byte vectors scan as 8-byte codes.  Recall
-    0.79 vs exact top-5 at 5% candidate budget on the bench corpus
-    (curve: 50->0.66, 100->0.79, 150->0.87, 200->0.91)."""
-    from mimeograph_spark.functions.similarity import pq_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return pq_topk(
-        emb, queries, dim=64, m=8, ksub=32, init_step=15, iters=2,
-        shortlist=100, k=5,
-    )
-
-
-def q_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-class precision/recall/F1 of the NB language classifier
-    (nbclassifier.classifier_eval over nb_train_predict): the
-    measurement half of the quality-classifier loop — per-class drift
-    is the canary that a retrained filter started eating a language.
-    Three vocabulary-sized aggregates, no windows."""
-    from mimeograph_spark.functions.nbclassifier import (
-        classifier_eval,
-        nb_train_predict,
-    )
-
-    preds = nb_train_predict(
-        _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    )
-    return classifier_eval(preds)
-
-
-def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank over the host-contracted page graph
-    (functions/linkgraph.weighted_pagerank): planted md5 page edges
-    on 2000 pages, pages mapped to 40 hosts by modulo, parallel
-    page edges collapsed to a weight — the Common Crawl domain-rank
-    shape, where link multiplicity is the signal unweighted PageRank
-    on the contracted graph would discard."""
-    from mimeograph_spark.functions.linkgraph import weighted_pagerank
-
-    def h(col: F.Column) -> F.Column:
-        return F.conv(
-            F.substring(F.md5(col.cast("string")), 1, 8), 16, 10
-        ).cast("long")
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    pages = docs.select(
-        "doc_id",
-        F.explode(F.array([F.lit(j) for j in range(4)])).alias("j"),
-    ).select(
-        (h(F.col("doc_id")) % 2000).alias("src"),
-        (h(F.concat_ws("@", F.col("doc_id"), F.col("j"))) % 2000).alias(
-            "dst"
-        ),
-    ).filter(F.col("src") != F.col("dst")).distinct()
-    hosts = (
-        pages.select(
-            (F.col("src") % 40).alias("src"),
-            (F.col("dst") % 40).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
-    )
-    return weighted_pagerank(hosts, iterations=5, damping=0.85)
-
-
-def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 length-3 event paths (functions/funnel.top_event_paths):
-    chained lead()s over one per-user window, map-side-combined path
-    counts, deterministic (n DESC, path ASC) top-k over the
-    vocabulary-bounded count frame."""
-    from mimeograph_spark.functions.funnel import top_event_paths
-
-    return top_event_paths(_read(spark, sf_dir, "events"))
-
-
-def q_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global triangle census (functions/linkgraph.triangle_stats)
-    over a planted md5 edge list: each doc contributes 4 random edges
-    between nodes hash(doc_id:j:u) % 400 and hash(doc_id:j:v) % 400,
-    so density grows with SF and triangles provably exist.  The
-    engine counts via degree-ordered wedge orientation (each triangle
-    found exactly once at its lowest-rank corner); the oracle counts
-    the same canonical edge set with the textbook u<v<w three-way
-    join — agreement across the two algorithms is the check.  All
-    counts are integers; only the clustering coefficient is FP,
-    rounded to 6."""
-    from mimeograph_spark.functions.linkgraph import triangle_stats
-
-    def _node(tag: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":", F.col("doc_id"), F.col("j"), F.lit(tag)
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 400
-        )
-
-    edges = (
-        _read(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.explode(F.array([F.lit(j) for j in range(4)])).alias("j"),
-        )
-        .select(_node("u").alias("src"), _node("v").alias("dst"))
-    )
-    return triangle_stats(edges)
-
-
-def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centroid-distance outlier scoring
-    (functions/similarity.embedding_outliers) over the embeddings
-    table: per vector, its L2 distance to the corpus mean vector, the
-    z-score of that distance, and an is_outlier flag at |z| >= 2.
-    Single persisted scan feeding three passes; mean vector and
-    (mu, sigma) ride broadcast 1-row crossJoins.  Both engines fold
-    the distance in index order and round dist/mu/sigma before the z
-    ratio, so values hash-match exactly."""
-    from mimeograph_spark.functions.similarity import embedding_outliers
-
-    return embedding_outliers(
-        _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-
-
-BLOCKLIST_PHRASES = (
-    "batch batch batch",
-    "hash scan",
-    "slow join",
-    "vector",
-    "merge slow part",
-)
-
-
-def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phrase-blocklist scrub (functions/blocklist.blocklist_filter,
-    scan mode): per doc the sorted blocklist phrases it contains as a
-    token-boundary sequence, their count, and keep = clean.  The
-    phrase list embeds as an array literal, so the plan is one narrow
-    scan with zero shuffles — the 100 TB shape for bounded policy
-    lists; mode="join" (token-anchor broadcast join) covers huge
-    lists and is pinned equal by test.  The matched-phrase array is
-    stringified for the driver canonicalizer (list cells are
-    unhashable under its pandas sort); the library API keeps the
-    array."""
-    from mimeograph_spark.functions.blocklist import blocklist_filter
-
-    out = blocklist_filter(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        list(BLOCKLIST_PHRASES),
-    )
-    return out.select(
-        "doc_id",
-        F.array_join("matched", ",").alias("matched"),
-        "n_matches",
-        "keep",
-    )
-
-
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed snapshot diff (functions/diffing.snapshot_diff) between
-    two deterministic views of the documents table: the 'old'
-    snapshot drops doc_id % 7 == 0, the 'new' snapshot drops
-    doc_id % 5 == 0 and edits the text of doc_id % 11 == 0 — so
-    added, removed, AND changed statuses all provably occur.  Each
-    side reduces to (key, md5 row hash) before the single full-outer
-    equi-join; unchanged rows never leave the executors."""
-    from mimeograph_spark.functions.diffing import snapshot_diff
-
-    docs = _read(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 7 != 0)
-    new = docs.filter(F.col("doc_id") % 5 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 11 == 0,
-            F.concat(F.col("text"), F.lit(" edited")),
-        ).otherwise(F.col("text")),
-    )
-    return snapshot_diff(
-        old, new, ["doc_id"], ["text", "lang", "source", "n_chars"]
-    )
-
-
-def q_source_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus composition report
-    (functions/composition.source_concentration): per-source doc and
-    char shares, Lorenz cumulative share, and a doc-level Gini of
-    document size computed with the two-phase rank (no global-window
-    single task).  All moments integer; the only FP is the final
-    ratios, rounded identically on both engines."""
-    from mimeograph_spark.functions.composition import (
-        source_concentration,
-    )
-
-    return source_concentration(
-        _read(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        )
-    )
-
-
-def q_trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stupid-backoff trigram LM score
-    (functions/textstats.trigram_backoff_logprob): counts come from
-    the even-doc_id train half, all docs are scored — so held-out
-    docs hit genuinely unseen trigrams and exercise the full backoff
-    chain (trigram -> alpha*bigram -> alpha^2*Laplace unigram floor).
-    Integer micro-nat rounding before the per-doc sum keeps both
-    engines hash-identical."""
-    from mimeograph_spark.functions.textstats import (
-        trigram_backoff_logprob,
-    )
-
-    return trigram_backoff_logprob(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        train_filter=F.col("doc_id") % 2 == 0,
-    )
-
-
-def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode normalization (functions/normalize.normalize_text)
-    over a planted fixture: docs gain a decomposed-accent suffix
-    (e + U+0301, doc_id % 3 == 0), a BEL control byte (doc_id % 4
-    == 0), and doubled spaces — so NFC composition, control strip,
-    and whitespace collapse all provably fire.  NFC runs as the one
-    Arrow-batched UDF (Spark has no builtin); DuckDB's utf8proc
-    nfc_normalize is the independent oracle for it."""
-    from mimeograph_spark.functions.normalize import normalize_text
-
-    planted = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                # decomposed e + combining acute, escaped so no
-                # literal combining char sits in source
-                F.lit("  cafe\u0301 "),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 4 == 0, F.lit("\x07x")
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return normalize_text(planted)
-
-
-def q_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa (functions/agreement.binary_agreement) between
-    two deterministic binary quality raters over documents: a
-    char-length rule (n_chars >= 120) and a token-count proxy
-    (>= 25 single-space tokens).  One map-side aggregation; every FP
-    input is an exact integer so kappa hash-matches."""
-    from mimeograph_spark.functions.agreement import binary_agreement
-
-    docs = _read(spark, sf_dir, "documents")
-    a = F.col("n_chars") >= 120
-    b = (
-        F.length("text")
-        - F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
-    ) >= 24
-    return binary_agreement(docs, a, b)
-
-
-def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust median/MAD outlier flags (functions/robust.mad_outliers)
-    on event values per event_type: modified z = 0.6745*(x-med)/MAD,
-    Iglewicz-Hoaglin 3.5 cut.  Two rank-arithmetic percentile passes
-    (partition-parallel per group), group stats broadcast back; the
-    DuckDB oracle uses quantile_cont, which matches the rank
-    arithmetic exactly."""
-    from mimeograph_spark.functions.robust import mad_outliers
-
-    return mad_outliers(
-        _read(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        )
-    )
-
-
-def q_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted index build (functions/search.inverted_postings):
-    term -> (df, ascending doc-id posting list), hapaxes dropped.
-    One tokenize scan + one groupBy(term); the posting list is the
-    value-hashed payload, so ordering inside it is part of the check.
-    The library API returns array<bigint>; the registered query
-    stringifies it (array_join) because the driver canonicalizer
-    pandas-sorts every column and list cells are unhashable — the
-    oracle mirrors with array_to_string."""
-    from mimeograph_spark.functions.search import inverted_postings
-
-    idx = inverted_postings(
-        _read(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    return idx.select(
-        "term",
-        "df",
-        F.array_join(F.col("postings").cast("array<string>"), ",").alias(
-            "postings"
-        ),
-    )
-
-
-BM25_TERMS = ("spark", "window", "vector")
-
-
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-10 (functions/search.bm25_topk) for a fixed
-    3-term query over the documents table: query-term filter before
-    the aggregation, corpus stats as one broadcast scalar row, top-k
-    via TakeOrderedAndProject.  Scores rounded to 6 decimals on both
-    engines (libm ulp absorption)."""
-    from mimeograph_spark.functions.search import bm25_topk
-
-    return bm25_topk(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        list(BM25_TERMS),
-        k=10,
-    )
-
-
-CMS_DEPTH, CMS_WIDTH = 4, 16
-
-
-def q_cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch frequency estimates (functions/sketches):
-    build a depth x width counter table over the whitespace token
-    stream, estimate every distinct term, and report estimate vs
-    exact count with the overcount delta.  Unlike the HLL rollup
-    (rows-only), the md5 bucket family is bit-identical in DuckDB so
-    the full value-hash oracle applies — including the one-sided
-    error guarantee (overcount >= 0 for every term).  width=16 is
-    deliberately narrow for the tiny test vocabulary so collisions
-    (and nonzero overcounts) actually occur."""
-    from mimeograph_spark.functions.sketches import cms_build, cms_estimate
-    from mimeograph_spark.functions.textstats import tokens
-
-    toks = (
-        _read(spark, sf_dir, "documents")
-        .select(
-            F.explode(
-                F.filter(tokens(F.col("text")), lambda t: t != "")
-            ).alias("term")
-        )
-        .persist()
-    )
-    counters = cms_build(toks, "term", depth=CMS_DEPTH, width=CMS_WIDTH)
-    est = cms_estimate(
-        counters, toks, "term", depth=CMS_DEPTH, width=CMS_WIDTH
-    ).withColumnRenamed("key", "term")
-    exact = toks.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_cnt")
-    )
-    return exact.join(est, "term").select(
-        "term",
-        "exact_cnt",
-        "cms_cnt",
-        (F.col("cms_cnt") - F.col("exact_cnt")).alias("overcount"),
-    )
-
-
-BLOOM_K, BLOOM_M_BITS = 4, 16384
-
-
-def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter decontamination (dedup.bloom_decontaminate): the
-    broadcast-bitset form of `decontaminate` — the eval partition's
-    distinct 5-grams collapse to a 16 Kibit bloom whose broadcast
-    cost is constant in the deny-set size, with zero false negatives
-    and a designed false-positive rate.  Sizing note: per-GRAM FPR is
-    amplified per-DOC by its ~50 distinct grams (union bound), so m
-    is sized ~37 bits/key here rather than the textbook 10 — at
-    sf0.01 that yields the 1 truly contaminated doc plus 4 observable
-    false positives (m=4096 floods to 243; the sweep is in the
-    docstring history).  Same eval split as `decontaminate`
-    (doc_id % 50 == 0); the md5 bucket family is bit-identical in
-    DuckDB, so even the false positives are value-hash checked."""
-    from mimeograph_spark.cacheutil import ensure_compute_parallelism
-    from mimeograph_spark.functions.dedup import bloom_decontaminate
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    ev = docs.filter(F.col("doc_id") % 50 == 0)
-    train = ensure_compute_parallelism(
-        docs.filter(F.col("doc_id") % 50 != 0)
-    )
-    return bloom_decontaminate(
-        train, ev, n=5, k=BLOOM_K, m_bits=BLOOM_M_BITS
-    )
-
-
-def q_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level overlap estimate (dedup.corpus_overlap): the
-    64-slot corpus MinHash (elementwise min over the gram stream, one
-    map-side-combined aggregation per corpus, shard-combinable) vs
-    the exact distinct-gram Jaccard between two OVERLAPPING
-    partitions (doc_id % 2 == 0 and % 3 == 0 — every 6th doc is in
-    both, so the gram sets genuinely intersect and the slot-agreement
-    estimate is non-degenerate).  The exact path is the one you'd
-    drop at 100 TB; the driver row value-checks BOTH, so the
-    estimate's error against exact is itself pinned."""
-    from mimeograph_spark.functions.dedup import corpus_overlap
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return corpus_overlap(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 3 == 0),
-        n=3,
-        k=64,
-    )
-
-
-FUNNEL_STEPS = ("signup", "view", "click", "purchase")
-
-
-def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (funnel.funnel_steps): users progressing
-    signup -> view -> click -> purchase IN ORDER within the first
-    three days (the window keeps per-user event counts low enough
-    that not everyone converts — the full 30-day corpus is uniform
-    and degenerately saturates every step).  One shuffle: per-user
-    sorted fold with a stage counter — no per-step self-join."""
-    from mimeograph_spark.functions.funnel import funnel_steps
-
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("ts") < F.lit("2024-01-04 00:00:00").cast("timestamp")
-    )
-    return funnel_steps(ev, list(FUNNEL_STEPS))
-
-
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle (funnel.retention_cohorts) over
-    purchase events in 3-day periods: users bucketed by first
-    purchase period, per-offset active share.  Integer day-bucket
-    arithmetic from a fixed epoch — no week-of-year locale traps —
-    and both shuffles key on user_id."""
-    from mimeograph_spark.functions.funnel import retention_cohorts
-
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    return retention_cohorts(ev, epoch="2024-01-01", period_days=3)
-
-
-HIST_QS = (0.5, 0.9, 0.99)
-
-
-def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable histogram quantiles (quantiles.histogram_quantiles)
-    over events.value, range [0, 500) x 128 bins, vs the exact
-    rank-arithmetic percentiles — one row with estimate, exact, and
-    the per-q error (bounded by one 3.91-wide bin).  The histogram is
-    the shard-summable sketch form; the exact twin is what it's
-    validated against."""
-    from mimeograph_spark.functions.quantiles import (
-        exact_percentiles,
-        histogram_quantiles,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("value")
-    hist = histogram_quantiles(ev, "value", 0.0, 500.0, bins=128, qs=HIST_QS)
-
-    def tag(q: float) -> str:
-        return f"p{q * 100:g}".replace(".", "_")
-
-    hrow = hist.groupBy().agg(
-        *[
-            F.max(
-                F.when(F.col("q") == q, F.col("hist_est"))
-            ).alias(f"h_{tag(q)}")
-            for q in HIST_QS
-        ]
-    )
-    exact = exact_percentiles(
-        ev.withColumn("_g", F.lit(1)), "value", "_g", qs=HIST_QS
-    ).select(
-        "n", *[F.col(tag(q)).alias(f"e_{tag(q)}") for q in HIST_QS]
-    )
-    return hrow.crossJoin(exact).select(
-        "n",
-        *[f"h_{tag(q)}" for q in HIST_QS],
-        *[f"e_{tag(q)}" for q in HIST_QS],
-        *[
-            F.round(
-                F.abs(F.col(f"h_{tag(q)}") - F.col(f"e_{tag(q)}")), 6
-            ).alias(f"err_{tag(q)}")
-            for q in HIST_QS
-        ],
-    )
-
-
-def q_resample_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled resampling with last-observation-carried-forward
-    (timeseries.resample_locf): 10-minute mean-value buckets per
-    event_type on a GENERATED dense grid (never shuffled out of the
-    data), LOCF via one ignore-nulls window per series.  Integer
-    epoch-second buckets — no calendar functions, DST-proof,
-    identical in DuckDB."""
-    from mimeograph_spark.functions.timeseries import resample_locf
-
-    return resample_locf(
-        _read(spark, sf_dir, "events"), bucket_secs=600
-    )
-
-
-def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus drift metrics (drift.distribution_drift): KL both ways,
-    Jensen-Shannon, and total variation between the even/odd doc_id
-    halves' smoothed unigram distributions — the train/serve-skew
-    check.  Every log argument is a ratio of integers and the sums
-    run in integer micro-nats, so the FP-summation-order trap never
-    fires cross-engine."""
-    from mimeograph_spark.functions.drift import distribution_drift
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return distribution_drift(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-    )
-
-
-def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-registered-domain curation profile with blocklist
-    (functions/urls.domain_stats): doc/distinct-URL counts and
-    quality mean/min/max per domain, two domains dropped by the
-    blocklist — the FineWeb-style domain-level quality pass.  The
-    planted URL corpus yields 20 registered domains (5 hosts x 4
-    suffixes); quality is the same integer md5 score as
-    url_dedup_best."""
-    from mimeograph_spark.functions.urls import domain_stats
-
-    planted = _planted_url_frame(spark, sf_dir).select(
-        "url",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 9, 8),
-                16,
-                10,
-            ).cast("long")
-            % 1000
-        ).alias("quality"),
-    )
-    return domain_stats(
-        planted, blocklist=("example0.com", "example1.co.uk")
-    )
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stride-windowed chunking (packing.chunk_documents, W=32 S=24):
-    every document cut into overlapping token chunks covering through
-    the last token; pure narrow codegen, zero shuffle."""
-    from mimeograph_spark.functions.packing import chunk_documents
-
-    return chunk_documents(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        window=32,
-        stride=24,
-    )
-
-
-def q_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deequ-style data-quality expectations
-    (functions/expectations.check_constraints) over orders: five
-    rules — not_null, unique, two range bounds, accepted values —
-    all computed in ONE scan/aggregation; the le-100 rule is planted
-    to FAIL so the violation counting itself is value-checked, not
-    just the all-green path."""
-    from mimeograph_spark.functions.expectations import check_constraints
-
-    return check_constraints(
-        _read(spark, sf_dir, "orders"),
-        [
-            ("not_null", "o_custkey", None),
-            ("unique", "o_orderkey", None),
-            ("ge", "o_totalprice", 0),
-            ("le", "o_totalprice", 100),
-            ("in", "o_orderstatus", ("O", "F", "P")),
-        ],
-    )
-
-
-def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k skew profiler (functions/profile.heavy_hitters)
-    over events.user_id: per-key count, corpus share, deterministic
-    rank, and the global max/mean skew factor — the diagnostic run
-    before deciding whether a join key needs salting.  Top-k is
-    TakeOrderedAndProject (no global sort); the summary scalars ride
-    a broadcast."""
-    from mimeograph_spark.functions.profile import heavy_hitters
-
-    return heavy_hitters(
-        _read(spark, sf_dir, "events").select("user_id"),
-        ["user_id"],
-        k=25,
-    )
-
-
-def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated bigram-LM score (textstats.bigram_logprob): mean
-    bigram log-prob per document under the corpus's own
-    Jelinek-Mercer bigram model — sharper than the unigram signal
-    (word-salad scores low even when each token is common).  One
-    corpus scan; unigram vocab broadcast, bigram table shuffled;
-    integer micro-nat arithmetic for cross-engine exactness."""
-    from mimeograph_spark.functions.textstats import bigram_logprob
-
-    return bigram_logprob(
-        _read(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-
-def q_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial Naive Bayes classifier trained and applied
-    in-corpus (nbclassifier.nb_train_predict): predict each doc's
-    lang from its token distribution — the CCNet/fastText-style
-    source-quality-classifier shape.  Integer micro-nat scores make
-    the argmax and tie-breaks bit-identical across engines."""
-    from mimeograph_spark.functions.nbclassifier import nb_train_predict
-
-    return nb_train_predict(
-        _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    )
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup-style semantic dedup (similarity.semantic_dedup) over
-    embeddings plus an id-shifted exact copy: the copies land in the
-    same k-means cell as their originals at cosine 1.0, so every
-    shifted vector is flagged is_dup while the near-uniform organic
-    corpus (top cosine ~0.4) survives — deterministic expected
-    outcome at any SF.  Cluster-confined all-pairs (the SemDedup
-    O(sum c_i^2) trick), one distinct dup-id set, no pair list in the
-    output."""
-    from mimeograph_spark.functions.similarity import semantic_dedup
-
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    shifted = emb.select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-    )
-    return semantic_dedup(
-        emb.unionByName(shifted), threshold=0.95, refine_iters=1
-    )
-
-
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media column -> typed metadata (decode stage plumbing;
-    rows-only driver check, payloads aren't SQL-expressible)."""
-    refs = _read(spark, sf_dir, "documents").select(
-        F.concat(F.lit("m:"), F.col("doc_id").cast("string")).alias(
-            "media_ref"
-        )
-    )
-    return decode_metadata(with_media_blob(refs)).select(
-        "media_ref", "width", "height", "modality", "payload_bytes", "valid"
-    )
-
-
-def _media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _read(spark, sf_dir, "documents").select(
-        F.concat(F.lit("m:"), F.col("doc_id").cast("string")).alias(
-            "media_ref"
-        )
-    )
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-extract stage over binary payloads (mapInPandas)."""
-    return extract_features(with_media_blob(_media_refs(spark, sf_dir))).select(
-        "media_ref", "mean_byte", "max_byte", "frac_high", "n_bytes"
-    )
-
-
-def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize stage over binary payloads (mapInPandas)."""
-    return resize_media(with_media_blob(_media_refs(spark, sf_dir))).select(
-        "media_ref", "new_width", "new_height", "thumb_sig"
-    )
-
-
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling stage (rows-only driver check)."""
-    refs = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select(
-            F.concat(F.lit("v:"), F.col("doc_id").cast("string")).alias(
-                "media_ref"
-            )
-        )
-    )
-    return frame_sample(with_media_blob(refs), every_n=4).select(
-        "media_ref", "frame_no", "frame_sig"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1986,317 +111,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration order is the driver's check order: the per-round
-    CORRECTNESS file covers a window from the FRONT of this dict, so
-    entries are sorted by staleness — queries with no hard-GREEN
-    driver check yet first (a FAILED check is no validation), then
-    ascending by the round of the last green check.  Round 7:
-    inverted_postings (never green) leads, then the 31 queries last
-    green in r4, then the stalest r5-green fill the window; the
-    r6-green tail rotates to the back and the rows-only
-    sketch_rollup (excluded from the ranking — the driver errs
-    no_oracle on it by design) sits last so it never burns a window
-    slot.  tests/test_contract.py pins the prefix property
-    (no query outside the window is strictly more overdue than one
-    inside)."""
     return {
-        # --- never hard-green (r5 check ERRed in the canonicalizer; fix landed r6 unverified) ---
-        "inverted_postings": q_inverted_postings,
-        # --- last hard-green r4 ---
-        "fuzzy_name_pairs": q_fuzzy_name_pairs,
-        "udaf_arrow_percentiles": q_udaf_arrow_percentiles,
-        "variant_extract": q_variant_extract,
-        "q6_forecast_revenue": relational.q6_forecast_revenue,
-        "q13_order_count_distribution": relational.q13_order_count_distribution,
-        "q15_top_supplier": relational.q15_top_supplier,
-        "q7_volume_shipping": relational.q7_volume_shipping,
-        "q8_market_share": relational.q8_market_share,
-        "q9_product_profit": relational.q9_product_profit,
-        "q10_returned_items": relational.q10_returned_items,
-        "q12_shipping_delay": relational.q12_shipping_delay,
-        "q14_promo_revenue": relational.q14_promo_revenue,
-        "q19_disjunctive_brackets": relational.q19_disjunctive_brackets,
-        "q21_waiting_suppliers": relational.q21_waiting_suppliers,
         "pipeline_extract": q_pipeline_extract,
         "classify_branch": q_classify_branch,
         "span_kind_counts": q_span_kind_counts,
         "ocr_pages": q_ocr_pages,
         "interleaved_examples": q_interleaved_examples,
-        "q1_pricing_summary": relational.q1_pricing_summary,
-        "q3_shipping_priority": relational.q3_shipping_priority,
-        "q5_local_suppliers": relational.q5_local_suppliers,
-        "q17_small_quantity": relational.q17_small_quantity_revenue,
-        "q16_supplier_counts": relational.q16_supplier_counts,
-        "q18_large_orders": relational.q18_large_orders,
-        "q20_excess_shippers": relational.q20_excess_shippers,
-        "q22_dormant_customers": relational.q22_dormant_customers,
-        "window_topn": relational.window_top_orders_per_customer,
-        "window_analytics": relational.window_analytics,
-        "rolling_window_revenue": relational.rolling_window_revenue,
-        "rollup_status_month": relational.rollup_orders_by_status_month,
-        # --- last hard-green r5 ---
-        "url_dedup_best": q_url_dedup_best,
-        "incremental_dedup": q_incremental_dedup,
-        "domain_stats": q_domain_stats,
-        "bigram_logprob": q_bigram_logprob,
-        "q2_min_cost_supplier": relational.q2_min_cost_supplier,
-        "q11_important_stock": relational.q11_important_stock,
-        "pii_scrub": q_pii_scrub,
-        "unigram_logprob": q_unigram_logprob,
-        "decontaminate_graded": q_decontaminate_graded,
-        "boilerplate_ngrams": q_boilerplate_ngrams,
-        "mixture_sample": q_mixture_sample,
-        "semantic_dedup": q_semantic_dedup,
-        "nb_lang_classifier": q_nb_lang_classifier,
-        "url_normalize": q_url_normalize,
-        "pagerank": q_pagerank,
-        "bm25_topk": q_bm25_topk,
-        "cube_status_priority": relational.cube_status_priority,
-        "grouping_sets_revenue": relational.grouping_sets_revenue,
-        "anti_join_customers": relational.customers_without_orders,
-        "string_funcs": relational.part_string_funcs,
-        "events_tumbling": relational.events_tumbling_window,
-        "events_sessionize": relational.events_sessionize,
-        "distinct_active_users": relational.distinct_active_users,
-        "pivot_status_priority": relational.pivot_status_by_priority,
-        "set_ops_cohorts": relational.customer_cohort_set_ops,
-        "textstats": q_textstats,
-        "html_main_content": q_html_main_content,
-        "html_scored_content": q_html_scored_content,
-        "reading_order": q_reading_order,
-        "curate_documents": q_curate_documents,
-        "json_extract": q_json_extract,
-        "map_event_counts": q_map_event_counts,
-        "train_split": q_train_split,
-        "repetition_stats": q_repetition_stats,
-        "pack_sequences": q_pack_sequences,
-        "global_index": q_global_index,
-        "profile_columns": q_profile_columns,
-        "weighted_sample": q_weighted_sample,
-        "stratified_sample": q_stratified_sample,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "length_percentiles": q_length_percentiles,
-        "zorder_values": q_zorder_values,
-        "decontaminate": q_decontaminate,
-        "udaf_quality_percentiles": q_udaf_quality_percentiles,
-        "udtf_token_chunks": q_udtf_token_chunks,
-        "dedup_exact": q_dedup_exact,
-        "minhash_signatures": q_minhash_signatures,
-        "simhash": q_simhash,
-        "lsh_near_dup_pairs": q_lsh_near_dup_pairs,
-        # --- last hard-green r6 ---
-        "sketch_estimates": q_sketch_estimates,
-        "hits_scores": q_hits_scores,
-        "containment_pairs": q_containment_pairs,
-        "lpa_communities": q_lpa_communities,
-        "ann_pq_topk": q_ann_pq_topk,
-        "winnow_pairs": q_winnow_pairs,
-        "zipf_fit": q_zipf_fit,
-        "event_transitions": q_event_transitions,
-        "top_event_paths": q_top_event_paths,
-        "host_pagerank": q_host_pagerank,
-        "classifier_eval": q_classifier_eval,
-        "chunk_documents": q_chunk_documents,
-        "check_constraints": q_check_constraints,
-        "heavy_hitters": q_heavy_hitters,
-        "line_dedup": q_line_dedup,
-        "cms_term_counts": q_cms_term_counts,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "corpus_overlap": q_corpus_overlap,
-        "funnel_steps": q_funnel_steps,
-        "retention_cohorts": q_retention_cohorts,
-        "histogram_quantiles": q_histogram_quantiles,
-        "resample_locf": q_resample_locf,
-        "distribution_drift": q_distribution_drift,
-        "triangle_stats": q_triangle_stats,
-        "embedding_outliers": q_embedding_outliers,
-        "blocklist_filter": q_blocklist_filter,
-        "snapshot_diff": q_snapshot_diff,
-        "source_concentration": q_source_concentration,
-        "trigram_logprob": q_trigram_logprob,
-        "text_normalize": q_text_normalize,
-        "signal_agreement": q_signal_agreement,
-        "mad_outliers": q_mad_outliers,
-        "dedup_clusters": q_dedup_clusters,
-        "simhash_cap_stats": q_simhash_cap_stats,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "cogroup_asof_lag": q_cogroup_asof_lag,
-        "simhash_near_dups": q_simhash_near_dups,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "embedding_near_dups": q_embedding_near_dups,
-        "semi_join_q4": relational.semi_join_order_priority,
-        "outer_join_nations": relational.outer_join_nation_activity,
-        "asof_join_events": q_asof_join,
-        "range_join_price_bands": q_range_join,
-        "hypertable_rollup": q_hypertable_rollup,
-        "multimodal_meta": q_multimodal_meta,
-        "media_features": q_media_features,
-        "media_resize": q_media_resize,
-        "frame_sample": q_frame_sample,
-        "char_stats": q_char_stats,
-        # --- rows-only (excluded from rotation ranking): tail ---
-        "sketch_rollup": q_sketch_rollup,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {
-        # pipeline
+    return {
         "pipeline_extract": sql_oracles.pipeline_extract_sql(),
         "classify_branch": sql_oracles.classify_branch_sql(),
         "span_kind_counts": sql_oracles.span_kind_counts_sql(),
         "ocr_pages": sql_oracles.ocr_pages_sql(),
         "interleaved_examples": sql_oracles.interleaved_examples_sql(),
-        # training-data
-        "textstats": sql_oracles.textstats_sql(),
-        "char_stats": sql_oracles.CHAR_STATS_ORACLE,
-        "fuzzy_name_pairs": sql_oracles.FUZZY_NAME_PAIRS_ORACLE,
-        "html_main_content": sql_oracles.html_main_content_sql(),
-        "html_scored_content": sql_oracles.html_scored_content_sql(),
-        "reading_order": sql_oracles.reading_order_sql(),
-        "curate_documents": sql_oracles.curate_documents_sql(),
-        "json_extract": sql_oracles.JSON_EXTRACT_ORACLE,
-        "variant_extract": sql_oracles.JSON_EXTRACT_ORACLE,
-        "map_event_counts": sql_oracles.MAP_EVENT_COUNTS_ORACLE,
-        "train_split": sql_oracles.train_split_sql(),
-        "repetition_stats": sql_oracles.repetition_stats_sql(),
-        "pack_sequences": sql_oracles.pack_sequences_sql(),
-        "global_index": sql_oracles.GLOBAL_INDEX_ORACLE,
-        "profile_columns": sql_oracles.profile_columns_sql(),
-        "weighted_sample": sql_oracles.weighted_sample_sql(k=50),
-        "stratified_sample": sql_oracles.stratified_sample_sql(cap=50),
-        "tfidf_top_terms": sql_oracles.tfidf_top_terms_sql(k=3),
-        "length_percentiles": sql_oracles.LENGTH_PERCENTILES_ORACLE,
-        "zorder_values": sql_oracles.zorder_values_sql(bits=16),
-        "decontaminate": sql_oracles.decontaminate_sql(n=5),
-        "udaf_quality_percentiles": sql_oracles.quality_percentiles_sql(),
-        "udaf_arrow_percentiles": sql_oracles.quality_percentiles_sql(),
-        "udtf_token_chunks": sql_oracles.udtf_token_chunks_sql(),
-        "set_ops_cohorts": sql_oracles.SET_OPS_ORACLE,
-        "dedup_exact": sql_oracles.dedup_exact_sql(),
-        "minhash_signatures": sql_oracles.minhash_signatures_sql(k=8),
-        "simhash": sql_oracles.simhash_sql(bits=32),
-        "lsh_near_dup_pairs": sql_oracles.lsh_candidate_pairs_sql(
-            k=16, bands=4
-        ),
-        "dedup_clusters": sql_oracles.dedup_clusters_sql(
-            threshold=0.8, k=16, bands=4
-        ),
-        "simhash_near_dups": sql_oracles.simhash_near_dups_sql(),
-        "simhash_cap_stats": sql_oracles.simhash_cap_stats_sql(),
-        "ann_cosine_topk": sql_oracles.ann_cosine_topk_sql(k=5),
-        "ann_lsh_topk": sql_oracles.ann_lsh_topk_sql(
-            dim=64, n_planes=8, k=5, probe_radius=1, n_tables=6
-        ),
-        "ann_ivf_topk": sql_oracles.ann_ivf_topk_sql(
-            k=5, nprobe=12, centroid_step=50, dim=64, refine_iters=3
-        ),
-        "embedding_near_dups": sql_oracles.embedding_near_dups_sql(),
-        "semi_join_q4": sql_oracles.SEMI_JOIN_ORACLE,
-        "outer_join_nations": sql_oracles.OUTER_JOIN_ORACLE,
-        "asof_join_events": sql_oracles.ASOF_JOIN_ORACLE,
-        "cogroup_asof_lag": sql_oracles.COGROUP_ASOF_LAG_ORACLE,
-        "range_join_price_bands": sql_oracles.RANGE_JOIN_ORACLE,
-        "hypertable_rollup": sql_oracles.hypertable_rollup_sql(),
-        # multimodal: payload is a counter-block md5 stream, so both
-        # the decoded metadata and the per-frame signatures are
-        # closed-form over string md5 (multimodal.py docstring).
-        "multimodal_meta": sql_oracles.multimodal_meta_sql(),
-        "media_features": sql_oracles.media_features_sql(),
-        "media_resize": sql_oracles.media_resize_sql(),
-        "frame_sample": sql_oracles.frame_sample_sql(every_n=4),
-        # partsupp is synthesized closed-form on both engines (no
-        # partsupp parquet in the testdata): see synth_partsupp /
-        # PARTSUPP_CTE
-        "q2_min_cost_supplier": sql_oracles.Q2_MIN_COST_SUPPLIER_ORACLE,
-        "q11_important_stock": sql_oracles.Q11_IMPORTANT_STOCK_ORACLE,
-        "pii_scrub": sql_oracles.pii_scrub_sql(),
-        "unigram_logprob": sql_oracles.UNIGRAM_LOGPROB_ORACLE,
-        "decontaminate_graded": sql_oracles.decontaminate_graded_sql(
-            n_min=4, n_max=13
-        ),
-        "boilerplate_ngrams": sql_oracles.boilerplate_ngrams_sql(
-            min_ratio=0.12
-        ),
-        "mixture_sample": sql_oracles.mixture_sample_sql(
-            MIXTURE_FRACTIONS, target_ratio=0.2
-        ),
-        "line_dedup": sql_oracles.LINE_DEDUP_ORACLE,
-        "semantic_dedup": sql_oracles.semantic_dedup_sql(
-            threshold=0.95, refine_iters=1
-        ),
-        "nb_lang_classifier": sql_oracles.NB_LANG_CLASSIFIER_ORACLE,
-        "url_normalize": sql_oracles.URL_NORMALIZE_ORACLE,
-        "url_dedup_best": sql_oracles.URL_DEDUP_BEST_ORACLE,
-        "incremental_dedup": sql_oracles.incremental_dedup_sql(
-            k=16, bands=4
-        ),
-        "domain_stats": sql_oracles.DOMAIN_STATS_ORACLE,
-        "chunk_documents": sql_oracles.CHUNK_DOCUMENTS_ORACLE,
-        "check_constraints": sql_oracles.CHECK_CONSTRAINTS_ORACLE,
-        "heavy_hitters": sql_oracles.HEAVY_HITTERS_ORACLE,
-        "bigram_logprob": sql_oracles.BIGRAM_LOGPROB_ORACLE,
-        "pagerank": sql_oracles.pagerank_sql(iterations=5, damping=0.85),
-        "hits_scores": sql_oracles.hits_sql(iterations=5),
-        "containment_pairs": sql_oracles.containment_pairs_sql(
-            n=3, threshold=0.5, max_df=64
-        ),
-        "lpa_communities": sql_oracles.lpa_communities_sql(iterations=4),
-        "ann_pq_topk": sql_oracles.pq_topk_sql(
-            dim=64, m=8, ksub=32, init_step=15, iters=2,
-            shortlist=100, k=5,
-        ),
-        "winnow_pairs": sql_oracles.winnow_pairs_sql(
-            k=4, w=4, min_shared=2, max_df=64
-        ),
-        "zipf_fit": sql_oracles.ZIPF_FIT_ORACLE,
-        "event_transitions": sql_oracles.EVENT_TRANSITIONS_ORACLE,
-        "top_event_paths": sql_oracles.top_event_paths_sql(
-            length=3, top_k=20
-        ),
-        "host_pagerank": sql_oracles.host_pagerank_sql(
-            iterations=5, damping=0.85, n_pages=2000, n_hosts=40,
-            fanout=4,
-        ),
-        "classifier_eval": sql_oracles.classifier_eval_sql(),
-        "inverted_postings": sql_oracles.INVERTED_POSTINGS_ORACLE,
-        "sketch_estimates": sql_oracles.SKETCH_ESTIMATES_ORACLE,
-        "bm25_topk": sql_oracles.bm25_topk_sql(BM25_TERMS, k=10),
-        "cms_term_counts": sql_oracles.cms_term_counts_sql(
-            depth=CMS_DEPTH, width=CMS_WIDTH
-        ),
-        "bloom_decontaminate": sql_oracles.bloom_decontaminate_sql(
-            n=5, modulus=50, k=BLOOM_K, m_bits=BLOOM_M_BITS
-        ),
-        "corpus_overlap": sql_oracles.corpus_overlap_sql(
-            n=3,
-            pred_a="doc_id % 2 = 0",
-            pred_b="doc_id % 3 = 0",
-            k=64,
-        ),
-        "funnel_steps": sql_oracles.funnel_steps_sql(
-            steps=FUNNEL_STEPS, before="2024-01-04 00:00:00"
-        ),
-        "retention_cohorts": sql_oracles.retention_cohorts_sql(
-            event_type="purchase", epoch="2024-01-01", period_days=3
-        ),
-        "histogram_quantiles": sql_oracles.histogram_quantiles_sql(
-            lo=0.0, hi=500.0, bins=128, qs=HIST_QS
-        ),
-        "resample_locf": sql_oracles.resample_locf_sql(bucket_secs=600),
-        "distribution_drift": sql_oracles.distribution_drift_sql(
-            pred_a="doc_id % 2 = 0", pred_b="doc_id % 2 = 1"
-        ),
-        "triangle_stats": sql_oracles.TRIANGLE_STATS_ORACLE,
-        "embedding_outliers": sql_oracles.EMBEDDING_OUTLIERS_ORACLE,
-        "blocklist_filter": sql_oracles.blocklist_filter_sql(BLOCKLIST_PHRASES),
-        "snapshot_diff": sql_oracles.SNAPSHOT_DIFF_ORACLE,
-        "source_concentration": sql_oracles.SOURCE_CONCENTRATION_ORACLE,
-        "trigram_logprob": sql_oracles.trigram_backoff_sql(),
-        "text_normalize": sql_oracles.TEXT_NORMALIZE_ORACLE,
-        "signal_agreement": sql_oracles.SIGNAL_AGREEMENT_ORACLE,
-        "mad_outliers": sql_oracles.MAD_OUTLIERS_ORACLE,
     }
-    out.update(sql_oracles.RELATIONAL_ORACLES)
-    return out

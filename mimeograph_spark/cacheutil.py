@@ -1,13 +1,13 @@
 """Caller-owned lifecycle for operator-internal persisted frames.
 
-Several operators persist an intermediate frame that feeds two or more
-consumers (LSH representatives, SimHash blocks, embedding buckets,
-hypertable levels, the classified pipeline frame).  The persist is a
-plan property — the returned DataFrame is still lazy — so the operator
-cannot unpersist before the caller has run its action.  Instead each
-operator *registers* its persisted dependencies on the frame it
-returns; when the caller is done it calls :func:`unpersist_deps` to
-release the cached blocks.  In a long-lived session (a notebook, the
+An operator may persist an intermediate frame that feeds two or more
+consumers (``extract(single_scan=True)`` persists the classified frame
+that both of its branches read).  The persist is a plan property — the
+returned DataFrame is still lazy — so the operator cannot unpersist
+before the caller has run its action.  Instead the operator
+*registers* its persisted dependencies on the frame it returns; when
+the caller is done it calls :func:`unpersist_deps` to release the
+cached blocks.  In a long-lived session (a notebook, the
 driver's oracle sweep) this keeps repeated operator calls from
 accumulating cached blocks until eviction.
 
@@ -35,26 +35,6 @@ def persisted_deps(df: DataFrame) -> list[DataFrame]:
     return list(getattr(df, _ATTR, []))
 
 
-_STATS_ATTR = "_mimeo_cap_stats"
-
-
-def register_cap_stats(df: DataFrame, stats: DataFrame) -> DataFrame:
-    """Attach a cap-accounting side output ("no silent caps"): a 1-row
-    frame (operator, dropped_buckets, dropped_rows) describing what a
-    bounded operator discarded.  Retrieve with :func:`cap_stats`; on a
-    pathological corpus this is the only signal that the pair output
-    under-reports, so pipelines should collect it into their lineage/
-    metrics sink alongside the result."""
-    setattr(df, _STATS_ATTR, stats)
-    return df
-
-
-def cap_stats(df: DataFrame) -> DataFrame | None:
-    """The cap-accounting frame registered on `df` (None if the
-    operator has no caps or `df` is a derived frame)."""
-    return getattr(df, _STATS_ATTR, None)
-
-
 def unpersist_deps(df: DataFrame, blocking: bool = False) -> int:
     """Unpersist every registered dependency of `df`; returns how many
     frames were released."""
@@ -65,33 +45,3 @@ def unpersist_deps(df: DataFrame, blocking: bool = False) -> int:
         setattr(df, _ATTR, [])
     return len(deps)
 
-
-def ensure_compute_parallelism(
-    df: DataFrame, min_parts: int | None = None
-) -> DataFrame:
-    """Decouple a CPU-bound stage's parallelism from the scan's
-    input-split count.
-
-    Task count downstream of a parquet scan equals the number of input
-    splits; a compute-heavy derivation (per-gram md5, per-page OCR)
-    reading a handful of small files therefore runs on a handful of
-    cores no matter how large the cluster is.  When — and only when —
-    the frame has fewer partitions than the target (default: the
-    cluster's defaultParallelism), insert one round-robin repartition
-    so the expensive expressions run wide.  At production scale the
-    corpus arrives in thousands of splits and this is a no-op; the
-    guard is what makes it safe to leave in the query path (a blind
-    repartition would add a full extra shuffle of a 100 TB input)."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    # JVM-side partition count (df.rdd would additionally build the
-    # Python-serialized RDD wrapper), memoized on the frame: the
-    # analysis this forces is paid once per DataFrame object even if
-    # a query path consults it more than once.
-    n_parts = getattr(df, "_mimeo_nparts", None)
-    if n_parts is None:
-        n_parts = df._jdf.rdd().getNumPartitions()
-        setattr(df, "_mimeo_nparts", n_parts)
-    if n_parts < target:
-        return df.repartition(target)
-    return df

@@ -1,4 +1,4 @@
-"""Doc-level classification + native branch.
+"""Doc-level classification and span ordering.
 
 The reference's core value is "OCR only when necessary": after
 `pdftotext`, a document with any trimmed non-empty native text is DONE
@@ -7,7 +7,8 @@ per-page (src/mimeograph.coffee:542-547).
 
 Here that's a narrow, no-shuffle plan: `exists()` over the span array
 computes the predicate in whole-stage codegen; the native branch
-projects ordered text spans with array functions only.
+(plans/pipeline.py) projects ordered text spans with array functions
+only.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import KIND_MEDIA, KIND_TEXT, STATUS_COMPLETE
+from ..schema import KIND_MEDIA, KIND_TEXT
 
 HAS_NATIVE = "has_native"
 N_MEDIA = "n_media"
@@ -63,23 +64,3 @@ def sort_spans_by_offset(spans: Column) -> Column:
         .otherwise(0),
     )
 
-
-def native_branch(classified: DataFrame) -> DataFrame:
-    """Docs with native text: output = ordered text spans, no OCR."""
-    text_spans = F.filter("spans", lambda s: s["kind"] == KIND_TEXT)
-    ordered = sort_spans_by_offset(text_spans)
-    out = F.transform(
-        ordered,
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return classified.filter(F.col(HAS_NATIVE)).select(
-        "doc_id",
-        out.alias("spans_out"),
-        F.lit(STATUS_COMPLETE).alias("status"),
-        F.lit([]).cast("array<int>").alias("error_pages"),
-    )

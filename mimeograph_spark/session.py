@@ -12,6 +12,40 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Default heap: this share of the memory the host grants, never above
+# the cap.  SPARK_DRIVER_MEM overrides both.
+HEAP_FRACTION = 0.5
+HEAP_CAP_MB = 24 * 1024
+
+
+def physical_memory_bytes() -> int:
+    """Memory available to this process: the cgroup v2 limit when one
+    is set, bounded by the host's MemTotal."""
+    found = []
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+        if limit != "max":
+            found.append(int(limit))
+    except OSError:
+        pass
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                found.append(int(line.split()[1]) * 1024)
+                break
+    return min(found)
+
+
+def driver_memory() -> str:
+    """`spark.driver.memory`: SPARK_DRIVER_MEM if set, else
+    HEAP_FRACTION of physical memory capped at HEAP_CAP_MB."""
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    heap_mb = int(physical_memory_bytes() * HEAP_FRACTION) >> 20
+    return f"{min(heap_mb, HEAP_CAP_MB)}m"
+
 
 def get_spark(
     app_name: str = "mimeograph_spark",
@@ -39,13 +73,12 @@ def get_spark(
         # Session TZ pinned to UTC so results compare bit-exactly with
         # the DuckDB oracle (duckdb timestamps are UTC-naive).
         .config("spark.sql.session.timeZone", "UTC")
-        # Single-JVM local mode: the driver heap IS the executor heap.
-        # An undersized heap makes 32 concurrent tasks GC-thrash (4x
-        # slowdown measured on JVM-only stages); G1 + a large heap
-        # restores linear scaling.  On a real cluster this maps to
-        # spark.executor.memory per executor instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.driver.extraJavaOptions", os.environ.get("SPARK_JVM_OPTS", "-XX:+UseG1GC -XX:ReservedCodeCacheSize=1g -Xms24g -XX:+AlwaysPreTouch"))
+        # Single-JVM local mode: the driver heap IS the executor heap,
+        # sized to the host (driver_memory) and grown on demand rather
+        # than reserved and pre-touched at start.  On a real cluster
+        # this maps to spark.executor.memory per executor instead.
+        .config("spark.driver.memory", driver_memory())
+        .config("spark.driver.extraJavaOptions", os.environ.get("SPARK_JVM_OPTS", "-XX:+UseG1GC -XX:ReservedCodeCacheSize=1g"))
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -146,3761 +146,3 @@ SELECT s.doc_id, s."offset" AS page_offset, s.media_ref,
 FROM span_rows s JOIN flags f USING (doc_id)
 WHERE NOT f.has_native AND s.kind = 'media'
 """
-
-
-# ---------------------------------------------------------------------------
-# Training-data function oracles (functions/textstats.py, dedup.py,
-# similarity.py) — every formula mirrored in RE2-safe, DuckDB-runnable SQL.
-# ---------------------------------------------------------------------------
-
-_NORM = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
-_TOKS = r"regexp_split_to_array(trim(text), '\s+')"
-_TOKS_LOWER = r"regexp_split_to_array(lower(trim(text)), '\s+')"
-
-
-def textstats_sql(source: str = "documents") -> str:
-    from .functions.textstats import LANG_MARKERS, STOPWORDS
-
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
-    score_exprs = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        m = ", ".join(f"'{w}'" for w in markers)
-        score_exprs.append(
-            f"len(list_filter({_TOKS_LOWER}, t -> t IN ({m}))) AS s_{lang}"
-        )
-    langs = sorted(LANG_MARKERS)
-    best = "greatest(" + ", ".join(f"s_{l}" for l in langs) + ")"
-    n_winners = " + ".join(f"CASE WHEN s_{l} = best THEN 1 ELSE 0 END" for l in langs)
-    first_winner = "CASE " + " ".join(
-        f"WHEN s_{l} = best THEN '{l}'" for l in langs
-    ) + " END"
-    return f"""
-WITH base AS (
-  SELECT doc_id, text,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len({_TOKS}) END AS n_tokens,
-         len(regexp_extract_all(text, '[A-Za-z0-9]+'))
-           + len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_subword_tokens,
-         CASE WHEN length(text) > 0 THEN
-           (length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')))
-             / CAST(length(text) AS DOUBLE)
-         ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len({_TOKS_LOWER}) > 0 THEN
-           len(list_filter({_TOKS_LOWER}, t -> t IN ({stop_list})))
-             / CAST(len({_TOKS_LOWER}) AS DOUBLE)
-         ELSE 0.0 END AS stopword_ratio,
-         {", ".join(score_exprs)}
-  FROM {source}
-), scored AS (
-  SELECT *, {best} AS best FROM base
-)
-SELECT doc_id,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(n_subword_tokens AS BIGINT) AS n_subword_tokens,
-       round(punct_ratio, 6) AS punct_ratio,
-       round(stopword_ratio, 6) AS stopword_ratio,
-       round((
-           (CASE WHEN n_tokens BETWEEN 5 AND 5000 THEN 1.0 ELSE 0.0 END)
-         + (CASE WHEN punct_ratio < 0.2 THEN 1.0 ELSE 0.0 END)
-         + (CASE WHEN stopword_ratio > 0.01 THEN 1.0 ELSE 0.0 END)
-       ) / 3.0, 6) AS quality,
-       CASE WHEN best > 0 AND ({n_winners}) = 1
-            THEN {first_winner} ELSE 'und' END AS lang_pred,
-       md5({_NORM}) AS fingerprint
-FROM scored
-"""
-
-
-def html_main_content_sql(
-    min_text_len: int = 25, max_link_density: float = 0.34
-) -> str:
-    """Mirrors functions/html_extract: the synthetic page wrapper and
-    the block-split + text/link-density heuristics, replayed with
-    DuckDB's RE2 regexes (every pattern is RE2-safe by design)."""
-    from .functions.html_extract import ANCHOR_RE, BLOCK_SPLIT_RE, TAG_RE
-
-    visible = (
-        "trim(regexp_replace(regexp_replace(b, '{tag}', ' ', 'g'), "
-        "'\\s+', ' ', 'g'))"
-    ).format(tag=TAG_RE)
-    # coalesce: DuckDB's regexp_extract_all chain yields NULL (not '')
-    # for anchor-free blocks; Spark's array_join gives '' -> length 0
-    link = (
-        "coalesce(length(trim(regexp_replace(array_to_string("
-        "regexp_extract_all(b, '{anchor}', 1), ' '), '\\s+', ' ', 'g'))), 0)"
-    ).format(anchor=ANCHOR_RE)
-    keep_cond = (
-        f"s.n >= {min_text_len} AND s.ln / s.n <= {max_link_density}"
-    )
-    return f"""
-WITH page AS (
-  SELECT doc_id,
-    '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-    || '</title><style>body {{margin:0}}</style>'
-    || '<script>var tracker = "x";</script></head><body>'
-    || '<nav><a href="/">Home</a> <a href="/a">About</a> '
-    || '<a href="/c">Contact</a></nav>'
-    || '<div>Buy <a href="/buy">cheap deals now</a> '
-    || '<a href="/o">limited offer today</a></div>'
-    || '<article><p>' || text || '</p><p>Short tail: '
-    || array_to_string((string_split(text, ' '))[1:5], ' ')
-    || '</p></article><footer><a href="/t">Terms of service</a> '
-    || '<a href="/p">Privacy policy</a></footer></body></html>' AS html
-  FROM documents
-), cleaned AS (
-  SELECT doc_id,
-    regexp_replace(
-      regexp_replace(html, '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
-      '(?s)<style[^>]*>.*?</style>', ' ', 'g') AS c
-  FROM page
-), blocks AS (
-  SELECT doc_id,
-         regexp_split_to_array(c, '{BLOCK_SPLIT_RE}') AS bl
-  FROM cleaned
-), staged AS (
-  SELECT doc_id,
-         list_transform(bl, b -> {{'t': {visible}, 'ln': {link}}}) AS s1
-  FROM blocks
-), scored AS (
-  SELECT doc_id,
-         list_transform(
-           s1, s -> {{'t': s.t, 'n': length(s.t), 'ln': s.ln}}) AS sc
-  FROM staged
-)
-SELECT doc_id,
-  array_to_string(
-    list_transform(list_filter(sc, s -> {keep_cond}), s -> s.t),
-    ' ') AS main_text,
-  CAST(len(list_filter(sc, s -> {keep_cond})) AS BIGINT)
-    AS n_blocks_kept,
-  CAST(len(list_filter(sc, s -> s.n > 0)) AS BIGINT) AS n_blocks_total,
-  CAST(coalesce(list_sum(list_transform(
-    list_filter(sc, s -> s.n > 0 AND NOT ({keep_cond})),
-    s -> s.n)), 0) AS BIGINT) AS boilerplate_chars
-FROM scored
-"""
-
-
-def html_scored_content_sql(min_score: int = 25) -> str:
-    """Mirrors functions/html_extract.extract_main_content_scored:
-    same synthetic page and block split, additive readability score
-    (chars - 3*link_chars +/- 30 per DOM hint) with the hint regexes
-    imported verbatim."""
-    from .functions.html_extract import (
-        ANCHOR_RE,
-        BLOCK_SPLIT_RE,
-        NEG_HINT_RE,
-        POS_HINT_RE,
-        TAG_RE,
-    )
-
-    visible = (
-        "trim(regexp_replace(regexp_replace(b, '{tag}', ' ', 'g'), "
-        "'\\s+', ' ', 'g'))"
-    ).format(tag=TAG_RE)
-    link = (
-        "coalesce(length(trim(regexp_replace(array_to_string("
-        "regexp_extract_all(b, '{anchor}', 1), ' '), '\\s+', ' ', 'g'))), 0)"
-    ).format(anchor=ANCHOR_RE)
-    return f"""
-WITH page AS (
-  SELECT doc_id,
-    '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-    || '</title><style>body {{margin:0}}</style>'
-    || '<script>var tracker = "x";</script></head><body>'
-    || '<nav><a href="/">Home</a> <a href="/a">About</a> '
-    || '<a href="/c">Contact</a></nav>'
-    || '<div>Buy <a href="/buy">cheap deals now</a> '
-    || '<a href="/o">limited offer today</a></div>'
-    || '<article><p>' || text || '</p><p>Short tail: '
-    || array_to_string((string_split(text, ' '))[1:5], ' ')
-    || '</p></article><footer><a href="/t">Terms of service</a> '
-    || '<a href="/p">Privacy policy</a></footer></body></html>' AS html
-  FROM documents
-), cleaned AS (
-  SELECT doc_id,
-    regexp_replace(
-      regexp_replace(html, '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
-      '(?s)<style[^>]*>.*?</style>', ' ', 'g') AS c
-  FROM page
-), blocks AS (
-  SELECT doc_id,
-         regexp_split_to_array(c, '{BLOCK_SPLIT_RE}') AS bl
-  FROM cleaned
-), staged AS (
-  SELECT doc_id,
-         list_transform(bl, b -> {{
-           't': {visible}, 'ln': {link},
-           'pos': CASE WHEN regexp_matches(b, '{POS_HINT_RE}')
-                  THEN 1 ELSE 0 END,
-           'neg': CASE WHEN regexp_matches(b, '{NEG_HINT_RE}')
-                  THEN 1 ELSE 0 END}}) AS s1
-  FROM blocks
-), scored AS (
-  SELECT doc_id,
-         list_transform(s1, s -> {{
-           't': s.t, 'n': length(s.t),
-           'sc': length(s.t) - 3 * s.ln + 30 * s.pos - 30 * s.neg}}) AS sc
-  FROM staged
-), split3 AS (
-  SELECT doc_id,
-         list_filter(sc, s -> s.n > 0 AND s.sc >= {min_score}) AS kp,
-         list_filter(sc, s -> s.n > 0 AND s.sc < {min_score}) AS dp,
-         list_filter(sc, s -> s.n > 0) AS al
-  FROM scored
-)
-SELECT doc_id,
-  array_to_string(list_transform(kp, s -> s.t), ' ') AS main_text,
-  CAST(len(kp) AS BIGINT) AS n_blocks_kept,
-  CAST(len(al) AS BIGINT) AS n_blocks_total,
-  CAST(coalesce(list_sum(list_transform(dp, s -> s.n)), 0) AS BIGINT)
-    AS boilerplate_chars,
-  CAST(CASE WHEN len(kp) > 0
-       THEN list_max(list_transform(kp, s -> s.sc)) ELSE 0 END AS BIGINT)
-    AS top_score
-FROM split3
-"""
-
-
-def reading_order_sql(
-    words_per_line: int = 3,
-    col_offset: float = 800.0,
-    min_gap: float = 300.0,
-) -> str:
-    """Mirrors operators/layout.py end-to-end: the deterministic
-    word-box synthesis AND the largest-gap column split + (col, y, x)
-    ordering, replayed with the same tie-breaks."""
-    return f"""
-WITH base AS (
-  SELECT doc_id, {_TOKS} AS tk FROM documents
-  WHERE length(trim(text)) > 0
-), toks AS (
-  SELECT doc_id, unnest(tk) AS word,
-         generate_subscripts(tk, 1) - 1 AS i,
-         len(tk) AS n
-  FROM base
-), geo AS (
-  SELECT doc_id, word, i,
-         CASE WHEN doc_id % 2 = 0
-                   AND (i // {words_per_line})
-                       >= (((n + {words_per_line - 1}) // {words_per_line}) + 1) // 2
-              THEN 1 ELSE 0 END AS scol,
-         i // {words_per_line} AS line,
-         i % {words_per_line} AS pos,
-         (((n + {words_per_line - 1}) // {words_per_line}) + 1) // 2 AS half
-  FROM toks
-), boxes AS (
-  SELECT doc_id, word, i,
-         scol * {col_offset} + pos * 120.0 AS x0,
-         (line - scol * half) * 20.0 AS y0
-  FROM geo
-), dist AS (
-  SELECT DISTINCT doc_id, x0 + 50.0 AS cx FROM boxes
-), gaps AS (
-  SELECT doc_id, cx,
-         lag(cx) OVER (PARTITION BY doc_id ORDER BY cx) AS prev
-  FROM dist
-), g2 AS (
-  SELECT doc_id, cx - prev AS gap, (cx + prev) / 2.0 AS mid
-  FROM gaps WHERE prev IS NOT NULL
-), best AS (
-  SELECT doc_id, mid AS boundary FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY doc_id ORDER BY gap DESC, mid DESC) AS rn
-    FROM g2) WHERE rn = 1 AND gap >= {min_gap}
-), placed AS (
-  SELECT b.doc_id, b.word, b.y0, b.x0,
-         CASE WHEN boundary IS NOT NULL AND b.x0 + 50.0 > boundary
-              THEN 1 ELSE 0 END AS col
-  FROM boxes b LEFT JOIN best USING (doc_id)
-), ordered AS (
-  SELECT doc_id, word, col,
-         row_number() OVER (
-           PARTITION BY doc_id ORDER BY col, y0, x0) - 1 AS seq
-  FROM placed
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(max(col) + 1 AS BIGINT) AS n_columns,
-       string_agg(word, ' ' ORDER BY seq) AS text_rebuilt
-FROM ordered GROUP BY doc_id
-"""
-
-
-def train_split_sql(
-    weights: tuple = (0.8, 0.1, 0.1),
-    names: tuple = ("train", "val", "test"),
-    n_buckets: int = 10000,
-    sample_buckets: int = 2000,
-) -> str:
-    """Mirrors functions/sampling.with_split + deterministic_sample:
-    md5(salt:id) bucket arithmetic, hash thresholds — reproducible on
-    any engine, which is the whole point of hash-based splitting."""
-    bounds, acc = [], 0.0
-    for w in weights:
-        acc += w
-        bounds.append(int(round(acc * n_buckets)))
-    case = "CASE "
-    for name, hi in zip(names[:-1], bounds[:-1]):
-        case += f"WHEN b < {hi} THEN '{name}' "
-    case += f"ELSE '{names[-1]}' END"
-    bucket = (
-        "('0x' || substr(md5('{salt}:' || CAST(doc_id AS VARCHAR)), 1, 8))"
-        f"::BIGINT % {n_buckets}"
-    )
-    return f"""
-WITH b AS (
-  SELECT doc_id, lang, n_chars,
-         {bucket.format(salt="split")} AS b,
-         {bucket.format(salt="sample")} AS sb
-  FROM documents
-)
-SELECT {case} AS split, lang,
-       count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum(CASE WHEN sb < {sample_buckets} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_sampled
-FROM b GROUP BY 1, 2
-"""
-
-
-def pack_sequences_sql(
-    budget: int = 2048, n_shards: int = 16, sep_tokens: int = 1
-) -> str:
-    """Mirrors functions/packing.pack_sequences: md5 shard bucket,
-    per-shard running token sum (doc_id order), chop every `budget`
-    tokens.  Pure window arithmetic — replays the layout exactly."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len({_TOKS}) END + {sep_tokens} AS BIGINT) AS t,
-         ('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)), 1, 8))
-           ::BIGINT % {n_shards} AS shard
-  FROM documents
-), cum AS (
-  SELECT doc_id, shard, t,
-         CAST(COALESCE(sum(t) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         AS BIGINT) AS cb
-  FROM toks
-)
-SELECT doc_id, shard,
-       cb // {budget} AS seq_id,
-       cb % {budget} AS begin_offset,
-       ((cb + t - 1) // {budget}) - (cb // {budget}) + 1 AS n_seqs
-FROM cum
-"""
-
-
-def repetition_stats_sql() -> str:
-    """Mirrors functions/repetition.repetition_stats: word bigram /
-    trigram repetition fractions with the same deterministic top-gram
-    tie-break (count desc, gram desc)."""
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0
-              THEN CAST([] AS VARCHAR[]) ELSE {_TOKS} END AS tk
-  FROM documents
-), toks AS (
-  SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n,
-         list_transform(range(1, len(tk)),
-                        i -> tk[i] || ' ' || tk[i+1]) AS bi,
-         list_transform(range(1, len(tk) - 1),
-                        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS tri
-  FROM base
-), grams AS (
-  SELECT doc_id, 'bi' AS kind, unnest(bi) AS gram FROM toks
-  UNION ALL
-  SELECT doc_id, 'tri' AS kind, unnest(tri) AS gram FROM toks
-), counts AS (
-  SELECT doc_id, kind, gram, count(*) AS cnt
-  FROM grams GROUP BY 1, 2, 3
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id, kind ORDER BY cnt DESC, gram DESC) AS rn
-  FROM counts
-), per_kind AS (
-  SELECT doc_id, kind, sum(cnt) AS total,
-         sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS dup_occ
-  FROM counts GROUP BY 1, 2
-), kind_frac AS (
-  SELECT doc_id,
-         round(coalesce(max(CASE WHEN kind = 'bi'
-                   THEN dup_occ * 1.0 / total END), 0), 6) AS dup_bigram_frac,
-         round(coalesce(max(CASE WHEN kind = 'tri'
-                   THEN dup_occ * 1.0 / total END), 0), 6) AS dup_trigram_frac,
-         CAST(coalesce(max(CASE WHEN kind = 'bi' THEN total END), 0)
-              AS BIGINT) AS bi_total
-  FROM per_kind GROUP BY 1
-), top_bi AS (
-  SELECT doc_id, gram AS top_bigram, cnt AS top_bigram_count
-  FROM ranked WHERE kind = 'bi' AND rn = 1
-), doc_stats AS (
-  SELECT doc_id, n AS n_tokens,
-         round(CASE WHEN n > 0
-               THEN len(list_distinct(tk)) * 1.0 / n
-               ELSE 0.0 END, 6) AS uniq_token_frac
-  FROM toks
-)
-SELECT d.doc_id, d.n_tokens, d.uniq_token_frac,
-       coalesce(top_bigram, '') AS top_bigram,
-       CAST(coalesce(top_bigram_count, 0) AS BIGINT) AS top_bigram_count,
-       round(CASE WHEN bi_total > 0
-             THEN coalesce(top_bigram_count, 0) * 1.0 / bi_total
-             ELSE 0.0 END, 6) AS top_bigram_frac,
-       coalesce(dup_bigram_frac, 0.0) AS dup_bigram_frac,
-       coalesce(dup_trigram_frac, 0.0) AS dup_trigram_frac
-FROM doc_stats d
-LEFT JOIN kind_frac USING (doc_id)
-LEFT JOIN top_bi USING (doc_id)
-"""
-
-
-def stratified_sample_sql(cap: int = 50, n_buckets: int = 10000) -> str:
-    """Mirrors functions/sampling.stratified_sample: per-group hash
-    threshold floor(cap*N/n_g) with the 'strat:' md5 bucket."""
-    return f"""
-WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-k AS (
-  SELECT d.lang, count(*) AS kept
-  FROM documents d JOIN c USING (lang)
-  WHERE ('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 8))
-          ::BIGINT % {n_buckets}
-        < least({n_buckets}, (CAST({cap} AS BIGINT) * {n_buckets}) // n)
-  GROUP BY 1
-)
-SELECT c.lang, CAST(c.n AS BIGINT) AS n_docs,
-       CAST(coalesce(k.kept, 0) AS BIGINT) AS n_kept
-FROM c LEFT JOIN k USING (lang)
-"""
-
-
-def tfidf_top_terms_sql(k: int = 3) -> str:
-    """Mirrors functions/tfidf.tfidf_top_terms: smoothed IDF
-    ln((N+1)/(df+1))+1, scores rounded to 6 before ranking so the
-    (score desc, term asc) order is identical across engines."""
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0
-              THEN CAST([] AS VARCHAR[]) ELSE {_TOKS} END AS tk
-  FROM documents
-), terms AS (
-  SELECT doc_id, unnest(tk) AS term FROM base
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2
-), dfreq AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY 1
-), total AS (
-  SELECT count(DISTINCT doc_id) AS n FROM documents
-), scored AS (
-  SELECT t.doc_id, t.term, t.tf,
-         round(t.tf * (ln((n + 1.0) / (d.df + 1.0)) + 1.0), 6) AS score
-  FROM tf t JOIN dfreq d USING (term), total
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
-LENGTH_PERCENTILES_ORACLE = """
-SELECT lang, CAST(count(*) AS BIGINT) AS n,
-       round(quantile_cont(n_chars, 0.5), 6) AS p50,
-       round(quantile_cont(n_chars, 0.9), 6) AS p90,
-       round(quantile_cont(n_chars, 0.99), 6) AS p99
-FROM documents GROUP BY lang
-"""
-
-
-def zorder_values_sql(bits: int = 16) -> str:
-    """Mirrors sources/zorder.zvalue: Morton bit-interleave of
-    (doc_id, n_chars) masked to `bits`, spelled out as shift/and
-    arithmetic DuckDB evaluates identically."""
-    mask = (1 << bits) - 1
-    terms = " + ".join(
-        f"(((a >> {i}) & 1) << {2 * i}) + (((b >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits)
-    )
-    return f"""
-WITH m AS (
-  SELECT doc_id,
-         doc_id & {mask} AS a,
-         n_chars & {mask} AS b
-  FROM documents
-)
-SELECT doc_id, CAST({terms} AS BIGINT) AS z FROM m
-"""
-
-
-COGROUP_ASOF_LAG_ORACLE = """
-WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
-v AS (SELECT user_id, ts FROM events WHERE event_type = 'view'),
-m AS (
-  SELECT p.user_id, p.ts, v.ts AS vts
-  FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_purchases,
-       CAST(count(vts) AS BIGINT) AS n_matched,
-       CAST(coalesce(sum(epoch_us(ts) - epoch_us(vts)), 0) AS BIGINT)
-         AS total_lag_us
-FROM m GROUP BY user_id
-"""
-
-
-def profile_columns_sql(cols: tuple = ("o_orderstatus", "o_orderpriority", "o_custkey")) -> str:
-    """Mirrors functions/profile.profile_columns over orders: one
-    UNION ALL branch per column (the oracle may afford N scans; the
-    Spark side is pinned to one)."""
-    base_parts, top_parts = [], []
-    for c in cols:
-        v = f"CAST({c} AS VARCHAR)"
-        base_parts.append(f"""
-  SELECT '{c}' AS col_name,
-         CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(sum(CASE WHEN {v} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_nulls,
-         CAST(count(DISTINCT {v}) AS BIGINT) AS n_distinct,
-         min({v}) AS min_val, max({v}) AS max_val
-  FROM orders""")
-        top_parts.append(f"""
-  SELECT '{c}' AS col_name, val AS top_val, cnt AS top_count FROM (
-    SELECT {v} AS val, count(*) AS cnt,
-           row_number() OVER (ORDER BY count(*) DESC, {v} DESC) AS rn
-    FROM orders WHERE {v} IS NOT NULL GROUP BY {v}
-  ) WHERE rn = 1""")
-    return f"""
-WITH base AS ({' UNION ALL '.join(base_parts)}),
-top AS ({' UNION ALL '.join(top_parts)})
-SELECT base.col_name, n_rows, n_nulls, n_distinct, min_val, max_val,
-       coalesce(top_val, '') AS top_val,
-       CAST(coalesce(top_count, 0) AS BIGINT) AS top_count
-FROM base LEFT JOIN top USING (col_name)
-"""
-
-
-def weighted_sample_sql(
-    k: int = 50, n_buckets: int = 10000, salt: str = "wsample"
-) -> str:
-    """Mirrors sampling.weighted_sample_topk over documents weighted
-    by n_chars: same md5-uniform, same ln(u)/w priority, same
-    (priority desc, doc_id) order."""
-    return f"""
-WITH pr AS (
-  SELECT doc_id, n_chars,
-         ln((('0x' || substr(md5('{salt}:' || CAST(doc_id AS VARCHAR)),
-                1, 8))::BIGINT % {n_buckets} + 0.5) / {n_buckets})
-           / CAST(n_chars AS DOUBLE) AS p
-  FROM documents
-  WHERE n_chars > 0
-)
-SELECT doc_id, n_chars, round(p, 6) AS priority
-FROM pr ORDER BY p DESC, doc_id LIMIT {k}
-"""
-
-
-CHAR_STATS_ORACLE = r"""
-WITH c AS (
-  SELECT doc_id,
-         length(coalesce(text, '')) AS n,
-         length(coalesce(text, ''))
-           - length(regexp_replace(coalesce(text, ''), '[a-z]', '', 'g')) AS lo,
-         length(coalesce(text, ''))
-           - length(regexp_replace(coalesce(text, ''), '[A-Z]', '', 'g')) AS up,
-         length(coalesce(text, ''))
-           - length(regexp_replace(coalesce(text, ''), '[0-9]', '', 'g')) AS di,
-         length(coalesce(text, ''))
-           - length(regexp_replace(coalesce(text, ''), e'[ \t\n\r\f]', '', 'g')) AS sp
-  FROM documents
-), c2 AS (
-  SELECT doc_id, n, lo, up, di, sp, n - lo - up - di - sp AS ot FROM c
-)
-SELECT doc_id,
-       n AS n_chars_total, lo AS n_lower, up AS n_upper,
-       di AS n_digit, sp AS n_space, ot AS n_other,
-       round(CASE WHEN n > 0 THEN
-           (CASE WHEN lo > 0 THEN -(lo * 1.0 / n) * ln(lo * 1.0 / n) ELSE 0 END)
-         + (CASE WHEN up > 0 THEN -(up * 1.0 / n) * ln(up * 1.0 / n) ELSE 0 END)
-         + (CASE WHEN di > 0 THEN -(di * 1.0 / n) * ln(di * 1.0 / n) ELSE 0 END)
-         + (CASE WHEN sp > 0 THEN -(sp * 1.0 / n) * ln(sp * 1.0 / n) ELSE 0 END)
-         + (CASE WHEN ot > 0 THEN -(ot * 1.0 / n) * ln(ot * 1.0 / n) ELSE 0 END)
-         ELSE 0.0 END, 6) AS class_entropy,
-       round(CASE WHEN n > 0 THEN di * 1.0 / n ELSE 0.0 END, 6) AS digit_ratio,
-       round(CASE WHEN n > 0 THEN up * 1.0 / n ELSE 0.0 END, 6) AS upper_ratio
-FROM c2
-"""
-
-
-FUZZY_NAME_PAIRS_ORACLE = """
-WITH names AS (
-  SELECT DISTINCT name FROM (
-    SELECT p_name AS name FROM part
-    UNION ALL
-    SELECT 'x' || substr(p_name, 2) FROM part
-  ) WHERE name IS NOT NULL AND length(name) > 0
-), blocked AS (
-  SELECT name, 'p:' || substr(name, 1, 4) AS blk, length(name) AS len
-  FROM names
-  UNION ALL
-  SELECT name, 's:' || substr(reverse(name), 1, 4) AS blk,
-         length(name) AS len
-  FROM names
-), sized AS (
-  SELECT *, count(*) OVER (PARTITION BY blk) AS bn FROM blocked
-), capped AS (
-  SELECT * FROM sized WHERE bn <= 1024
-), pairs AS (
-  SELECT DISTINCT a.name AS name_a, b.name AS name_b
-  FROM capped a
-  JOIN capped b
-    ON a.blk = b.blk AND a.name < b.name AND abs(a.len - b.len) <= 3
-)
-SELECT name_a, name_b,
-       CAST(levenshtein(name_a, name_b) AS INT) AS dist
-FROM pairs
-WHERE levenshtein(name_a, name_b) <= 3
-"""
-
-
-GLOBAL_INDEX_ORACLE = """
-SELECT doc_id,
-       CAST(row_number() OVER (ORDER BY doc_id) - 1 AS BIGINT)
-         AS global_idx
-FROM documents
-"""
-
-
-# Ground truth for the JSON round-trip query: aggregates the RAW
-# columns (no JSON involved), so Spark's serialize->from_json->extract
-# chain is checked against an independent derivation.
-JSON_EXTRACT_ORACLE = """
-SELECT lang,
-       count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       max(doc_id) AS max_id,
-       CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-FROM documents GROUP BY lang
-"""
-
-# Ground truth for the MapType round-trip: the same counts computed as
-# plain rows (no map), with the pre-filter type count as a window.
-MAP_EVENT_COUNTS_ORACLE = """
-WITH per AS (
-  SELECT user_id, event_type, count(*) AS cnt
-  FROM events GROUP BY user_id, event_type
-)
-SELECT user_id, n_types, event_type, cnt FROM (
-  SELECT user_id,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_types,
-         event_type, cnt
-  FROM per
-) WHERE cnt >= 3
-"""
-
-
-def curate_documents_sql(
-    min_quality: float = 0.6,
-    lang: str = "en",
-    min_tokens: int = 5,
-    max_tokens: int = 2000,
-) -> str:
-    """Mirrors the composed curation query: exact-dup canonical filter
-    (min doc_id per fingerprint) AND quality AND language AND length —
-    over documents UNION a shifted copy (guaranteed duplicates)."""
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-)
-SELECT doc_id, lang_pred, quality, n_tokens
-FROM (
-  SELECT *, min(doc_id) OVER (PARTITION BY fingerprint) AS canon
-  FROM ({textstats_sql(source="corpus")})
-)
-WHERE doc_id = canon
-  AND quality >= {min_quality}
-  AND lang_pred = '{lang}'
-  AND n_tokens BETWEEN {min_tokens} AND {max_tokens}
-"""
-
-
-def dedup_exact_sql() -> str:
-    """Oracle for exact dedup over documents UNION a shifted copy."""
-    return f"""
-WITH both_copies AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-), fp AS (
-  SELECT md5({_NORM}) AS fingerprint, doc_id FROM both_copies
-)
-SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS canonical_id
-FROM fp GROUP BY fingerprint HAVING count(*) > 1
-"""
-
-
-def _shingles_sql(n: int = 3) -> str:
-    """Distinct word n-gram shingles of a pre-split `ntoks` list,
-    mirroring dedup.shingles (short texts yield one whole-text gram)."""
-    return (
-        f"CASE WHEN len(ntoks) >= {n} THEN "
-        f"list_distinct(list_transform(generate_series(1, len(ntoks) - {n - 1}), "
-        f"i -> array_to_string(ntoks[i:i+{n - 1}], ' '))) "
-        "ELSE [array_to_string(ntoks, ' ')] END"
-    )
-
-
-_SHINGLES = _shingles_sql(3)
-
-
-def decontaminate_sql(
-    n: int = 5, modulus: int = 50, min_matches: int = 1
-) -> str:
-    """Mirrors dedup.decontaminate: distinct n-gram hash overlap
-    between the train partition and the eval partition of documents."""
-    g = "('0x' || substr(md5(s), 1, 8))::BIGINT"
-    return f"""
-WITH ev_toks AS (
-  SELECT regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE doc_id % {modulus} = 0
-), evg AS (
-  SELECT DISTINCT unnest(list_transform({_shingles_sql(n)},
-         s -> {g})) AS _g
-  FROM ev_toks
-), tr_toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE doc_id % {modulus} != 0
-), tg AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform({_shingles_sql(n)},
-           s -> {g}))) AS _g
-  FROM tr_toks
-)
-SELECT doc_id, count(*) AS n_matched_ngrams
-FROM tg JOIN evg USING (_g)
-GROUP BY doc_id HAVING count(*) >= {min_matches}
-"""
-
-
-def _minhash_terms(k: int) -> list[str]:
-    from .functions.dedup import MINHASH_PRIME, minhash_params
-
-    terms = []
-    for a, b in minhash_params(k):
-        terms.append(
-            f"list_min(list_transform(shs, s -> "
-            f"((('0x' || substr(md5(s), 1, 8))::BIGINT * {a} + {b}) "
-            f"% {MINHASH_PRIME})))"
-        )
-    return terms
-
-
-def minhash_signatures_sql(k: int = 8) -> str:
-    cols = ", ".join(
-        f"{t} AS mh{i}" for i, t in enumerate(_minhash_terms(k))
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks FROM documents
-), sh AS (
-  SELECT doc_id, {_SHINGLES} AS shs FROM toks
-)
-SELECT doc_id, {cols} FROM sh
-"""
-
-
-def simhash_sql(bits: int = 32) -> str:
-    terms = []
-    for b in range(bits):
-        mask = 1 << b
-        terms.append(
-            f"(CASE WHEN 2 * len(list_filter(th, h -> (h & {mask}) != 0)) "
-            f"- len(th) > 0 THEN CAST({mask} AS BIGINT) ELSE 0 END)"
-        )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks FROM documents
-), hashed AS (
-  SELECT doc_id,
-         list_transform(ntoks, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
-  FROM toks
-)
-SELECT doc_id, {" + ".join(terms)} AS simhash FROM hashed
-"""
-
-
-def lsh_candidate_pairs_sql(
-    k: int = 16, bands: int = 4, max_bucket: int = 64
-) -> str:
-    """Mirrors dedup.lsh_candidate_pairs: exact-fingerprint collapse
-    (member->canonical links at jaccard 1.0), banding over canonical
-    reps only, bucket cap, ids-only candidate join, Jaccard rerank."""
-    rows = k // bands
-    terms = _minhash_terms(k)
-    band_exprs = []
-    for b in range(bands):
-        parts = ", ".join(
-            f"CAST(mh{b * rows + j} AS VARCHAR)" for j in range(rows)
-        )
-        band_exprs.append(
-            f"SELECT doc_id, {b} AS band, "
-            f"md5(concat_ws(',', {parts})) AS band_hash FROM sigs"
-        )
-    sig_cols = ", ".join(f"{t} AS mh{i}" for i, t in enumerate(terms))
-    return f"""
-WITH fp AS (
-  SELECT doc_id, md5({_NORM}) AS fingerprint FROM documents
-), groups AS (
-  SELECT fingerprint, min(doc_id) AS canonical FROM fp GROUP BY fingerprint
-), member_pairs AS (
-  SELECT g.canonical AS id_a, f.doc_id AS id_b, CAST(1.0 AS DOUBLE) AS jaccard
-  FROM fp f JOIN groups g USING (fingerprint)
-  WHERE f.doc_id <> g.canonical
-), toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks FROM documents
-  WHERE doc_id IN (SELECT canonical FROM groups)
-), sh AS (
-  SELECT doc_id, {_SHINGLES} AS shs FROM toks
-), sigs AS (
-  SELECT doc_id,
-         list_sort(list_distinct(list_transform(shs,
-           s -> ('0x' || substr(md5(s), 1, 8))::BIGINT))) AS shs,
-         {sig_cols} FROM sh
-), banded AS (
-  {" UNION ALL ".join(band_exprs)}
-), capped AS (
-  SELECT * FROM banded
-  QUALIFY count(*) OVER (PARTITION BY band, band_hash) <= {max_bucket}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-), rerank AS (
-  SELECT c.id_a, c.id_b,
-         round(len(list_intersect(sa.shs, sb.shs))
-           / CAST(len(sa.shs) + len(sb.shs)
-                  - len(list_intersect(sa.shs, sb.shs)) AS DOUBLE), 6)
-           AS jaccard
-  FROM cand c
-  JOIN sigs sa ON sa.doc_id = c.id_a
-  JOIN sigs sb ON sb.doc_id = c.id_b
-)
-SELECT * FROM member_pairs
-UNION ALL
-SELECT * FROM rerank
-"""
-
-
-def dedup_clusters_sql(
-    threshold: float = 0.8, k: int = 16, bands: int = 4
-) -> str:
-    """Mirrors dedup.resolve_clusters over the LSH pair output:
-    transitive closure of the thresholded pair graph via a recursive
-    CTE, canonical = min id of each connected component (the Spark
-    side computes the same fixpoint by min-label propagation)."""
-    inner = lsh_candidate_pairs_sql(k=k, bands=bands)
-    return f"""
-WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({inner}) WHERE jaccard >= {threshold}
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach(id, r) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT rc.id, e.dst FROM reach rc JOIN edges e ON rc.r = e.src
-)
-SELECT id AS doc_id, least(id, min(r)) AS canonical_id
-FROM reach GROUP BY id
-"""
-
-
-def _simhash_block_ctes(source: str, bits: int, n_blocks: int) -> str:
-    """toks -> hashed -> sh -> blocks CTE chain computing the packed
-    SimHash and its multi-table blocks for relation `source` (must
-    expose doc_id, text)."""
-    bw = bits // n_blocks
-    mask = (1 << bw) - 1
-    terms = []
-    for b in range(bits):
-        m = 1 << b
-        terms.append(
-            f"(CASE WHEN 2 * len(list_filter(th, h -> (h & {m}) != 0)) "
-            f"- len(th) > 0 THEN CAST({m} AS BIGINT) ELSE 0 END)"
-        )
-    block_exprs = " UNION ALL ".join(
-        f"SELECT doc_id, sh, {j} AS block_id, (sh >> {j * bw}) & {mask} "
-        f"AS block_val FROM sh"
-        for j in range(n_blocks)
-    )
-    return f"""toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM {source}
-), hashed AS (
-  SELECT doc_id,
-         list_transform(ntoks, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS th
-  FROM toks
-), sh AS (
-  SELECT doc_id, {" + ".join(terms)} AS sh FROM hashed
-), blocks AS (
-  {block_exprs}
-)"""
-
-
-def simhash_near_dups_sql(
-    bits: int = 32,
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-    max_block: int = 256,
-) -> str:
-    """Mirrors dedup.simhash_near_dups (multi-table blocking + cap +
-    dedup + hamming filter) over documents UNION a shifted copy."""
-    return f"""
-WITH both_copies AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-), {_simhash_block_ctes("both_copies", bits, n_blocks)}, capped AS (
-  SELECT * FROM blocks
-  QUALIFY count(*) OVER (PARTITION BY block_id, block_val) <= {max_block}
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-  FROM capped a JOIN capped b
-    ON a.block_id = b.block_id AND a.block_val = b.block_val
-   AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
-"""
-
-
-CAP_STATS_CLONE_TEXT = "the same text repeated for cap accounting"
-
-
-def simhash_cap_stats_sql(
-    bits: int = 32,
-    n_blocks: int = 4,
-    max_block: int = 256,
-    n_clones: int = 3000,
-) -> str:
-    """Mirrors the drop-accounting side output of simhash_near_dups
-    over documents UNION a degenerate clone block: counts the
-    (block_id, block_val) buckets the `> max_block` cap discards and
-    the rows inside them."""
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT 2000000 + i AS doc_id, '{CAP_STATS_CLONE_TEXT}' AS text
-  FROM generate_series(0, {n_clones - 1}) t(i)
-), {_simhash_block_ctes("corpus", bits, n_blocks)}, sized AS (
-  SELECT *, count(*) OVER (PARTITION BY block_id, block_val) AS bn
-  FROM blocks
-)
-SELECT 'simhash_near_dups' AS operator,
-       count(DISTINCT (block_id || ':' || block_val)) AS dropped_buckets,
-       count(*) AS dropped_rows
-FROM sized WHERE bn > {max_block}
-"""
-
-
-def ann_cosine_topk_sql(k: int = 5, modulus: int = 100) -> str:
-    return f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec
-  FROM embeddings WHERE vec_id % {modulus} = 0
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-         round(list_dot_product(e.embedding::DOUBLE[], q.qvec)
-               / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                  * sqrt(list_dot_product(q.qvec, q.qvec))), 6) AS cosine
-  FROM embeddings e CROSS JOIN q
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def ann_lsh_topk_sql(dim: int = 64, n_planes: int = 8, k: int = 5,
-                     modulus: int = 100, probe_radius: int = 1,
-                     n_tables: int = 1, table_seed: str = "lsh") -> str:
-    """Mirrors similarity.lsh_topk incl. the multi-table union: per
-    table a prefixed bucket string, per-table probe flips, and a
-    DISTINCT collapsing candidates co-bucketed in several tables
-    (rounded cosine is identical across tables, so the triple
-    dedupes exactly)."""
-    import itertools
-
-    from .functions.similarity import hyperplanes
-
-    if n_tables <= 1:
-        tbl_planes = [("", hyperplanes(dim, n_planes))]
-    else:
-        tbl_planes = [
-            (f"{t}:", hyperplanes(dim, n_planes, seed=f"{table_seed}:{t}"))
-            for t in range(n_tables)
-        ]
-
-    def bits_expr(planes) -> str:
-        return " || ".join(
-            "(CASE WHEN list_dot_product(embedding::DOUBLE[], ["
-            + ", ".join(repr(c) for c in plane)
-            + "]) >= 0 THEN '1' ELSE '0' END)"
-            for plane in planes
-        )
-
-    def flipped(bucket_col: str, positions: set[int]) -> str:
-        # per-character rebuild mirroring similarity._flip_bits
-        parts = []
-        for i in range(1, n_planes + 1):
-            c = f"substr({bucket_col}, {i}, 1)"
-            if i - 1 in positions:
-                c = f"(CASE WHEN {c} = '1' THEN '0' ELSE '1' END)"
-            parts.append(c)
-        return " || ".join(parts)
-
-    flip_sets: list[set[int]] = [set()]
-    if probe_radius >= 1:
-        flip_sets += [{i} for i in range(n_planes)]
-    if probe_radius >= 2:
-        flip_sets += [
-            {i, j} for i, j in itertools.combinations(range(n_planes), 2)
-        ]
-
-    corpus_buckets = []
-    probe_selects = []
-    for ti, (prefix, planes) in enumerate(tbl_planes):
-        corpus_buckets.append(
-            f"SELECT vec_id, vec, '{prefix}' || b{ti} AS bucket FROM b"
-        )
-        for ps in flip_sets:
-            expr = f"b{ti}" if not ps else flipped(f"b{ti}", ps)
-            probe_selects.append(
-                f"SELECT query_id, qvec, '{prefix}' || ({expr}) "
-                "AS bucket FROM q"
-            )
-    bcols = ", ".join(
-        f"{bits_expr(planes)} AS b{ti}"
-        for ti, (_p, planes) in enumerate(tbl_planes)
-    )
-    qcols = ", ".join(f"b{ti}" for ti in range(len(tbl_planes)))
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec, {bcols} FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, vec AS qvec, {qcols} FROM b
-  WHERE vec_id % {modulus} = 0
-), cb AS (
-  {" UNION ALL ".join(corpus_buckets)}
-), probes AS (
-  {" UNION ALL ".join(probe_selects)}
-), scored AS (
-  SELECT DISTINCT p.query_id, cb.vec_id,
-         round(list_dot_product(cb.vec, p.qvec)
-               / (sqrt(list_dot_product(cb.vec, cb.vec))
-                  * sqrt(list_dot_product(p.qvec, p.qvec))), 6) AS cosine
-  FROM cb JOIN probes p ON cb.bucket = p.bucket
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def ann_ivf_topk_sql(
-    k: int = 5,
-    nprobe: int = 8,
-    centroid_step: int = 50,
-    modulus: int = 100,
-    dim: int = 64,
-    refine_iters: int = 0,
-) -> str:
-    """Mirrors similarity.ivf_topk: deterministic centroid sample,
-    optional k-means refinement rounds (per-cell elementwise means
-    rounded to 6 decimals, empty cells keep their centroid),
-    rounded-cosine argmax cell assignment (ties to the lowest
-    centroid id), nprobe nearest cells per query, exact rerank within
-    probed cells."""
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * "
-        "sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    refine_ctes = []
-    for t in range(refine_iters):
-        mean_list = ", ".join(
-            f"round(avg(vec[{i + 1}]), 6)" for i in range(dim)
-        )
-        refine_ctes.append(f"""a_{t} AS (
-  SELECT vec_id, vec, cid FROM (
-    SELECT b.vec_id, b.vec, c.cid,
-           {cos.format(a="b.vec", b="c.cvec")} AS sim,
-           row_number() OVER (
-             PARTITION BY b.vec_id ORDER BY
-             {cos.format(a="b.vec", b="c.cvec")} DESC, c.cid ASC) AS rn
-    FROM base b CROSS JOIN cent_{t} c
-  ) WHERE rn = 1
-), m_{t} AS (
-  SELECT cid, [{mean_list}] AS mvec FROM a_{t} GROUP BY cid
-), cent_{t + 1} AS (
-  SELECT c.cid, coalesce(m.mvec, c.cvec) AS cvec
-  FROM cent_{t} c LEFT JOIN m_{t} m USING (cid)
-)""")
-    refine_sql = (
-        ", " + ", ".join(refine_ctes) if refine_ctes else ""
-    )
-    final_cent = f"cent_{refine_iters}"
-    return f"""
-WITH cent_0 AS (
-  SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec FROM embeddings
-  WHERE vec_id % {centroid_step} = 1
-), base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-){refine_sql}, cent AS (
-  SELECT cid, cvec FROM {final_cent}
-), assign_scored AS (
-  SELECT b.vec_id, b.vec, c.cid,
-         {cos.format(a="b.vec", b="c.cvec")} AS sim
-  FROM base b CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, vec, cid FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM assign_scored
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, vec AS qvec FROM base
-  WHERE vec_id % {modulus} = 0
-), probe_scored AS (
-  SELECT q.query_id, q.qvec, c.cid,
-         {cos.format(a="q.qvec", b="c.cvec")} AS sim
-  FROM q CROSS JOIN cent c
-), probes AS (
-  SELECT query_id, qvec, cid FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM probe_scored
-  ) WHERE rn <= {nprobe}
-), scored AS (
-  SELECT p.query_id, a.vec_id,
-         {cos.format(a="a.vec", b="p.qvec")} AS cosine
-  FROM assigned a JOIN probes p ON a.cid = p.cid
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def quality_percentiles_sql() -> str:
-    """Oracle for the applyInPandas UDAF: per-language quality
-    percentiles via the same explicit rank formulas (sorted-list
-    indexing, 1-based in DuckDB)."""
-    return f"""
-WITH ts AS ({textstats_sql()}),
-g AS (
-  SELECT lang_pred, list_sort(list(quality)) AS q, count(*) AS n,
-         sum(n_tokens) AS tok
-  FROM ts GROUP BY lang_pred
-)
-SELECT lang_pred,
-       CAST(n AS BIGINT) AS n_docs,
-       round((q[(n - 1) // 2 + 1] + q[n // 2 + 1]) / 2.0, 6) AS p50_quality,
-       round(q[(9 * (n - 1)) // 10 + 1], 6) AS p90_quality,
-       round(CAST(tok AS DOUBLE) / n, 6) AS avg_tokens
-FROM g
-"""
-
-
-def udtf_token_chunks_sql(chunk_tokens: int = 10) -> str:
-    """Mirrors textstats.token_chunks_udtf_df: whitespace tokens in
-    fixed-size chunks (1-based inclusive list slicing in DuckDB)."""
-    n = chunk_tokens
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS p
-  FROM documents WHERE length(trim(text)) > 0
-), numbered AS (
-  SELECT doc_id, p,
-         CAST(unnest(generate_series(0,
-           CAST(ceil(len(p) / {n}.0) AS INT) - 1)) AS INT) AS chunk_no
-  FROM toks
-)
-SELECT doc_id, chunk_no,
-       array_to_string(p[chunk_no * {n} + 1 : chunk_no * {n} + {n}], ' ')
-         AS chunk
-FROM numbered
-"""
-
-# DuckDB has a NATIVE ASOF JOIN — the perfect independent oracle for
-# the composed Spark implementation in operators/asof.py.
-ASOF_JOIN_ORACLE = """
-WITH purchases AS (
-  SELECT event_id, user_id, ts, value FROM events
-  WHERE event_type = 'purchase'
-), views AS (
-  -- deduped per (user_id, ts) keeping max event_id, mirroring the
-  -- Spark query: pins the tie rule at duplicate timestamps (ASOF
-  -- would otherwise pick arbitrarily among exact duplicates)
-  SELECT user_id, ts, max(event_id) AS event_id FROM events
-  WHERE event_type = 'view' GROUP BY user_id, ts
-)
-SELECT p.event_id, p.user_id, p.ts, p.value,
-       v.event_id AS asof_event_id, v.ts AS asof_ts
-FROM purchases p ASOF LEFT JOIN views v
-  ON p.user_id = v.user_id AND p.ts >= v.ts
-"""
-
-def hypertable_rollup_sql() -> str:
-    """Oracle for the multi-resolution rollup: each resolution computed
-    directly from raw events (semantically identical to the Spark
-    plan's level-from-level composition — counts/sums compose exactly,
-    and the one shared rounding happens at the end on both sides)."""
-    levels = []
-    for label, secs in (("10 minutes", 600), ("1 hour", 3600), ("1 day", 86400)):
-        levels.append(f"""
-SELECT '{label}' AS resolution,
-       make_timestamp(CAST(floor(epoch(ts) / {secs}) * {secs} * 1000000 AS BIGINT))
-         AS window_start,
-       event_type,
-       count(*) AS n_events,
-       round(sum(value), 4) AS sum_value
-FROM events GROUP BY 2, 3""")
-    return " UNION ALL ".join(levels)
-
-
-RANGE_JOIN_ORACLE = """
-WITH bands AS (
-  SELECT k AS band_id, k * 10000.0 AS lo, k * 10000.0 + 15000.0 AS hi
-  FROM generate_series(0, 49) t(k)
-)
-SELECT band_id, count(*) AS n_orders,
-       round(sum(o_totalprice), 4) AS revenue
-FROM bands JOIN orders ON o_totalprice >= lo AND o_totalprice < hi
-GROUP BY band_id
-"""
-
-OUTER_JOIN_ORACLE = """
-SELECT n_nationkey, n_name,
-       count(DISTINCT c_custkey) AS n_customers,
-       count(o_orderkey) AS n_orders,
-       round(coalesce(sum(o_totalprice), 0.0), 4) AS revenue
-FROM nation
-LEFT JOIN customer ON n_nationkey = c_nationkey
-LEFT JOIN orders ON c_custkey = o_custkey
-GROUP BY n_nationkey, n_name
-"""
-
-SEMI_JOIN_ORACLE = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-  AND o_orderdate < TIMESTAMP '1996-10-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem
-    WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
-  )
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def embedding_near_dups_sql(
-    dim: int = 64,
-    n_planes: int = 8,
-    threshold: float = 0.99,
-    max_bucket: int = 1024,
-    shift: int = 1000000,
-) -> str:
-    """Mirrors similarity.embedding_near_dups over embeddings UNION an
-    id-shifted exact copy (guaranteed cosine-1.0 pairs)."""
-    from .functions.similarity import hyperplanes
-
-    planes = hyperplanes(dim, n_planes)
-    bits = " || ".join(
-        "(CASE WHEN list_dot_product(vec, ["
-        + ", ".join(repr(c) for c in plane)
-        + "]) >= 0 THEN '1' ELSE '0' END)"
-        for plane in planes
-    )
-    return f"""
-WITH both_copies AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-  UNION ALL
-  SELECT vec_id + {shift} AS vec_id, embedding::DOUBLE[] AS vec
-  FROM embeddings
-), b AS (
-  SELECT vec_id, vec, {bits} AS bucket FROM both_copies
-), capped AS (
-  SELECT * FROM b
-  QUALIFY count(*) OVER (PARTITION BY bucket) <= {max_bucket}
-), pairs AS (
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-         round(list_dot_product(a.vec, c.vec)
-               / (sqrt(list_dot_product(a.vec, a.vec))
-                  * sqrt(list_dot_product(c.vec, c.vec))), 6) AS cosine
-  FROM capped a JOIN capped c
-    ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-)
-SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= {threshold}
-"""
-
-
-SET_OPS_ORACLE = """
-WITH c96 AS (
-  SELECT o_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-    AND o_orderdate < TIMESTAMP '1997-01-01'
-), c97 AS (
-  SELECT o_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-    AND o_orderdate < TIMESTAMP '1998-01-01'
-)
-SELECT 'both' AS cohort, o_custkey
-FROM (SELECT o_custkey FROM c96 INTERSECT SELECT o_custkey FROM c97)
-UNION ALL
-SELECT 'only_1996' AS cohort, o_custkey
-FROM (SELECT o_custkey FROM c96 EXCEPT SELECT o_custkey FROM c97)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Multimodal oracles (functions/multimodal.py) — the synthetic payload is
-# header(md5(ref) bytes 0-2) + counter-block stream (block i =
-# unhex(md5(ref || ':' || i))), so every decoded field and every frame
-# signature is closed-form over string md5.
-# ---------------------------------------------------------------------------
-
-_REF_MD5 = "md5(media_ref)"
-
-
-def multimodal_meta_sql(payload_len: int = 256) -> str:
-    """Oracle for decode_metadata over with_media_blob('m:'||doc_id):
-    width/height/modality are pure functions of md5(ref) header bytes;
-    the payload is always well-formed -> valid, payload_bytes const."""
-    return f"""
-WITH refs AS (
-  SELECT 'm:' || CAST(doc_id AS VARCHAR) AS media_ref FROM documents
-)
-SELECT media_ref,
-       16 + ('0x' || substr({_REF_MD5}, 1, 2))::INT % 240 AS width,
-       16 + ('0x' || substr({_REF_MD5}, 3, 2))::INT % 240 AS height,
-       CASE ('0x' || substr({_REF_MD5}, 5, 2))::INT % 3
-            WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video'
-       END AS modality,
-       CAST({payload_len} AS BIGINT) AS payload_bytes,
-       TRUE AS valid
-FROM refs
-"""
-
-
-def frame_sample_sql(
-    every_n: int = 4, payload_len: int = 256, frame_bytes: int = 16
-) -> str:
-    """Oracle for frame_sample over with_media_blob('v:'||doc_id<50).
-    With frame_bytes = md5 digest size, frame k is exactly stream block
-    k, so lower(hex(frame)) == md5(ref || ':' || k) and the Spark-side
-    frame_sig = md5(lower(hex(frame))) == md5(md5(ref || ':' || k))."""
-    assert frame_bytes == 16, "oracle covers the block-aligned default"
-    n_frames = payload_len // frame_bytes
-    return f"""
-WITH refs AS (
-  SELECT 'v:' || CAST(doc_id AS VARCHAR) AS media_ref
-  FROM documents WHERE doc_id < 50
-)
-SELECT media_ref,
-       CAST(k AS INT) AS frame_no,
-       md5(md5(media_ref || ':' || CAST(k AS VARCHAR))) AS frame_sig
-FROM refs, generate_series(0, {n_frames - 1}, {every_n}) AS t(k)
-"""
-
-
-def media_features_sql(payload_len: int = 256) -> str:
-    """Oracle for extract_features: payload byte j = hex pair j%16 of
-    md5(ref || ':' || j//16), so every byte statistic is closed-form."""
-    return f"""
-WITH refs AS (
-  SELECT 'm:' || CAST(doc_id AS VARCHAR) AS media_ref FROM documents
-), bytes AS (
-  SELECT media_ref,
-         ('0x' || substr(md5(media_ref || ':' || CAST(k // 16 AS VARCHAR)),
-                         (k % 16) * 2 + 1, 2))::INT AS b
-  FROM refs, generate_series(0, {payload_len - 1}) AS t(k)
-)
-SELECT media_ref,
-       avg(b) AS mean_byte,
-       CAST(max(b) AS INT) AS max_byte,
-       sum(CASE WHEN b > 127 THEN 1 ELSE 0 END) / {payload_len}.0
-         AS frac_high,
-       CAST({payload_len} AS BIGINT) AS n_bytes
-FROM bytes GROUP BY media_ref
-"""
-
-
-def media_resize_sql(factor: int = 2, thumb_bytes: int = 64) -> str:
-    """Oracle for resize_media: dimensions from the md5(ref) header
-    bytes; thumb_sig = md5 of the concatenated hex of the first
-    thumb_bytes/16 payload blocks."""
-    n_blocks = thumb_bytes // 16
-    thumb_hex = " || ".join(
-        f"md5(media_ref || ':{i}')" for i in range(n_blocks)
-    )
-    return f"""
-WITH refs AS (
-  SELECT 'm:' || CAST(doc_id AS VARCHAR) AS media_ref FROM documents
-)
-SELECT media_ref,
-       CAST((16 + ('0x' || substr(md5(media_ref), 1, 2))::INT % 240)
-            // {factor} AS INT) AS new_width,
-       CAST((16 + ('0x' || substr(md5(media_ref), 3, 2))::INT % 240)
-            // {factor} AS INT) AS new_height,
-       md5({thumb_hex}) AS thumb_sig
-FROM refs
-"""
-
-
-# ---------------------------------------------------------------------------
-# Relational operator oracles (plans/relational.py)
-# ---------------------------------------------------------------------------
-
-RELATIONAL_ORACLES = {
-    "q6_forecast_revenue": """
-SELECT round(sum(l_extendedprice * l_discount), 4) AS revenue,
-       count(*) AS n_lines
-FROM lineitem
-WHERE year(l_shipdate) = 1996
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-""",
-    "q13_order_count_distribution": """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey
-   AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey
-)
-GROUP BY c_count
-""",
-    "q15_top_supplier": """
-WITH rev AS (
-  SELECT l_suppkey,
-         round(sum(l_extendedprice * (1 - l_discount)), 4) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, r.total_revenue
-FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-WHERE r.total_revenue = (SELECT max(total_revenue) FROM rev)
-""",
-    "q7_volume_shipping": """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS INT) AS l_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE year(l_shipdate) IN (1996, 1997)
-  AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
-""",
-    "q8_market_share": """
-SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-       round(sum(CASE WHEN n1.n_name = 'NATION_3'
-                      THEN l_extendedprice * (1 - l_discount)
-                      ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 6) AS mkt_share,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS total_volume
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-JOIN region ON n2.n_regionkey = r_regionkey
-WHERE p_type = 'PROMO'
-  AND year(o_orderdate) IN (1996, 1997)
-  AND r_name = 'ASIA'
-GROUP BY year(o_orderdate)
-""",
-    "q9_product_profit": """
-SELECT n_name AS nation,
-       CAST(year(o_orderdate) AS INT) AS o_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%widget%'
-GROUP BY n_name, year(o_orderdate)
-""",
-    "q10_returned_items": """
-SELECT c_custkey, c_name, round(c_acctbal, 4) AS acctbal, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1996-07-01'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-""",
-    "q12_shipping_delay": """
-SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) > 60
-            THEN 'SLOW' ELSE 'FAST' END AS delay_bucket,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-WHERE year(l_shipdate) = 1996
-GROUP BY 1
-""",
-    "q14_promo_revenue": """
-SELECT round(sum(CASE WHEN p_type = 'PROMO'
-                      THEN l_extendedprice * (1 - l_discount)
-                      ELSE 0.0 END) * 100.0
-             / sum(l_extendedprice * (1 - l_discount)), 6)
-         AS promo_revenue_pct,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS total_revenue
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-  AND l_shipdate < TIMESTAMP '1996-04-01'
-""",
-    "q19_disjunctive_brackets": """
-SELECT round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-       count(*) AS n_lines
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#13' AND l_quantity BETWEEN 1 AND 11
-       AND p_size BETWEEN 1 AND 5)
-   OR (p_brand = 'Brand#22' AND l_quantity BETWEEN 10 AND 20
-       AND p_size BETWEEN 1 AND 10)
-   OR (p_brand = 'Brand#25' AND l_quantity BETWEEN 20 AND 30
-       AND p_size BETWEEN 1 AND 15)
-""",
-    "q21_waiting_suppliers": """
-WITH ll AS (
-  SELECT l.l_orderkey, l.l_suppkey,
-         CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-              THEN 1 ELSE 0 END AS late
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderstatus = 'F'
-)
-SELECT s.s_name, count(*) AS numwait
-FROM supplier s
-JOIN ll l1 ON s.s_suppkey = l1.l_suppkey
-WHERE l1.late = 1
-  AND EXISTS (
-    SELECT 1 FROM ll l2
-    WHERE l2.l_orderkey = l1.l_orderkey
-      AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (
-    SELECT 1 FROM ll l3
-    WHERE l3.l_orderkey = l1.l_orderkey
-      AND l3.l_suppkey <> l1.l_suppkey
-      AND l3.late = 1)
-GROUP BY s.s_name
-""",
-    "q17_small_quantity": """
-SELECT p.p_brand,
-       count(*) AS n_small,
-       round(sum(l.l_extendedprice) / 7.0, 4) AS avg_yearly
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_size <= 10
-  AND l.l_quantity < (
-    SELECT 0.2 * avg(l2.l_quantity)
-    FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-GROUP BY p.p_brand
-""",
-    "q20_excess_shippers": """
-SELECT s.s_suppkey, s.s_name, round(s.s_acctbal, 4) AS acctbal
-FROM supplier s
-WHERE s.s_suppkey IN (
-  SELECT l.l_suppkey
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  WHERE p.p_type = 'PROMO'
-  GROUP BY l.l_suppkey, l.l_partkey
-  HAVING sum(l.l_quantity) > 0.15 * (
-    SELECT sum(l2.l_quantity) FROM lineitem l2
-    WHERE l2.l_partkey = l.l_partkey)
-)
-""",
-    "q16_supplier_counts": """
-SELECT p.p_brand, p.p_type, p.p_size,
-       count(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_size IN (1, 5, 10, 15, 20)
-  AND p.p_type <> 'PROMO'
-  AND l.l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p.p_brand, p.p_type, p.p_size
-""",
-    "q18_large_orders": """
-SELECT c.c_name, o.o_orderkey, o.o_orderdate,
-       round(o.o_totalprice, 4) AS totalprice,
-       round(sum(l.l_quantity), 4) AS total_qty
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE o.o_orderkey IN (
-  SELECT l2.l_orderkey FROM lineitem l2
-  GROUP BY l2.l_orderkey HAVING sum(l2.l_quantity) > 300)
-GROUP BY c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice
-""",
-    "q22_dormant_customers": """
-SELECT c.c_mktsegment,
-       count(*) AS n_customers,
-       round(sum(c.c_acctbal), 4) AS total_acctbal
-FROM customer c
-WHERE c.c_acctbal > (
-    SELECT avg(c2.c_acctbal) FROM customer c2 WHERE c2.c_acctbal > 0)
-  AND NOT EXISTS (
-    SELECT 1 FROM orders o
-    WHERE o.o_custkey = c.c_custkey
-      AND o.o_orderpriority = '1-URGENT')
-GROUP BY c.c_mktsegment
-""",
-    "rolling_window_revenue": """
-SELECT o_orderkey, o_custkey, o_orderdate,
-       round(sum(o_totalprice) OVER w, 4) AS rev_30d,
-       count(*) OVER w AS n_orders_30d
-FROM orders
-WINDOW w AS (
-  PARTITION BY o_custkey
-  ORDER BY date_diff('day', DATE '1970-01-01', o_orderdate)
-  RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
-""",
-    "grouping_sets_revenue": """
-SELECT o_orderstatus, o_orderpriority,
-       CAST(grouping(o_orderstatus) AS INT) AS g_status,
-       CAST(grouping(o_orderpriority) AS INT) AS g_priority,
-       count(*) AS n_orders,
-       round(sum(o_totalprice), 4) AS revenue
-FROM orders
-GROUP BY GROUPING SETS (
-    (o_orderstatus, o_orderpriority), (o_orderstatus), ()
-)
-""",
-    "q1_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 4) AS sum_qty,
-       round(sum(l_extendedprice), 4) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4) AS sum_charge,
-       round(avg(l_quantity), 4) AS avg_qty,
-       round(avg(l_extendedprice), 4) AS avg_price,
-       round(avg(l_discount), 4) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-    "q3_shipping_priority": """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderdate, l_orderkey
-LIMIT 10
-""",
-    "q5_local_suppliers": """
-SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""",
-    "window_topn": """
-SELECT o_custkey, o_orderkey, o_totalprice, CAST(rank AS INT) AS rank
-FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (
-           PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-  FROM orders
-) WHERE rank <= 3
-""",
-    "window_analytics": """
-SELECT o_orderkey, o_custkey,
-       lag(o_totalprice) OVER w AS prev_price,
-       lead(o_totalprice) OVER w AS next_price,
-       CAST(ntile(4) OVER w AS INT) AS quartile,
-       round(percent_rank() OVER w, 6) AS pct_rank,
-       CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate) AS INT)
-         AS days_since_prev,
-       CAST(month(o_orderdate) AS INT) AS order_month
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-""",
-    "rollup_status_month": """
-SELECT o_orderstatus, month, n_orders, total_price, grouping_level
-FROM (
-  SELECT o_orderstatus, strftime(o_orderdate, '%Y-%m') AS month,
-         count(*) AS n_orders,
-         round(sum(o_totalprice), 4) AS total_price,
-         CAST(GROUPING(o_orderstatus, strftime(o_orderdate, '%Y-%m')) AS BIGINT)
-           AS grouping_level
-  FROM orders
-  GROUP BY ROLLUP (o_orderstatus, strftime(o_orderdate, '%Y-%m'))
-)
-""",
-    "cube_status_priority": """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-       round(avg(o_totalprice), 4) AS avg_price,
-       CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT)
-         AS grouping_level
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-""",
-    "anti_join_customers": """
-SELECT c_custkey, c_name, c_nationkey
-FROM customer
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders WHERE o_custkey = c_custkey
-)
-""",
-    "string_funcs": """
-SELECT p_partkey,
-       lower(p_name) AS name_lower,
-       regexp_extract(p_type, '^(\\w+)', 1) AS type_head,
-       substr(p_brand, 1, 6) AS brand_prefix,
-       CAST(len(string_split(p_name, ' ')) AS BIGINT) AS name_words
-FROM part
-WHERE p_name LIKE '%widget%'
-""",
-    "events_tumbling": """
-SELECT make_timestamp(CAST(floor(epoch(ts) / 600) * 600 * 1000000 AS BIGINT))
-         AS window_start,
-       event_type,
-       count(*) AS n_events,
-       round(sum(value), 4) AS sum_value
-FROM events
-GROUP BY 1, 2
-""",
-    "distinct_active_users": """
-SELECT event_type,
-       count(DISTINCT user_id) AS n_users,
-       count(*) AS n_events
-FROM events GROUP BY event_type
-""",
-    "pivot_status_priority": """
-SELECT o_orderstatus,
-       count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS p1,
-       count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS p2,
-       count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS p3,
-       count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS p4,
-       count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS p5
-FROM orders GROUP BY o_orderstatus
-""",
-    "events_sessionize": """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 1800
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT *, sum(is_new) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-  FROM flagged
-)
-SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-       count(*) AS n_events,
-       min(ts) AS session_start,
-       max(ts) AS session_end,
-       round(sum(value), 4) AS session_value
-FROM sess GROUP BY user_id, session_no
-""",
-}
-
-
-# Deterministic partsupp synthesis shared by the Q2/Q11 oracles —
-# closed-form twin of plans/relational.synth_partsupp (same md5
-# counter, same suppkey stride, integer-cents supplycost so every
-# downstream min/sum is exact on both engines).
-PARTSUPP_CTE = """
-_s AS (SELECT count(*) AS s_cnt FROM supplier),
-partsupp AS (
-  SELECT p_partkey AS ps_partkey,
-         CAST((p_partkey + i * greatest(s_cnt // 4, 1)) % s_cnt AS BIGINT)
-           AS ps_suppkey,
-         CAST(('0x' || substr(md5(CAST(p_partkey * 4 + i AS VARCHAR)), 1, 8))
-              ::BIGINT % 9999 + 1 AS INT) AS ps_availqty,
-         CAST(('0x' || substr(md5(CAST(p_partkey * 4 + i AS VARCHAR)), 1, 8))
-              ::BIGINT % 100000 + 100 AS BIGINT) AS ps_supplycost_cents
-  FROM part, _s, range(4) t(i)
-)"""
-
-
-Q2_MIN_COST_SUPPLIER_ORACLE = f"""
-WITH {PARTSUPP_CTE},
-eligible AS (
-  SELECT ps.ps_partkey, ps.ps_supplycost_cents,
-         s.s_acctbal, s.s_name, n.n_name
-  FROM partsupp ps
-  JOIN supplier s ON ps.ps_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'EUROPE'
-)
-SELECT round(e.s_acctbal, 2) AS s_acctbal, e.s_name, e.n_name,
-       p.p_partkey, p.p_name,
-       CAST(e.ps_supplycost_cents AS BIGINT) AS supplycost_cents
-FROM part p JOIN eligible e ON p.p_partkey = e.ps_partkey
-WHERE p.p_size <= 15 AND p.p_type = 'LARGE'
-  AND e.ps_supplycost_cents = (
-    SELECT min(e2.ps_supplycost_cents) FROM eligible e2
-    WHERE e2.ps_partkey = p.p_partkey)
-ORDER BY s_acctbal DESC, e.n_name, e.s_name, p.p_partkey
-LIMIT 100
-"""
-
-
-Q11_IMPORTANT_STOCK_ORACLE = f"""
-WITH {PARTSUPP_CTE},
-national AS (
-  SELECT ps.ps_partkey,
-         ps.ps_supplycost_cents * ps.ps_availqty AS v
-  FROM partsupp ps
-  JOIN supplier s ON ps.ps_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'EUROPE'
-)
-SELECT ps_partkey, CAST(sum(v) AS BIGINT) AS value_cents
-FROM national
-GROUP BY ps_partkey
-HAVING sum(v) > (
-    SELECT 1.5 * sum(v) / count(DISTINCT ps_partkey) FROM national)
-ORDER BY value_cents DESC, ps_partkey
-"""
-
-
-def pii_scrub_sql() -> str:
-    """Oracle for the PII scrub: the SAME pattern/token list as
-    functions/pii.PII_CLASSES (imported, so the two sides cannot
-    drift), applied as the same ordered regexp_replace chain, with
-    counts as placeholder-token occurrences over the redacted text.
-    The planted-PII fixture mirrors __spark_entry__.q_pii_scrub."""
-    from .functions.pii import PII_CLASSES
-
-    red = "text"
-    for _, pattern, token in PII_CLASSES:
-        esc = pattern.replace("'", "''")
-        red = f"regexp_replace({red}, '{esc}', '{token}', 'g')"
-    counts = ",\n       ".join(
-        f"CAST((length(redacted) - length(replace(redacted, '{token}', '')))"
-        f" // {len(token)} AS BIGINT) AS n_{name}"
-        for name, _, token in PII_CLASSES
-    )
-    total = " + ".join(f"n_{name}" for name, _, _ in PII_CLASSES)
-    return f"""
-WITH planted AS (
-  SELECT doc_id,
-         coalesce(text, '') || ' contact user' || CAST(doc_id AS VARCHAR)
-         || '@example.com from 10.0.'
-         || CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                 ::BIGINT % 256 AS VARCHAR)
-         || '.7 ssn 123-45-6789 card 4111222233334444'
-         || ' call +1 (555) 867-5309' AS text
-  FROM documents
-), red AS (
-  SELECT doc_id, {red} AS redacted FROM planted
-), counted AS (
-  SELECT doc_id, md5(redacted) AS redacted_md5,
-       {counts}
-  FROM red
-)
-SELECT *, CAST({total} AS BIGINT) AS n_pii FROM counted
-"""
-
-
-UNIGRAM_LOGPROB_ORACLE = r"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0
-              THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(lower(trim(text)), '\s+')
-         END AS tk
-  FROM documents
-), terms AS (
-  SELECT doc_id, unnest(tk) AS term FROM base
-), vocab AS (
-  SELECT term, count(*) AS cnt FROM terms GROUP BY 1
-), total AS (
-  SELECT sum(cnt) AS tot FROM vocab
-), vp AS (
-  -- per-token log-prob in integer micro-nats: FP sums are
-  -- order-dependent across engines, integer sums are exact
-  SELECT term,
-         CAST(round(ln(cnt * 1.0 / tot) * 1000000, 0) AS BIGINT)
-           AS lp_micro
-  FROM vocab, total
-), agg AS (
-  SELECT t.doc_id,
-         CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(v.lp_micro) AS BIGINT) AS sum_micro
-  FROM terms t JOIN vp v USING (term)
-  GROUP BY 1
-)
-SELECT d.doc_id,
-       coalesce(a.n_tokens, 0) AS n_tokens,
-       coalesce(a.sum_micro, 0) AS sum_micro,
-       round(CASE WHEN coalesce(a.n_tokens, 0) > 0
-             THEN a.sum_micro / (a.n_tokens * 1000000.0)
-             ELSE 0.0 END, 6) AS mean_logprob
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def _shingles_nopad_sql(n: int) -> str:
-    """shingles_from_tokens(..., pad_short=False): texts shorter than
-    n yield NO grams (no whole-text fallback)."""
-    return (
-        f"CASE WHEN len(ntoks) >= {n} THEN "
-        f"list_distinct(list_transform(generate_series(1, len(ntoks) - {n - 1}), "
-        f"i -> array_to_string(ntoks[i:i+{n - 1}], ' '))) "
-        "ELSE CAST([] AS VARCHAR[]) END"
-    )
-
-
-def decontaminate_graded_sql(
-    n_min: int = 5, n_max: int = 13, modulus: int = 50
-) -> str:
-    """Mirrors dedup.decontaminate_graded: longest shared word n-gram
-    length per (train, eval) document pair, probed n_min..n_max."""
-    g = "('0x' || substr(md5(s), 1, 8))::BIGINT"
-    ns = range(n_min, n_max + 1)
-    ev_arms = "\n  UNION ALL\n".join(
-        f"  SELECT eval_id, {n} AS n, unnest(list_transform("
-        f"{_shingles_nopad_sql(n)}, s -> {g})) AS gh FROM ev_toks"
-        for n in ns
-    )
-    tr_arms = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {n} AS n, unnest(list_transform("
-        f"{_shingles_nopad_sql(n)}, s -> {g})) AS gh FROM tr_toks"
-        for n in ns
-    )
-    return f"""
-WITH ev_toks AS (
-  SELECT doc_id AS eval_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE doc_id % {modulus} = 0
-), tr_toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE doc_id % {modulus} != 0
-), evg AS (
-  SELECT DISTINCT eval_id, n, gh FROM (
-{ev_arms}
-  )
-), tg AS (
-  SELECT doc_id, n, gh FROM (
-{tr_arms}
-  )
-)
-SELECT t.doc_id, e.eval_id, CAST(max(t.n) AS INT) AS longest_n
-FROM tg t JOIN evg e ON t.n = e.n AND t.gh = e.gh
-GROUP BY 1, 2
-"""
-
-
-def boilerplate_ngrams_sql(
-    n: int = 2, min_ratio: float = 0.2, top_k: int = 5
-) -> str:
-    """Mirrors functions/boilerplate.boilerplate_ngrams over the
-    documents table grouped by source."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, source, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents
-), grams AS (
-  SELECT source, unnest({_shingles_nopad_sql(n)}) AS gram FROM toks
-), dfreq AS (
-  SELECT source, gram, count(*) AS n_docs FROM grams GROUP BY 1, 2
-), totals AS (
-  SELECT source, count(*) AS n FROM documents GROUP BY 1
-), ranked AS (
-  SELECT d.source, d.gram, d.n_docs, t.n,
-         row_number() OVER (
-           PARTITION BY d.source ORDER BY d.n_docs DESC, d.gram ASC
-         ) AS rank
-  FROM dfreq d JOIN totals t USING (source)
-  WHERE d.n_docs >= t.n * {min_ratio}
-)
-SELECT source, gram, CAST(n_docs AS BIGINT) AS n_docs,
-       round(n_docs * 1.0 / n, 6) AS doc_ratio, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {top_k}
-"""
-
-
-def mixture_sample_sql(
-    fractions: dict[str, float], target_ratio: float = 0.2
-) -> str:
-    """Mirrors functions/sampling.mixture_sample over documents/lang:
-    per-group quota = floor(total * target_ratio * fraction), taken
-    as the group's md5-order prefix."""
-    cases = " ".join(
-        f"WHEN '{g}' THEN {frac}" for g, frac in sorted(fractions.items())
-    )
-    langs = ", ".join(f"'{g}'" for g in sorted(fractions))
-    return f"""
-WITH total AS (
-  SELECT count(*) AS n FROM documents
-), ranked AS (
-  SELECT doc_id, lang,
-         row_number() OVER (
-           PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-         ) AS rnk,
-         CAST(floor(n * {target_ratio} * CASE lang {cases} END)
-              AS BIGINT) AS quota
-  FROM documents, total
-  WHERE lang IN ({langs})
-)
-SELECT doc_id, lang FROM ranked WHERE rnk <= quota
-"""
-
-
-LINE_DEDUP_ORACLE = """
-WITH planted AS (
-  SELECT doc_id,
-         concat_ws(chr(10), text, '   ',
-                   'Subscribe to our newsletter for updates',
-                   '(c) example.org mirror ' || (doc_id % 7),
-                   text) AS text
-  FROM documents
-), exploded AS (
-  SELECT doc_id,
-         unnest(string_split(text, chr(10))) AS ln,
-         generate_subscripts(string_split(text, chr(10)), 1) - 1 AS pos
-  FROM planted
-), lines AS (
-  SELECT doc_id, pos, ln,
-         md5(lower(trim(ln))) AS lhash,
-         doc_id * 1000000 + pos AS okey
-  FROM exploded
-  WHERE length(trim(ln)) > 0
-), first_occ AS (
-  SELECT lhash, min(okey) AS keep FROM lines GROUP BY lhash
-), flagged AS (
-  SELECT l.doc_id, l.pos, l.ln, (l.okey = f.keep) AS kept
-  FROM lines l JOIN first_occ f USING (lhash)
-), agg AS (
-  SELECT doc_id,
-         count(*) AS n_lines,
-         sum(CASE WHEN kept THEN 1 ELSE 0 END) AS n_kept,
-         coalesce(
-           string_agg(CASE WHEN kept THEN ln END, chr(10) ORDER BY pos),
-           '') AS clean_text
-  FROM flagged GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(a.n_lines, 0) AS BIGINT) AS n_lines,
-       CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-       md5(coalesce(a.clean_text, '')) AS clean_md5
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def semantic_dedup_sql(
-    threshold: float = 0.95,
-    centroid_step: int = 50,
-    dim: int = 64,
-    refine_iters: int = 1,
-    shift: int = 1_000_000,
-) -> str:
-    """Mirrors similarity.semantic_dedup over embeddings plus an
-    id-shifted exact copy (the planted-duplicate fixture): same
-    deterministic centroid seed, Lloyd rounds with 6-decimal means,
-    rounded-cosine argmax assignment (ties to the lowest cid), then
-    is_dup = EXISTS a smaller-id same-cell neighbour with rounded
-    cosine >= threshold."""
-    cos = (
-        "round(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * "
-        "sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    refine_ctes = []
-    for t in range(refine_iters):
-        mean_list = ", ".join(
-            f"round(avg(vec[{i + 1}]), 6)" for i in range(dim)
-        )
-        refine_ctes.append(f"""a_{t} AS (
-  SELECT vec_id, vec, cid FROM (
-    SELECT b.vec_id, b.vec, c.cid,
-           row_number() OVER (
-             PARTITION BY b.vec_id ORDER BY
-             {cos.format(a="b.vec", b="c.cvec")} DESC, c.cid ASC) AS rn
-    FROM base b CROSS JOIN cent_{t} c
-  ) WHERE rn = 1
-), m_{t} AS (
-  SELECT cid, [{mean_list}] AS mvec FROM a_{t} GROUP BY cid
-), cent_{t + 1} AS (
-  SELECT c.cid, coalesce(m.mvec, c.cvec) AS cvec
-  FROM cent_{t} c LEFT JOIN m_{t} m USING (cid)
-)""")
-    refine_sql = ", " + ", ".join(refine_ctes) if refine_ctes else ""
-    return f"""
-WITH src AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-  UNION ALL
-  SELECT vec_id + {shift}, embedding::DOUBLE[] AS vec FROM embeddings
-), cent_0 AS (
-  SELECT vec_id AS cid, vec AS cvec FROM src
-  WHERE vec_id % {centroid_step} = 1
-), base AS (
-  SELECT vec_id, vec FROM src
-){refine_sql}, cent AS (
-  SELECT cid, cvec FROM cent_{refine_iters}
-), assigned AS (
-  SELECT vec_id, vec, cid FROM (
-    SELECT b.vec_id, b.vec, c.cid,
-           row_number() OVER (
-             PARTITION BY b.vec_id ORDER BY
-             {cos.format(a="b.vec", b="c.cvec")} DESC, c.cid ASC) AS rn
-    FROM base b CROSS JOIN cent c
-  ) WHERE rn = 1
-), dups AS (
-  SELECT DISTINCT b.vec_id
-  FROM assigned b JOIN assigned a
-    ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE {cos.format(a="a.vec", b="b.vec")} >= {threshold}
-)
-SELECT s.vec_id, s.cid, (d.vec_id IS NOT NULL) AS is_dup
-FROM assigned s LEFT JOIN dups d USING (vec_id)
-"""
-
-
-NB_LANG_CLASSIFIER_ORACLE = r"""
-WITH base AS (
-  SELECT doc_id, lang,
-         CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(lower(trim(text)), '\s+')
-         END AS tk
-  FROM documents
-), tokens AS (
-  SELECT doc_id, lang, unnest(tk) AS term FROM base
-), docs AS (
-  SELECT doc_id, lang, CAST(len(tk) AS BIGINT) AS nd FROM base
-), totals AS (
-  SELECT (SELECT count(*) FROM base) AS tdocs,
-         (SELECT count(DISTINCT term) FROM tokens) AS v
-), clsagg AS (
-  SELECT lang AS cls, count(*) AS cdocs, sum(len(tk)) AS ctoks
-  FROM base GROUP BY 1
-), classes AS (
-  -- integer micro-nats BEFORE summation (the unigram_logprob
-  -- convention): FP sums are order-dependent across engines
-  SELECT cls,
-         CAST(round(ln(cdocs * 1.0 / tdocs) * 1000000, 0) AS BIGINT)
-           AS prior,
-         CAST(round(ln((coalesce(ctoks, 0) + v) * 1.0) * 1000000, 0)
-              AS BIGINT) AS z
-  FROM clsagg, totals
-), weights AS (
-  SELECT term, lang AS cls,
-         CAST(round(ln((count(*) + 1) * 1.0) * 1000000, 0) AS BIGINT)
-           AS w
-  FROM tokens GROUP BY 1, 2
-), per_dc AS (
-  SELECT t.doc_id, w.cls, CAST(sum(w.w) AS BIGINT) AS sw
-  FROM tokens t JOIN weights w USING (term) GROUP BY 1, 2
-), scored AS (
-  SELECT d.doc_id, d.lang, c.cls,
-         c.prior + coalesce(p.sw, 0) - d.nd * c.z AS score
-  FROM docs d CROSS JOIN classes c
-  LEFT JOIN per_dc p ON p.doc_id = d.doc_id AND p.cls = c.cls
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score DESC, cls ASC) AS rn
-  FROM scored
-)
-SELECT doc_id, lang, cls AS pred, (cls = lang) AS correct,
-       CAST(score AS BIGINT) AS score_micro
-FROM ranked WHERE rn = 1
-"""
-
-
-URL_NORMALIZE_ORACLE = r"""
-WITH planted AS (
-  SELECT doc_id,
-    ['http','https','HTTP'][CAST(doc_id % 3 + 1 AS INT)] ||
-    '://WWW.Example' || (doc_id % 5) ||
-    ['.com','.co.uk','.org','.com.au'][CAST(doc_id % 4 + 1 AS INT)] ||
-    [':80',':443',':8080'][CAST(doc_id % 3 + 1 AS INT)] ||
-    '/A/b' || (doc_id % 7) ||
-    CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END ||
-    CASE WHEN doc_id % 2 = 0 THEN '?utm_campaign=c&z=9&a=1'
-         ELSE '?b=2&a=1&fbclid=x' END ||
-    '#sec' || (doc_id % 3) AS url
-  FROM documents
-), ext AS (
-  SELECT url,
-    lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1)) AS scheme,
-    lower(regexp_extract(url,
-          '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS auth,
-    regexp_extract(url,
-          '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS rawpath,
-    regexp_extract(url, '\?([^#]*)', 1) AS rawq
-  FROM planted
-), st AS (
-  SELECT url, scheme,
-    regexp_replace(auth, ':[0-9]+$', '') AS host,
-    regexp_extract(auth, ':([0-9]+)$', 1) AS port,
-    CASE WHEN rawpath = '' THEN '/'
-         WHEN length(rawpath) > 1 AND rawpath LIKE '%/'
-           THEN substring(rawpath, 1, length(rawpath) - 1)
-         ELSE rawpath END AS path,
-    list_sort(list_filter(string_split(rawq, '&'),
-      x -> length(x) > 0 AND NOT regexp_matches(x,
-           '^(utm_[^=]*|fbclid|gclid|ref)='))) AS params
-  FROM ext
-), built AS (
-  SELECT url, scheme, host, path,
-    CASE WHEN (scheme = 'http' AND port = '80')
-           OR (scheme = 'https' AND port = '443')
-           OR port = '' THEN ''
-         ELSE ':' || port END AS portseg,
-    CAST(len(params) AS INT) AS n_params,
-    CASE WHEN len(params) > 0 THEN '?' || array_to_string(params, '&')
-         ELSE '' END AS qseg,
-    string_split(host, '.') AS labels
-  FROM st
-)
-SELECT url,
-  scheme || '://' || host || portseg || path || qseg AS norm_url,
-  host,
-  CASE WHEN len(labels) >= 3 AND
-            array_to_string(
-              list_slice(labels, len(labels) - 1, len(labels)), '.')
-            IN ('co.uk','ac.uk','org.uk','gov.uk','com.au','net.au',
-                'co.jp','com.br','co.in','com.cn','co.nz','com.mx')
-       THEN array_to_string(
-              list_slice(labels, len(labels) - 2, len(labels)), '.')
-       WHEN len(labels) >= 2
-       THEN array_to_string(
-              list_slice(labels, len(labels) - 1, len(labels)), '.')
-       ELSE host END AS registered_domain,
-  n_params
-FROM built
-"""
-
-# url_dedup_best reuses the full normalization oracle with doc_id
-# threaded through every stage (the planted CTE already carries it)
-_URL_NORM_WITH_ID = URL_NORMALIZE_ORACLE.replace(
-    "SELECT url,", "SELECT doc_id, url,"
-)
-
-URL_DEDUP_BEST_ORACLE = f"""
-WITH normed AS (
-{_URL_NORM_WITH_ID}
-), scoredq AS (
-  SELECT norm_url, registered_domain, doc_id,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 9, 8))::BIGINT % 1000
-           AS quality
-  FROM normed
-)
-SELECT norm_url,
-       min(registered_domain) AS registered_domain,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       (max(struct_pack(s := quality, i := doc_id))).i AS best_doc_id,
-       (max(struct_pack(s := quality, i := doc_id))).s AS best_score
-FROM scoredq
-GROUP BY 1
-"""
-
-
-HEAVY_HITTERS_ORACLE = """
-WITH counts AS (
-  SELECT user_id, count(*) AS cnt FROM events GROUP BY 1
-), summary AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS total,
-         CAST(max(cnt) AS BIGINT) AS mx,
-         CAST(count(*) AS BIGINT) AS nkeys
-  FROM counts
-), topk AS (
-  SELECT user_id, cnt FROM counts ORDER BY cnt DESC, user_id LIMIT 25
-)
-SELECT user_id,
-       CAST(cnt AS BIGINT) AS cnt,
-       round(cnt / total, 6) AS share,
-       CAST(row_number() OVER (ORDER BY cnt DESC, user_id) AS INT)
-         AS "rank",
-       round(mx / (total * 1.0 / nkeys), 6) AS skew_factor
-FROM topk, summary
-"""
-
-
-BIGRAM_LOGPROB_ORACLE = r"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0
-              THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(lower(trim(text)), '\s+')
-         END AS tk
-  FROM documents
-), terms AS (
-  SELECT doc_id, unnest(tk) AS term FROM base
-), uni AS (
-  SELECT term, count(*) AS c1 FROM terms GROUP BY 1
-), total AS (
-  SELECT sum(c1) AS tot FROM uni
-), pairs AS (
-  SELECT doc_id,
-         unnest(tk[1:len(tk)-1]) AS w1,
-         unnest(tk[2:len(tk)]) AS w2
-  FROM base WHERE len(tk) >= 2
-), big AS (
-  SELECT w1, w2, count(*) AS c12 FROM pairs GROUP BY 1, 2
-), scored AS (
-  -- identical operation order to the Spark side: lam*(c12/c1) +
-  -- (1-lam)*(c2/T), ln, then round to integer micro-nats
-  SELECT b.w1, b.w2,
-         CAST(round(ln(0.75 * (b.c12 / u1.c1) + 0.25 * (u2.c1 / tot))
-                    * 1000000, 0) AS BIGINT) AS lp_micro
-  FROM big b
-  JOIN uni u1 ON b.w1 = u1.term
-  JOIN uni u2 ON b.w2 = u2.term, total
-), agg AS (
-  SELECT p.doc_id,
-         CAST(count(*) AS BIGINT) AS n_bigrams,
-         CAST(sum(s.lp_micro) AS BIGINT) AS sum_micro
-  FROM pairs p JOIN scored s ON p.w1 = s.w1 AND p.w2 = s.w2
-  GROUP BY 1
-)
-SELECT d.doc_id,
-       coalesce(a.n_bigrams, 0) AS n_bigrams,
-       coalesce(a.sum_micro, 0) AS sum_micro,
-       round(CASE WHEN coalesce(a.n_bigrams, 0) > 0
-             THEN a.sum_micro / (a.n_bigrams * 1000000.0)
-             ELSE 0.0 END, 6) AS mean_logprob
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-DOMAIN_STATS_ORACLE = f"""
-WITH normed AS (
-{_URL_NORM_WITH_ID}
-), q AS (
-  SELECT registered_domain, norm_url,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 9, 8))::BIGINT % 1000
-           AS quality
-  FROM normed
-  WHERE registered_domain NOT IN ('example0.com', 'example1.co.uk')
-), per_url AS (
-  SELECT registered_domain, norm_url, count(*) AS docs,
-         sum(quality) AS qsum, min(quality) AS qmin, max(quality) AS qmax
-  FROM q GROUP BY 1, 2
-)
-SELECT registered_domain,
-       CAST(sum(docs) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_urls,
-       round(sum(qsum) / sum(docs), 6) AS mean_quality,
-       CAST(min(qmin) AS BIGINT) AS min_quality,
-       CAST(max(qmax) AS BIGINT) AS max_quality
-FROM per_url GROUP BY 1
-"""
-
-
-CHUNK_DOCUMENTS_ORACLE = r"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0
-              THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(lower(trim(text)), '\s+')
-         END AS tk
-  FROM documents
-), st AS (
-  SELECT doc_id, tk, len(tk) AS n FROM base WHERE len(tk) > 0
-), chunks AS (
-  -- starts 1, 1+S, ... through 1 + ceil(max(n-W,0)/S)*S (inclusive);
-  -- DuckDB range() is end-exclusive, hence the +2
-  SELECT doc_id, tk,
-         unnest(range(1, ((greatest(n - 32, 0) + 23) // 24) * 24 + 2, 24))
-           AS start_tok
-  FROM st
-)
-SELECT doc_id,
-       CAST((start_tok - 1) // 24 AS INT) AS chunk_id,
-       CAST(start_tok AS INT) AS start_tok,
-       CAST(len(tk[start_tok:start_tok + 31]) AS INT) AS n_tok,
-       array_to_string(tk[start_tok:start_tok + 31], ' ') AS chunk_text
-FROM chunks
-"""
-
-
-CHECK_CONSTRAINTS_ORACLE = """
-WITH m AS (
-  SELECT
-    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      AS r0,
-    CAST(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT) AS r1,
-    CAST(sum(CASE WHEN o_totalprice < 0 THEN 1 ELSE 0 END) AS BIGINT)
-      AS r2,
-    CAST(sum(CASE WHEN o_totalprice > 100 THEN 1 ELSE 0 END) AS BIGINT)
-      AS r3,
-    CAST(sum(CASE WHEN o_orderstatus IS NOT NULL
-                   AND o_orderstatus NOT IN ('O', 'F', 'P')
-             THEN 1 ELSE 0 END) AS BIGINT) AS r4
-  FROM orders
-)
-SELECT 'not_null' AS rule, 'o_custkey' AS col_name,
-       r0 AS n_violations, r0 = 0 AS passed FROM m
-UNION ALL SELECT 'unique', 'o_orderkey', r1, r1 = 0 FROM m
-UNION ALL SELECT 'ge', 'o_totalprice', r2, r2 = 0 FROM m
-UNION ALL SELECT 'le', 'o_totalprice', r3, r3 = 0 FROM m
-UNION ALL SELECT 'in', 'o_orderstatus', r4, r4 = 0 FROM m
-"""
-
-
-def incremental_dedup_sql(
-    k: int = 16, bands: int = 4, max_bucket: int = 64
-) -> str:
-    """Mirrors incremental.lsh_increment over a 90/10 id split: the
-    incremental contract (new ids > indexed ids) makes its output
-    exactly the full-corpus LSH pairs restricted to pairs whose
-    larger side is a new doc — id_b is always the larger id, so one
-    predicate expresses 'touches the new batch'."""
-    inner = lsh_candidate_pairs_sql(k=k, bands=bands, max_bucket=max_bucket)
-    return f"""
-SELECT * FROM (
-{inner}
-) WHERE id_b > (SELECT (max(doc_id) * 9) // 10 FROM documents)
-"""
-
-
-def pagerank_sql(
-    iterations: int = 5,
-    damping: float = 0.85,
-    n_mod: int = 520,
-    fanout: int = 3,
-) -> str:
-    """Mirrors linkgraph.pagerank over the planted md5 edge list
-    (each doc_id links to `fanout` md5-derived targets mod `n_mod`;
-    targets >= the doc-id range are dst-only, i.e. dangling).  Fixed
-    iterations unrolled as chained CTEs — one (contrib join + group)
-    plus one dangling-mass scalar per round, identical arithmetic and
-    per-round round()ing to the Spark side."""
-    d = repr(float(damping))
-    omd = repr(1.0 - damping)
-    ctes = [
-        f"""edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           ('0x' || substr(md5(doc_id || ':' || j), 1, 8))::BIGINT
-             % {n_mod} AS dst
-    FROM documents, (SELECT unnest(range({fanout})) AS j)
-  ) WHERE src <> dst
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), meta AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), outdeg AS (
-  SELECT src AS node, count(*) AS od FROM edges GROUP BY src
-), base AS (
-  SELECT n.node, o.od FROM nodes n LEFT JOIN outdeg o ON n.node = o.node
-), r0 AS (
-  SELECT node, od, round(1e0 / (SELECT n FROM meta), 10) AS rank
-  FROM base
-)"""
-    ]
-    for i in range(iterations):
-        ctes.append(
-            f"""dang{i} AS (
-  SELECT coalesce(sum(rank), 0e0) AS dang FROM r{i} WHERE od IS NULL
-), r{i + 1} AS (
-  SELECT b.node, b.od,
-         round({omd} / (SELECT n FROM meta)
-               + {d} * (coalesce(c.contrib, 0e0)
-                        + (SELECT dang FROM dang{i})
-                          / (SELECT n FROM meta)),
-               10) AS rank
-  FROM base b
-  LEFT JOIN (
-    SELECT e.dst AS node, sum(r.rank / r.od) AS contrib
-    FROM edges e JOIN r{i} r ON e.src = r.node
-    GROUP BY e.dst
-  ) c ON b.node = c.node
-)"""
-        )
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT node, round(rank, 6) AS rank FROM r{iterations}"
-    )
-
-
-def containment_pairs_sql(
-    n: int = 3, threshold: float = 0.5, max_df: int = 64
-) -> str:
-    """Mirrors dedup.containment_pairs: distinct shingle-hash sets,
-    df-capped inverted index, exact per-pair common counts,
-    containment vs the smaller FULL set."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents
-), sets AS (
-  SELECT doc_id,
-         list_sort(list_distinct(list_transform({_shingles_sql(n)},
-           s -> ('0x' || substr(md5(s), 1, 8))::BIGINT))) AS shs
-  FROM toks
-), ex AS (
-  SELECT doc_id AS id, len(shs) AS sz, unnest(shs) AS h FROM sets
-), kept AS (
-  SELECT * FROM ex
-  QUALIFY count(*) OVER (PARTITION BY h) BETWEEN 2 AND {max_df}
-), pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         CAST(count(*) AS BIGINT) AS common,
-         CAST(a.sz AS BIGINT) AS size_a, CAST(b.sz AS BIGINT) AS size_b
-  FROM kept a JOIN kept b ON a.h = b.h AND a.id < b.id
-  GROUP BY 1, 2, 4, 5
-)
-SELECT id_a, id_b, common, size_a, size_b,
-       round(common / CAST(least(size_a, size_b) AS DOUBLE), 6)
-         AS containment
-FROM pairs
-WHERE round(common / CAST(least(size_a, size_b) AS DOUBLE), 6)
-      >= {threshold}
-"""
-
-
-def hits_sql(
-    iterations: int = 5, n_mod: int = 520, fanout: int = 3
-) -> str:
-    """Mirrors linkgraph.hits over the planted md5 edge list: the
-    mutual hub/authority recursion unrolled as chained CTEs, one
-    (join + group + L1 normalize) pair per round, identical
-    per-round round()ing to the Spark side."""
-    ctes = [
-        f"""edges AS MATERIALIZED (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src,
-           ('0x' || substr(md5(doc_id || ':' || j), 1, 8))::BIGINT
-             % {n_mod} AS dst
-    FROM documents, (SELECT unnest(range({fanout})) AS j)
-  ) WHERE src <> dst
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), meta AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), h0 AS MATERIALIZED (
-  SELECT node, round(1e0 / (SELECT n FROM meta), 10) AS hub FROM nodes
-)"""
-    ]
-    for i in range(iterations):
-        ctes.append(
-            f"""araw{i} AS MATERIALIZED (
-  SELECT e.dst AS node, sum(h.hub) AS a
-  FROM edges e JOIN h{i} h ON e.src = h.node GROUP BY e.dst
-), asum{i} AS MATERIALIZED (
-  SELECT coalesce(sum(a), 0e0) AS s FROM araw{i}
-), a{i} AS MATERIALIZED (
-  SELECT n.node,
-         round(CASE WHEN (SELECT s FROM asum{i}) > 0
-                    THEN coalesce(r.a, 0e0) / (SELECT s FROM asum{i})
-                    ELSE 0e0 END, 10) AS auth
-  FROM nodes n LEFT JOIN araw{i} r ON n.node = r.node
-), hraw{i} AS MATERIALIZED (
-  SELECT e.src AS node, sum(a.auth) AS h
-  FROM edges e JOIN a{i} a ON e.dst = a.node GROUP BY e.src
-), hsum{i} AS MATERIALIZED (
-  SELECT coalesce(sum(h), 0e0) AS s FROM hraw{i}
-), h{i + 1} AS MATERIALIZED (
-  SELECT n.node,
-         round(CASE WHEN (SELECT s FROM hsum{i}) > 0
-                    THEN coalesce(r.h, 0e0) / (SELECT s FROM hsum{i})
-                    ELSE 0e0 END, 10) AS hub
-  FROM nodes n LEFT JOIN hraw{i} r ON n.node = r.node
-)"""
-        )
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT h.node, round(h.hub, 6) AS hub, "
-        f"round(a.auth, 6) AS authority\n"
-        f"FROM h{iterations} h JOIN a{iterations - 1} a "
-        f"ON h.node = a.node"
-    )
-
-
-SIGNAL_AGREEMENT_ORACLE = r"""
-WITH sig AS (
-  SELECT n_chars >= 120 AS a,
-         (length(text) - length(replace(text, ' ', ''))) >= 24 AS b
-  FROM documents
-), c AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN a AND b THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-         CAST(sum(CASE WHEN a AND NOT b THEN 1 ELSE 0 END) AS BIGINT) AS n10,
-         CAST(sum(CASE WHEN NOT a AND b THEN 1 ELSE 0 END) AS BIGINT) AS n01,
-         CAST(sum(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END) AS BIGINT) AS n00
-  FROM sig
-), r AS (
-  SELECT *,
-         (n11 + n00) / n AS po_raw,
-         ((n11 + n10)::DOUBLE * (n11 + n01)
-          + (n01 + n00)::DOUBLE * (n10 + n00))
-           / (n::DOUBLE * n) AS pe_raw
-  FROM c
-)
-SELECT n, n11, n10, n01, n00,
-       round(po_raw, 6) AS po,
-       round(pe_raw, 6) AS pe,
-       round(CASE WHEN pe_raw < 1e0
-                  THEN (po_raw - pe_raw) / (1e0 - pe_raw)
-                  ELSE 0e0 END, 6) AS kappa
-FROM r
-"""
-
-
-MAD_OUTLIERS_ORACLE = r"""
-WITH med AS (
-  SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med
-  FROM events GROUP BY event_type
-), devs AS (
-  SELECT e.event_id, e.event_type, e.value, m.med,
-         abs(e.value - m.med) AS dev
-  FROM events e JOIN med m USING (event_type)
-), mad AS (
-  SELECT event_type, round(quantile_cont(dev, 0.5), 6) AS mad
-  FROM devs GROUP BY event_type
-), scored AS (
-  SELECT d.event_id, d.event_type, d.value,
-         CASE WHEN m.mad > 0
-              THEN CAST(round(0.6745e0 * (d.value - d.med) / m.mad
-                              * 1000000e0, 0) AS BIGINT)
-              ELSE 0 END AS rz_micro
-  FROM devs d JOIN mad m USING (event_type)
-)
-SELECT event_id, event_type, value, rz_micro,
-       abs(rz_micro) > 3500000 AS is_outlier
-FROM scored
-"""
-
-
-TEXT_NORMALIZE_ORACLE = r"""
-WITH planted AS (
-  SELECT doc_id,
-         text
-         || CASE WHEN doc_id % 3 = 0
-                 THEN '  cafe' || chr(769) || ' ' ELSE '' END
-         || CASE WHEN doc_id % 4 = 0
-                 THEN chr(7) || 'x' ELSE '' END AS t
-  FROM documents
-), norm AS (
-  SELECT doc_id, t,
-         trim(regexp_replace(regexp_replace(
-           nfc_normalize(t),
-           '[\x00-\x08\x0B\x0E-\x1F\x7F]', '', 'g'),
-           '[ \t\n\r\f]+', ' ', 'g')) AS norm_text
-  FROM planted
-)
-SELECT doc_id, norm_text,
-       (norm_text <> t) AS changed,
-       CAST(length(t) - length(norm_text) AS BIGINT) AS delta_chars
-FROM norm
-"""
-
-
-def trigram_backoff_sql(alpha: float = 0.4) -> str:
-    """Mirrors textstats.trigram_backoff_logprob with train = even
-    doc_ids: identical tokenize, identical count tables, the same
-    left-to-right double arithmetic (alpha and alpha^2 emitted as
-    repr() of the Python doubles the Spark literals carry), ln()
-    rounded to integer micro-nats per DISTINCT trigram before the
-    per-doc integer sum."""
-    a = repr(float(alpha))
-    a2 = repr(float(alpha) * float(alpha))
-    return rf"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(lower(text)), '\s+')
-         END AS tk
-  FROM documents
-), train AS (
-  SELECT * FROM base WHERE doc_id % 2 = 0
-), uni AS (
-  SELECT term, count(*) AS c1
-  FROM (SELECT unnest(tk) AS term FROM train) GROUP BY term
-), tot AS (
-  SELECT CAST(sum(c1) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS v
-  FROM uni
-), bi AS (
-  SELECT w1, w2, count(*) AS cb FROM (
-    SELECT tk[i] AS w1, tk[i + 1] AS w2
-    FROM train, unnest(range(1, len(tk))) AS u(i)
-  ) GROUP BY w1, w2
-), tric AS (
-  SELECT w1, w2, w3, count(*) AS ct FROM (
-    SELECT tk[i] AS w1, tk[i + 1] AS w2, tk[i + 2] AS w3
-    FROM train, unnest(range(1, len(tk) - 1)) AS u(i)
-  ) GROUP BY w1, w2, w3
-), trev AS (
-  SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2, tk[i + 2] AS w3
-  FROM base, unnest(range(1, len(tk) - 1)) AS u(i)
-), dtg AS (
-  SELECT DISTINCT w1, w2, w3 FROM trev
-), scored AS (
-  SELECT d.w1, d.w2, d.w3,
-         CAST(round(CASE
-           WHEN tc.ct IS NOT NULL THEN ln(tc.ct / b12.cb)
-           WHEN b23.cb IS NOT NULL THEN ln({a} * (b23.cb / u2.c1))
-           ELSE ln({a2} * ((coalesce(u3.c1, 0) + 1) / (tot.t + tot.v)))
-         END * 1000000, 0) AS BIGINT) AS lp
-  FROM dtg d
-  LEFT JOIN tric tc ON tc.w1 = d.w1 AND tc.w2 = d.w2 AND tc.w3 = d.w3
-  LEFT JOIN bi b12 ON b12.w1 = d.w1 AND b12.w2 = d.w2
-  LEFT JOIN bi b23 ON b23.w1 = d.w2 AND b23.w2 = d.w3
-  LEFT JOIN uni u2 ON u2.term = d.w2
-  LEFT JOIN uni u3 ON u3.term = d.w3
-  CROSS JOIN tot
-), per_doc AS (
-  SELECT t.doc_id, count(*) AS cnt, sum(s.lp) AS sm
-  FROM trev t
-  JOIN scored s ON s.w1 = t.w1 AND s.w2 = t.w2 AND s.w3 = t.w3
-  GROUP BY t.doc_id
-)
-SELECT b.doc_id,
-       CAST(coalesce(p.cnt, 0) AS BIGINT) AS n_trigrams,
-       CAST(coalesce(p.sm, 0) AS BIGINT) AS sum_micro,
-       round(CASE WHEN coalesce(p.cnt, 0) > 0
-                  THEN p.sm / (p.cnt * 1000000e0)
-                  ELSE 0e0 END, 6) AS mean_logprob
-FROM (SELECT doc_id FROM base) b
-LEFT JOIN per_doc p ON p.doc_id = b.doc_id
-"""
-
-
-SOURCE_CONCENTRATION_ORACLE = r"""
-WITH base AS (
-  SELECT source, n_chars::BIGINT AS w, doc_id FROM documents
-), per_source AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(w) AS BIGINT) AS weight
-  FROM base GROUP BY source
-), ranked AS (
-  SELECT w, row_number() OVER (ORDER BY w, doc_id) AS i FROM base
-), g AS (
-  SELECT round(2e0 * sum(i * w) / (count(*) * sum(w))
-               - (count(*) + 1e0) / count(*), 6) AS gini
-  FROM ranked
-), t AS (
-  SELECT sum(weight) AS tot FROM per_source
-)
-SELECT source, n_docs, weight,
-       CAST(row_number() OVER (ORDER BY weight DESC, source) AS BIGINT)
-         AS rank,
-       round(weight / tot, 6) AS share,
-       round(sum(weight) OVER (ORDER BY weight DESC, source
-                               ROWS UNBOUNDED PRECEDING) / tot, 6)
-         AS cum_share,
-       gini
-FROM per_source, g, t
-"""
-
-
-SNAPSHOT_DIFF_ORACLE = r"""
-WITH oldsnap AS (
-  SELECT doc_id,
-         md5(concat_ws(chr(31),
-           coalesce(text, chr(0) || '<NULL>'),
-           coalesce(lang, chr(0) || '<NULL>'),
-           coalesce(source, chr(0) || '<NULL>'),
-           coalesce(n_chars::VARCHAR, chr(0) || '<NULL>'))) AS oh
-  FROM documents WHERE doc_id % 7 <> 0
-), newsrc AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 11 = 0 THEN text || ' edited'
-              ELSE text END AS text,
-         lang, source, n_chars
-  FROM documents WHERE doc_id % 5 <> 0
-), newsnap AS (
-  SELECT doc_id,
-         md5(concat_ws(chr(31),
-           coalesce(text, chr(0) || '<NULL>'),
-           coalesce(lang, chr(0) || '<NULL>'),
-           coalesce(source, chr(0) || '<NULL>'),
-           coalesce(n_chars::VARCHAR, chr(0) || '<NULL>'))) AS nh
-  FROM newsrc
-), j AS (
-  SELECT coalesce(o.doc_id, n.doc_id) AS doc_id, oh, nh
-  FROM oldsnap o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id
-)
-SELECT doc_id,
-       CASE WHEN oh IS NULL THEN 'added'
-            WHEN nh IS NULL THEN 'removed'
-            ELSE 'changed' END AS status
-FROM j
-WHERE oh IS NULL OR nh IS NULL OR oh <> nh
-"""
-
-
-def blocklist_filter_sql(phrases: tuple[str, ...]) -> str:
-    """Mirrors blocklist.blocklist_filter (scan mode): single-space
-    normalized, space-padded lowercase text; a phrase matches as a
-    token-boundary-delimited sequence via padded contains()."""
-    norm = sorted({" ".join(p.lower().split()) for p in phrases})
-    lst = ", ".join("'" + p.replace("'", "''") + "'" for p in norm)
-    return rf"""
-WITH base AS (
-  SELECT doc_id,
-         ' ' || regexp_replace(trim(lower(text)), '\s+', ' ', 'g')
-           || ' ' AS norm
-  FROM documents
-), m AS (
-  SELECT doc_id,
-         list_sort(list_filter(
-           [{lst}],
-           ph -> contains(norm, ' ' || ph || ' ')
-         )) AS matched
-  FROM base
-)
-SELECT doc_id,
-       coalesce(array_to_string(matched, ','), '') AS matched,
-       CAST(len(matched) AS BIGINT) AS n_matches,
-       len(matched) = 0 AS keep
-FROM m
-"""
-
-
-EMBEDDING_OUTLIERS_ORACLE = r"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings
-), comp AS (
-  SELECT unnest(vec) AS x, generate_subscripts(vec, 1) AS pos FROM base
-), m AS (
-  SELECT pos, round(avg(x), 6) AS m FROM comp GROUP BY pos
-), mv AS (
-  SELECT list(m ORDER BY pos) AS mvec FROM m
-), d AS (
-  -- list_transform + list_sum folds IN INDEX ORDER, bit-identical to
-  -- the Spark side's zip_with + sequential aggregate
-  SELECT vec_id,
-         round(sqrt(list_sum(list_transform(
-           list_zip(vec, mvec),
-           p -> (p[1] - p[2]) * (p[1] - p[2])
-         ))), 6) AS dist
-  FROM base, mv
-), s AS (
-  SELECT round(avg(dist), 6) AS mu,
-         round(stddev_pop(dist), 6) AS sigma
-  FROM d
-)
-SELECT vec_id, dist,
-       CASE WHEN sigma > 0
-            THEN round((dist - mu) / sigma, 4) ELSE 0e0 END AS z,
-       abs(CASE WHEN sigma > 0
-                THEN round((dist - mu) / sigma, 4) ELSE 0e0 END)
-         >= 2e0 AS is_outlier
-FROM d, s
-"""
-
-
-TRIANGLE_STATS_ORACLE = r"""
-WITH raw AS (
-  SELECT ('0x' || substr(md5(doc_id || ':' || j || ':u'), 1, 8))::BIGINT
-           % 400 AS src,
-         ('0x' || substr(md5(doc_id || ':' || j || ':v'), 1, 8))::BIGINT
-           % 400 AS dst
-  FROM documents, (SELECT unnest(range(4)) AS j)
-), und AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM raw WHERE src <> dst
-), deg AS (
-  SELECT x, count(*) AS deg FROM (
-    SELECT u AS x FROM und UNION ALL SELECT v FROM und
-  ) GROUP BY x
-), tri AS (
-  -- textbook u<v<w three-way join: deliberately a DIFFERENT
-  -- algorithm from the engine's degree-ordered wedge orientation,
-  -- so matching counts cross-check the orientation logic.
-  SELECT CAST(count(*) AS BIGINT) AS n_triangles
-  FROM und e1
-  JOIN und e2 ON e2.u = e1.u AND e2.v > e1.v
-  JOIN und e3 ON e3.u = e1.v AND e3.v = e2.v
-), scal AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_vertices,
-         CAST(sum(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges
-  FROM deg
-), ne AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_edges FROM und
-)
-SELECT n_vertices, n_edges, n_wedges, n_triangles,
-       round(CASE WHEN n_wedges > 0
-                  THEN 3e0 * n_triangles / n_wedges
-                  ELSE 0e0 END, 6) AS clustering
-FROM scal, ne, tri
-"""
-
-
-SKETCH_ESTIMATES_ORACLE = r"""
-WITH lv(resolution, secs) AS (
-  VALUES ('10 minutes', 600), ('1 hour', 3600), ('1 day', 86400)
-)
-SELECT lv.resolution,
-       make_timestamp(
-         CAST(floor(epoch(ts) / lv.secs) * lv.secs * 1000000 AS BIGINT)
-       ) AS window_start,
-       event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,
-       TRUE AS within_5pct
-FROM events CROSS JOIN lv
-GROUP BY 1, 2, 3
-"""
-
-
-INVERTED_POSTINGS_ORACLE = r"""
-WITH pairs AS (
-  SELECT DISTINCT doc_id, term FROM (
-    SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              t -> t <> '')) AS term
-    FROM documents
-  )
-)
-SELECT term, count(*) AS df,
-       array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
-FROM pairs GROUP BY term HAVING count(*) >= 2
-"""
-
-
-def bm25_topk_sql(
-    terms: tuple[str, ...], k: int = 10, k1: float = 1.2, b: float = 0.75
-) -> str:
-    """Mirrors search.bm25_topk: identical tokenize, query-term
-    filter before the (doc, term) aggregation, the same left-to-right
-    double arithmetic (all constants written as e-notation DOUBLE
-    literals — plain decimals are DECIMAL in DuckDB and change the
-    math), round(score, 6) absorbing libm ulp differences."""
-    in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
-    one_minus_b = repr(1.0 - b)
-    k1_plus_1 = repr(k1 + 1.0)
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                     t -> t <> '') AS tk
-  FROM documents
-), dl AS (
-  SELECT doc_id, len(tk) AS dl, tk FROM toks
-), meta AS (
-  SELECT count(*) AS n,
-         CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-  FROM dl
-), tf AS (
-  SELECT doc_id, dl, term, count(*) AS tf
-  FROM (SELECT doc_id, dl, unnest(tk) AS term FROM dl)
-  WHERE term IN ({in_list})
-  GROUP BY doc_id, dl, term
-), dfreq AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY term
-)
-SELECT t.doc_id, count(*) AS n_hits,
-       round(sum(
-         ln(1e0 + (m.n - f.df + 0.5e0) / (f.df + 0.5e0))
-         * t.tf * {k1_plus_1}
-         / (t.tf + {repr(float(k1))}
-            * ({one_minus_b} + ({repr(float(b))} * t.dl) / m.avgdl))
-       ), 6) AS score
-FROM tf t JOIN dfreq f USING (term) CROSS JOIN meta m
-GROUP BY t.doc_id
-ORDER BY score DESC, t.doc_id
-LIMIT {k}
-"""
-
-
-def cms_term_counts_sql(depth: int = 4, width: int = 64) -> str:
-    """Mirrors sketches.cms_build + cms_estimate over the token
-    stream: identical md5 bucket family (row d hashes d || ':' ||
-    term), identical counter aggregation, min-over-rows estimate
-    joined against the exact counts.  overcount >= 0 is the sketch's
-    one-sided error guarantee, checked value-exactly."""
-    return rf"""
-WITH toks AS (
-  SELECT unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            t -> t <> '')) AS term
-  FROM documents
-), exact AS (
-  SELECT term, count(*) AS exact_cnt FROM toks GROUP BY term
-), buckets AS (
-  SELECT term, d,
-         ('0x' || substr(md5(d || ':' || term), 1, 8))::BIGINT
-           % {width} AS bucket
-  FROM toks, (SELECT unnest(range({depth})) AS d)
-), counters AS (
-  SELECT d, bucket, count(*) AS cnt FROM buckets GROUP BY d, bucket
-), probe AS (
-  SELECT DISTINCT term, d, bucket FROM buckets
-), est AS (
-  SELECT term, CAST(min(cnt) AS BIGINT) AS cms_cnt
-  FROM probe JOIN counters USING (d, bucket) GROUP BY term
-)
-SELECT e.term, CAST(exact_cnt AS BIGINT) AS exact_cnt, cms_cnt,
-       cms_cnt - exact_cnt AS overcount
-FROM exact e JOIN est USING (term)
-"""
-
-
-def bloom_decontaminate_sql(
-    n: int = 5,
-    modulus: int = 50,
-    k: int = 4,
-    m_bits: int = 4096,
-    min_matches: int = 1,
-) -> str:
-    """Mirrors dedup.bloom_decontaminate bit-for-bit: same md5 hash
-    rows (h || ':' || gram), same 32-bits-per-word bitset, same
-    min-over-rows membership test — so even the bloom's false
-    positives are value-hash checked."""
-    pos = f"(('0x' || substr(md5(h || ':' || gram), 1, 8))::BIGINT % {m_bits})"
-    return f"""
-WITH hrows AS (
-  SELECT unnest(range({k})) AS h
-), ev_toks AS (
-  SELECT regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE doc_id % {modulus} = 0
-), evg AS (
-  SELECT DISTINCT unnest({_shingles_sql(n)}) AS gram FROM ev_toks
-), evc AS (
-  SELECT {pos} AS pos FROM evg, hrows
-), bloom AS (
-  SELECT pos // 32 AS word_idx,
-         bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS word
-  FROM evc GROUP BY 1
-), tr_toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE doc_id % {modulus} != 0
-), tg AS (
-  SELECT doc_id, unnest({_shingles_sql(n)}) AS gram FROM tr_toks
-), tc AS (
-  SELECT doc_id, gram, {pos} AS pos FROM tg, hrows
-), probe AS (
-  SELECT doc_id, gram,
-         min(CASE WHEN (coalesce(word, 0)
-                        & (1::BIGINT << CAST(pos % 32 AS INT)))
-                       = (1::BIGINT << CAST(pos % 32 AS INT))
-                  THEN 1 ELSE 0 END) AS hit
-  FROM tc LEFT JOIN bloom ON tc.pos // 32 = bloom.word_idx
-  GROUP BY doc_id, gram
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-       CAST(sum(hit) AS BIGINT) AS n_bloom_hits,
-       sum(hit) >= {min_matches} AS contaminated
-FROM probe GROUP BY doc_id
-"""
-
-
-def corpus_overlap_sql(
-    n: int = 3,
-    pred_a: str = "doc_id % 2 = 0",
-    pred_b: str = "doc_id % 3 = 0",
-    k: int = 64,
-) -> str:
-    """Mirrors dedup.corpus_overlap: corpus MinHash signatures as
-    elementwise mins over each partition's gram-hash stream, slot
-    agreement as the Jaccard estimate, plus the exact distinct-set
-    Jaccard — all from the same md5 gram hashes, so both the estimate
-    and its error vs exact are value-checked."""
-    from .functions.dedup import MINHASH_PRIME, minhash_params
-
-    params = minhash_params(k)
-    a_mins = ", ".join(
-        f"min((h * {pa} + {pb}) % {MINHASH_PRIME}) AS a{i}"
-        for i, (pa, pb) in enumerate(params)
-    )
-    b_mins = ", ".join(
-        f"min((h * {pa} + {pb}) % {MINHASH_PRIME}) AS b{i}"
-        for i, (pa, pb) in enumerate(params)
-    )
-    agree = " + ".join(
-        f"CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END" for i in range(k)
-    )
-    return f"""
-WITH a_toks AS (
-  SELECT regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE {pred_a}
-), a_h AS (
-  SELECT ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-  FROM (SELECT unnest({_shingles_sql(n)}) AS s FROM a_toks)
-), b_toks AS (
-  SELECT regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents WHERE {pred_b}
-), b_h AS (
-  SELECT ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-  FROM (SELECT unnest({_shingles_sql(n)}) AS s FROM b_toks)
-), asig AS (SELECT {a_mins} FROM a_h),
-   bsig AS (SELECT {b_mins} FROM b_h),
-   da AS (SELECT count(DISTINCT h) AS n_a FROM a_h),
-   db AS (SELECT count(DISTINCT h) AS n_b FROM b_h),
-   di AS (
-     SELECT count(*) AS n_intersect
-     FROM (SELECT DISTINCT h FROM a_h) x
-     JOIN (SELECT DISTINCT h FROM b_h) y USING (h)
-   )
-SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-       CAST(n_intersect AS BIGINT) AS n_intersect,
-       CAST(n_a + n_b - n_intersect AS BIGINT) AS n_union,
-       round(n_intersect / (n_a + n_b - n_intersect), 6)
-         AS exact_jaccard,
-       CAST({k} AS BIGINT) AS k,
-       CAST({agree} AS BIGINT) AS n_agree,
-       round(({agree}) / {k}, 6) AS est_jaccard
-FROM da, db, di, asig, bsig
-"""
-
-
-def funnel_steps_sql(
-    steps: tuple = ("signup", "view", "click", "purchase"),
-    before: str = "2024-01-04 00:00:00",
-) -> str:
-    """Mirrors funnel.funnel_steps: per-user event codes in
-    (ts, event_id) order, folded left-to-right with a stage counter
-    (list_reduce with a prepended 0 accumulator = Spark's
-    F.aggregate init), then per-step reach and conversion."""
-    k = len(steps)
-    code = "CASE event_type " + " ".join(
-        f"WHEN '{s}' THEN {i}" for i, s in enumerate(steps)
-    ) + " ELSE -1 END"
-    reach = ", ".join(
-        f"sum(CASE WHEN depth >= {i + 1} THEN 1 ELSE 0 END) AS n{i}"
-        for i in range(k)
-    )
-    rows = " UNION ALL ".join(
-        f"SELECT CAST({i + 1} AS BIGINT) AS step, "
-        f"'{s}' AS step_name, CAST(n{i} AS BIGINT) AS n_users, "
-        f"round(CASE WHEN {'n_total' if i == 0 else f'n{i - 1}'} > 0 "
-        f"THEN n{i} / {'n_total' if i == 0 else f'n{i - 1}'} "
-        f"ELSE 0 END, 6) AS conv_from_prev, "
-        f"round(CASE WHEN n_total > 0 THEN n{i} / n_total "
-        f"ELSE 0 END, 6) AS conv_from_start FROM t"
-        for i, s in enumerate(steps)
-    )
-    return f"""
-WITH coded AS (
-  SELECT user_id, ts, event_id, {code} AS code
-  FROM events WHERE ts < TIMESTAMP '{before}'
-), ue AS (
-  SELECT user_id, list(code ORDER BY ts, event_id) AS codes
-  FROM coded GROUP BY user_id
-), du AS (
-  SELECT list_reduce(list_prepend(0, codes),
-           (acc, c) -> acc + CASE WHEN c = acc THEN 1 ELSE 0 END)
-         AS depth
-  FROM ue
-), t AS (
-  SELECT count(*) AS n_total, {reach} FROM du
-)
-{rows}
-"""
-
-
-def retention_cohorts_sql(
-    event_type: str = "purchase",
-    epoch: str = "2024-01-01",
-    period_days: int = 3,
-) -> str:
-    """Mirrors funnel.retention_cohorts over one event type: integer
-    day-bucket periods from a fixed epoch, first period per user as
-    the cohort, per-offset active share."""
-    return f"""
-WITH act AS (
-  SELECT DISTINCT user_id AS u,
-         CAST(date_diff('day', DATE '{epoch}', ts::DATE)
-              // {period_days} AS BIGINT) AS period
-  FROM events WHERE event_type = '{event_type}'
-), coh AS (
-  SELECT u, min(period) AS cohort_period FROM act GROUP BY u
-), sizes AS (
-  SELECT cohort_period, count(*) AS n_cohort FROM coh GROUP BY 1
-), r AS (
-  SELECT cohort_period, period - cohort_period AS period_offset,
-         count(*) AS n_active
-  FROM act JOIN coh USING (u)
-  GROUP BY 1, 2
-)
-SELECT cohort_period, period_offset,
-       CAST(n_active AS BIGINT) AS n_active,
-       CAST(n_cohort AS BIGINT) AS n_cohort,
-       round(n_active / n_cohort, 6) AS retention
-FROM r JOIN sizes USING (cohort_period)
-"""
-
-
-def histogram_quantiles_sql(
-    lo: float = 0.0,
-    hi: float = 500.0,
-    bins: int = 128,
-    qs: tuple = (0.5, 0.9, 0.99),
-) -> str:
-    """Mirrors quantiles.histogram_quantiles over events.value plus
-    the exact quantile_cont baseline: identical binning, cumulative
-    mass walk, in-bin interpolation, and error columns."""
-    width = (hi - lo) / bins
-
-    def tag(q: float) -> str:
-        return f"p{q * 100:g}".replace(".", "_")
-
-    hcols = ", ".join(
-        f"max(CASE WHEN q = {q} THEN hist_est END) AS h_{tag(q)}"
-        for q in qs
-    )
-    ecols = ", ".join(
-        f"round(quantile_cont(x, {q}), 6) AS e_{tag(q)}" for q in qs
-    )
-    errs = ", ".join(
-        f"round(abs(h_{tag(q)} - e_{tag(q)}), 6) AS err_{tag(q)}"
-        for q in qs
-    )
-    hsel = ", ".join(f"h_{tag(q)}" for q in qs)
-    esel = ", ".join(f"e_{tag(q)}" for q in qs)
-    qlist = ", ".join(str(q) for q in qs)
-    return f"""
-WITH v AS (
-  SELECT CAST(value AS DOUBLE) AS x FROM events
-), h AS (
-  SELECT LEAST({bins - 1},
-               GREATEST(0, CAST(floor((x - {lo}) / {width}) AS INT)))
-           AS bin,
-         count(*) AS cnt
-  FROM v GROUP BY 1
-), c AS (
-  SELECT bin, cnt,
-         sum(cnt) OVER (ORDER BY bin) AS cum,
-         sum(cnt) OVER (ORDER BY bin) - cnt AS cum_prev
-  FROM h
-), t AS (SELECT CAST(sum(cnt) AS DOUBLE) AS _t FROM h),
-qs AS (SELECT unnest([{qlist}]) AS q),
-pick AS (
-  SELECT q, _t, min(bin) AS b
-  FROM qs, t, c WHERE cum >= q * _t GROUP BY q, _t
-), est AS (
-  SELECT q,
-         round({lo} + {width} * (b + (q * _t - cum_prev) / cnt), 6)
-           AS hist_est
-  FROM pick JOIN c ON c.bin = pick.b
-), hrow AS (SELECT {hcols} FROM est),
-ex AS (SELECT CAST(count(*) AS BIGINT) AS n, {ecols} FROM v)
-SELECT n, {hsel}, {esel}, {errs} FROM hrow, ex
-"""
-
-
-def resample_locf_sql(bucket_secs: int = 600) -> str:
-    """Mirrors timeseries.resample_locf over events: integer
-    epoch-second buckets, generated dense grid, IGNORE NULLS window
-    carry-forward.  bucket_start round-trips through epoch seconds
-    (session TZ pinned UTC on the Spark side)."""
-    return f"""
-WITH obs AS (
-  SELECT event_type AS series,
-         CAST(floor(epoch(ts) / {bucket_secs}) AS BIGINT) AS bucket,
-         CAST(count(*) AS BIGINT) AS n_obs,
-         round(avg(CAST(value AS DOUBLE)), 6) AS value_avg
-  FROM events GROUP BY 1, 2
-), span AS (
-  SELECT min(bucket) AS _lo, max(bucket) AS _hi FROM obs
-), grid AS (
-  SELECT series, unnest(range(_lo, _hi + 1)) AS bucket
-  FROM (SELECT DISTINCT series FROM obs), span
-), j AS (
-  SELECT g.series, g.bucket, obs.n_obs, obs.value_avg
-  FROM grid g LEFT JOIN obs USING (series, bucket)
-)
-SELECT series,
-       to_timestamp(bucket * {bucket_secs})::TIMESTAMP AS bucket_start,
-       coalesce(n_obs, 0) AS n_obs,
-       value_avg,
-       last_value(value_avg IGNORE NULLS) OVER (
-         PARTITION BY series ORDER BY bucket
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-       ) AS value_filled,
-       value_avg IS NULL AS is_gap
-FROM j
-"""
-
-
-def distribution_drift_sql(
-    pred_a: str = "doc_id % 2 = 0",
-    pred_b: str = "doc_id % 2 = 1",
-) -> str:
-    """Mirrors drift.distribution_drift: identical add-one-smoothed
-    integer ratios inside every logarithm, identical micro-nat
-    rounding, integer weighted sums — only the final scalar divisions
-    are FP, rounded to 6."""
-    toks = (
-        r"SELECT unnest(list_filter(regexp_split_to_array("
-        r"trim(lower(text)), '\s+'), x -> x <> '')) AS term "
-        r"FROM documents WHERE "
-    )
-    return f"""
-WITH at AS ({toks}{pred_a}),
-bt AS ({toks}{pred_b}),
-cca AS (SELECT term, count(*) AS c FROM at GROUP BY 1),
-ccb AS (SELECT term, count(*) AS c FROM bt GROUP BY 1),
-joint AS (
-  SELECT term, coalesce(cca.c, 0) AS ca, coalesce(ccb.c, 0) AS cb
-  FROM cca FULL OUTER JOIN ccb USING (term)
-), tot AS (
-  SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-         CAST(sum(cb) AS BIGINT) AS n_b,
-         CAST(count(*) AS BIGINT) AS vocab
-  FROM joint
-), st AS (
-  SELECT ca, cb, n_a, n_b, vocab,
-         n_a + vocab AS a2, n_b + vocab AS b2,
-         (ca + 1) * (n_b + vocab) AS pa,
-         (cb + 1) * (n_a + vocab) AS qa
-  FROM joint, tot
-), m AS (
-  SELECT *,
-         CAST(round(ln(pa / qa) * 1000000, 0) AS BIGINT) AS m_pq,
-         CAST(round(ln(2 * pa / (pa + qa)) * 1000000, 0) AS BIGINT)
-           AS m_pm,
-         CAST(round(ln(2 * qa / (pa + qa)) * 1000000, 0) AS BIGINT)
-           AS m_qm
-  FROM st
-), s AS (
-  SELECT n_a, n_b, vocab, a2, b2,
-         CAST(sum((ca + 1) * m_pq) AS BIGINT) AS s_ab,
-         CAST(sum((cb + 1) * (-m_pq)) AS BIGINT) AS s_ba,
-         CAST(sum((ca + 1) * m_pm) AS BIGINT) AS s_pm,
-         CAST(sum((cb + 1) * m_qm) AS BIGINT) AS s_qm,
-         CAST(sum(abs(pa - qa)) AS BIGINT) AS s_tv
-  FROM m GROUP BY 1, 2, 3, 4, 5
-)
-SELECT n_a, n_b, vocab,
-       round(s_ab / (a2 * 1000000.0), 6) AS kl_ab,
-       round(s_ba / (b2 * 1000000.0), 6) AS kl_ba,
-       round(0.5 * (s_pm / (a2 * 1000000.0)
-                    + s_qm / (b2 * 1000000.0)), 6) AS js,
-       round(s_tv / (2.0 * a2 * b2), 6) AS tv
-FROM s
-"""
-
-
-def winnow_pairs_sql(
-    k: int = 4, w: int = 4, min_shared: int = 2, max_df: int = 64
-) -> str:
-    """Mirrors winnow.winnow_pairs: ORDERED k-gram hash sequence,
-    min-per-window fingerprint selection, df-capped inverted index,
-    shared-fingerprint pair counts."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array({_NORM}, ' ') AS ntoks
-  FROM documents
-), h AS (
-  SELECT doc_id AS id,
-    list_transform(
-      CASE WHEN len(ntoks) >= {k}
-        THEN list_transform(generate_series(1, len(ntoks) - {k - 1}),
-               i -> array_to_string(ntoks[i:i+{k - 1}], ' '))
-        ELSE [array_to_string(ntoks, ' ')] END,
-      g -> ('0x' || substr(md5(g), 1, 8))::BIGINT) AS hs
-  FROM toks
-), fps AS (
-  SELECT id,
-    list_sort(list_distinct(
-      CASE WHEN len(hs) >= {w}
-        THEN list_transform(generate_series(1, len(hs) - {w - 1}),
-               i -> list_min(hs[i:i+{w - 1}]))
-        ELSE [list_min(hs)] END)) AS fp
-  FROM h
-), ex AS (
-  SELECT id, CAST(len(fp) AS BIGINT) AS n_fp, unnest(fp) AS hv
-  FROM fps
-), kept AS (
-  SELECT * FROM ex
-  QUALIFY count(*) OVER (PARTITION BY hv) BETWEEN 2 AND {max_df}
-), pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         CAST(count(*) AS BIGINT) AS shared,
-         a.n_fp AS n_fp_a, b.n_fp AS n_fp_b
-  FROM kept a JOIN kept b ON a.hv = b.hv AND a.id < b.id
-  GROUP BY 1, 2, 4, 5
-)
-SELECT id_a, id_b, shared, n_fp_a, n_fp_b,
-       round(shared / CAST(least(n_fp_a, n_fp_b) AS DOUBLE), 6)
-         AS overlap
-FROM pairs WHERE shared >= {min_shared}
-"""
-
-
-def lpa_communities_sql(
-    iterations: int = 4, n_mod: int = 260, fanout: int = 3
-) -> str:
-    """Mirrors linkgraph.lpa_communities over the planted md5 edge
-    list: synchronous rounds unrolled as chained CTEs, count-then-
-    min-label tie-break via the identical ORDER BY cnt DESC,
-    label ASC rule."""
-    ctes = [
-        f"""e AS (
-  SELECT src, dst FROM (
-    SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-             % {n_mod} AS src,
-           ('0x' || substr(md5(doc_id || '#' || j), 1, 8))::BIGINT
-             % {n_mod} AS dst
-    FROM documents, (SELECT unnest(range({fanout})) AS j)
-  ) WHERE src <> dst
-), und AS MATERIALIZED (
-  SELECT src, dst FROM e UNION SELECT dst, src FROM e
-), l0 AS MATERIALIZED (
-  SELECT DISTINCT src AS node, src AS label FROM und
-)"""
-    ]
-    for i in range(iterations):
-        ctes.append(
-            f"""c{i} AS (
-  SELECT u.src AS node, l.label, count(*) AS cnt
-  FROM und u JOIN l{i} l ON u.dst = l.node GROUP BY 1, 2
-), l{i + 1} AS MATERIALIZED (
-  SELECT node, label FROM c{i}
-  QUALIFY row_number() OVER (
-    PARTITION BY node ORDER BY cnt DESC, label ASC) = 1
-)"""
-        )
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT node, label AS community FROM l{iterations}"
-    )
-
-
-ZIPF_FIT_ORACLE = f"""
-WITH tf AS (
-  SELECT term, count(*) AS cnt FROM (
-    SELECT unnest(regexp_split_to_array({_NORM}, ' ')) AS term
-    FROM documents
-  ) WHERE term <> '' GROUP BY 1
-), ranked AS (
-  SELECT ln(CAST(row_number() OVER (ORDER BY cnt DESC, term ASC)
-                 AS DOUBLE)) AS x,
-         ln(CAST(cnt AS DOUBLE)) AS y
-  FROM tf
-), mom AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-         sum(x * x) AS sxx, sum(y * y) AS syy
-  FROM ranked
-)
-SELECT CAST(n AS BIGINT) AS n_terms,
-       round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-       round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n,
-             6) AS intercept,
-       round(CASE WHEN (n * sxx - sx * sx) > 0
-                   AND (n * syy - sy * sy) > 0
-             THEN (n * sxy - sx * sy) * (n * sxy - sx * sy)
-                  / ((n * sxx - sx * sx) * (n * syy - sy * sy))
-             ELSE 0e0 END, 6) AS r2
-FROM mom
-"""
-
-
-EVENT_TRANSITIONS_ORACLE = """
-WITH steps AS (
-  SELECT event_type AS src,
-         lead(event_type) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), counts AS (
-  SELECT src, dst, CAST(count(*) AS BIGINT) AS n_transitions
-  FROM steps WHERE dst IS NOT NULL GROUP BY 1, 2
-)
-SELECT src, dst, n_transitions,
-       round(n_transitions / CAST(sum(n_transitions)
-             OVER (PARTITION BY src) AS DOUBLE), 6) AS prob
-FROM counts
-"""
-
-
-def pq_topk_sql(
-    dim: int = 64,
-    m: int = 8,
-    ksub: int = 32,
-    init_step: int = 15,
-    iters: int = 2,
-    shortlist: int = 100,
-    k: int = 5,
-    modulus: int = 100,
-) -> str:
-    """Mirrors similarity.pq_topk: per-subspace Lloyd rounds unrolled
-    as CTEs (round(6) means, round(6)+min-cid assignment), micro-int
-    ADC sums, exact cosine rerank.  Squared L2 everywhere via the
-    staged dot-product identity so the doubles are bit-identical."""
-    dsub = dim // m
-    mean_list = ", ".join(
-        f"round(avg(sv[{i + 1}]), 6)" for i in range(dsub)
-    )
-    ctes = [
-        f"""base AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), sub AS MATERIALIZED (
-  SELECT vec_id, s,
-         v[s*{dsub}+1 : (s+1)*{dsub}] AS sv,
-         list_dot_product(v[s*{dsub}+1 : (s+1)*{dsub}],
-                          v[s*{dsub}+1 : (s+1)*{dsub}]) AS svv
-  FROM base, (SELECT unnest(range({m})) AS s)
-), cb0 AS MATERIALIZED (
-  SELECT s, CAST((vec_id - 1) / {init_step} AS INT) AS cid,
-         sv AS cent, svv AS cc
-  FROM sub
-  WHERE vec_id % {init_step} = 1 AND vec_id < {init_step * ksub}
-)"""
-    ]
-    for r in range(iters):
-        ctes.append(
-            f"""a{r} AS (
-  SELECT vec_id, s, sv, cid FROM (
-    SELECT b.vec_id, b.s, b.sv, c.cid,
-           round(b.svv - 2 * list_dot_product(b.sv, c.cent) + c.cc,
-                 6) AS d
-    FROM sub b JOIN cb{r} c ON b.s = c.s
-  ) QUALIFY row_number() OVER (
-      PARTITION BY vec_id, s ORDER BY d ASC, cid ASC) = 1
-), mn{r} AS (
-  SELECT s, cid, [{mean_list}] AS cent FROM a{r} GROUP BY s, cid
-), cb{r + 1} AS MATERIALIZED (
-  SELECT c.s, c.cid, coalesce(mm.cent, c.cent) AS cent,
-         list_dot_product(coalesce(mm.cent, c.cent),
-                          coalesce(mm.cent, c.cent)) AS cc
-  FROM cb{r} c LEFT JOIN mn{r} mm ON c.s = mm.s AND c.cid = mm.cid
-)"""
-        )
-    ctes.append(
-        f"""codes AS MATERIALIZED (
-  SELECT vec_id, s, cid AS code FROM (
-    SELECT b.vec_id, b.s, c.cid,
-           round(b.svv - 2 * list_dot_product(b.sv, c.cent) + c.cc,
-                 6) AS d
-    FROM sub b JOIN cb{iters} c ON b.s = c.s
-  ) QUALIFY row_number() OVER (
-      PARTITION BY vec_id, s ORDER BY d ASC, cid ASC) = 1
-), qtab AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, c.s, c.cid,
-         CAST(round((q.svv - 2 * list_dot_product(q.sv, c.cent)
-                     + c.cc) * 1000000, 0) AS BIGINT) AS dmicro
-  FROM sub q JOIN cb{iters} c ON q.s = c.s
-  WHERE q.vec_id % {modulus} = 0
-), adc AS (
-  SELECT t.query_id, e.vec_id, sum(t.dmicro) AS adc_micro
-  FROM codes e JOIN qtab t ON t.s = e.s AND t.cid = e.code
-  GROUP BY 1, 2
-), short AS (
-  SELECT query_id, vec_id FROM adc
-  QUALIFY row_number() OVER (
-    PARTITION BY query_id ORDER BY adc_micro ASC, vec_id ASC)
-    <= {shortlist}
-), rr AS (
-  SELECT sh.query_id, sh.vec_id,
-         round(list_dot_product(b.v, q.v)
-               / (sqrt(list_dot_product(b.v, b.v))
-                  * sqrt(list_dot_product(q.v, q.v))), 6) AS cosine
-  FROM short sh
-  JOIN base b ON sh.vec_id = b.vec_id
-  JOIN base q ON sh.query_id = q.vec_id
-)"""
-    )
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank\n"
-        f"FROM (SELECT *, row_number() OVER (PARTITION BY query_id\n"
-        f"      ORDER BY cosine DESC, vec_id ASC) AS rank FROM rr)\n"
-        f"WHERE rank <= {k}"
-    )
-
-
-def top_event_paths_sql(length: int = 3, top_k: int = 20) -> str:
-    """Mirrors funnel.top_event_paths: chained lead()s, '>'-joined
-    path, count, deterministic (n DESC, path ASC) top-k."""
-    leads = ["event_type"] + [
-        f"lead(event_type, {i}) OVER w" for i in range(1, length)
-    ]
-    path = " || '>' || ".join(leads)
-    return f"""
-WITH steps AS (
-  SELECT {path} AS path,
-         lead(event_type, {length - 1}) OVER w AS _last
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), counts AS (
-  SELECT path, CAST(count(*) AS BIGINT) AS n
-  FROM steps WHERE _last IS NOT NULL GROUP BY 1
-)
-SELECT path, n, CAST(rank AS INT) AS rank FROM (
-  SELECT *, row_number() OVER (ORDER BY n DESC, path ASC) AS rank
-  FROM counts
-) WHERE rank <= {top_k}
-"""
-
-
-def host_pagerank_sql(
-    iterations: int = 5,
-    damping: float = 0.85,
-    n_pages: int = 2000,
-    n_hosts: int = 40,
-    fanout: int = 4,
-) -> str:
-    """Mirrors linkgraph.weighted_pagerank over the host-contracted
-    planted page graph: distinct page edges, page -> host = page %
-    n_hosts, parallel edges collapsed to a DOUBLE weight, rank flow
-    proportional to weight, dangling mass uniform — identical
-    arithmetic and per-round rounding to the Spark side."""
-    d = repr(float(damping))
-    omd = repr(1.0 - damping)
-    ctes = [
-        f"""pages AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-             % {n_pages} AS src,
-           ('0x' || substr(md5(doc_id || '@' || j), 1, 8))::BIGINT
-             % {n_pages} AS dst
-    FROM documents, (SELECT unnest(range({fanout})) AS j)
-  ) WHERE src <> dst
-), edges AS MATERIALIZED (
-  SELECT src % {n_hosts} AS src, dst % {n_hosts} AS dst,
-         CAST(count(*) AS DOUBLE) AS w
-  FROM pages WHERE src % {n_hosts} <> dst % {n_hosts}
-  GROUP BY 1, 2
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), meta AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes
-), outw AS (
-  SELECT src AS node, sum(w) AS ow FROM edges GROUP BY src
-), base AS (
-  SELECT n.node, o.ow FROM nodes n LEFT JOIN outw o ON n.node = o.node
-), r0 AS (
-  SELECT node, ow, round(1e0 / (SELECT n FROM meta), 10) AS rank
-  FROM base
-)"""
-    ]
-    for i in range(iterations):
-        ctes.append(
-            f"""dang{i} AS (
-  SELECT coalesce(sum(rank), 0e0) AS dang FROM r{i} WHERE ow IS NULL
-), r{i + 1} AS (
-  SELECT b.node, b.ow,
-         round({omd} / (SELECT n FROM meta)
-               + {d} * (coalesce(c.contrib, 0e0)
-                        + (SELECT dang FROM dang{i})
-                          / (SELECT n FROM meta)),
-               10) AS rank
-  FROM base b
-  LEFT JOIN (
-    SELECT e.dst AS node, sum(r.rank * e.w / r.ow) AS contrib
-    FROM edges e JOIN r{i} r ON e.src = r.node
-    GROUP BY e.dst
-  ) c ON b.node = c.node
-)"""
-        )
-    body = ",\n".join(ctes)
-    return (
-        f"WITH {body}\n"
-        f"SELECT node, round(rank, 6) AS rank FROM r{iterations}"
-    )
-
-
-def classifier_eval_sql() -> str:
-    """Mirrors nbclassifier.classifier_eval over the NB language
-    classifier's predictions: the full NB oracle nests as a subquery,
-    then three vocabulary-sized aggregates joined on the class key.
-    precision/recall/f1 computed from the UNROUNDED ratios exactly as
-    the Spark expressions do, rounded once at the end."""
-    return f"""
-WITH t AS (
-  SELECT lang AS label, pred AS p FROM ({NB_LANG_CLASSIFIER_ORACLE})
-), nt AS (
-  SELECT label, CAST(count(*) AS BIGINT) AS n_true FROM t GROUP BY 1
-), np AS (
-  SELECT p AS label, CAST(count(*) AS BIGINT) AS n_pred FROM t GROUP BY 1
-), tpc AS (
-  SELECT label, CAST(count(*) AS BIGINT) AS tp FROM t
-  WHERE label = p GROUP BY 1
-), base AS (
-  SELECT coalesce(nt.label, np.label) AS label,
-         coalesce(nt.n_true, 0) AS n_true,
-         coalesce(np.n_pred, 0) AS n_pred,
-         coalesce(tpc.tp, 0) AS tp
-  FROM nt FULL JOIN np ON nt.label = np.label
-  LEFT JOIN tpc ON coalesce(nt.label, np.label) = tpc.label
-)
-SELECT label, n_true, n_pred, tp,
-       round(CASE WHEN n_pred > 0 THEN tp / CAST(n_pred AS DOUBLE)
-                  ELSE 0e0 END, 6) AS precision,
-       round(CASE WHEN n_true > 0 THEN tp / CAST(n_true AS DOUBLE)
-                  ELSE 0e0 END, 6) AS recall,
-       round(CASE WHEN (CASE WHEN n_pred > 0
-                             THEN tp / CAST(n_pred AS DOUBLE)
-                             ELSE 0e0 END
-                        + CASE WHEN n_true > 0
-                               THEN tp / CAST(n_true AS DOUBLE)
-                               ELSE 0e0 END) > 0
-             THEN 2 * (CASE WHEN n_pred > 0
-                            THEN tp / CAST(n_pred AS DOUBLE)
-                            ELSE 0e0 END)
-                    * (CASE WHEN n_true > 0
-                            THEN tp / CAST(n_true AS DOUBLE)
-                            ELSE 0e0 END)
-                  / ((CASE WHEN n_pred > 0
-                           THEN tp / CAST(n_pred AS DOUBLE)
-                           ELSE 0e0 END)
-                     + (CASE WHEN n_true > 0
-                             THEN tp / CAST(n_true AS DOUBLE)
-                             ELSE 0e0 END))
-             ELSE 0e0 END, 6) AS f1
-FROM base
-"""

@@ -26,7 +26,7 @@ def main() -> None:
     mod = importlib.import_module("__spark_entry__")
     from mimeograph_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     names = sys.argv[1:] or list(mod.queries())
     oracles = mod.oracle_sql()
     fails = []

@@ -6,14 +6,11 @@ a leaf, so cached-plan dumps are not double-counted) and reports the
 scale-relevant shape: file scans, in-memory scans, exchanges, join
 strategies, Python eval nodes.  Flags the known scale-killers:
 
-- CartesianProduct anywhere;
-- BroadcastNestedLoopJoin, EXCEPT the 1-row scalar-attach pattern
-  (crossJoin of a single aggregate row — tfidf/q14-style);
-- row-at-a-time PythonUDF in queries that are not deliberately part
-  of the Arrow-UDF surface (the OCR/multimodal/UDAF/UDTF family);
-- more file scans than the query's documented budget (every query
-  gets a default budget of 4; the single-scan set is pinned tighter
-  by tests/test_plans.py).
+- CartesianProduct or BroadcastNestedLoopJoin anywhere;
+- Python eval nodes in queries that are not deliberately part of the
+  Arrow-UDF surface (the OCR UDFs);
+- more than 4 file scans (the single-scan set is pinned tighter by
+  tests/test_plans.py).
 
 Usage: python scripts/plan_audit.py [sf_dir]   (default sf0.001)
 Prints one line per query plus a FLAGGED section; exit code 1 if
@@ -27,62 +24,9 @@ from collections import Counter
 
 sys.path.insert(0, ".")
 
-# queries where Python eval nodes are the point (Arrow UDF surface)
-PYTHON_OK = {
-    "pipeline_extract", "ocr_pages", "multimodal_meta", "media_features",
-    "media_resize", "frame_sample", "udaf_quality_percentiles",
-    "udtf_token_chunks", "cogroup_asof_lag", "udaf_arrow_percentiles",
-    "text_normalize",  # the one NFC Arrow UDF (no Spark builtin)
-}
-# queries whose BroadcastNestedLoopJoin is a 1-row scalar attach
-# (tfidf/q14/q22), or a BOUNDED broadcast scoring pass: brute-force
-# cosine deliberately scores every (corpus x broadcast-query) pair —
-# that IS the exact baseline — and IVF's probe-cell selection crosses
-# the query batch with the broadcast M-row centroid table.
-SCALAR_ATTACH_OK = {
-    "tfidf_top_terms", "q14_promo_revenue", "q22_dormant_customers",
-    "ann_cosine_topk", "ann_ivf_topk",
-    "unigram_logprob",  # 1-row corpus token total onto the vocab
-    "mixture_sample",  # 1-row corpus count onto the per-group quotas
-    "semantic_dedup",  # broadcast M-row centroid assignment crosses
-    "nb_lang_classifier",  # 1-row totals + n_classes-row score spine
-    "classifier_eval",  # composes nb_train_predict (same scalars)
-    "heavy_hitters",  # 1-row global summary onto the key counts
-    "bigram_logprob",  # 1-row corpus token total onto the bigram table
-    "incremental_dedup",  # 1-row id cutoff onto the old/new split
-    "corpus_overlap",  # 1-row signatures/counts cross-attached
-    "histogram_quantiles",  # |qs| x bins bounded non-equi mass walk
-    "resample_locf",  # 1-row bucket span onto the series list
-    "distribution_drift",  # 1-row totals onto the joint vocab
-    "bm25_topk",  # 1-row (N, avgdl) corpus stats onto the tf table
-    "triangle_stats",  # three 1-row census scalars cross-attached
-    "embedding_outliers",  # 1-row mean-vector + (mu, sigma) attaches
-    "source_concentration",  # 1-row gini + total-weight attaches
-    "trigram_logprob",  # 1-row (T, V) train totals onto the trigrams
-}
-# per-query file-scan budgets where the default of 4 is wrong:
-# multi-table star joins scan each base table once; the dedup /
-# decontaminate family has documented structural extra legs
-# (train+eval, two-phase ranking, shifted-union fixtures,
-# multi-table blocking).
-SCAN_BUDGET = {
-    "q5_local_suppliers": 6, "q7_volume_shipping": 6,
-    "q8_market_share": 8, "q9_product_profit": 5,
-    "q21_waiting_suppliers": 3,  # supplier + ONE cached ll build
-    "simhash_near_dups": 6, "simhash_cap_stats": 6,
-    "dedup_exact": 2, "embedding_near_dups": 2,
-    "decontaminate": 2, "global_index": 2, "length_percentiles": 2,
-    "curate_documents": 2, "udtf_token_chunks": 2,
-    "decontaminate_graded": 2,  # train + eval legs
-    # q2/q11: partsupp synthesis scans part + supplier(count), the
-    # eligible frame adds supplier/nation/region, q2's outer adds part
-    "q2_min_cost_supplier": 6, "q11_important_stock": 5,
-    # delta scanned for cutoff/fp/stage legs + the THREE persisted
-    # index tables (fps/sigs/bands) — reading the index instead of
-    # re-scanning the corpus is the operator's entire point
-    "incremental_dedup": 8,
-}
-DEFAULT_SCAN_BUDGET = 4
+# queries where Python eval nodes are the point (the OCR Arrow UDFs)
+PYTHON_OK = {"pipeline_extract", "ocr_pages"}
+MAX_FILE_SCANS = 4
 
 
 def _nodes(jplan) -> list[str]:
@@ -99,7 +43,7 @@ def main() -> int:
     from mimeograph_spark.cacheutil import unpersist_deps
     from mimeograph_spark.session import get_spark
 
-    spark = get_spark(app_name="plan-audit", master="local[8]")
+    spark = get_spark(app_name="plan-audit")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     flagged: list[str] = []
     for name, fn in entry_mod.queries().items():
@@ -130,14 +74,12 @@ def main() -> int:
         if c.get("CartesianProduct"):
             flagged.append(f"{name}: CartesianProduct")
         if any("BroadcastNestedLoopJoin" in k for k in c):
-            if name not in SCALAR_ATTACH_OK:
-                flagged.append(f"{name}: BroadcastNestedLoopJoin")
+            flagged.append(f"{name}: BroadcastNestedLoopJoin")
         if python and name not in PYTHON_OK:
             flagged.append(f"{name}: unexpected Python eval ({python})")
-        budget = SCAN_BUDGET.get(name, DEFAULT_SCAN_BUDGET)
-        if file_scans > budget:
+        if file_scans > MAX_FILE_SCANS:
             flagged.append(
-                f"{name}: {file_scans} file scans (budget {budget})"
+                f"{name}: {file_scans} file scans (budget {MAX_FILE_SCANS})"
             )
         unpersist_deps(df)
     print()

@@ -78,231 +78,3 @@ def test_extract_matches_oracle_on_arbitrary_spans(
         assert row["status"] == exp["status"], doc_id
         assert sorted(row["error_pages"]) == exp["error_pages"], doc_id
 
-
-def _uf_components(pairs):
-    """Pure-python union-find reference: id -> min id of component."""
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[
-        HealthCheck.function_scoped_fixture,
-        HealthCheck.too_slow,
-    ],
-)
-@given(pairs=st.lists(
-    st.tuples(st.integers(0, 40), st.integers(0, 40)),
-    min_size=1, max_size=60,
-))
-def test_resolve_clusters_matches_union_find(spark, pairs):
-    """resolve_clusters on arbitrary random graphs must equal a
-    pure-python union-find (min-id canonical per component)."""
-    from mimeograph_spark.functions.dedup import resolve_clusters
-
-    pairs = [(a, b) for a, b in pairs if a != b]
-    if not pairs:
-        return
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {
-        r["doc_id"]: r["canonical_id"]
-        for r in resolve_clusters(df).collect()
-    }
-    assert got == _uf_components(pairs)
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[
-        HealthCheck.function_scoped_fixture,
-        HealthCheck.too_slow,
-    ],
-)
-@given(
-    toks=st.lists(
-        st.integers(min_value=0, max_value=5000), min_size=1, max_size=60
-    ),
-    budget=st.sampled_from([64, 257, 2048]),
-    n_shards=st.sampled_from([1, 3, 8]),
-)
-def test_fuzz_pack_sequences_dense_stream(spark, toks, budget, n_shards):
-    """Packing invariants on arbitrary token-count distributions
-    (including zero-token docs and budget-straddling giants): the
-    per-shard token stream is dense, offsets stay inside the budget,
-    and span counts match the closed form."""
-    from mimeograph_spark.functions.packing import pack_sequences
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(toks)], "doc_id long, n_tokens long"
-    )
-    rows = pack_sequences(
-        df, budget=budget, n_shards=n_shards, sep_tokens=1
-    ).collect()
-    assert len(rows) == len(toks)
-    cum = {}
-    for r in sorted(rows, key=lambda r: (r["shard"], r["doc_id"])):
-        c = cum.get(r["shard"], 0)
-        assert r["seq_id"] == c // budget
-        assert r["begin_offset"] == c % budget
-        end = c + r["n_tokens"] + 1 - 1
-        assert r["n_seqs"] == end // budget - c // budget + 1
-        cum[r["shard"]] = c + r["n_tokens"] + 1
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[
-        HealthCheck.function_scoped_fixture,
-        HealthCheck.too_slow,
-    ],
-)
-@given(
-    keys=st.sets(
-        st.integers(min_value=-(10**9), max_value=10**9),
-        min_size=1,
-        max_size=80,
-    ),
-    n_buckets=st.sampled_from([1, 7, 64]),
-)
-def test_fuzz_global_index_is_rank(spark, keys, n_buckets):
-    """with_global_index == rank for arbitrary (possibly negative,
-    clustered, sparse) unique keys and any bucket count."""
-    from mimeograph_spark.functions.ids import with_global_index
-
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
-    got = {
-        r["k"]: r["global_idx"]
-        for r in with_global_index(df, "k", n_buckets=n_buckets).collect()
-    }
-    assert got == {k: i for i, k in enumerate(sorted(keys))}
-
-
-@given(
-    texts=st.lists(
-        st.one_of(
-            st.none(),
-            st.text(
-                alphabet=st.characters(
-                    codec="ascii", min_codepoint=9, max_codepoint=126
-                ),
-                max_size=80,
-            ),
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(
-    max_examples=12, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_fuzz_char_class_stats_matches_python(spark, texts):
-    """char_class_stats vs a straight-line Python reference on
-    arbitrary ASCII text (incl. None/empty/control chars): counts
-    must partition the length exactly and entropy/ratios must match
-    to the same 6-decimal rounding."""
-    import math
-
-    from mimeograph_spark.functions.textstats import char_class_stats
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: r for r in char_class_stats(df).collect()
-    }
-    ws = set(" \t\n\r\f")
-    for i, t in enumerate(texts):
-        t = t or ""
-        n = len(t)
-        lo = sum(c.islower() and c.isascii() for c in t)
-        up = sum(c.isupper() and c.isascii() for c in t)
-        di = sum(c.isdigit() and c.isascii() for c in t)
-        sp = sum(c in ws for c in t)
-        ot = n - lo - up - di - sp
-        r = got[i]
-        assert (
-            r["n_chars_total"], r["n_lower"], r["n_upper"],
-            r["n_digit"], r["n_space"], r["n_other"],
-        ) == (n, lo, up, di, sp, ot), (t, dict(r.asDict()))
-        ent = 0.0
-        if n:
-            for c in (lo, up, di, sp, ot):
-                if c:
-                    p = c / n
-                    ent -= p * math.log(p)
-        assert abs(r["class_entropy"] - round(ent, 6)) <= 1e-6, (t, r)
-        assert r["digit_ratio"] == round(di / n, 6) if n else r["digit_ratio"] == 0.0
-
-
-LINE_POOL = [
-    "",  # blank — must be dropped outright
-    "   ",  # whitespace-only — also blank
-    "Accept all cookies",
-    "accept ALL cookies  ",  # same normalized form as above
-    "home | about | contact",
-    "unique sentence",
-    "another line of prose",
-    "\tindented line",
-]
-
-
-@given(
-    docs=st.lists(
-        st.lists(st.sampled_from(LINE_POOL), min_size=0, max_size=8),
-        min_size=1,
-        max_size=12,
-    )
-)
-@settings(
-    max_examples=6, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_fuzz_line_dedup_matches_python(spark, docs):
-    """line_dedup vs a straight-line Python sweep of the C4 recipe:
-    corpus scanned in (doc id, line position) order, each normalized
-    (lower+trim) non-blank line kept only at its first occurrence,
-    blanks dropped, survivors re-joined in original order.  The pool
-    forces heavy cross-document duplication (including two raw forms
-    with the SAME normalized key) so the min-(id,pos) aggregation and
-    the blank carry-through are both exercised."""
-    rows = [(i, "\n".join(lines)) for i, lines in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    from mimeograph_spark.functions.dedup import line_dedup
-
-    got = {r["doc_id"]: r for r in line_dedup(df).collect()}
-
-    seen: set[str] = set()
-    for i, lines in enumerate(docs):
-        # createDataFrame of "" splits identically: "".split("\n") == [""]
-        raw = "\n".join(lines).split("\n")
-        kept, n_lines = [], 0
-        for ln in raw:
-            norm = ln.strip().lower()
-            if not norm:
-                continue
-            n_lines += 1
-            if norm not in seen:
-                seen.add(norm)
-                kept.append(ln)
-        r = got[i]
-        assert r["n_lines"] == n_lines, (i, lines, dict(r.asDict()))
-        assert r["n_kept"] == len(kept), (i, lines, dict(r.asDict()))
-        assert r["clean_text"] == "\n".join(kept), (i, lines, r["clean_text"])

@@ -1,45 +1,16 @@
 """Plan-shape assertions: the properties that matter at 100 TB.
 
-These tests pin the *logical* plan contract — which sides carry
-broadcast hints — rather than the physical join picked at sandbox
-scale (AQE may legitimately broadcast a runtime-small side; what must
-never happen is a *forced* broadcast of a table that grows with the
-corpus).
+These tests pin the executed-plan contract of the extraction path —
+how many times the input is scanned, which filters prune at the
+storage layer, where no exchange may appear — and the lifecycle of the
+caches it registers.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from mimeograph_spark.plans import relational
-
 SF = "/root/testdata/sf0.001"
-
-
-def _analyzed(df) -> str:
-    return df._jdf.queryExecution().analyzed().toString()
-
-
-def test_q3_has_no_forced_broadcast(spark):
-    """orders/customer/lineitem all grow with the corpus: q3 must not
-    pin any join side, leaving strategy choice to AQE."""
-    plan = _analyzed(relational.q3_shipping_priority(spark, SF))
-    assert "ResolvedHint" not in plan, plan
-
-
-def test_q5_broadcasts_only_fixed_dimensions(spark):
-    """q5 may hint only region + nation (fixed cardinality); every
-    sf-scaling table (orders/customer/supplier/lineitem) must be
-    hint-free."""
-    plan = _analyzed(relational.q5_local_suppliers(spark, SF))
-    lines = plan.splitlines()
-    hint_idx = [i for i, l in enumerate(lines) if "ResolvedHint" in l]
-    assert len(hint_idx) == 2, plan
-    for i in hint_idx:
-        subtree = "\n".join(lines[i : i + 4])
-        assert ("n_nationkey" in subtree) or ("r_regionkey" in subtree), (
-            "broadcast hint on a non-dimension table:\n" + subtree
-        )
 
 
 def test_extract_is_single_scan(spark):
@@ -59,63 +30,6 @@ def test_extract_is_single_scan(spark):
         .toString()
     )
     assert plan.count("InMemoryTableScan") == 2, plan
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Both join sides written bucketed by the join key (same bucket
-    count) must sort-merge join with ZERO Exchange — the shuffle is
-    paid once at write time and amortized over every later join."""
-    from mimeograph_spark.sources.bucketed import read_table, write_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}'")
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    write_bucketed(orders, "bkt.orders_b", "o_custkey", n_buckets=8)
-    write_bucketed(cust, "bkt.cust_b", "c_custkey", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    try:
-        # force a non-broadcast join so the exchange-free property is
-        # visible (broadcast would trivially avoid the shuffle too)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = read_table(spark, "bkt.orders_b")
-        b = read_table(spark, "bkt.cust_b")
-        joined = a.join(b, a.o_custkey == b.c_custkey).groupBy(
-            "c_nationkey"
-        ).count()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        # anything below the join (its inputs) must read the bucketed
-        # layout directly — no Exchange; the groupBy above it may shuffle
-        join_subtree = plan.split("SortMergeJoin", 1)[-1]
-        assert "Exchange" not in join_subtree, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt.orders_b")
-        spark.sql("DROP TABLE IF EXISTS bkt.cust_b")
-
-
-def test_filter_pushes_down_to_parquet_scan(spark):
-    """q1's date filter must reach the parquet scan (PushedFilters),
-    not run as a post-scan Filter over full row groups."""
-    from mimeograph_spark.plans import relational
-
-    df = relational.q1_pricing_summary(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan, plan
-    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-    assert "l_shipdate" in pushed, plan
-
-
-def test_projection_prunes_scan_columns(spark):
-    """string_funcs touches 4 part columns; the scan's ReadSchema must
-    not include the untouched ones (p_retailprice etc.)."""
-    from mimeograph_spark.plans import relational
-
-    df = relational.part_string_funcs(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    schema = plan.split("ReadSchema: ", 1)[1].splitlines()[0]
-    assert "p_name" in schema and "p_brand" in schema, plan
-    assert "p_retailprice" not in schema, plan
 
 
 def test_partition_pruning_on_partitioned_sink(spark, tmp_path):
@@ -138,75 +52,23 @@ def test_partition_pruning_on_partitioned_sink(spark, tmp_path):
     assert statuses <= {"failed"}
 
 
-def test_topk_uses_window_group_limit(spark):
-    """Top-k window rank must run as a partial per-partition top-k
-    (WindowGroupLimit) before the shuffle, not a full sort."""
-    df = relational.window_top_orders_per_customer(spark, SF)
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in physical, physical
-
-
-def _physical_nodes(jplan) -> list[str]:
-    """Node names of the executed plan tree.  InMemoryTableScan is a
-    LEAF — the cached relation's plan is display-only, not a child — so
-    walking children counts only the scans this plan itself performs
-    (the textual plan duplicates FileScan lines inside every
-    InMemoryRelation dump, making string counts meaningless)."""
-    nodes = [jplan.nodeName()]
-    it = jplan.children().iterator()
-    while it.hasNext():
-        nodes.extend(_physical_nodes(it.next()))
-    return nodes
-
-
-def test_hypertable_reads_raw_events_once(spark):
-    """Every rollup level is materialized before the next derives from
-    it, so the union's executed plan performs ZERO file scans of its
-    own — all branches read cached levels (3 InMemoryTableScans: the
-    10min and 1h union branches plus the 1d derivation).  Without the
-    materialization the plan re-scans raw events once per resolution
-    (audited at 3 scans in round 2)."""
-    from mimeograph_spark.cacheutil import unpersist_deps
-    from mimeograph_spark.operators.hypertable import hypertable_rollup
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    df = None
-    try:
-        # AQE wraps stages in AdaptiveSparkPlan leaves, hiding the tree
-        # from a children() walk; the scan-count property is identical
-        # either way, so pin it on the non-adaptive plan.
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        df = hypertable_rollup(
-            spark.read.parquet(f"{SF}/events.parquet")
-        )
-        assert df.count() > 0
-        names = _physical_nodes(df._jdf.queryExecution().executedPlan())
-        scans = [n for n in names if "FileScan" in n or n == "Scan parquet"]
-        imts = [n for n in names if "InMemoryTableScan" in n]
-        assert len(scans) == 0, names
-        assert len(imts) == 3, names
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        if df is not None:
-            assert unpersist_deps(df) == 2
-
-
 def test_unpersist_deps_releases_operator_caches(spark):
     """Operators that persist internal frames register them on the
     returned DataFrame; unpersist_deps releases them so long-lived
     sessions don't accumulate cached blocks (caller-owned lifecycle)."""
     from mimeograph_spark.cacheutil import persisted_deps, unpersist_deps
-    from mimeograph_spark.functions.dedup import lsh_candidate_pairs
+    from mimeograph_spark.corpus import derive_documents
+    from mimeograph_spark.plans.pipeline import extract_flat
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    pairs = lsh_candidate_pairs(docs, k=8, bands=2)
-    pairs.count()
-    deps = persisted_deps(pairs)
-    assert len(deps) == 2
+    docs = derive_documents(spark.read.parquet(f"{SF}/documents.parquet"))
+    out = extract_flat(docs, single_scan=True)
+    out.count()
+    deps = persisted_deps(out)
+    assert len(deps) == 1
     assert all(d.storageLevel.useMemory for d in deps)
-    assert unpersist_deps(pairs) == 2
+    assert unpersist_deps(out) == 1
     assert all(not d.storageLevel.useMemory for d in deps)
-    assert persisted_deps(pairs) == []
+    assert persisted_deps(out) == []
 
 
 def test_routed_corpus_prunes_extract_branches(spark, tmp_path):
@@ -240,397 +102,6 @@ def test_routed_corpus_prunes_extract_branches(spark, tmp_path):
     }
 
 
-def test_q17_correlated_subquery_is_decorrelated(spark):
-    """The per-part average must run as ONE aggregate joined back to
-    lineitem (Catalyst decorrelation), never as a per-outer-row
-    subquery execution — at 100 TB a row-at-a-time subquery is O(n^2)
-    corpus scans."""
-    df = relational.q17_small_quantity_revenue(spark, SF)
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    assert "Subquery" not in physical, physical
-    n_joins = sum(
-        physical.count(j)
-        for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
-    )
-    assert n_joins >= 2, physical
-    assert physical.count("HashAggregate") >= 2, physical
-
-
-def test_html_extraction_is_narrow_single_pass(spark):
-    """HTML main-content extraction must be a pure narrow projection:
-    zero exchanges, zero Python — one codegen pass per document."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["html_main_content"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan, plan
-
-
-def test_curation_is_single_shuffle(spark):
-    """The composed curation filter (dedup-canonical + quality + lang
-    + length) must cost exactly ONE exchange — the fingerprint window
-    — with no joins."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["curate_documents"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-    assert "Join" not in plan, plan
-
-
-def test_ivf_topk_plan_shape(spark):
-    """IVF: the centroid set must be BROADCAST to both the assignment
-    and probe cross joins (never a CartesianProduct shuffle), the cell
-    join must be a broadcast hash join on cid, and the final top-k
-    must run as a partial per-partition top-k (WindowGroupLimit)."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["ann_ivf_topk"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan  # broadcast cross joins
-    assert "BroadcastHashJoin" in plan, plan  # probe-cell equi join
-    assert "WindowGroupLimit" in plan, plan
-
-
-def test_binned_range_join_is_hash_join(spark):
-    """The range join must plan as an equi hash join on the bin key —
-    never a BroadcastNestedLoopJoin / CartesianProduct."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["range_join_price_bands"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert ("BroadcastHashJoin" in plan) or ("SortMergeJoin" in plan) or (
-        "ShuffledHashJoin" in plan
-    ), plan
-
-
-def test_aqe_splits_skewed_join_partitions(spark):
-    """Runtime skew evidence: a sort-merge join with one hot key must
-    be re-planned by AQE's skew-join optimization (the hot partition
-    split across tasks, marked skew=true in the final plan) — the
-    engine-level complement to the explicit salting the stitch and
-    as-of operators do."""
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "8KB",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        hot = spark.range(300000).selectExpr(
-            "CAST(0 AS LONG) AS k", "id AS payload"
-        )
-        spread = spark.range(30000).selectExpr(
-            "1 + id % 100 AS k", "id AS payload"
-        )
-        left = hot.unionByName(spread)
-        right = spark.range(101).selectExpr("id AS k", "id * 2 AS rv")
-        # global aggregate, NOT groupBy(k): a downstream groupBy on the
-        # join key would reuse the join's partitioning, and AQE
-        # (correctly) refuses to split skewed partitions when doing so
-        # adds a shuffle — the split only applies where it's free
-        joined = left.join(right, on="k").agg(F.sum("payload").alias("s"))
-        joined.collect()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, plan
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_csv_json_orc_sources_roundtrip(spark, tmp_path):
-    """Source-format breadth: the same frame written as CSV (header),
-    JSON-lines and ORC and read back with an explicit schema must
-    equal the parquet original — schema-first reads, no inference.
-    (ORC additionally keeps predicate pushdown + column pruning,
-    checked on the read plan.)"""
-    src = spark.read.parquet(f"{SF}/events.parquet").select(
-        "event_id", "user_id", "event_type", "value"
-    ).limit(500)
-    schema = src.schema
-    csv_dir, json_dir, orc_dir = (
-        str(tmp_path / "csv"), str(tmp_path / "json"), str(tmp_path / "orc")
-    )
-    src.write.option("header", True).csv(csv_dir)
-    src.write.json(json_dir)
-    src.write.orc(orc_dir)
-    base = {tuple(r) for r in src.collect()}
-    got_csv = {
-        tuple(r)
-        for r in spark.read.schema(schema)
-        .option("header", True)
-        .csv(csv_dir)
-        .collect()
-    }
-    got_json = {
-        tuple(r) for r in spark.read.schema(schema).json(json_dir).collect()
-    }
-    got_orc = {
-        tuple(r) for r in spark.read.schema(schema).orc(orc_dir).collect()
-    }
-    assert got_csv == base
-    assert got_json == base
-    assert got_orc == base
-    orc_read = (
-        spark.read.schema(schema).orc(orc_dir)
-        .filter(F.col("user_id") == 7)
-        .select("event_id")
-    )
-    plan = orc_read._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id,7)]" in plan, plan
-    assert "ReadSchema: struct<event_id:bigint,user_id:bigint>" in plan or \
-        "ReadSchema: struct<event_id" in plan, plan
-
-
-def test_decontaminate_broadcasts_eval_grams(spark):
-    """The eval-set gram table must be BROADCAST into the overlap
-    join (benchmarks are tiny; the 100 TB train side must stream once
-    with no join shuffle)."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["decontaminate"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-def test_q20_nested_subqueries_are_decorrelated(spark):
-    """Both levels of q20 — the IN-subquery and the correlated
-    per-part total inside its HAVING — must be rewritten to joins
-    (left-semi + aggregate-join): no Subquery node may survive into
-    the executed plan."""
-    df = relational.q20_excess_shippers(spark, SF)
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    assert "Subquery" not in physical, physical
-    assert "LeftSemi" in physical, physical
-    assert physical.count("HashAggregate") >= 2, physical
-
-
-def test_q22_scalar_subquery_and_anti_join(spark):
-    """q22's NOT EXISTS must execute as a left-anti join, never a
-    per-customer probe; the scalar average is a one-row subquery,
-    which is the one legitimate Subquery shape (it runs once, not
-    per row)."""
-    df = relational.q22_dormant_customers(spark, SF)
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in physical, physical
-
-
-def test_global_index_never_globally_sorts_the_data(spark):
-    """with_global_index exists to avoid the single-partition global
-    window.  The data path must contain no global Sort/Exchange
-    (SinglePartition) over the input; the only single-partition work
-    allowed is the n_buckets-row offset frame."""
-    from mimeograph_spark.functions.ids import with_global_index
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
-    df = with_global_index(docs, "doc_id")
-    jplan = df._jdf.queryExecution().executedPlan()
-
-    def walk(node, out):
-        out.append(node)
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next(), out)
-        return out
-
-    offenders = []
-    for node in walk(jplan, []):
-        s = node.simpleString(200)
-        if "Exchange" in node.nodeName() and "SinglePartition" in s:
-            # allowed only for the offsets frame, whose subtree
-            # aggregates counts (_gi_n) — never the raw data rows
-            if "_gi_n" not in node.toString():
-                offenders.append(s)
-    assert not offenders, offenders
-    physical = jplan.toString()
-    assert "hashpartitioning(_gi_bucket" in physical, physical
-
-
-def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
-    """A z-ordered write must produce files whose min/max stats bound
-    BOTH columns (each file covers a small hyper-rectangle), where a
-    single-column sort leaves the second column's span at full range
-    — the property that lets parquet stats prune scans on either
-    filter column."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    from mimeograph_spark.sources.zorder import write_zordered
-
-    grid = spark.range(0, 256 * 256).select(
-        (F.col("id") % 256).alias("x"),
-        (F.col("id") / 256).cast("long").alias("y"),
-    )
-
-    def file_spans(path, cols):
-        spans = []
-        for f in _glob.glob(f"{path}/**/*.parquet", recursive=True):
-            md = pq.ParquetFile(f).metadata
-            lo = {c: None for c in cols}
-            hi = {c: None for c in cols}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    name = col.path_in_schema
-                    if name in cols and col.statistics is not None:
-                        mn, mx = col.statistics.min, col.statistics.max
-                        lo[name] = mn if lo[name] is None else min(lo[name], mn)
-                        hi[name] = mx if hi[name] is None else max(hi[name], mx)
-            spans.append({c: hi[c] - lo[c] for c in cols})
-        return spans
-
-    def files_hit(path, col, probe):
-        """How many files a point filter col == probe must read,
-        going by the same min/max stats the parquet reader prunes
-        with."""
-        n = 0
-        for f in _glob.glob(f"{path}/**/*.parquet", recursive=True):
-            md = pq.ParquetFile(f).metadata
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        mn, mx = c.statistics.min, c.statistics.max
-                        lo = mn if lo is None else min(lo, mn)
-                        hi = mx if hi is None else max(hi, mx)
-            if lo is not None and lo <= probe <= hi:
-                n += 1
-        return n
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered(grid, zpath, "x", "y", bits=8, n_tiles=16)
-    n_zfiles = len(_glob.glob(f"{zpath}/**/*.parquet", recursive=True))
-    assert n_zfiles >= 16
-    # deterministic tiling: every file covers exactly one 64x64 tile
-    for s_ in file_spans(zpath, ("x", "y")):
-        assert s_["x"] <= 63 and s_["y"] <= 63, s_
-
-    linpath = str(tmp_path / "linear")
-    (
-        grid.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(linpath)
-    )
-    n_lfiles = len(_glob.glob(f"{linpath}/**/*.parquet", recursive=True))
-
-    for probe in (40, 200):
-        # z-order prunes on BOTH dimensions: a point filter touches
-        # exactly one 4-tile row/column of the 4x4 tile grid
-        assert files_hit(zpath, "x", probe) <= n_zfiles // 4 + 1, probe
-        assert files_hit(zpath, "y", probe) <= n_zfiles // 4 + 1, probe
-        # the single-column sort cannot prune the second dimension:
-        # every file's y range contains every probe
-        assert files_hit(linpath, "y", probe) == n_lfiles, probe
-
-
-def test_pack_sequences_single_shuffle(spark):
-    """The packed layout must cost exactly ONE exchange (the shard
-    hash partition) and ONE sort (the in-partition doc_id order) —
-    any global sort or extra shuffle here breaks the operator's
-    scale contract."""
-    from mimeograph_spark.functions.packing import pack_sequences
-    from mimeograph_spark.functions.textstats import token_count
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        docs = (
-            spark.read.parquet(f"{SF}/documents.parquet")
-            .select("doc_id", "text")
-            .withColumn("n_tokens", token_count(F.col("text")))
-        )
-        plan = (
-            pack_sequences(docs, budget=2048, n_shards=16)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange") == 1, plan
-        assert "SinglePartition" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def test_rolling_range_window_single_shuffle(spark):
-    """The 30-day RANGE window must run as one hash exchange on the
-    partition key plus one in-partition sort — no global ordering."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        plan = (
-            relational.rolling_window_revenue(spark, SF)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange") == 1, plan
-        assert "SinglePartition" not in plan, plan
-        assert "Window" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def test_q16_not_in_rewrites_to_null_aware_anti_join(spark):
-    """NOT IN must execute as a null-aware anti join (or plain
-    LeftAnti once the planner proves the subquery side non-null) —
-    never a per-row Subquery probe."""
-    df = relational.q16_supplier_counts(spark, SF)
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in physical, physical
-    assert "Subquery" not in physical, physical
-
-
-def test_q18_in_having_rewrites_to_semi_join(spark):
-    """The IN over a grouped-HAVING subquery must run once as an
-    aggregate feeding a left-semi join against orders."""
-    df = relational.q18_large_orders(spark, SF)
-    physical = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in physical, physical
-    assert "Subquery" not in physical, physical
-
-
-def test_profile_columns_single_scan_no_join(spark):
-    """The whole profile must derive from one scan of the table: the
-    executed plan may contain exactly one FileScan and zero joins —
-    N profiled columns cost one pass, not N."""
-    from mimeograph_spark.functions.profile import profile_columns
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        orders = spark.read.parquet(f"{SF}/orders.parquet")
-        jplan = (
-            profile_columns(
-                orders, ("o_orderstatus", "o_orderpriority", "o_custkey")
-            )
-            ._jdf.queryExecution()
-            .executedPlan()
-        )
-        nodes = _physical_nodes(jplan)
-        scans = [n for n in nodes if "Scan" in n]
-        assert len(scans) == 1, nodes
-        assert not any("Join" in n for n in nodes), nodes
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 def test_interleaved_assembly_is_narrow_zero_exchange(spark):
     """Example assembly is pure per-row array work: the executed plan
     must contain no Exchange, no Join, no Python — one scan, one
@@ -647,314 +118,3 @@ def test_interleaved_assembly_is_narrow_zero_exchange(spark):
     )
     for bad in ("Exchange", "Join", "EvalPython"):
         assert bad not in plan, plan
-
-
-def test_html_scored_extraction_is_narrow_single_pass(spark):
-    """The scored variant must keep the cutoff variant's execution
-    shape: zero exchanges, zero Python — block scoring including the
-    DOM-hint regexes stays inside one codegen projection."""
-    from mimeograph_spark.functions.html_extract import (
-        extract_main_content_scored,
-        synth_html,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = docs.select(
-        extract_main_content_scored(
-            synth_html(F.col("doc_id"), F.col("text"))
-        ).alias("r")
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for bad in ("Exchange", "Join", "EvalPython"):
-        assert bad not in plan, plan
-
-
-def test_repetition_stats_single_scan(spark):
-    """All repetition signals (doc-level token stats AND gram counts)
-    must derive from ONE scan of the corpus — the doc stats ride the
-    exploded gram rows instead of forking a second consumer branch
-    (round 3's audit measured 2 file scans in the join-based form).
-    Zero joins, zero caches required."""
-    from mimeograph_spark.functions.repetition import repetition_stats
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        jplan = (
-            repetition_stats(docs)._jdf.queryExecution().executedPlan()
-        )
-        nodes = _physical_nodes(jplan)
-        scans = [n for n in nodes if "Scan" in n]
-        assert len(scans) == 1, nodes
-        assert not any("Join" in n for n in nodes), nodes
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def test_tfidf_single_scan(spark):
-    """The tf frame feeds three consumers (score join, document
-    frequency, corpus doc count); persisting it bounds the executed
-    plan to ONE file scan of the corpus — every other leaf is an
-    InMemoryTableScan of the cached (doc, term, tf) frame (round 3's
-    audit measured 3 scans with a double tokenize before the cache).
-    Once the cache is warm the final plan performs ZERO file scans of
-    its own — all three leaves read the cached frame."""
-    from mimeograph_spark.cacheutil import unpersist_deps
-    from mimeograph_spark.functions.tfidf import tfidf_top_terms
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    out = None
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-            "doc_id", "text"
-        )
-        out = tfidf_top_terms(docs, k=3)
-        assert out.count() > 0
-        nodes = _physical_nodes(out._jdf.queryExecution().executedPlan())
-        file_scans = [
-            n for n in nodes
-            if ("FileScan" in n or n == "Scan parquet")
-            and "InMemoryTableScan" not in n
-        ]
-        imts = [n for n in nodes if "InMemoryTableScan" in n]
-        assert len(file_scans) == 0, nodes
-        assert len(imts) == 3, nodes
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        if out is not None:
-            assert unpersist_deps(out) == 1
-
-
-def test_ivf_probe_prunes_cells(spark, tmp_path):
-    """The probe path of the persisted IVF index must read only the
-    probed cells: `cells` is partitioned by cid and the probe join
-    against the broadcast probe set turns into a DYNAMIC PARTITION
-    PRUNING filter on the scan — query cost scales with nprobe/M of
-    the index, never the whole corpus.  Also pins that the probe does
-    no assignment work (it joins the stored cells, it never re-scores
-    corpus x centroids)."""
-    from mimeograph_spark.functions.similarity import (
-        build_ivf_index,
-        ivf_probe,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    idx = build_ivf_index(
-        emb, str(tmp_path / "ivf"), centroid_step=50, dim=64,
-        refine_iters=0,
-    )
-    assert idx.n_centroids > 4
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    nprobe = 2
-    out = ivf_probe(idx, queries, k=5, nprobe=nprobe)
-    assert out.count() > 0
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the cells scan (vec/norm/cid columns) carries dynamic pruning
-    cells_scans = [
-        l for l in plan.splitlines()
-        if "FileScan" in l and "norm" in l
-    ]
-    assert cells_scans, plan
-    assert "dynamicpruning" in plan.lower(), plan
-    # reloading the handle from meta.json yields the same geometry
-    from mimeograph_spark.functions.similarity import IvfIndex
-
-    reloaded = IvfIndex.load(str(tmp_path / "ivf"))
-    assert (reloaded.dim, reloaded.n_centroids) == (
-        idx.dim, idx.n_centroids,
-    )
-
-
-def test_q21_exists_legs_are_decorrelated(spark):
-    """Q21's EXISTS / NOT EXISTS over the shared late-flag CTE must
-    run as ONE left-semi and ONE left-anti join — no Subquery node may
-    survive to execution (a per-row probe over a 100 TB lineitem is
-    O(n^2))."""
-    from mimeograph_spark.plans.relational import q21_waiting_suppliers
-
-    df = q21_waiting_suppliers(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Subquery" not in plan, plan
-    assert "LeftSemi" in plan, plan
-    assert "LeftAnti" in plan, plan
-
-
-def test_new_tpch_queries_broadcast_only_fixed_dimensions(spark):
-    """The round-4 TPC-H shapes may hint only nation/region (fixed
-    cardinality); every sf-scaling table (orders/customer/supplier/
-    lineitem/part) must be hint-free so AQE picks its strategy from
-    runtime sizes — a forced broadcast of a growing table OOMs
-    executors at 100 TB."""
-    cases = {
-        "q7_volume_shipping": 2,   # two nation roles
-        "q8_market_share": 3,      # two nation roles + region
-        "q9_product_profit": 1,    # nation
-        "q10_returned_items": 1,   # nation
-        "q12_shipping_delay": 0,
-        "q14_promo_revenue": 0,
-        "q19_disjunctive_brackets": 0,
-        "q21_waiting_suppliers": 0,
-    }
-    for name, n_hints in cases.items():
-        plan = _analyzed(getattr(relational, name)(spark, SF))
-        lines = plan.splitlines()
-        hint_idx = [i for i, l in enumerate(lines) if "ResolvedHint" in l]
-        assert len(hint_idx) == n_hints, (name, plan)
-        for i in hint_idx:
-            subtree = "\n".join(lines[i : i + 4])
-            assert ("n_nationkey" in subtree) or (
-                "r_regionkey" in subtree
-            ), f"{name}: broadcast hint on a non-dimension table:\n{subtree}"
-
-
-def test_date_range_filters_push_down_q6_q7_q8_q12(spark):
-    """The four TPC-H date filters rewritten from year(col)==Y to
-    half-open ranges must reach PushedFilters as GreaterThanOrEqual/
-    LessThan on the raw date column — year() survives only as a
-    post-scan residual, losing parquet row-group min/max skipping on
-    the date (the dominant pruning at 100 TB)."""
-    import re
-
-    cases = [
-        (relational.q6_forecast_revenue, "l_shipdate"),
-        (relational.q7_volume_shipping, "l_shipdate"),
-        (relational.q8_market_share, "o_orderdate"),
-        (relational.q12_shipping_delay, "l_shipdate"),
-    ]
-    # default maxMetadataStringLength (100) truncates the PushedFilters
-    # list mid-bracket, so the regex would silently match nothing
-    prev = spark.conf.get("spark.sql.maxMetadataStringLength")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
-        for fn, col in cases:
-            plan = (
-                fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-            )
-            pushed = " | ".join(
-                re.findall(r"PushedFilters: \[(.*?)\]", plan)
-            )
-            assert f"GreaterThanOrEqual({col}" in pushed, (fn.__name__, plan)
-            assert f"LessThan({col}" in pushed, (fn.__name__, plan)
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", prev)
-
-
-def test_lsh_increment_broadcast_direction_and_sigs_pruning(
-    spark, tmp_path
-):
-    """Two scale pins on the incremental dedup path:
-
-    1. No corpus-sized index frame is ever the build side of a
-       broadcast — the r5 regression was `F.broadcast(idx_fps)` in
-       the fp anti-join.  Pinned at the source level: every
-       F.broadcast(...) argument in functions/incremental.py must be
-       one of the reviewed delta-bounded names (the index tables'
-       handles never appear).
-    2. The rerank's read of the corpus-sized sigs table must carry a
-       DYNAMIC PARTITION PRUNING expression on sbkt — each increment
-       reads only the hash buckets holding candidate ids, not the
-       whole index."""
-    import ast
-    import inspect
-
-    from mimeograph_spark.functions import incremental
-
-    src = inspect.getsource(incremental)
-    allowed = {
-        "new_fp", "fp_hits", "new_groups", "touched", "keep",
-        "capped_new", "need",
-    }
-    for node in ast.walk(ast.parse(src)):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "broadcast"
-        ):
-            arg = node.args[0]
-            # unwrap chained calls (e.g. new_fp.select(...).distinct())
-            while isinstance(arg, (ast.Call, ast.Attribute)):
-                arg = arg.func if isinstance(arg, ast.Call) else arg.value
-            assert isinstance(arg, ast.Name), ast.dump(node)
-            assert arg.id in allowed, (
-                f"F.broadcast({arg.id}) at line {node.lineno}: not a "
-                "reviewed delta-bounded frame — broadcasting an "
-                "index-derived table OOMs at corpus scale"
-            )
-
-    from mimeograph_spark.functions.incremental import (
-        build_lsh_index,
-        lsh_increment,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"document number {i} " + " ".join(
-                f"w{i}_{j}" for j in range(10)
-            ))
-            for i in range(1, 31)
-        ],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "idx")
-    build_lsh_index(docs.filter("doc_id <= 20"), path, k=16, bands=4)
-    out = lsh_increment(
-        spark, path, docs.filter("doc_id > 20"), k=16, bands=4,
-        update=False,
-    )
-    out.count()
-    # metadata fields (Location, PartitionFilters) are truncated at
-    # 100 chars by default — long pytest tmp paths push the table
-    # name and the pruning expression out of the dump
-    prior = spark.conf.get("spark.sql.maxMetadataStringLength")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
-        plan = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", prior)
-    sigs_lines = [
-        l for l in plan.splitlines()
-        if "FileScan" in l and "/sigs]" in l
-    ]
-    assert sigs_lines, plan
-    for l in sigs_lines:
-        assert "dynamicpruning" in l.lower() and "sbkt" in l, l
-
-
-def test_pq_probe_reads_only_persisted_index(spark, tmp_path):
-    """pq_probe must consume the PERSISTED codebook and codes tables —
-    no Lloyd retraining, no re-encoding: its plan scans the two index
-    parquet tables (plus the corpus scan for the shortlist rerank) and
-    contains none of the training plan's centroid-mean aggregates."""
-    from mimeograph_spark.functions.similarity import (
-        PqIndex,
-        build_pq_index,
-        pq_probe,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    path = str(tmp_path / "pq")
-    build_pq_index(
-        emb, path, dim=64, m=8, ksub=32, init_step=15, iters=1
-    )
-    idx = PqIndex.load(path)
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = pq_probe(idx, queries, emb, shortlist=20, k=5)
-    assert out.count() > 0
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # both index tables are scanned from disk — matched by their
-    # column signatures (plan toString truncates long tmp paths):
-    # codebook = (s, cid, cent, cc), codes = (vec_id, s, code)
-    scans = [l for l in plan.splitlines() if "FileScan" in l]
-    assert any("cent#" in l and "cc#" in l for l in scans), plan
-    assert any("code#" in l for l in scans), plan
-    # ...and no training aggregate survives: the Lloyd rounds' mean
-    # expressions (avg(sv[..])) exist only in the build plan
-    assert "avg(sv" not in plan, plan

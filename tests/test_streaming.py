@@ -3,10 +3,7 @@ redelivered files (the queue semantics of the reference's resque
 worker pool, recast as Structured Streaming + manifest anti-join).
 """
 
-import os
-
 import pyspark.sql.functions as F
-import pytest
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.oracle import expected_results
@@ -48,818 +45,3 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert ckpt.read(spark).count() == len(rows)
-
-
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Append-mode windowed aggregation with a 10-min watermark: a row
-    arriving behind the watermark must be dropped — never emitted, and
-    never able to re-open (duplicate) an already-finalized window."""
-    from datetime import datetime
-
-    from mimeograph_spark.streaming.event_time import (
-        EVENT_STREAM_SCHEMA,
-        windowed_event_counts,
-    )
-
-    input_dir = str(tmp_path / "ev_in")
-    output_dir = str(tmp_path / "ev_out")
-    ckpt_dir = str(tmp_path / "ev_ckpt")
-
-    def arrive(*events):
-        rows = [
-            (i, "x", datetime(2024, 1, 1, h, m), 1.0)
-            for i, (h, m) in enumerate(events)
-        ]
-        spark.createDataFrame(rows, EVENT_STREAM_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(input_dir)
-
-    def run():
-        q = windowed_event_counts(spark, input_dir, output_dir, ckpt_dir)
-        q.awaitTermination(120)
-
-    def emitted():
-        return {
-            (r["window_start"].strftime("%H:%M"), r["n_events"])
-            for r in spark.read.parquet(output_dir).collect()
-        }
-
-    # Run 1: three on-time events in [10:00,10:10) plus an 11:00 event
-    # that will push the watermark to 10:50.  Single micro-batch ->
-    # nothing finalized yet (watermark lags one batch).
-    arrive((10, 0), (10, 3), (10, 5), (11, 0))
-    run()
-
-    # Run 2: one more event; the batch runs with watermark 10:50, so
-    # the 10:00 window is finalized and emitted exactly once.
-    arrive((11, 5))
-    run()
-    assert ("10:00", 3) in emitted()
-
-    # Run 3: a LATE event at 10:02 — behind the watermark (10:55) —
-    # together with a 12:00 event that advances the watermark further.
-    arrive((10, 2), (12, 0))
-    run()
-
-    # Run 4: advance once more so the 11:00 window finalizes.  The late
-    # 10:02 row must have been dropped: the 10:00 window keeps count 3
-    # and is NOT re-emitted as a duplicate/phantom row.
-    arrive((12, 30))
-    run()
-    got = emitted()
-    assert ("11:00", 2) in got
-    windows_1000 = [g for g in got if g[0] == "10:00"]
-    assert windows_1000 == [("10:00", 3)]
-
-
-def test_stateful_running_totals_survive_restart(spark, tmp_path):
-    """applyInPandasWithState keeps per-user state in the checkpoint:
-    a second availableNow run must CONTINUE the totals, not reset."""
-    from mimeograph_spark.streaming.stateful import running_user_totals
-
-    input_dir = str(tmp_path / "st_in")
-    output_dir = str(tmp_path / "st_out")
-    ckpt_dir = str(tmp_path / "st_ckpt")
-
-    def arrive(rows):
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, value double"
-        ).coalesce(1).write.mode("append").parquet(input_dir)
-
-    def run():
-        q = running_user_totals(spark, input_dir, output_dir, ckpt_dir)
-        q.awaitTermination(120)
-
-    arrive([(1, 7, 1.0), (2, 7, 2.0), (3, 9, 5.0)])
-    run()
-    arrive([(4, 7, 10.0)])
-    run()
-
-    rows = spark.read.parquet(output_dir).collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    # user 7: batch1 (2 events, 3.0) then batch2 continuing to 3 / 13.0
-    u7 = sorted(by_user[7], key=lambda r: r["total_events"])
-    assert [(r["batch_events"], r["total_events"], r["total_value"])
-            for r in u7] == [(2, 2, 3.0), (1, 3, 13.0)]
-    # user 9 only appeared in batch 1
-    assert [(r["batch_events"], r["total_events"], r["total_value"])
-            for r in by_user[9]] == [(1, 1, 5.0)]
-
-
-def test_stateful_final_totals_equal_batch_aggregate(spark, tmp_path):
-    """Streaming-batch twin check: after three availableNow runs (two
-    restarts) over accumulating input, each user's LAST streaming
-    total must equal the plain batch groupBy aggregate over the union
-    of every micro-batch — the stateful operator is exactly a
-    distributed incremental groupBy, and this pins it."""
-    import random
-
-    from mimeograph_spark.streaming.stateful import running_user_totals
-
-    input_dir = str(tmp_path / "eq_in")
-    output_dir = str(tmp_path / "eq_out")
-    ckpt_dir = str(tmp_path / "eq_ckpt")
-    rng = random.Random(7)
-    eid = 0
-    for _ in range(3):
-        rows = []
-        for _ in range(200):
-            eid += 1
-            rows.append(
-                (eid, rng.randint(1, 20), round(rng.uniform(0, 10), 2))
-            )
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, value double"
-        ).coalesce(1).write.mode("append").parquet(input_dir)
-        q = running_user_totals(spark, input_dir, output_dir, ckpt_dir)
-        q.awaitTermination(120)
-
-    last = {}
-    for r in spark.read.parquet(output_dir).collect():
-        cur = last.get(r["user_id"])
-        if cur is None or r["total_events"] > cur["total_events"]:
-            last[r["user_id"]] = r
-    batch = {
-        r["user_id"]: r
-        for r in spark.read.parquet(input_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("v"),
-        )
-        .collect()
-    }
-    assert set(last) == set(batch)
-    for uid, b in batch.items():
-        assert last[uid]["total_events"] == b["n"]
-        # streaming accumulates in arrival order, batch in shuffle
-        # order: identical up to FP associativity
-        assert abs(last[uid]["total_value"] - b["v"]) < 1e-6
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join: the streaming result
-    over two availableNow runs must equal the identical interval join
-    run as one batch query over the accumulated input.  (The watermark
-    + time-bound condition is also what lets Spark expire join state —
-    unbounded state otherwise.)"""
-    from datetime import datetime
-
-    from mimeograph_spark.streaming.stream_join import (
-        purchases_with_recent_views,
-        purchases_with_recent_views_batch,
-    )
-
-    input_dir = str(tmp_path / "sj_in")
-    output_dir = str(tmp_path / "sj_out")
-    ckpt_dir = str(tmp_path / "sj_ckpt")
-
-    def ts(minute):
-        return datetime(2024, 1, 1, 10, minute)
-
-    def arrive(rows):
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, event_type string, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(input_dir)
-
-    # user 1: views at 10:00/10:10, purchase 10:12 (both within 15m)
-    # user 2: view 10:00, purchase 10:20 (outside 15m -> no pair)
-    arrive([(1, 1, "view", ts(0)), (2, 1, "view", ts(10)),
-            (3, 2, "view", ts(0)), (4, 1, "purchase", ts(12))])
-    q = purchases_with_recent_views(spark, input_dir, output_dir, ckpt_dir)
-    q.awaitTermination(120)
-    # second micro-batch: late-ish purchase for user 2 + new view pair
-    arrive([(5, 2, "purchase", ts(20)), (6, 2, "view", ts(18))])
-    q = purchases_with_recent_views(spark, input_dir, output_dir, ckpt_dir)
-    q.awaitTermination(120)
-
-    got = {
-        (r["p_id"], r["v_id"])
-        for r in spark.read.parquet(output_dir).collect()
-    }
-    want = {
-        (r["p_id"], r["v_id"])
-        for r in purchases_with_recent_views_batch(spark, input_dir).collect()
-    }
-    assert got == want
-    assert (4, 1) in got and (4, 2) in got  # both views matched
-    assert (5, 3) not in got                # outside the interval
-    assert (5, 6) in got                    # cross-batch pair found
-
-
-def test_streaming_dedup_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicates arriving within the
-    lateness bound are suppressed (across micro-batches and restarts,
-    via checkpointed state), and each unique event is delivered
-    exactly once to the sink."""
-    from datetime import datetime
-
-    from mimeograph_spark.streaming.event_time import (
-        EVENT_STREAM_SCHEMA,
-        dedup_event_stream,
-    )
-
-    input_dir = str(tmp_path / "dd_in")
-    output_dir = str(tmp_path / "dd_out")
-    ckpt_dir = str(tmp_path / "dd_ckpt")
-
-    def arrive(*rows):
-        spark.createDataFrame(
-            [
-                (eid, "x", datetime(2024, 1, 1, h, m), 1.0)
-                for eid, (h, m) in rows
-            ],
-            EVENT_STREAM_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(input_dir)
-
-    def run():
-        q = dedup_event_stream(spark, input_dir, output_dir, ckpt_dir)
-        q.awaitTermination(120)
-
-    # batch 1: event 1 appears twice in the same micro-batch; event 2
-    # once
-    arrive((1, (10, 0)), (1, (10, 0)), (2, (10, 1)))
-    run()
-    # batch 2 (fresh query over the same checkpoint = restart): event
-    # 1 redelivered within the watermark bound -> suppressed by the
-    # CHECKPOINTED dedup state; event 3 is new
-    arrive((1, (10, 0)), (3, (10, 2)))
-    run()
-
-    out = spark.read.parquet(output_dir)
-    ids = sorted(r["event_id"] for r in out.collect())
-    assert ids == [1, 2, 3]
-
-
-def test_stream_upserts_resolve_to_latest_version(spark, tmp_path):
-    """Streaming ingest composed with merge-on-read: each micro-batch
-    upserts by doc_id, so a redelivered document with CHANGED content
-    (a re-crawl) resolves to its latest version — one row per doc,
-    newest text — while raw history and time travel keep the old
-    version addressable."""
-    import pyspark.sql.functions as F
-
-    from mimeograph_spark.sources.checkpoint import CheckpointTable
-
-    input_dir = str(tmp_path / "up_in")
-    ckpt = CheckpointTable(str(tmp_path / "up_tbl"))
-    stream_ckpt = str(tmp_path / "up_sck")
-
-    def arrive(rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(input_dir)
-
-    def run():
-        src = spark.readStream.schema("doc_id long, text string").parquet(
-            input_dir
-        )
-        q = (
-            src.writeStream.foreachBatch(
-                lambda batch, bid: ckpt.upsert(batch, key="doc_id")
-                if batch.count() > 0
-                else None
-            )
-            .option("checkpointLocation", stream_ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    arrive([(1, "v1 of one"), (2, "v1 of two")])
-    run()
-    s_after_first = ckpt.snapshots()[-1]["id"]
-
-    # re-crawl: doc 1 changes, doc 3 is new
-    arrive([(1, "v2 of one"), (3, "v1 of three")])
-    run()
-
-    cur = {
-        r["doc_id"]: r["text"]
-        for r in ckpt.read_current(spark, "doc_id").collect()
-    }
-    assert cur == {1: "v2 of one", 2: "v1 of two", 3: "v1 of three"}
-
-    # history intact: raw read has both versions of doc 1; time travel
-    # to the first commit still shows v1
-    assert ckpt.read(spark).filter(F.col("doc_id") == 1).count() == 2
-    old = {
-        r["doc_id"]: r["text"]
-        for r in ckpt.read_current(
-            spark, "doc_id", as_of=s_after_first
-        ).collect()
-    }
-    assert old[1] == "v1 of one"
-
-
-def test_streaming_session_windows_merge_and_match_batch(spark, tmp_path):
-    """Streaming session windows: a bridging event must MERGE two
-    candidate sessions into one; finalized sessions equal the batch
-    session_window aggregation over the same accumulated input."""
-    from datetime import datetime
-
-    from mimeograph_spark.streaming.event_time import (
-        EVENT_STREAM_SCHEMA,
-        session_window_counts,
-    )
-
-    input_dir = str(tmp_path / "sw_in")
-    output_dir = str(tmp_path / "sw_out")
-    ckpt_dir = str(tmp_path / "sw_ckpt")
-
-    def arrive(*times):
-        rows = [
-            (i, "x", datetime(2024, 1, 1, h, m), 1.0)
-            for i, (h, m) in enumerate(times)
-        ]
-        spark.createDataFrame(rows, EVENT_STREAM_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(input_dir)
-
-    def run():
-        q = session_window_counts(spark, input_dir, output_dir, ckpt_dir)
-        q.awaitTermination(120)
-
-    # batch 1: one open session; watermark after this batch = 10:00
-    arrive((10, 0), (10, 10))
-    run()
-    # batch 2: a bridging event within the watermark bound extends
-    # the open session (session MERGE in state), plus a separate
-    # later cluster
-    arrive((10, 35), (11, 20), (11, 25))
-    run()
-    arrive((15, 0),)   # watermark -> finalize all earlier sessions
-    run()
-    arrive((20, 0),)   # one more batch so 15:00's own session finalizes
-    run()
-
-    got = {
-        (r["session_start"].strftime("%H:%M"),
-         r["session_end"].strftime("%H:%M"),
-         r["n_events"])
-        for r in spark.read.parquet(output_dir).collect()
-    }
-    # merged first session: 10:00-10:35(+30) with 3 events;
-    # second session 11:20-11:25(+30) with 2
-    assert ("10:00", "11:05", 3) in got, got
-    assert ("11:20", "11:55", 2) in got, got
-
-    # twin check: batch session_window over the accumulated input
-    # (sessions the stream has finalized must match exactly)
-    batch = (
-        spark.read.parquet(input_dir)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "event_type")
-        .count()
-        .select(
-            F.col("w.start").alias("s"), F.col("w.end").alias("e"), "count"
-        )
-    )
-    bt = {
-        (r["s"].strftime("%H:%M"), r["e"].strftime("%H:%M"), r["count"])
-        for r in batch.collect()
-    }
-    for row in got:
-        assert row in bt, (row, bt)
-
-
-def test_streaming_sketch_rollup_matches_batch_and_absorbs_replay(
-    spark, tmp_path
-):
-    """The streamed sketch table must (a) produce EXACTLY the batch
-    estimates — HLL register maxima are order-insensitive, so
-    arrival-order/micro-batching cannot change the result — and (b)
-    absorb a full REPLAY of the same data (fresh stream checkpoint,
-    same files): sketch union is idempotent, so at-least-once
-    redelivery needs no dedup machinery."""
-    from mimeograph_spark.streaming.sketch_agg import (
-        run_sketch_stream,
-        sketch_estimates,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    input_dir = str(tmp_path / "incoming")
-    events.filter(F.col("event_id") % 2 == 0).write.mode(
-        "append"
-    ).parquet(input_dir)
-    events.filter(F.col("event_id") % 2 == 1).write.mode(
-        "append"
-    ).parquet(input_dir)
-
-    ckpt = CheckpointTable(str(tmp_path / "sketches"))
-    q = run_sketch_stream(
-        spark, input_dir, ckpt, str(tmp_path / "stream_ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    streamed = {
-        (r["window_start"], r["event_type"]): r["approx_distinct"]
-        for r in sketch_estimates(spark, ckpt).collect()
-    }
-    assert len(streamed) > 5
-
-    batch = {
-        (r["w"]["start"], r["event_type"]): r["est"]
-        for r in events.groupBy(
-            F.window("ts", "10 minutes").alias("w"), "event_type"
-        )
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg("user_id", F.lit(12))
-            ).cast("long").alias("est")
-        )
-        .collect()
-    }
-    assert streamed == batch
-
-    # replay: same files, FRESH stream checkpoint -> state unchanged
-    q2 = run_sketch_stream(
-        spark, input_dir, ckpt, str(tmp_path / "stream_ckpt2"),
-        available_now=True,
-    )
-    q2.awaitTermination(120)
-    replayed = {
-        (r["window_start"], r["event_type"]): r["approx_distinct"]
-        for r in sketch_estimates(spark, ckpt).collect()
-    }
-    assert replayed == streamed
-
-
-def test_streaming_incremental_dedup_matches_batch_and_skips_replay(
-    spark, tmp_path
-):
-    """New docs streamed through the persisted LSH index must emit,
-    cumulatively, exactly the batch pipeline's pairs restricted to
-    streamed ids (file-per-trigger, so cross-trigger links only exist
-    via the index appends); a direct replay of an already-committed
-    batch id must be a no-op (marker short-circuit)."""
-    from mimeograph_spark.functions.dedup import lsh_candidate_pairs
-    from mimeograph_spark.functions.incremental import build_lsh_index
-    from mimeograph_spark.streaming.incremental_dedup import (
-        dedup_batch,
-        run_dedup_stream,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog near the river bank"
-    )
-    rows = []
-    for i in range(1, 31):
-        if i in (1, 7, 23):
-            t = base
-        elif i in (21, 22, 27):
-            t = base + " twice"
-        elif i == 25:
-            t = base.replace("lazy", "sleepy")
-        elif i == 26:
-            t = base.replace("lazy", "sleepy").replace("bank", "shore")
-        else:
-            t = f"unique document number {i} " + " ".join(
-                f"tok{i}_{j}" for j in range(12)
-            )
-        rows.append((i, t))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    index_path = str(tmp_path / "idx")
-    build_lsh_index(docs.filter("doc_id <= 20"), index_path, k=16, bands=4)
-
-    # two arrival files, id-monotone: 21-25 then 26-30
-    input_dir = str(tmp_path / "incoming")
-    docs.filter("doc_id > 20 AND doc_id <= 25").coalesce(1).write.mode(
-        "append"
-    ).parquet(input_dir)
-    docs.filter("doc_id > 25").coalesce(1).write.mode("append").parquet(
-        input_dir
-    )
-
-    pairs_out = str(tmp_path / "pairs")
-    marker_dir = str(tmp_path / "markers")
-    q = run_dedup_stream(
-        spark, input_dir, index_path, pairs_out,
-        str(tmp_path / "stream_ckpt"), marker_dir,
-        k=16, bands=4, max_files_per_trigger=1, available_now=True,
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in spark.read.parquet(pairs_out).collect()
-    }
-    want = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in lsh_candidate_pairs(docs, k=16, bands=4).collect()
-        if r["id_b"] > 20
-    }
-    assert got == want
-    # the cross-trigger links require the index appends: 21==27 via
-    # fps, 25~26 via bands
-    assert got[(21, 27)] == 1.0
-    assert (25, 26) in got and got[(25, 26)] < 1.0
-
-    # replaying a committed batch id is a no-op
-    n_pairs = spark.read.parquet(pairs_out).count()
-    replay = docs.filter("doc_id > 20 AND doc_id <= 25")
-    assert dedup_batch(
-        spark, index_path, replay, 0, pairs_out, marker_dir,
-        k=16, bands=4,
-    ) is False
-    assert spark.read.parquet(pairs_out).count() == n_pairs
-
-
-def test_streaming_cms_matches_batch_and_is_replay_safe(spark, tmp_path):
-    """Streamed count-min state must equal the batch-built sketch
-    over the same rows.  Sums are not replay-idempotent by algebra
-    (unlike HLL union), so exactly-once rests on per-batch delta
-    keying: redelivering the same (batch_id, data) pair overwrites
-    its own rows and changes nothing, and a restart with the same
-    stream checkpoint processes only NEW files."""
-    from mimeograph_spark.functions.sketches import cms_build
-    from mimeograph_spark.streaming.cms_agg import (
-        cms_process_batch,
-        cms_stream_counters,
-        run_cms_stream,
-    )
-
-    depth, width = 4, 64
-    events = spark.read.parquet(
-        "/root/testdata/sf0.001/events.parquet"
-    ).select("event_id", "user_id")
-    input_dir = str(tmp_path / "incoming")
-    events.filter(F.col("event_id") % 3 == 0).write.mode("append").parquet(
-        input_dir
-    )
-    events.filter(F.col("event_id") % 3 == 1).write.mode("append").parquet(
-        input_dir
-    )
-
-    ckpt = CheckpointTable(str(tmp_path / "cms"))
-    q = run_cms_stream(
-        spark, input_dir, ckpt, str(tmp_path / "stream_ckpt"),
-        key_col="user_id", depth=depth, width=width,
-    )
-    q.awaitTermination(120)
-
-    def tab(df):
-        return {
-            (r["d"], r["bucket"]): r["cnt"]
-            for r in df.collect()
-        }
-
-    streamed = tab(cms_stream_counters(spark, ckpt))
-    batch = tab(
-        cms_build(
-            events.filter(F.col("event_id") % 3 != 2),
-            "user_id", depth=depth, width=width,
-        )
-    )
-    assert streamed == batch and len(streamed) > 10
-
-    # restart with the SAME stream checkpoint after a new file lands:
-    # only the new slice is processed, totals now cover all rows
-    events.filter(F.col("event_id") % 3 == 2).write.mode("append").parquet(
-        input_dir
-    )
-    q2 = run_cms_stream(
-        spark, input_dir, ckpt, str(tmp_path / "stream_ckpt"),
-        key_col="user_id", depth=depth, width=width,
-    )
-    q2.awaitTermination(120)
-    assert tab(cms_stream_counters(spark, ckpt)) == tab(
-        cms_build(events, "user_id", depth=depth, width=width)
-    )
-
-
-def test_cms_process_batch_redelivery_is_idempotent(spark, tmp_path):
-    """Direct foreachBatch redelivery contract: the same (batch_id,
-    data) pair applied twice leaves the summed state unchanged; a new
-    batch_id adds."""
-    from mimeograph_spark.functions.sketches import cms_build
-    from mimeograph_spark.streaming.cms_agg import (
-        cms_process_batch,
-        cms_stream_counters,
-    )
-
-    depth, width = 3, 32
-    a = spark.createDataFrame([("x",), ("y",), ("x",)], "key string")
-    b = spark.createDataFrame([("y",), ("z",)], "key string")
-    ckpt = CheckpointTable(str(tmp_path / "cms"))
-
-    def tab():
-        return {
-            (r["d"], r["bucket"]): r["cnt"]
-            for r in cms_stream_counters(spark, ckpt).collect()
-        }
-
-    cms_process_batch(a, 0, ckpt, "key", depth, width)
-    first = tab()
-    cms_process_batch(a, 0, ckpt, "key", depth, width)  # redelivery
-    assert tab() == first
-
-    cms_process_batch(b, 1, ckpt, "key", depth, width)
-    both = tab()
-    expect = {
-        (r["d"], r["bucket"]): r["cnt"]
-        for r in cms_build(
-            a.unionByName(b), "key", depth=depth, width=width
-        ).collect()
-    }
-    assert both == expect
-
-
-def test_transform_with_state_gated_without_protobuf(spark, tmp_path):
-    """Where google.protobuf is absent (this sandbox), the TWS twin
-    must fail fast with a clear RuntimeError, not a mid-query worker
-    crash."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf present; the full twin test runs instead")
-    except ImportError:
-        pass
-    from mimeograph_spark.streaming.twstate import running_user_totals_tws
-
-    with pytest.raises(RuntimeError, match="protobuf"):
-        running_user_totals_tws(
-            spark, str(tmp_path / "i"), str(tmp_path / "o"),
-            str(tmp_path / "c"),
-        )
-
-
-def test_transform_with_state_twin_matches_apply_in_pandas(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin: same running-totals
-    contract as applyInPandasWithState, checked across a restart —
-    and the two implementations' outputs must be row-identical.
-    Runs only where the TWS protobuf dependency exists (real cluster
-    images); the sandbox gate has its own test above."""
-    pytest.importorskip("google.protobuf")
-    from mimeograph_spark.streaming.stateful import running_user_totals
-    from mimeograph_spark.streaming.twstate import running_user_totals_tws
-
-    dirs = {}
-    for impl in ("old", "tws"):
-        dirs[impl] = {
-            k: str(tmp_path / f"{impl}_{k}")
-            for k in ("in", "out", "ckpt")
-        }
-
-    def arrive(impl, rows):
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, value double"
-        ).coalesce(1).write.mode("append").parquet(dirs[impl]["in"])
-
-    def run(impl):
-        fn = (
-            running_user_totals
-            if impl == "old"
-            else running_user_totals_tws
-        )
-        q = fn(
-            spark, dirs[impl]["in"], dirs[impl]["out"], dirs[impl]["ckpt"]
-        )
-        q.awaitTermination(120)
-
-    batches = [
-        [(1, 7, 1.0), (2, 7, 2.0), (3, 9, 5.0)],
-        [(4, 7, 10.0), (5, 9, 0.5)],
-    ]
-    for impl in ("old", "tws"):
-        for b in batches:
-            arrive(impl, b)
-            run(impl)
-
-    def collect(impl):
-        return sorted(
-            (
-                r["user_id"],
-                r["batch_events"],
-                r["total_events"],
-                r["total_value"],
-            )
-            for r in spark.read.parquet(dirs[impl]["out"]).collect()
-        )
-
-    got_old, got_tws = collect("old"), collect("tws")
-    assert got_old == got_tws
-    assert (7, 1, 3, 13.0) in got_tws  # state continued across restart
-
-
-def test_incremental_dedup_batch_survives_crashes_exactly_once(
-    spark, tmp_path
-):
-    """The staged redo-log commit must be exactly-once under a crash
-    at EITHER vulnerable point: (a) after staging commits but before
-    any file lands in the live tables, and (b) after the moves but
-    before the batch marker — the window the old append-then-marker
-    recipe got wrong (a replay there double-appended index rows)."""
-    from mimeograph_spark.functions.dedup import lsh_candidate_pairs
-    from mimeograph_spark.functions.incremental import build_lsh_index
-    from mimeograph_spark.streaming import incremental_dedup as mod
-
-    base = (
-        "the quick brown fox jumps over the lazy dog near the river bank"
-    )
-    rows = []
-    for i in range(1, 31):
-        if i in (1, 7, 23):
-            t = base
-        elif i in (21, 22, 27):
-            t = base + " twice"
-        else:
-            t = f"unique document number {i} " + " ".join(
-                f"tok{i}_{j}" for j in range(12)
-            )
-        rows.append((i, t))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    index_path = str(tmp_path / "idx")
-    build_lsh_index(docs.filter("doc_id <= 20"), index_path, k=16, bands=4)
-    pairs_out = str(tmp_path / "pairs")
-    marker_dir = str(tmp_path / "markers")
-
-    def run(batch_lo, batch_hi, batch_id):
-        return mod.dedup_batch(
-            spark, index_path,
-            docs.filter(
-                f"doc_id > {batch_lo} AND doc_id <= {batch_hi}"
-            ),
-            batch_id, pairs_out, marker_dir, k=16, bands=4,
-        )
-
-    # crash (a): staging committed, zero moves executed
-    real_moves = mod._redo_moves
-    calls = {"n": 0}
-
-    def exploding_moves(*a, **kw):
-        calls["n"] += 1
-        raise RuntimeError("crash before any move")
-
-    mod._redo_moves = exploding_moves
-    try:
-        with pytest.raises(RuntimeError):
-            run(20, 25, 0)
-    finally:
-        mod._redo_moves = real_moves
-    assert calls["n"] == 1
-    assert run(20, 25, 0) is True  # replay completes from staging
-
-    # crash (c): MID-move — the first staged file lands in its live
-    # table, then the process dies.  The replay re-lists a staging
-    # dir that is missing the moved file; destination names must
-    # derive from each file's stable identity, not its position in
-    # the remaining listing (position-based names collide with the
-    # already-moved file, skip the survivors, and the post-commit
-    # cleanup then deletes them — silent row loss).
-    real_replace = os.replace
-    mv = {"n": 0}
-
-    def exploding_replace(src, dst, *a, **kw):
-        mv["n"] += 1
-        if mv["n"] > 1:
-            raise RuntimeError("crash after first move")
-        return real_replace(src, dst, *a, **kw)
-
-    os.replace = exploding_replace
-    try:
-        with pytest.raises(RuntimeError):
-            run(25, 30, 1)
-    finally:
-        os.replace = real_replace
-    assert mv["n"] > 1  # the crash really hit mid-move
-
-    # crash (b): on the replay, moves execute but the marker write
-    # dies — the next replay must redo (skip) the moves and commit
-    real_touch = mod._touch
-
-    def exploding_touch(path):
-        if os.path.basename(path).startswith("batch-"):
-            raise RuntimeError("crash before marker")
-        real_touch(path)
-
-    mod._touch = exploding_touch
-    try:
-        with pytest.raises(RuntimeError):
-            run(25, 30, 1)
-    finally:
-        mod._touch = real_touch
-    assert run(25, 30, 1) is True  # replay redoes (skips) the moves
-
-    # exactly-once: cumulative pairs equal the batch recompute with
-    # no duplicate rows, and no index table holds a double append
-    got_rows = spark.read.parquet(pairs_out).collect()
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in got_rows}
-    want = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in lsh_candidate_pairs(docs, k=16, bands=4).collect()
-        if r["id_b"] > 20
-    }
-    assert got == want
-    assert len(got_rows) == len(got)  # no duplicated pair rows
-    fps = spark.read.parquet(f"{index_path}/fps")
-    assert fps.count() == fps.distinct().count()
-    sigs = spark.read.parquet(f"{index_path}/sigs")
-    assert sigs.select("id").count() == sigs.select("id").distinct().count()
-    # committed batches replay as no-ops and staging is reaped
-    assert run(20, 25, 0) is False
-    assert not any(
-        n.startswith("stage-") for n in os.listdir(marker_dir)
-    )
