@@ -37,11 +37,8 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full chain: classify -> branch -> OCR (pandas UDF) -> stitch.
-    single_scan: the input is a parquet scan, exactly the case where
-    caching the classified frame beats re-scanning (pipeline.extract
-    docstring has the measured trade-off)."""
-    return extract_flat(_documents(spark, sf_dir), single_scan=True)
+    """Full chain: classify -> branch -> OCR (pandas UDF) -> stitch."""
+    return extract_flat(_documents(spark, sf_dir))
 
 
 def q_classify_branch(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -141,16 +141,15 @@ DERIVE_SPANS_SQL = """
 
 def write_routed_corpus(documents: DataFrame, path: str) -> None:
     """Write the nested corpus WITH its routing columns persisted in
-    the storage layout — the real fix for the extract branch predicate
-    (pipeline.extract's docstring names it): `has_native` becomes a
-    PARTITION directory (the OCR/native branch prunes whole files at
-    plan time) and `n_media` a stored column sorted within partitions,
+    the storage layout (pipeline.extract's docstring names it):
+    `has_native` becomes a PARTITION directory (the OCR/native branch
+    prunes whole files at plan time) and `n_media` a stored column
+    sorted within partitions,
     so its parquet row-group min/max stats are tight and the mega-doc
     filter (`n_media > page_threshold`) skips row groups.  On Iceberg
     the same layout is partition-by-truncate(has_native) + a sort
-    order on n_media.  This removes the need for the in-memory
-    `single_scan` cache: each extract branch reads only its slice of
-    storage."""
+    order on n_media.  Each extract branch then reads only its slice
+    of storage."""
     from .operators.classify import HAS_NATIVE, N_MEDIA, with_doc_class
 
     with_doc_class(documents).sortWithinPartitions(N_MEDIA).write.mode(

@@ -12,7 +12,7 @@ reassembly — on the integer offset, so no >=10000-page drop (:166).
 Skew (north_rule): one mega-page document concentrates its stitch on a
 single reducer.  `salted=True` runs a two-phase aggregation — partial
 per-(doc_id, salt) sorted arrays first, spreading the heavy shuffle
-fetch + partial-array build across `num_salts` tasks, then a final
+fetch + partial-array build across NUM_SALTS tasks, then a final
 cheap merge of the (few) partial arrays per doc.  Results are
 byte-identical to the unsalted plan (tested).
 """
@@ -30,6 +30,9 @@ _ORD_SPAN = (
     "struct(offset as offset, kind as kind, text as text, media_ref as media_ref)"
 )
 
+# Salt buckets per document in the two-phase stitch.
+NUM_SALTS = 16
+
 
 def _finalize_spans(col_name: str):
     """Reorder the (offset-first) sorted structs into the public span
@@ -45,9 +48,7 @@ def _finalize_spans(col_name: str):
     )
 
 
-def stitch_pages(
-    pages: DataFrame, salted: bool = False, num_salts: int = 16
-) -> DataFrame:
+def stitch_pages(pages: DataFrame, salted: bool = False) -> DataFrame:
     """pages: (doc_id, offset:int, media_ref, kind, text) with text
     NULL for failed pages.  Returns RESULT_SCHEMA rows.
 
@@ -63,7 +64,7 @@ def stitch_pages(
 
     if salted:
         partial = pages.groupBy(
-            "doc_id", F.pmod(F.crc32(F.col("ospan.offset").cast("string")), F.lit(num_salts)).alias("_salt")
+            "doc_id", F.pmod(F.crc32(F.col("ospan.offset").cast("string")), F.lit(NUM_SALTS)).alias("_salt")
         ).agg(
             F.array_sort(F.collect_list("ospan")).alias("p_spans"),
             F.collect_list("err_offset").alias("p_errs"),

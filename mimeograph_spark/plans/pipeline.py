@@ -3,7 +3,7 @@
 lastextract, src/mimeograph.coffee:436-444) as one declarative Spark
 plan.
 
-Plan shape (only ONE shuffle, and only for mega-page docs):
+Plan shape (two exchanges, both in the mega-page docs' stitch):
 
     read documents
       |-- main branch (narrow, SINGLE PASS over the input):
@@ -11,8 +11,8 @@ Plan shape (only ONE shuffle, and only for mega-page docs):
       |     projection — the OCR UDF receives an EMPTY ref array for
       |     native docs, so the doc-level short-circuit
       |     (src/mimeograph.coffee:542-547) costs nothing in Python
-      |-- OCR page branch    (1 shuffle) mega docs: explode -> repartition
-      |                                  -> page UDF -> salted stitch
+      |-- OCR page branch    (2 exchanges) mega docs: explode -> page UDF
+      |                                    -> salted two-phase stitch
       '-- unionByName
 
 Fusing native + small-OCR into one projection matters at scale: a
@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cacheutil import register_persisted
 from ..operators.classify import (
     HAS_NATIVE,
     N_MEDIA,
@@ -51,38 +50,17 @@ _EMPTY_SPANS = (
 
 
 def extract(
-    documents: DataFrame,
-    page_threshold: int = DEFAULT_PAGE_THRESHOLD,
-    salted_stitch: bool = True,
-    num_salts: int = 16,
-    page_partitions: int | None = None,
-    single_scan: bool = False,
+    documents: DataFrame, page_threshold: int = DEFAULT_PAGE_THRESHOLD
 ) -> DataFrame:
     """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA).
 
-    `single_scan` persists the classified frame (MEMORY_AND_DISK) so
-    the mega-doc branch reads the cache instead of re-scanning and
-    re-classifying the full input for a ~0%-selectivity filter (the
-    `n_media > page_threshold` predicate can't push into parquet
-    because spans is a computed nested column).
-
-    Measured trade-off (sf0.1): for parquet-scan inputs the cache wins
-    2-4x on repeated/branched consumption (0.8s vs 5.9s in the query
-    bench), so the driver queries enable it; for the 10M-doc GENERATED
-    bench corpus (broadcast crossJoin, cheap to recompute) the cache
-    write costs ~50% throughput, so it stays opt-in rather than
-    default.  Turn it on when the input is an expensive scan and the
-    increment is bounded (the resumable runner's micro-batches); a
-    corpus written through `corpus.write_routed_corpus` carries the
-    routing columns IN STORAGE (has_native partitions the files,
-    n_media has sorted row-group stats) and prunes at plan time,
-    making both modes moot — with_doc_class is idempotent, so stored
-    routing columns flow through untouched (plan-tested)."""
+    A corpus written through `corpus.write_routed_corpus` carries the
+    routing columns in storage (has_native partitions the files,
+    n_media has sorted row-group stats), so each branch prunes at plan
+    time instead of re-classifying the full input; with_doc_class is
+    idempotent, so stored routing columns flow through untouched
+    (plan-tested)."""
     classified = with_doc_class(documents)
-    if single_scan:
-        from pyspark.storagelevel import StorageLevel
-
-        classified = classified.persist(StorageLevel.MEMORY_AND_DISK)
 
     # -- main branch: native + bounded-OCR docs, one narrow pass -------
     main = classified.filter(
@@ -181,10 +159,6 @@ def extract(
         F.col("s.offset").alias("offset"),
         F.col("s.media_ref").alias("media_ref"),
     )
-    if page_partitions:
-        # Spread one mega-doc's pages across tasks (round-robin beats
-        # hash-by-doc here: the whole point is splitting a single key).
-        pages = pages.repartition(page_partitions)
     ocr_pages = pages.select(
         "doc_id",
         "offset",
@@ -192,21 +166,15 @@ def extract(
         F.lit("ocr").alias("kind"),
         ocr_page_udf("media_ref").alias("text"),
     )
-    big_out = stitch_pages(ocr_pages, salted=salted_stitch, num_salts=num_salts)
+    big_out = stitch_pages(ocr_pages, salted=True)
 
-    out = main_out.unionByName(big_out)
-    if single_scan:
-        out = register_persisted(out, classified)
-    return out
+    return main_out.unionByName(big_out)
 
 
-def extract_flat(documents: DataFrame, **kwargs) -> DataFrame:
+def extract_flat(documents: DataFrame) -> DataFrame:
     """Pipeline result flattened to scalar columns (for SQL-oracle
     comparison and sinks that don't want nested arrays)."""
-    res = extract(documents, **kwargs)
-    from ..cacheutil import persisted_deps
-
-    out = res.select(
+    return extract(documents).select(
         "doc_id",
         "status",
         F.size("spans_out").cast("long").alias("n_spans_out"),
@@ -219,7 +187,6 @@ def extract_flat(documents: DataFrame, **kwargs) -> DataFrame:
             F.array_join(F.transform("spans_out", lambda s: s["text"]), " "),
         ).alias("final_text"),
     )
-    return register_persisted(out, *persisted_deps(res))
 
 
 def assemble_interleaved(docs: DataFrame) -> DataFrame:

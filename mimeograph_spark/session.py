@@ -47,11 +47,29 @@ def driver_memory() -> str:
     return f"{min(heap_mb, HEAP_CAP_MB)}m"
 
 
+# Arrow batch cap for pandas UDFs: one batch of mega-page docs must
+# stay within Python-worker memory.
+ARROW_MAX_RECORDS = 4096
+
+# App-level settings, applied by get_spark and by the spark-submit
+# entry point alike; the launcher owns master, heap, JVM options and UI.
+APP_CONF = {
+    # AQE: runtime coalescing + skew-join splitting for free.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
+    # Session TZ pinned to UTC so results compare bit-exactly with
+    # the DuckDB oracle (duckdb timestamps are UTC-naive).
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def get_spark(
     app_name: str = "mimeograph_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 4096,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -59,20 +77,8 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: runtime coalescing + skew-join splitting for free.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(map=APP_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow transfer for pandas UDFs; bound batch size so one batch
-        # of mega-page docs stays within Python-worker memory.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records)
-        )
-        # Session TZ pinned to UTC so results compare bit-exactly with
-        # the DuckDB oracle (duckdb timestamps are UTC-naive).
-        .config("spark.sql.session.timeZone", "UTC")
         # Single-JVM local mode: the driver heap IS the executor heap,
         # sized to the host (driver_memory) and grown on demand rather
         # than reserved and pre-touched at start.  On a real cluster

@@ -23,26 +23,24 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _MANIFEST = "manifest.json"
+# A manifest lock older than this many seconds is considered leaked by
+# a crashed writer and taken over (live writers hold it only for the
+# milliseconds of one manifest read+rewrite).
+LOCK_STALE_AFTER = 60.0
 
 
 class CheckpointTable:
     """Append-only snapshot table at `path` (local FS or any Hadoop
     path the driver can also reach via the local FS API)."""
 
-    def __init__(self, path: str, lock_stale_after: float = 60.0):
+    def __init__(self, path: str):
         self.path = path
-        # a manifest lock older than this is considered leaked by a
-        # crashed writer and taken over (live writers hold it only for
-        # the milliseconds of one manifest read+rewrite)
-        self.lock_stale_after = lock_stale_after
         os.makedirs(path, exist_ok=True)
 
     # -- manifest -----------------------------------------------------
@@ -56,16 +54,6 @@ class CheckpointTable:
         with open(self._manifest_path()) as f:
             return json.load(f)
 
-    def _commit_manifest(self, manifest: dict) -> None:
-        # Atomic: write to a temp file, rename over the manifest.  A
-        # crash mid-append leaves orphan parquet dirs that no manifest
-        # references — invisible to readers, clean replay semantics
-        # (the reference's stale-state delete, mimeograph.coffee:503-506).
-        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path())
-
     # -- table ops ----------------------------------------------------
 
     def snapshots(self) -> list[dict]:
@@ -75,14 +63,14 @@ class CheckpointTable:
         """Serialize manifest read-modify-commit sections with an
         O_EXCL lock file.  Crash-safety: a writer killed between lock
         creation and unlink must not block writers forever — a lock
-        older than lock_stale_after is broken via RENAME to a unique
+        older than LOCK_STALE_AFTER is broken via RENAME to a unique
         name, which atomically claims the takeover for exactly one
         contender (a plain unlink could delete a lock another breaker
         just re-created).
 
         Each lock carries a unique OWNERSHIP TOKEN.  A live writer
         whose lock was broken (a GC/FS stall longer than
-        lock_stale_after inside the critical section) discovers the
+        LOCK_STALE_AFTER inside the critical section) discovers the
         loss when it re-verifies the token — before committing the
         manifest and before unlinking on release — and raises instead
         of committing over the usurper's update or deleting the
@@ -108,7 +96,7 @@ class CheckpointTable:
                     age = time.time() - os.stat(lock_path).st_mtime
                 except FileNotFoundError:
                     continue  # released between open() and stat()
-                if age > self.lock_stale_after:
+                if age > LOCK_STALE_AFTER:
                     takeover = f"{lock_path}.stale.{uuid.uuid4().hex}"
                     try:
                         os.rename(lock_path, takeover)
@@ -145,7 +133,14 @@ class CheckpointTable:
                 "this writer stalled inside the critical section); "
                 "refusing to commit — retry the operation"
             )
-        self._commit_manifest(manifest)
+        # Atomic: write to a temp file, rename over the manifest.  A
+        # crash mid-append leaves orphan parquet dirs that no manifest
+        # references — invisible to readers, clean replay semantics
+        # (the reference's stale-state delete, mimeograph.coffee:503-506).
+        tmp = self._manifest_path() + f".tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, self._manifest_path())
 
     @staticmethod
     def _release_lock(fd: int, lock_path: str, token: str) -> None:
@@ -192,280 +187,14 @@ class CheckpointTable:
             self._release_lock(fd, lock_path, token)
         return snap
 
-    def _snaps_upto(self, as_of: str | None) -> list[dict]:
-        snaps = self.snapshots()
-        if as_of is None:
-            return snaps
-        idx = [i for i, s in enumerate(snaps) if s["id"] == as_of]
-        if not idx:
-            raise KeyError(f"unknown snapshot id: {as_of}")
-        return snaps[: idx[0] + 1]
-
-    def read(
-        self, spark: SparkSession, as_of: str | None = None
-    ) -> DataFrame | None:
-        """Union of committed snapshots (None if the table is empty).
-
-        `as_of` = TIME TRAVEL: read the table exactly as it stood when
-        that snapshot committed (it and everything before it) — the
-        manifest's ordered snapshot list makes every historical table
-        state addressable, same contract as Iceberg's
-        `VERSION AS OF`."""
-        dirs = [
-            os.path.join(self.path, s["dir"])
-            for s in self._snaps_upto(as_of)
-        ]
+    def read(self, spark: SparkSession) -> DataFrame | None:
+        """Union of committed snapshots (None if the table is empty)."""
+        dirs = [os.path.join(self.path, s["dir"]) for s in self.snapshots()]
         if not dirs:
             return None
         # mergeSchema: snapshots written after an add-column evolve
         # the table schema; older rows surface NULL for new columns.
         return spark.read.option("mergeSchema", "true").parquet(*dirs)
-
-    def read_since(
-        self, spark: SparkSession, snapshot_id: str
-    ) -> DataFrame | None:
-        """INCREMENTAL read: only rows committed strictly AFTER
-        `snapshot_id` (None if nothing newer exists) — the changelog
-        slice a downstream consumer polls instead of re-reading the
-        whole table (Iceberg's incremental scan)."""
-        done = {s["id"] for s in self._snaps_upto(snapshot_id)}
-        dirs = [
-            os.path.join(self.path, s["dir"])
-            for s in self.snapshots()
-            if s["id"] not in done
-        ]
-        if not dirs:
-            return None
-        return spark.read.option("mergeSchema", "true").parquet(*dirs)
-
-    # -- row-level changes (merge-on-read) ----------------------------
-
-    def upsert(
-        self, df: DataFrame, key: str, meta: dict | None = None
-    ) -> dict:
-        """MERGE INTO semantics, merge-on-read flavor: commit `df` as
-        a delta snapshot; rows whose `key` already exists in the table
-        logically replace the old version, new keys insert.
-
-        The write is O(delta) — no rewrite of existing data, which is
-        what makes continuous upserts viable at 10^12 rows (Iceberg's
-        copy-on-write MERGE rewrites every touched file; its
-        merge-on-read equivalent writes exactly this kind of delta +
-        resolves on read).  Resolution happens in
-        :meth:`read_current`; :meth:`compact_current` folds the deltas
-        back into one materialized snapshot when read cost matters
-        more than write cost."""
-        return self.append(df, meta={**(meta or {}), "upsert_key": key})
-
-    def delete_keys(
-        self, keys_df: DataFrame, key: str, meta: dict | None = None
-    ) -> dict:
-        """Row-level delete: commit tombstones for the given keys
-        (one-column frame).  O(delta), resolved at read time —
-        Iceberg's equality-delete file contract."""
-        tomb = keys_df.select(key).distinct().withColumn(
-            "_tombstone", F.lit(True)
-        )
-        return self.append(
-            tomb, meta={**(meta or {}), "upsert_key": key, "delete": True}
-        )
-
-    def read_current(
-        self, spark: SparkSession, key: str, as_of: str | None = None
-    ) -> DataFrame | None:
-        """Resolved view: exactly one row per key — the latest
-        committed version — with tombstoned keys removed and schema
-        evolution applied (columns added by later snapshots read as
-        NULL in older rows; unionByName(allowMissingColumns) is the
-        read-side half of Iceberg's add-column contract).
-
-        The resolution is one window over the key (latest snapshot
-        sequence wins); at scale this is the standard merge-on-read
-        cost and is bounded by compacting (:meth:`compact_current`)."""
-        snaps = self._snaps_upto(as_of)
-        return self._resolve_current(spark, key, snaps)
-
-    def _resolve_current(
-        self, spark: SparkSession, key: str, snaps: list[dict]
-    ) -> DataFrame | None:
-        """Merge-on-read resolution over an EXPLICIT snapshot list —
-        shared by read_current (manifest view) and compact_current
-        (captured view, so concurrent appends are never folded in)."""
-        from pyspark.sql import Window
-
-        if not snaps:
-            return None
-        parts = []
-        for seq, s in enumerate(snaps):
-            d = spark.read.parquet(os.path.join(self.path, s["dir"]))
-            if "_tombstone" not in d.columns:
-                d = d.withColumn("_tombstone", F.lit(False))
-            parts.append(d.withColumn("_seq", F.lit(seq)))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
-        w = Window.partitionBy(key).orderBy(F.col("_seq").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & ~F.coalesce("_tombstone", F.lit(False)))
-            .drop("_rn", "_seq", "_tombstone")
-        )
-
-    def compact_current(self, spark: SparkSession, key: str) -> dict | None:
-        """Materialize the resolved (post-merge) view into ONE
-        snapshot and swap it in — the merge-on-read counterpart of
-        compact(): read cost returns to a plain scan, at the price of
-        rewriting live data once and folding away per-row history
-        older than the compaction (exactly what Iceberg's
-        rewrite_data_files + rewrite_position_delete_files pair
-        does)."""
-        old_snaps = self.snapshots()
-        if len(old_snaps) <= 1:
-            return None
-        # Resolve from the CAPTURED snapshot list, not a fresh manifest
-        # read: a snapshot committed between capture and resolution
-        # would otherwise be folded into the compacted output AND kept
-        # in `newer`, double-counting its rows for raw read()/
-        # read_since() consumers.
-        resolved = self._resolve_current(spark, key, old_snaps)
-        snap_id = f"snap-{uuid.uuid4().hex[:12]}"
-        resolved.write.mode("overwrite").parquet(
-            os.path.join(self.path, snap_id)
-        )
-        snap = {
-            "id": f"snap-000000-{snap_id[5:]}",
-            "dir": snap_id,
-            "committed_at": time.time(),
-            "meta": {
-                "compacted_from": [s["id"] for s in old_snaps],
-                "resolved_key": key,
-            },
-        }
-        fd, lock_path, token = self._acquire_lock()
-        try:
-            compacted_ids = {s["id"] for s in old_snaps}
-            newer = [
-                s
-                for s in self._read_manifest()["snapshots"]
-                if s["id"] not in compacted_ids
-            ]
-            self._commit_manifest_owned(
-                {"snapshots": [snap] + newer}, lock_path, token
-            )
-        finally:
-            self._release_lock(fd, lock_path, token)
-        for s in old_snaps:
-            shutil.rmtree(
-                os.path.join(self.path, s["dir"]), ignore_errors=True
-            )
-        return snap
-
-    def compact(self, spark: SparkSession) -> dict | None:
-        """Rewrite all committed snapshots into ONE (Iceberg's
-        rewrite_data_files): a long-running resumable job accumulates
-        one snapshot per increment, and reads degrade as the manifest
-        grows — compaction restores a single-dir layout without
-        changing visible data.
-
-        Crash-safe ordering: the compacted snapshot is fully written
-        BEFORE the manifest swap (a crash in between leaves an orphan
-        dir, invisible to readers, same as any uncommitted append);
-        old snapshot dirs are removed only AFTER the swap commits.
-        Readers never see a partial state.  Returns the new snapshot
-        (None if the table has 0 or 1 snapshots — nothing to do)."""
-        old_snaps = self.snapshots()
-        if len(old_snaps) <= 1:
-            return None
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, s["dir"]) for s in old_snaps]
-        )
-        snap_id = f"snap-{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.path, snap_id)
-        )
-        snap = {
-            "id": f"snap-000000-{snap_id[5:]}",
-            "dir": snap_id,
-            "committed_at": time.time(),
-            "meta": {"compacted_from": [s["id"] for s in old_snaps]},
-        }
-        fd, lock_path, token = self._acquire_lock()
-        try:
-            # re-read under the lock: snapshots appended while the
-            # rewrite ran are NOT covered by the compacted file and
-            # must survive the swap, in order, after it
-            compacted_ids = {s["id"] for s in old_snaps}
-            newer = [
-                s
-                for s in self._read_manifest()["snapshots"]
-                if s["id"] not in compacted_ids
-            ]
-            self._commit_manifest_owned(
-                {"snapshots": [snap] + newer}, lock_path, token
-            )
-        finally:
-            self._release_lock(fd, lock_path, token)
-        for s in old_snaps:
-            shutil.rmtree(
-                os.path.join(self.path, s["dir"]), ignore_errors=True
-            )
-        return snap
-
-    def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Iceberg's expire_snapshots: drop the oldest snapshots from
-        the manifest (keeping the newest `keep_last`), then delete
-        their data dirs.  Frees storage at the price of truncating
-        time travel — `read(as_of=...)` for an expired id raises,
-        exactly the Iceberg contract.  Returns expired ids.
-
-        Ordering is crash-safe like compact(): the manifest commit
-        happens first (under the lock), so a crash mid-delete leaves
-        only unreferenced dirs — garbage for remove_orphans, never a
-        manifest pointing at missing data.  NOTE: expiry removes
-        whole snapshots, so on a merge-on-read table it must keep any
-        snapshot whose rows are still the latest version of some key
-        — use compact_current() first to fold history, then expire."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        fd, lock_path, token = self._acquire_lock()
-        try:
-            snaps = self._read_manifest()["snapshots"]
-            if len(snaps) <= keep_last:
-                return []
-            expired, kept = snaps[:-keep_last], snaps[-keep_last:]
-            self._commit_manifest_owned({"snapshots": kept}, lock_path, token)
-        finally:
-            self._release_lock(fd, lock_path, token)
-        for s in expired:
-            shutil.rmtree(
-                os.path.join(self.path, s["dir"]), ignore_errors=True
-            )
-        return [s["id"] for s in expired]
-
-    def remove_orphans(self) -> list[str]:
-        """Iceberg's remove_orphan_files: delete snapshot dirs on disk
-        that no manifest entry references — the leftovers of writers
-        that crashed between data write and manifest commit.  Safe by
-        construction: readers only ever resolve dirs THROUGH the
-        manifest, so an unreferenced dir is invisible garbage.
-        Returns the removed dir names."""
-        referenced = {s["dir"] for s in self.snapshots()}
-        removed = []
-        for name in os.listdir(self.path):
-            full = os.path.join(self.path, name)
-            if (
-                os.path.isdir(full)
-                and name.startswith("snap-")
-                and name not in referenced
-            ):
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(name)
-        return removed
-
-    def truncate(self) -> None:
-        for s in self.snapshots():
-            shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
-        self._commit_manifest({"snapshots": []})
 
 
 def resume_filter(
@@ -483,9 +212,7 @@ def resume_filter(
     done = ckpt.read(spark)
     if done is None:
         return documents
-    return documents.join(
-        done.select(key).distinct(), on=key, how="left_anti"
-    )
+    return documents.join(done.select(key), on=key, how="left_anti")
 
 
 def run_resumable(

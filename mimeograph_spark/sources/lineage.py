@@ -15,7 +15,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointTable, resume_filter
+from .checkpoint import CheckpointTable, run_resumable
 
 
 def lineage_rows(
@@ -63,13 +63,15 @@ def run_resumable_with_lineage(
     lineage describes exactly the data that became visible — a crash
     between the two commits costs only lineage, never result
     correctness)."""
-    spark = documents.sparkSession
     started = datetime.now(timezone.utc)
-    todo = resume_filter(documents, results_ckpt)
-    if todo.isEmpty():
+    snap = run_resumable(
+        documents, results_ckpt, pipeline_fn, meta={"run_id": run_id}
+    )
+    if snap is None:
         return None
-    snap = results_ckpt.append(pipeline_fn(todo), meta={"run_id": run_id})
-    committed = spark.read.parquet(f"{results_ckpt.path}/{snap['dir']}")
+    committed = documents.sparkSession.read.parquet(
+        f"{results_ckpt.path}/{snap['dir']}"
+    )
     lineage_ckpt.append(
         lineage_rows(committed, run_id, stage, started),
         meta={"run_id": run_id, "results_snapshot": snap["id"]},

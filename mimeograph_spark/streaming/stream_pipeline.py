@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.pipeline import extract
+from ..plans.pipeline import DEFAULT_PAGE_THRESHOLD, extract
 from ..schema import DOCUMENTS_SCHEMA
-from ..sources.checkpoint import CheckpointTable, resume_filter
+from ..sources.checkpoint import CheckpointTable, run_resumable
 
 
 def run_stream(
@@ -33,7 +33,7 @@ def run_stream(
     results_ckpt: CheckpointTable,
     stream_checkpoint_dir: str,
     available_now: bool = True,
-    **extract_kwargs,
+    page_threshold: int = DEFAULT_PAGE_THRESHOLD,
 ) -> StreamingQuery:
     """Start the streaming extraction over `input_dir` parquet files.
 
@@ -47,11 +47,11 @@ def run_stream(
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        todo = resume_filter(batch_df, results_ckpt)
-        if todo.isEmpty():
-            return
-        results_ckpt.append(
-            extract(todo, **extract_kwargs), meta={"batch_id": batch_id}
+        run_resumable(
+            batch_df,
+            results_ckpt,
+            lambda todo: extract(todo, page_threshold),
+            meta={"batch_id": batch_id},
         )
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

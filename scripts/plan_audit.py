@@ -9,8 +9,8 @@ strategies, Python eval nodes.  Flags the known scale-killers:
 - CartesianProduct or BroadcastNestedLoopJoin anywhere;
 - Python eval nodes in queries that are not deliberately part of the
   Arrow-UDF surface (the OCR UDFs);
-- more than 4 file scans (the single-scan set is pinned tighter by
-  tests/test_plans.py).
+- more than 4 file scans (the extract plan's exchanges, Python nodes
+  and absence of caches and joins are pinned by tests/test_plans.py).
 
 Usage: python scripts/plan_audit.py [sf_dir]   (default sf0.001)
 Prints one line per query plus a FLAGGED section; exit code 1 if
@@ -40,7 +40,6 @@ def _nodes(jplan) -> list[str]:
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     import __spark_entry__ as entry_mod
-    from mimeograph_spark.cacheutil import unpersist_deps
     from mimeograph_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit")
@@ -81,7 +80,6 @@ def main() -> int:
             flagged.append(
                 f"{name}: {file_scans} file scans (budget {MAX_FILE_SCANS})"
             )
-        unpersist_deps(df)
     print()
     if flagged:
         print("FLAGGED:")

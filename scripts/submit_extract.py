@@ -10,7 +10,7 @@ Usage:
         --results /path/to/results_table \\
         --lineage /path/to/lineage_table \\
         --run-id  run-2026-08-16 \\
-        [--derive-from-flat] [--page-threshold 512]
+        [--derive-from-flat] [--page-threshold N]
 
 Reads the documents table (nested span schema, or the flat testdata
 shape with --derive-from-flat), runs the resumable extraction, commits
@@ -27,29 +27,32 @@ import sys
 
 
 def main() -> int:
+    from mimeograph_spark.plans.pipeline import DEFAULT_PAGE_THRESHOLD, extract
+
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--results", required=True)
     p.add_argument("--lineage", required=True)
     p.add_argument("--run-id", required=True)
     p.add_argument("--derive-from-flat", action="store_true")
-    p.add_argument("--page-threshold", type=int, default=512)
+    p.add_argument(
+        "--page-threshold", type=int, default=DEFAULT_PAGE_THRESHOLD
+    )
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
+
+    from mimeograph_spark.session import APP_CONF
 
     # spark-submit supplies master/deploy config; only app-level
     # settings are set here so the same script runs on any cluster.
     spark = (
         SparkSession.builder.appName(f"mimeograph-extract-{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=APP_CONF)
         .getOrCreate()
     )
 
     from mimeograph_spark.corpus import derive_documents
-    from mimeograph_spark.plans.pipeline import extract
     from mimeograph_spark.sources.checkpoint import CheckpointTable
     from mimeograph_spark.sources.lineage import run_resumable_with_lineage
 

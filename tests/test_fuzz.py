@@ -1,8 +1,8 @@
 """Property-based fuzz: extract() must match the pure-Python oracle on
 ARBITRARY span configurations, not just the FIXTURES.md scenario mix —
 empty docs, null/whitespace-only texts, all-bad-page docs, interleaved
-kinds, shuffled span order, and both extract modes (single_scan on/off,
-low page_threshold so the mega-doc path executes).
+kinds, shuffled span order, and a low page_threshold so the mega-doc
+path executes.
 
 One Spark round-trip per hypothesis example (the example IS a whole
 corpus) keeps the job count bounded.
@@ -58,17 +58,12 @@ def _build_rows(docs, rnd):
 @given(
     docs=st.lists(doc_st, min_size=1, max_size=10),
     rnd=st.randoms(use_true_random=False),
-    single_scan=st.booleans(),
 )
-def test_extract_matches_oracle_on_arbitrary_spans(
-    spark, docs, rnd, single_scan
-):
+def test_extract_matches_oracle_on_arbitrary_spans(spark, docs, rnd):
     rows = _build_rows(docs, rnd)
     got = {
         r["doc_id"]: r
-        for r in extract(
-            corpus_df(spark, rows), page_threshold=3, single_scan=single_scan
-        ).collect()
+        for r in extract(corpus_df(spark, rows), page_threshold=3).collect()
     }
     expected = expected_results(rows)
     assert set(got) == set(expected)

@@ -3,9 +3,11 @@ the per-row invariant from BASELINE.json input_hint:
 (kind, text, media_ref, order) per document, plus status/error_pages.
 """
 
-import pytest
+import pyspark.sql.functions as F
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
+from mimeograph_spark.operators.ocr import ocr_page_udf
+from mimeograph_spark.operators.stitch import stitch_pages
 from mimeograph_spark.oracle import expected_results
 from mimeograph_spark.plans.pipeline import extract
 
@@ -35,27 +37,36 @@ def _assert_matches_oracle(actual, rows):
 def test_extract_matches_oracle(spark):
     rows = generate_rows(n_docs=90, seed=7, megapage_spans=700)
     df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df, page_threshold=64, page_partitions=8))
+    actual = _collect_results(extract(df, page_threshold=64))
     _assert_matches_oracle(actual, rows)
 
 
 def test_extract_order_invariant_to_input_span_order(spark):
     rows = generate_rows(n_docs=54, seed=11, megapage_spans=300, shuffle_span_order=True)
     df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df, page_threshold=32, page_partitions=8))
+    actual = _collect_results(extract(df, page_threshold=32))
     _assert_matches_oracle(actual, rows)
 
 
 def test_salted_stitch_equals_unsalted(spark):
+    """The two-phase salted stitch returns exactly what the plain
+    one-phase groupBy stitch returns on the same OCR'd page rows."""
     rows = generate_rows(n_docs=36, seed=3, megapage_spans=900)
-    df = corpus_df(spark, rows)
-    a = _collect_results(
-        extract(df, page_threshold=16, salted_stitch=True, num_salts=8)
+    pages = (
+        corpus_df(spark, rows)
+        .select("doc_id", F.explode("spans").alias("s"))
+        .filter(F.col("s.kind") == "media")
+        .select(
+            "doc_id",
+            F.col("s.offset").alias("offset"),
+            F.col("s.media_ref").alias("media_ref"),
+            F.lit("ocr").alias("kind"),
+            ocr_page_udf(F.col("s.media_ref")).alias("text"),
+        )
     )
-    b = _collect_results(
-        extract(df, page_threshold=16, salted_stitch=False)
-    )
-    assert a == b
+    salted = _collect_results(stitch_pages(pages, salted=True))
+    assert salted
+    assert salted == _collect_results(stitch_pages(pages, salted=False))
 
 
 def test_result_invariant_to_repartitioning(spark):
@@ -83,7 +94,7 @@ def test_megapage_all_pages_present_and_ordered(spark):
             if r["scenario"] == "megapage"]
     assert rows
     df = corpus_df(spark, rows)
-    res = _collect_results(extract(df, page_threshold=64, page_partitions=16))
+    res = _collect_results(extract(df, page_threshold=64))
     for r in rows:
         spans = res[r["doc_id"]]["spans_out"]
         errs = res[r["doc_id"]]["error_pages"]

@@ -133,13 +133,13 @@ def test_concurrent_appends_keep_all_snapshots(spark, tmp_path, corpus):
 
 
 def test_stale_manifest_lock_is_taken_over(spark, tmp_path, corpus):
-    """A lock leaked by a crashed writer (older than lock_stale_after)
+    """A lock leaked by a crashed writer (older than LOCK_STALE_AFTER)
     must be broken automatically — append succeeds instead of raising
     TimeoutError and asking a human to delete the file."""
     import os
     import time
 
-    ckpt = CheckpointTable(str(tmp_path / "stale"), lock_stale_after=1.0)
+    ckpt = CheckpointTable(str(tmp_path / "stale"))
     lock = os.path.join(ckpt.path, ".manifest.lock")
     with open(lock, "w") as f:
         f.write('{"pid": 0, "ts": 0}')
@@ -152,93 +152,11 @@ def test_stale_manifest_lock_is_taken_over(spark, tmp_path, corpus):
     assert not os.path.exists(lock)  # released after commit
 
 
-def test_time_travel_and_incremental_read(spark, tmp_path, corpus):
-    """Iceberg-contract reads over the snapshot manifest: `as_of`
-    reproduces any historical table state; `read_since` returns only
-    rows committed after a snapshot (the changelog slice a downstream
-    consumer polls)."""
-    _, docs = corpus
-    ckpt = CheckpointTable(str(tmp_path / "tt"))
-    s1 = ckpt.append(docs.limit(2).select("doc_id"))
-    s2 = ckpt.append(docs.limit(5).select("doc_id"))
-    ckpt.append(docs.limit(9).select("doc_id"))
-
-    assert ckpt.read(spark).count() == 16
-    assert ckpt.read(spark, as_of=s1["id"]).count() == 2
-    assert ckpt.read(spark, as_of=s2["id"]).count() == 7
-    assert ckpt.read_since(spark, s1["id"]).count() == 14
-    assert ckpt.read_since(spark, s2["id"]).count() == 9
-    import pytest
-
-    with pytest.raises(KeyError):
-        ckpt.read(spark, as_of="snap-nope")
-
-
-def test_compaction_preserves_data_and_time_travel_forward(spark, tmp_path, corpus):
-    """compact() rewrites all snapshots into one without changing
-    visible data; a concurrent-style append AFTER the rewrite input
-    was fixed must survive the manifest swap."""
-    _, docs = corpus
-    ckpt = CheckpointTable(str(tmp_path / "cmp"))
-    for n in (2, 5, 9):
-        ckpt.append(docs.limit(n).select("doc_id"))
-    before = sorted(r["doc_id"] for r in ckpt.read(spark).collect())
-    snap = ckpt.compact(spark)
-    assert snap is not None
-    assert len(ckpt.snapshots()) == 1
-    assert sorted(r["doc_id"] for r in ckpt.read(spark).collect()) == before
-    # appends keep working after compaction, ids restart consistently
-    ckpt.append(docs.limit(1).select("doc_id"))
-    assert ckpt.read(spark).count() == len(before) + 1
-    # nothing to do on an already-compact table with one extra snapshot
-    assert ckpt.compact(spark) is not None  # 2 snapshots -> compacts
-    assert ckpt.compact(spark) is None      # now single -> no-op
-
-
-def test_upsert_delete_and_resolved_read(spark, tmp_path):
-    """Merge-on-read row-level changes: upserts replace by key,
-    tombstones delete, read_current resolves to exactly one latest
-    row per key, raw read/time-travel still expose history, and
-    compact_current folds deltas into one snapshot without changing
-    the resolved view."""
-    import pyspark.sql.functions as F
-
-    from mimeograph_spark.sources.checkpoint import CheckpointTable
-
-    ckpt = CheckpointTable(str(tmp_path / "mor"))
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k long, s string, v long"
-    )
-    s0 = ckpt.append(base)
-
-    ckpt.upsert(
-        spark.createDataFrame([(2, "b2", 21), (4, "d", 40)], "k long, s string, v long"),
-        key="k",
-    )
-    ckpt.delete_keys(spark.createDataFrame([(3,)], "k long"), key="k")
-
-    cur = {r["k"]: (r["s"], r["v"]) for r in ckpt.read_current(spark, "k").collect()}
-    assert cur == {1: ("a", 10), 2: ("b2", 21), 4: ("d", 40)}
-
-    # raw read keeps history; time travel to the base snapshot
-    assert ckpt.read(spark).filter(F.col("k") == 2).count() == 2
-    old = {r["k"]: r["v"] for r in ckpt.read_current(spark, "k", as_of=s0["id"]).collect()}
-    assert old == {1: 10, 2: 20, 3: 30}
-
-    snap = ckpt.compact_current(spark, "k")
-    assert snap is not None and len(ckpt.snapshots()) == 1
-    cur2 = {r["k"]: (r["s"], r["v"]) for r in ckpt.read_current(spark, "k").collect()}
-    assert cur2 == cur
-
-
 def test_schema_evolution_add_column(spark, tmp_path):
     """A later snapshot may add a column; reads merge schemas and old
-    rows surface NULL (the Iceberg add-column contract), for raw,
-    incremental, and resolved reads alike."""
-    from mimeograph_spark.sources.checkpoint import CheckpointTable
-
+    rows surface NULL (the Iceberg add-column contract)."""
     ckpt = CheckpointTable(str(tmp_path / "evo"))
-    s0 = ckpt.append(spark.createDataFrame([(1, "a")], "k long, s string"))
+    ckpt.append(spark.createDataFrame([(1, "a")], "k long, s string"))
     ckpt.append(
         spark.createDataFrame([(2, "b", "en")], "k long, s string, lang string")
     )
@@ -247,49 +165,6 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert set(raw.columns) == {"k", "s", "lang"}
     got = {r["k"]: r["lang"] for r in raw.collect()}
     assert got == {1: None, 2: "en"}
-
-    inc = ckpt.read_since(spark, s0["id"])
-    assert {r["k"] for r in inc.collect()} == {2}
-
-    cur = {r["k"]: r["lang"] for r in ckpt.read_current(spark, "k").collect()}
-    assert cur == {1: None, 2: "en"}
-
-
-def test_expire_snapshots_and_remove_orphans(spark, tmp_path):
-    """Table maintenance: expiry drops the oldest snapshots (data
-    gone, time travel to them raises, newest state intact), and
-    orphan removal deletes only unreferenced crash-leftover dirs."""
-    import os
-
-    import pytest
-
-    from mimeograph_spark.sources.checkpoint import CheckpointTable
-
-    ckpt = CheckpointTable(str(tmp_path / "maint"))
-    ids = []
-    for i in range(3):
-        snap = ckpt.append(
-            spark.createDataFrame([(i,)], "v long"), meta={"i": i}
-        )
-        ids.append(snap["id"])
-
-    # orphan: a data dir written but never committed
-    orphan = tmp_path / "maint" / "snap-deadbeef0000"
-    os.makedirs(orphan)
-    (orphan / "part-junk.parquet").write_bytes(b"x")
-
-    removed = ckpt.remove_orphans()
-    assert removed == ["snap-deadbeef0000"]
-    assert not orphan.exists()
-    # referenced dirs untouched
-    assert ckpt.read(spark).count() == 3
-
-    expired = ckpt.expire_snapshots(keep_last=1)
-    assert expired == ids[:2]
-    assert [s["id"] for s in ckpt.snapshots()] == [ids[2]]
-    assert {r["v"] for r in ckpt.read(spark).collect()} == {2}
-    with pytest.raises(KeyError):
-        ckpt.read(spark, as_of=ids[0])
 
 
 def test_lost_lock_ownership_refuses_commit(spark, tmp_path):
@@ -315,52 +190,3 @@ def test_lost_lock_ownership_refuses_commit(spark, tmp_path):
     with open(lock_path) as f:
         assert json.load(f)["token"] == "usurper"
     os.unlink(lock_path)
-
-
-def test_compact_current_concurrent_append_not_double_counted(
-    spark, tmp_path
-):
-    """A snapshot committed after compact_current captures its
-    snapshot list must survive as a SEPARATE delta — never folded into
-    the compacted output AND kept in `newer` (which would double-count
-    its rows for raw read()/read_since consumers)."""
-    ckpt = CheckpointTable(str(tmp_path / "ccur"))
-    ckpt.upsert(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        key="k",
-    )
-    ckpt.upsert(
-        spark.createDataFrame([(2, "b2")], "k int, v string"), key="k"
-    )
-
-    # interleave: a third upsert lands between capture and commit
-    orig_resolve = ckpt._resolve_current
-    raced = {}
-
-    def racing_resolve(sp, key, snaps):
-        if not raced:
-            raced["done"] = True
-            ckpt.upsert(
-                spark.createDataFrame([(3, "c")], "k int, v string"),
-                key="k",
-            )
-        return orig_resolve(sp, key, snaps)
-
-    ckpt._resolve_current = racing_resolve
-    try:
-        snap = ckpt.compact_current(spark, key="k")
-    finally:
-        ckpt._resolve_current = orig_resolve
-    assert snap is not None
-
-    # raw read: each key exactly once (double-count would show k=3 twice
-    # or fold (3,"c") into the compacted snapshot AND keep its delta)
-    rows = sorted(
-        tuple(r) for r in ckpt.read(spark).select("k", "v").collect()
-    )
-    assert rows == [(1, "a"), (2, "b2"), (3, "c")]
-    resolved = sorted(
-        tuple(r)
-        for r in ckpt.read_current(spark, key="k").select("k", "v").collect()
-    )
-    assert resolved == [(1, "a"), (2, "b2"), (3, "c")]
