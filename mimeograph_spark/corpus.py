@@ -136,54 +136,6 @@ DERIVE_SPANS_SQL = """
 
 
 # ---------------------------------------------------------------------------
-# Routed corpus store: persisted routing columns
-# ---------------------------------------------------------------------------
-
-def write_routed_corpus(documents: DataFrame, path: str) -> None:
-    """Write the nested corpus WITH its routing columns persisted in
-    the storage layout (pipeline.extract's docstring names it):
-    `has_native` becomes a PARTITION directory (the OCR/native branch
-    prunes whole files at plan time) and `n_media` a stored column
-    sorted within partitions,
-    so its parquet row-group min/max stats are tight and the mega-doc
-    filter (`n_media > page_threshold`) skips row groups.  On Iceberg
-    the same layout is partition-by-truncate(has_native) + a sort
-    order on n_media.  Each extract branch then reads only its slice
-    of storage."""
-    from .operators.classify import HAS_NATIVE, N_MEDIA, with_doc_class
-
-    with_doc_class(documents).sortWithinPartitions(N_MEDIA).write.mode(
-        "overwrite"
-    ).partitionBy(HAS_NATIVE).parquet(path)
-
-
-def read_routed_corpus(spark, path: str) -> DataFrame:
-    """Read a routed corpus back with the routing columns typed: the
-    explicit schema makes Spark parse the has_native partition
-    directory as a real boolean (inference would yield a string,
-    forcing casts that obscure the pruning)."""
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    from .operators.classify import HAS_NATIVE, N_MEDIA
-
-    # a fresh StructType: StructType.add mutates in place and would
-    # corrupt the shared DOCUMENTS_SCHEMA constant
-    schema = StructType(
-        list(DOCUMENTS_SCHEMA.fields)
-        + [
-            StructField(N_MEDIA, IntegerType()),
-            StructField(HAS_NATIVE, BooleanType()),
-        ]
-    )
-    return spark.read.schema(schema).parquet(path)
-
-
-# ---------------------------------------------------------------------------
 # Seeded fixture generator (FIXTURES.md §1 scenario classes)
 # ---------------------------------------------------------------------------
 

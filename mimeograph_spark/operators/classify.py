@@ -33,15 +33,7 @@ def _is_native_text(s: Column) -> Column:
 
 def with_doc_class(df: DataFrame) -> DataFrame:
     """Add `has_native` (the :542-547 predicate) and `n_media` (page
-    count of the would-be OCR fan-out, cf. num_pages at :564).
-
-    Idempotent: a corpus read from a routed store
-    (corpus.write_routed_corpus) already CARRIES both columns
-    persisted — recomputing them here would replace the stored columns
-    with computed expressions and silently disable the partition
-    pruning / row-group skipping the storage layout exists for."""
-    if HAS_NATIVE in df.columns and N_MEDIA in df.columns:
-        return df
+    count of the would-be OCR fan-out, cf. num_pages at :564)."""
     return df.withColumn(
         HAS_NATIVE, F.exists("spans", _is_native_text)
     ).withColumn(

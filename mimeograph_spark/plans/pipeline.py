@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..operators.classify import (
     HAS_NATIVE,
@@ -36,30 +37,19 @@ from ..operators.classify import (
     with_doc_class,
 )
 from ..operators.ocr import ocr_page_udf, ocr_refs_udf
-from ..operators.stitch import stitch_pages
-from ..schema import KIND_MEDIA, KIND_TEXT, STATUS_COMPLETE, STATUS_FAILED
+from ..operators.stitch import ocr_outcome, stitch_pages
+from ..schema import KIND_MEDIA, KIND_TEXT, SPAN_TYPE
 
 # Docs with more media pages than this go through the exploded
 # page-parallel path; tune so an Arrow batch of `threshold`-page docs
 # stays comfortably in Python-worker memory.
 DEFAULT_PAGE_THRESHOLD = 512
 
-_EMPTY_SPANS = (
-    "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
-
 
 def extract(
     documents: DataFrame, page_threshold: int = DEFAULT_PAGE_THRESHOLD
 ) -> DataFrame:
-    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA).
-
-    A corpus written through `corpus.write_routed_corpus` carries the
-    routing columns in storage (has_native partitions the files,
-    n_media has sorted row-group stats), so each branch prunes at plan
-    time instead of re-classifying the full input; with_doc_class is
-    idempotent, so stored routing columns flow through untouched
-    (plan-tested)."""
+    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA)."""
     classified = with_doc_class(documents)
 
     # -- main branch: native + bounded-OCR docs, one narrow pass -------
@@ -79,7 +69,7 @@ def extract(
         ),
     )
     media_sorted = F.when(
-        F.col(HAS_NATIVE), F.lit([]).cast(_EMPTY_SPANS)
+        F.col(HAS_NATIVE), F.lit([]).cast(ArrayType(SPAN_TYPE))
     ).otherwise(
         sort_spans_by_offset(
             F.filter("spans", lambda s: s["kind"] == KIND_MEDIA)
@@ -107,42 +97,22 @@ def extract(
             m["offset"].alias("offset"),
         ),
     )
-    # zipped is consumed by BOTH output branches (kept spans and
-    # error offsets); staged as a real column it is built once per
-    # row — inline, the zip_with struct rebuild runs twice
+    # staged as a real column so ocr_outcome's three reads share one
+    # zip_with struct rebuild per row; native docs have no pages, so
+    # their status and error_pages come out complete and empty
+    spans, status, error_pages = ocr_outcome(F.col("_pages"))
     main_out = staged.select(
         "doc_id",
         F.col(HAS_NATIVE).alias(HAS_NATIVE),
         F.col("_native"),
-        zipped.alias("_zip"),
+        zipped.alias("_pages"),
     ).select(
         "doc_id",
-        F.col(HAS_NATIVE).alias(HAS_NATIVE),
         F.when(F.col(HAS_NATIVE), F.col("_native"))
-        .otherwise(
-            F.filter(F.col("_zip"), lambda z: z["text"].isNotNull())
-        )
+        .otherwise(spans)
         .alias("spans_out"),
-        F.when(F.col(HAS_NATIVE), F.lit([]).cast("array<int>"))
-        .otherwise(
-            F.transform(
-                F.filter(F.col("_zip"), lambda z: z["text"].isNull()),
-                lambda z: z["offset"],
-            )
-        )
-        .alias("error_pages"),
-    ).select(
-        "doc_id",
-        "spans_out",
-        F.when(
-            ~F.col(HAS_NATIVE)
-            & (F.size("error_pages") > 0)
-            & (F.size("spans_out") == 0),
-            F.lit(STATUS_FAILED),
-        )
-        .otherwise(F.lit(STATUS_COMPLETE))
-        .alias("status"),
-        "error_pages",
+        status,
+        error_pages,
     )
 
     # -- page-parallel path: mega docs ---------------------------------

@@ -69,16 +69,14 @@ APP_CONF = {
 def get_spark(
     app_name: str = "mimeograph_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config(map=APP_CONF)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         # Single-JVM local mode: the driver heap IS the executor heap,
         # sized to the host (driver_memory) and grown on demand rather
         # than reserved and pre-touched at start.  On a real cluster

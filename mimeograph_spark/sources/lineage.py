@@ -15,7 +15,23 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import STATUS_COMPLETE, STATUS_FAILED
 from .checkpoint import CheckpointTable, run_resumable
+
+
+def _counters() -> list:
+    """The doc/span/error/failed counters of a RESULT_SCHEMA frame, as
+    aggregate expressions."""
+    def total(c):
+        return F.coalesce(F.sum(c), F.lit(0)).cast("long")
+
+    return [
+        F.count(F.lit(1)).alias("doc_count"),
+        total(F.size("spans_out")).alias("span_count"),
+        total(F.size("error_pages")).alias("error_count"),
+        total(F.when(F.col("status") == STATUS_FAILED, 1).otherwise(0))
+        .alias("failed_doc_count"),
+    ]
 
 
 def lineage_rows(
@@ -24,28 +40,16 @@ def lineage_rows(
     """Aggregate a result DataFrame (RESULT_SCHEMA) into one
     lineage/metrics row per physical partition."""
     ended = datetime.now(timezone.utc)
-    return (
-        results.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.size("spans_out")).cast("long").alias("span_count"),
-            F.sum(F.size("error_pages")).cast("long").alias("error_count"),
-            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0))
-            .cast("long")
-            .alias("failed_doc_count"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "doc_count",
-            "span_count",
-            "error_count",
-            "failed_doc_count",
-            F.lit(started).alias("started"),
-            F.lit(ended).alias("ended"),
-            F.lit("complete").alias("status"),
-        )
+    counts = results.groupBy(
+        F.spark_partition_id().alias("partition_id")
+    ).agg(*_counters())
+    return counts.select(
+        F.lit(run_id).alias("run_id"),
+        F.lit(stage).alias("stage"),
+        *counts.columns,
+        F.lit(started).alias("started"),
+        F.lit(ended).alias("ended"),
+        F.lit(STATUS_COMPLETE).alias("status"),
     )
 
 
@@ -95,20 +99,4 @@ def observe_results(results: DataFrame, name: str = "extract_metrics"):
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    observed = results.observe(
-        obs,
-        F.count(F.lit(1)).alias("doc_count"),
-        F.coalesce(F.sum(F.size("spans_out")), F.lit(0))
-        .cast("long")
-        .alias("span_count"),
-        F.coalesce(F.sum(F.size("error_pages")), F.lit(0))
-        .cast("long")
-        .alias("error_count"),
-        F.coalesce(
-            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("failed_doc_count"),
-    )
-    return observed, obs
+    return results.observe(obs, *_counters()), obs

@@ -4,6 +4,7 @@ the per-row invariant from BASELINE.json input_hint:
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.operators.ocr import ocr_page_udf
@@ -34,10 +35,14 @@ def _assert_matches_oracle(actual, rows):
         assert act["spans_out"] == exp["spans_out"], doc_id
 
 
-def test_extract_matches_oracle(spark):
+@pytest.mark.parametrize("page_threshold", [0, 64])
+def test_extract_matches_oracle(spark, page_threshold):
+    """With threshold 0 every doc that has pages is stitched, so each
+    scenario's outcome comes from stitch_pages; with 64 only megapage
+    docs are."""
     rows = generate_rows(n_docs=90, seed=7, megapage_spans=700)
     df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df, page_threshold=64))
+    actual = _collect_results(extract(df, page_threshold=page_threshold))
     _assert_matches_oracle(actual, rows)
 
 

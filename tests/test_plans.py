@@ -55,35 +55,6 @@ def test_partition_pruning_on_partitioned_sink(spark, tmp_path):
     assert statuses <= {"failed"}
 
 
-def test_routed_corpus_prunes_extract_branches(spark, tmp_path):
-    """A corpus stored with persisted routing columns
-    (write_routed_corpus) must let extract prune at the storage layer:
-    the mega-doc branch reads only the has_native=false partition
-    (PartitionFilters) and pushes its n_media threshold into the scan
-    (PushedFilters).  Results must equal extraction from the raw
-    corpus."""
-    from mimeograph_spark.corpus import (
-        derive_documents,
-        read_routed_corpus,
-        write_routed_corpus,
-    )
-    from mimeograph_spark.plans.pipeline import extract_flat
-
-    docs = derive_documents(spark.read.parquet(f"{SF}/documents.parquet"))
-    path = str(tmp_path / "routed")
-    write_routed_corpus(docs, path)
-    stored = read_routed_corpus(spark, path)
-    out = extract_flat(stored)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    pfs = re.findall(r"PartitionFilters: \[(.*?)\]", plan)
-    assert any("has_native" in p for p in pfs), plan
-    pushed = re.findall(r"PushedFilters: \[(.*?)\]", plan)
-    assert any("n_media" in p for p in pushed), plan
-    assert {tuple(r) for r in out.collect()} == {
-        tuple(r) for r in extract_flat(docs).collect()
-    }
-
-
 def test_interleaved_assembly_is_narrow_zero_exchange(spark):
     """Example assembly is pure per-row array work: the executed plan
     must contain no Exchange, no Join, no Python — one scan, one
