@@ -59,7 +59,6 @@ def run_resumable_with_lineage(
     lineage_ckpt: CheckpointTable,
     pipeline_fn,
     run_id: str,
-    stage: str = "extract",
 ) -> dict | None:
     """One resumable increment with lineage: anti-join done doc_ids,
     run the pipeline on the remainder, commit results, then commit the
@@ -77,13 +76,13 @@ def run_resumable_with_lineage(
         f"{results_ckpt.path}/{snap['dir']}"
     )
     lineage_ckpt.append(
-        lineage_rows(committed, run_id, stage, started),
+        lineage_rows(committed, run_id, "extract", started),
         meta={"run_id": run_id, "results_snapshot": snap["id"]},
     )
     return snap
 
 
-def observe_results(results: DataFrame, name: str = "extract_metrics"):
+def observe_results(results: DataFrame):
     """Attach a Spark `Observation` to a RESULT_SCHEMA frame: the same
     doc/span/error/failed counters as `lineage_rows`, but collected
     AS A SIDE EFFECT of whatever action the caller already runs — zero
@@ -98,5 +97,5 @@ def observe_results(results: DataFrame, name: str = "extract_metrics"):
     """
     from pyspark.sql import Observation
 
-    obs = Observation(name)
+    obs = Observation("extract_metrics")
     return results.observe(obs, *_counters()), obs

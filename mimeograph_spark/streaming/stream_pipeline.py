@@ -12,9 +12,9 @@ pipeline's mega-doc path contains a groupBy-collect stitch that has no
 incremental formulation — and because it lets the stream share the
 exact same extract() code path, checkpoint table, and resume
 anti-join as batch runs.  Exactly-once per doc_id comes from OUR
-manifest anti-join, layered on Structured Streaming's at-least-once
-redelivery: a replayed micro-batch finds its doc_ids already committed
-and writes nothing.
+anti-join against the checkpoint's commit log, layered on Structured
+Streaming's at-least-once redelivery: a replayed micro-batch finds its
+doc_ids already committed and writes nothing.
 """
 
 from __future__ import annotations

@@ -18,8 +18,6 @@ import duckdb
 sys.path.insert(0, "/root/repo")
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
 
 
 def main() -> None:
@@ -36,11 +34,10 @@ def main() -> None:
             print(f"{name}: NO ORACLE ({len(q)} rows)")
             continue
         con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF}/{t}.parquet')"
-            )
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{SF}/documents.parquet')"
+        )
         d = con.execute(oracles[name]).fetchdf()
         cols = sorted(q.columns)
         ok_rows = len(q) == len(d)

@@ -16,7 +16,8 @@ Reads the documents table (nested span schema, or the flat testdata
 shape with --derive-from-flat), runs the resumable extraction, commits
 results + per-partition lineage to snapshot checkpoint tables, prints
 a one-line JSON summary.  Re-running after a crash processes only the
-documents without committed results (left-anti join on the manifest).
+documents without committed results (left-anti join on the snapshots
+in the results table's commit log).
 """
 
 from __future__ import annotations

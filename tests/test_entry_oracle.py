@@ -12,30 +12,18 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def _duck(sql: str):
     con = duckdb.connect()
-    for t in TABLES:
-        path = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/documents.parquet')"
+    )
     return con.execute(sql).fetchdf()
 
 
 def _norm_cell(v):
-    import numpy as np
-
-    # array cells (posting lists, signatures) -> tuples, so row
-    # comparison stays plain == instead of numpy elementwise
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return tuple(_norm_cell(x) for x in v)
     if v is None or (isinstance(v, float) and math.isnan(v)):
         return None
     if isinstance(v, float):

@@ -59,7 +59,7 @@ def test_uncommitted_snapshot_is_invisible(spark, tmp_path, corpus):
     _, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "r2"))
     run_resumable(docs.limit(10), ckpt, _pipeline)
-    # Simulate a crash mid-append: parquet written but manifest not
+    # Simulate a crash mid-append: parquet written but no log entry
     # committed -> write a stray dir directly.
     _pipeline(docs.limit(5)).write.mode("overwrite").parquet(
         str(tmp_path / "r2" / "snap-orphan")
@@ -107,13 +107,15 @@ def test_lineage_conforms_to_declared_schema(spark, tmp_path, corpus):
 
 
 def test_concurrent_appends_keep_all_snapshots(spark, tmp_path, corpus):
-    """Two writers appending to one table must not lose either commit
-    (the manifest read-modify-write is serialized by the lock file)."""
+    """Eight writers appending to one table at once must each commit,
+    under the contiguous log sequence numbers 0-7: a writer that loses
+    the race for a number retries at the next one."""
+    import sys
     import threading
 
     _, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "conc"))
-    frames = [docs.limit(3).select("doc_id"), docs.limit(5).select("doc_id")]
+    frames = [docs.limit(k).select("doc_id") for k in range(1, 9)]
     errs = []
 
     def writer(df):
@@ -123,33 +125,68 @@ def test_concurrent_appends_keep_all_snapshots(spark, tmp_path, corpus):
             errs.append(e)
 
     threads = [threading.Thread(target=writer, args=(f,)) for f in frames]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert not errs
-    assert len(ckpt.snapshots()) == 2
+    seqs = [int(s["id"].split("-")[1]) for s in ckpt.snapshots()]
+    assert seqs == list(range(8))
+    assert ckpt.read(spark).count() == sum(range(1, 9))
+
+
+def test_crashed_commit_is_invisible_and_blocks_nothing(spark, tmp_path, corpus):
+    """A writer killed after writing its data and its temp log entry,
+    but before the commit link, leaves nothing a reader lists, and the
+    next append commits as seq 0."""
+    import json
+    import os
+
+    _, docs = corpus
+    ckpt = CheckpointTable(str(tmp_path / "crash"))
+    docs.limit(5).write.parquet(os.path.join(ckpt.path, "snap-crashed"))
+    with open(os.path.join(ckpt.path, "_log", ".tmp-crashed"), "w") as f:
+        json.dump({"id": "snap-000000-crashed", "dir": "snap-crashed",
+                   "committed_at": 0, "meta": {}}, f)
+    assert ckpt.snapshots() == []
+    assert ckpt.read(spark) is None
+
+    snap = ckpt.append(docs.limit(3))
+    assert snap["id"].startswith("snap-000000-")
+    assert [s["id"] for s in ckpt.snapshots()] == [snap["id"]]
+    assert ckpt.read(spark).count() == 3
+
+
+def test_commit_never_overwrites_an_earlier_commit(spark, tmp_path, corpus, monkeypatch):
+    """A writer that counted the log before another writer committed
+    tries a sequence number that is already taken: its commit must
+    land at the next number, and both snapshots must stay visible."""
+    _, docs = corpus
+    ckpt = CheckpointTable(str(tmp_path / "race"))
+    first = ckpt.append(docs.limit(3))
+    monkeypatch.setattr(CheckpointTable, "_seqs", lambda self: [])
+    second = ckpt.append(docs.limit(5))
+    monkeypatch.undo()
+    assert first["id"].startswith("snap-000000-")
+    assert second["id"].startswith("snap-000001-")
+    assert [s["id"] for s in ckpt.snapshots()] == [first["id"], second["id"]]
     assert ckpt.read(spark).count() == 8
 
 
-def test_stale_manifest_lock_is_taken_over(spark, tmp_path, corpus):
-    """A lock leaked by a crashed writer (older than LOCK_STALE_AFTER)
-    must be broken automatically — append succeeds instead of raising
-    TimeoutError and asking a human to delete the file."""
-    import os
-    import time
-
-    ckpt = CheckpointTable(str(tmp_path / "stale"))
-    lock = os.path.join(ckpt.path, ".manifest.lock")
-    with open(lock, "w") as f:
-        f.write('{"pid": 0, "ts": 0}')
-    past = time.time() - 3600
-    os.utime(lock, (past, past))
-    _, docs = corpus
-    snap = ckpt.append(docs.limit(3))
-    assert snap["id"].startswith("snap-")
-    assert len(ckpt.snapshots()) == 1
-    assert not os.path.exists(lock)  # released after commit
+def test_old_manifest_table_is_refused(tmp_path):
+    """A table written in the manifest format has no commit log; opening
+    it must fail loudly, not read as empty and re-extract everything."""
+    table = tmp_path / "old"
+    table.mkdir()
+    (table / "manifest.json").write_text('{"snapshots": []}')
+    with pytest.raises(ValueError, match="manifest.json"):
+        CheckpointTable(str(table))
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
@@ -165,28 +202,3 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert set(raw.columns) == {"k", "s", "lang"}
     got = {r["k"]: r["lang"] for r in raw.collect()}
     assert got == {1: None, 2: "en"}
-
-
-def test_lost_lock_ownership_refuses_commit(spark, tmp_path):
-    """A writer whose lock was stale-taken-over mid-critical-section
-    (GC/FS stall) must NOT commit the manifest over the usurper's
-    update, and its release must NOT unlink the usurper's fresh lock."""
-    import json
-    import os
-
-    ckpt = CheckpointTable(str(tmp_path / "own"))
-    fd, lock_path, token = ckpt._acquire_lock()
-    # simulate a takeover: usurper replaces the lock with its own
-    os.unlink(lock_path)
-    with open(lock_path, "w") as f:
-        json.dump({"pid": 0, "ts": 0, "token": "usurper"}, f)
-    with pytest.raises(RuntimeError, match="ownership lost"):
-        ckpt._commit_manifest_owned(
-            {"snapshots": []}, lock_path, token
-        )
-    ckpt._release_lock(fd, lock_path, token)
-    # the usurper's lock survives our release
-    assert os.path.exists(lock_path)
-    with open(lock_path) as f:
-        assert json.load(f)["token"] == "usurper"
-    os.unlink(lock_path)

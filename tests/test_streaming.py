@@ -1,6 +1,7 @@
 """Streaming front-end: same results as batch, exactly-once across
 redelivered files (the queue semantics of the reference's resque
-worker pool, recast as Structured Streaming + manifest anti-join).
+worker pool, recast as Structured Streaming + an anti-join against the
+checkpoint's commit log).
 """
 
 import pyspark.sql.functions as F
@@ -38,7 +39,8 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
 
     # Redelivery: run a SECOND stream over the same input with a FRESH
     # streaming checkpoint (simulating lost stream state / replay).
-    # The manifest anti-join must keep results exactly-once.
+    # The anti-join against committed snapshots must keep results
+    # exactly-once.
     q2 = run_stream(
         spark, input_dir, ckpt, str(tmp_path / "stream_ckpt2"),
         available_now=True, page_threshold=32,
