@@ -3,25 +3,33 @@
 lastextract, src/mimeograph.coffee:436-444) as one declarative Spark
 plan.
 
-Plan shape (two exchanges, both in the mega-page docs' stitch):
+`extract` first runs one probe job: a limit-1 scan for a mega-page doc
+(more media pages than `page_threshold`, no native text).  The answer
+picks one of two plan shapes.
+
+No mega doc (the common case): one scan, no exchange.
+
+    read documents -> classify + native projection + per-doc OCR,
+                      fused into one narrow projection
+
+The OCR UDF receives an EMPTY ref array for native docs, so the
+doc-level short-circuit (src/mimeograph.coffee:542-547) costs nothing
+in Python.
+
+At least one mega doc: two exchanges, both in the mega docs' stitch.
 
     read documents
-      |-- main branch (narrow, SINGLE PASS over the input):
-      |     classify + native projection + small-doc OCR fused into one
-      |     projection — the OCR UDF receives an EMPTY ref array for
-      |     native docs, so the doc-level short-circuit
-      |     (src/mimeograph.coffee:542-547) costs nothing in Python
-      |-- OCR page branch    (2 exchanges) mega docs: explode -> page UDF
-      |                                    -> salted two-phase stitch
+      |-- per-doc branch  (narrow) not mega: the projection above
+      |-- page branch (2 exchanges) mega: explode -> page UDF
+      |                                   -> salted two-phase stitch
       '-- unionByName
 
-Fusing native + small-OCR into one projection matters at scale: a
-branch-per-case plan re-scans (or re-derives) the input once per
-branch; the fused plan reads it once.  The size-based routing keeps
-the common case shuffle-free while giving mega-page documents
-(FIXTURES.md `megapage`) page-level parallelism — the reference's
-worker-queue fan-out (:562-566) — plus salting so no single reducer
-owns a 50k-page stitch.
+Mega-page documents (FIXTURES.md `megapage`) get page-level
+parallelism — the reference's worker-queue fan-out (:562-566) — plus
+salting so no single reducer owns a 50k-page stitch.  The reference
+fans out only the documents that need it; the probe does the same for
+the plan, so an input without mega docs never pays for the page
+branch's second scan, its Python stage or its stitch.
 """
 
 from __future__ import annotations
@@ -49,13 +57,23 @@ DEFAULT_PAGE_THRESHOLD = 512
 def extract(
     documents: DataFrame, page_threshold: int = DEFAULT_PAGE_THRESHOLD
 ) -> DataFrame:
-    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA)."""
-    classified = with_doc_class(documents)
+    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA).
 
-    # -- main branch: native + bounded-OCR docs, one narrow pass -------
-    main = classified.filter(
-        F.col(HAS_NATIVE) | (F.col(N_MEDIA) <= page_threshold)
+    Runs one Spark job when called: the probe that decides whether the
+    plan needs the page branch (module docstring)."""
+    classified = with_doc_class(documents)
+    # size test first, so the \s regex of HAS_NATIVE runs only on the
+    # docs that pass it
+    is_mega = (F.col(N_MEDIA) > page_threshold) & ~F.col(HAS_NATIVE)
+    if classified.filter(is_mega).isEmpty():
+        return _per_doc(classified)
+    return _per_doc(classified.filter(~is_mega)).unionByName(
+        _paged(classified.filter(is_mega))
     )
+
+
+def _per_doc(classified: DataFrame) -> DataFrame:
+    """Native and per-doc OCR docs in one narrow pass."""
     native_sorted = sort_spans_by_offset(
         F.filter("spans", lambda s: s["kind"] == KIND_TEXT)
     )
@@ -78,7 +96,7 @@ def extract(
     # Only an array<string> of refs crosses the Arrow boundary; span
     # structs are rebuilt in whole-stage codegen via zip_with.  Native
     # docs contribute an empty array -> near-zero Python cost.
-    staged = main.select(
+    staged = classified.select(
         "doc_id",
         F.col(HAS_NATIVE).alias(HAS_NATIVE),
         native_out.alias("_native"),
@@ -101,7 +119,7 @@ def extract(
     # zip_with struct rebuild per row; native docs have no pages, so
     # their status and error_pages come out complete and empty
     spans, status, error_pages = ocr_outcome(F.col("_pages"))
-    main_out = staged.select(
+    return staged.select(
         "doc_id",
         F.col(HAS_NATIVE).alias(HAS_NATIVE),
         F.col("_native"),
@@ -115,11 +133,11 @@ def extract(
         error_pages,
     )
 
-    # -- page-parallel path: mega docs ---------------------------------
-    big = classified.filter(
-        ~F.col(HAS_NATIVE) & (F.col(N_MEDIA) > page_threshold)
-    )
-    pages = big.select(
+
+def _paged(mega: DataFrame) -> DataFrame:
+    """Mega docs: one row per page through the page UDF, then the
+    salted stitch."""
+    pages = mega.select(
         "doc_id",
         F.explode(
             F.filter("spans", lambda s: s["kind"] == KIND_MEDIA)
@@ -136,9 +154,7 @@ def extract(
         F.lit("ocr").alias("kind"),
         ocr_page_udf("media_ref").alias("text"),
     )
-    big_out = stitch_pages(ocr_pages, salted=True)
-
-    return main_out.unionByName(big_out)
+    return stitch_pages(ocr_pages, salted=True)
 
 
 def extract_flat(documents: DataFrame) -> DataFrame:

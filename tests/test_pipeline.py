@@ -35,15 +35,43 @@ def _assert_matches_oracle(actual, rows):
         assert act["spans_out"] == exp["spans_out"], doc_id
 
 
-@pytest.mark.parametrize("page_threshold", [0, 64])
+@pytest.mark.parametrize("page_threshold", [0, 64, 1000])
 def test_extract_matches_oracle(spark, page_threshold):
     """With threshold 0 every doc that has pages is stitched, so each
     scenario's outcome comes from stitch_pages; with 64 only megapage
-    docs are."""
+    docs are; with 1000 none is, so the single-pass plan decides every
+    scenario."""
     rows = generate_rows(n_docs=90, seed=7, megapage_spans=700)
     df = corpus_df(spark, rows)
     actual = _collect_results(extract(df, page_threshold=page_threshold))
     _assert_matches_oracle(actual, rows)
+
+
+def test_mega_probe_boundary(spark):
+    """A doc is mega when it has more media pages than the threshold
+    and no native text: exactly 8 scanned pages stays single-pass, 9
+    takes the page branch, and 9 pages beside native text stays
+    single-pass."""
+
+    def media(n):
+        return [
+            {"kind": "media", "text": None, "media_ref": f"fx:b:{i}",
+             "offset": i + 1}
+            for i in range(n)
+        ]
+
+    native = [{"kind": "text", "text": "words", "media_ref": None,
+               "offset": 0}]
+    for spans, python_nodes in (
+        (media(8), 1),
+        (media(9), 2),
+        (native + media(9), 1),
+    ):
+        rows = [{"doc_id": "b", "spans": spans}]
+        out = extract(corpus_df(spark, rows), page_threshold=8)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == python_nodes, plan
+        _assert_matches_oracle(_collect_results(out), rows)
 
 
 def test_extract_order_invariant_to_input_span_order(spark):

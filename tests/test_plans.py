@@ -14,23 +14,46 @@ import pyspark.sql.functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def test_default_extract_plan_shape(spark):
-    """The default extract plan caches nothing, joins nothing, crosses
-    into Python once per OCR branch (the per-doc refs UDF and the page
-    UDF), and shuffles only for the two phases of the salted stitch.
-    The scan count is left free: reading the input once is an open
-    optimisation, not a contract."""
-    from mimeograph_spark.corpus import derive_documents
-    from mimeograph_spark.plans.pipeline import extract_flat
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_default_extract_plan_shape(spark, tmp_path):
+    """The extract plan caches nothing and joins nothing.  An input with
+    no mega-page doc gets the single-pass plan: one scan, one crossing
+    into Python (the per-doc refs UDF), no exchange, no union.  One mega
+    doc brings in the page branch: a second crossing (the page UDF) and
+    the two exchanges of the salted stitch."""
+    from mimeograph_spark.corpus import corpus_df, derive_documents
+    from mimeograph_spark.plans.pipeline import (
+        DEFAULT_PAGE_THRESHOLD,
+        extract_flat,
+    )
 
     docs = derive_documents(
         spark.read.parquet(f"{SF}/documents.parquet")
     )
-    plan = (
-        extract_flat(docs)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "InMemoryTableScan" not in plan, plan
-    assert "Join" not in plan, plan
+    plan = _plan(extract_flat(docs))
+    for bad in ("InMemoryTableScan", "Join", "Union", "Exchange"):
+        assert bad not in plan, plan
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+    mega = corpus_df(spark, [{
+        "doc_id": "mega",
+        "spans": [
+            {"kind": "media", "text": None, "media_ref": f"pg:mega:{i}",
+             "offset": i}
+            for i in range(DEFAULT_PAGE_THRESHOLD + 1)
+        ],
+    }])
+    # written out and read back, so the input is one relation as in the
+    # first case: a union input would get a per-doc projection per child
+    path = str(tmp_path / "with_mega")
+    docs.unionByName(mega).write.parquet(path)
+    plan = _plan(extract_flat(spark.read.parquet(path)))
+    for bad in ("InMemoryTableScan", "Join"):
+        assert bad not in plan, plan
     assert plan.count("ArrowEvalPython") == 2, plan
     assert len(re.findall(r"\bExchange ", plan)) == 2, plan
 
