@@ -7,7 +7,8 @@ src/mimeograph.coffee:500-512); a `completed` set records finished
 jobs when nobody is listening (:694).  At 10^12-doc scale the
 equivalent is a resumable run: results land in a checkpoint table in
 atomically-committed snapshots, and a restart processes only the
-documents that have no committed result yet (left-anti join).
+documents that have no committed result yet (`resume_filter`, a
+left-anti join; the increment itself is `lineage.py`'s).
 
 No iceberg-spark-runtime jar ships in this sandbox, so this module
 implements the minimal slice of the Iceberg table contract the
@@ -123,20 +124,3 @@ def resume_filter(documents: DataFrame, ckpt: CheckpointTable) -> DataFrame:
         return documents
     return documents.join(done.select("doc_id"), on="doc_id", how="left_anti")
 
-
-def run_resumable(
-    documents: DataFrame,
-    ckpt: CheckpointTable,
-    pipeline_fn,
-    meta: dict | None = None,
-) -> dict | None:
-    """One resumable increment: process the not-yet-done documents and
-    commit their results as a snapshot.  Returns the snapshot (None if
-    nothing was left to do).  Crash-safe: a failure before the log
-    commit leaves no visible partial state, so a rerun redoes exactly
-    the unfinished work (exactly-once results per doc_id across
-    restarts)."""
-    todo = resume_filter(documents, ckpt)
-    if todo.isEmpty():
-        return None
-    return ckpt.append(pipeline_fn(todo), meta=meta)

@@ -1,11 +1,13 @@
-"""Per-partition lineage + metrics rows (north_rule accounting).
+"""The one resumable increment, and its per-partition lineage +
+metrics rows (north_rule accounting).  spark-submit runs it once per
+run, streaming once per micro-batch.
 
-Mirrors the reference's per-job Redis hash bookkeeping — `started`
-(src/mimeograph.coffee:507), `num_pages` (:564), `num_processed`
-(:611), `error_pages` (:676), `ended`/`status` (:677-678) — but at the
-granularity Spark actually executes: one row per (run, stage,
-partition), so a 1000-executor run exposes exactly which partitions
-produced what and where errors concentrated.
+The rows mirror the reference's per-job Redis hash bookkeeping —
+`started` (src/mimeograph.coffee:507), `num_pages` (:564),
+`num_processed` (:611), `error_pages` (:676), `ended`/`status`
+(:677-678) — but at the granularity Spark actually executes: one row
+per (run, stage, writing partition), so a 1000-executor run exposes
+exactly which partitions produced what and where errors concentrated.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import STATUS_COMPLETE, STATUS_FAILED
-from .checkpoint import CheckpointTable, run_resumable
+from .checkpoint import CheckpointTable, resume_filter
 
 
 def _counters() -> list:
@@ -37,11 +39,14 @@ def _counters() -> list:
 def lineage_rows(
     results: DataFrame, run_id: str, stage: str, started: datetime
 ) -> DataFrame:
-    """Aggregate a result DataFrame (RESULT_SCHEMA) into one
-    lineage/metrics row per physical partition."""
+    """One lineage/metrics row per partition that wrote a committed
+    result snapshot (RESULT_SCHEMA, read back from its files).  Its id
+    is the write task's `part-NNNNN` file number: a read split packs
+    small files, so the read's `spark_partition_id()` is not it."""
     ended = datetime.now(timezone.utc)
+    part = F.regexp_extract("_metadata.file_name", r"part-(\d+)", 1)
     counts = results.groupBy(
-        F.spark_partition_id().alias("partition_id")
+        part.cast("int").alias("partition_id")
     ).agg(*_counters())
     return counts.select(
         F.lit(run_id).alias("run_id"),
@@ -60,18 +65,18 @@ def run_resumable_with_lineage(
     pipeline_fn,
     run_id: str,
 ) -> dict | None:
-    """One resumable increment with lineage: anti-join done doc_ids,
-    run the pipeline on the remainder, commit results, then commit the
-    per-partition metrics computed from the COMMITTED snapshot (so the
-    lineage describes exactly the data that became visible — a crash
-    between the two commits costs only lineage, never result
-    correctness)."""
+    """One resumable increment: anti-join the committed doc_ids, run
+    the pipeline on the rest, commit the results, then commit the
+    per-partition lineage of the COMMITTED snapshot.  Returns the
+    results snapshot, or None (committing nothing) if no doc is left.
+    A crash before the results commit leaves no visible state, so a
+    rerun redoes exactly the unfinished work; a crash between the two
+    commits costs only lineage, never result correctness."""
     started = datetime.now(timezone.utc)
-    snap = run_resumable(
-        documents, results_ckpt, pipeline_fn, meta={"run_id": run_id}
-    )
-    if snap is None:
+    todo = resume_filter(documents, results_ckpt)
+    if todo.isEmpty():
         return None
+    snap = results_ckpt.append(pipeline_fn(todo), meta={"run_id": run_id})
     committed = documents.sparkSession.read.parquet(
         f"{results_ckpt.path}/{snap['dir']}"
     )

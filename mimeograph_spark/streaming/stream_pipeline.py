@@ -9,37 +9,45 @@ whole batch pipeline applied per micro-batch via `foreachBatch`.
 
 foreachBatch (rather than pure streaming operators) because the
 pipeline's mega-doc path contains a groupBy-collect stitch that has no
-incremental formulation — and because it lets the stream share the
-exact same extract() code path, checkpoint table, and resume
-anti-join as batch runs.  Exactly-once per doc_id comes from OUR
-anti-join against the checkpoint's commit log, layered on Structured
-Streaming's at-least-once redelivery: a replayed micro-batch finds its
-doc_ids already committed and writes nothing.
+incremental formulation — and because it lets each micro-batch run the
+batch increment itself, `lineage.run_resumable_with_lineage`, as run
+`stream-<run_stream call id>-<batch_id>`.  Exactly-once per doc_id
+comes from its anti-join against the results table's commit log,
+layered on Structured Streaming's at-least-once redelivery: a replayed
+micro-batch finds its doc_ids already committed and commits neither
+results nor lineage.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.pipeline import DEFAULT_PAGE_THRESHOLD, extract
 from ..schema import DOCUMENTS_SCHEMA
-from ..sources.checkpoint import CheckpointTable, run_resumable
+from ..sources.checkpoint import CheckpointTable
+from ..sources.lineage import run_resumable_with_lineage
 
 
 def run_stream(
     spark: SparkSession,
     input_dir: str,
     results_ckpt: CheckpointTable,
+    lineage_path: str,
     stream_checkpoint_dir: str,
     available_now: bool = True,
     page_threshold: int = DEFAULT_PAGE_THRESHOLD,
 ) -> StreamingQuery:
-    """Start the streaming extraction over `input_dir` parquet files.
+    """Start the streaming extraction over `input_dir` parquet files;
+    results go to `results_ckpt`, lineage to the table at `lineage_path`.
 
     `available_now=True` processes everything currently present and
     stops (the batch-replay / backfill mode); False runs continuously.
     """
+    lineage = CheckpointTable(lineage_path)
+    call_id = uuid.uuid4().hex[:12]
     stream = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .option("maxFilesPerTrigger", 8)
@@ -47,11 +55,12 @@ def run_stream(
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        run_resumable(
+        run_resumable_with_lineage(
             batch_df,
             results_ckpt,
+            lineage,
             lambda todo: extract(todo, page_threshold),
-            meta={"batch_id": batch_id},
+            run_id=f"stream-{call_id}-{batch_id}",
         )
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

@@ -10,14 +10,16 @@ Usage:
         --results /path/to/results_table \\
         --lineage /path/to/lineage_table \\
         --run-id  run-2026-08-16 \\
-        [--derive-from-flat] [--page-threshold N]
+        [--page-threshold N]
 
-Reads the documents table (nested span schema, or the flat testdata
-shape with --derive-from-flat), runs the resumable extraction, commits
-results + per-partition lineage to snapshot checkpoint tables, prints
-a one-line JSON summary.  Re-running after a crash processes only the
+Reads the documents table (nested span schema, DOCUMENTS_SCHEMA), runs
+the resumable increment `lineage.run_resumable_with_lineage` (the one
+the streaming front-end runs per micro-batch), which commits results +
+per-partition lineage to snapshot checkpoint tables, and prints a
+one-line JSON summary.  Re-running after a crash processes only the
 documents without committed results (left-anti join on the snapshots
-in the results table's commit log).
+in the results table's commit log); a re-run with nothing left commits
+no snapshot to either table.
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ def main() -> int:
     p.add_argument("--results", required=True)
     p.add_argument("--lineage", required=True)
     p.add_argument("--run-id", required=True)
-    p.add_argument("--derive-from-flat", action="store_true")
     p.add_argument(
         "--page-threshold", type=int, default=DEFAULT_PAGE_THRESHOLD
     )
@@ -53,14 +54,10 @@ def main() -> int:
         .getOrCreate()
     )
 
-    from mimeograph_spark.corpus import derive_documents
     from mimeograph_spark.sources.checkpoint import CheckpointTable
     from mimeograph_spark.sources.lineage import run_resumable_with_lineage
 
     docs = spark.read.parquet(args.input)
-    if args.derive_from_flat:
-        docs = derive_documents(docs)
-
     results = CheckpointTable(args.results)
     lineage = CheckpointTable(args.lineage)
     snap = run_resumable_with_lineage(

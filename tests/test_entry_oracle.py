@@ -1,6 +1,7 @@
 """Mirror of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() on DuckDB over the same parquet tables,
-compare row count + column names + order-insensitive values.
+compare row count + column names + pandas dtypes + order-insensitive
+values.
 """
 
 import math
@@ -29,6 +30,14 @@ def _norm_cell(v):
     if isinstance(v, float):
         return round(v, 6)
     return v
+
+
+def _dtypes(pdf):
+    # the driver tolerates datetime unit differences (ns vs us)
+    return {
+        c: "datetime" if str(t).startswith("datetime64") else str(t)
+        for c, t in pdf.dtypes.items()
+    }
 
 
 def _normalize(pdf):
@@ -69,6 +78,7 @@ def test_query_matches_oracle(spark, name):
     s_cols, s_rows = _normalize(spark_pdf)
     d_cols, d_rows = _normalize(duck_pdf)
     assert s_cols == d_cols
+    assert _dtypes(spark_pdf) == _dtypes(duck_pdf)
     assert len(s_rows) == len(d_rows)
     mismatches = [
         (a, b) for a, b in zip(s_rows, d_rows) if a != b

@@ -3,13 +3,17 @@ per-doc results identical to a single uninterrupted run (replay
 semantics of src/mimeograph.coffee:500-512), plus lineage accounting.
 """
 
+import os
+import re
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.oracle import expected_results
 from mimeograph_spark.plans.pipeline import extract
-from mimeograph_spark.sources.checkpoint import CheckpointTable, resume_filter, run_resumable
+from mimeograph_spark.sources.checkpoint import CheckpointTable, resume_filter
 from mimeograph_spark.sources.lineage import run_resumable_with_lineage
 
 
@@ -23,6 +27,12 @@ def _pipeline(df):
     return extract(df, page_threshold=32)
 
 
+def _run(docs, results, run_id):
+    """One resumable increment, its lineage in a sibling table."""
+    lineage = CheckpointTable(results.path + "-lineage")
+    return run_resumable_with_lineage(docs, results, lineage, _pipeline, run_id)
+
+
 def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
     rows, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "results"))
@@ -30,18 +40,22 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
     # "First run" processes only half the docs, then dies (simulated by
     # feeding the pipeline a partial input before the crash).
     first_half = docs.filter(F.crc32("doc_id") % 2 == 0)
-    run_resumable(first_half, ckpt, _pipeline)
+    _run(first_half, ckpt, "run-1")
     n_first = ckpt.read(spark).count()
     assert 0 < n_first < len(rows)
 
     # Resume over the FULL input: only the missing docs run.
     todo = resume_filter(docs, ckpt)
     assert todo.count() == len(rows) - n_first
-    run_resumable(docs, ckpt, _pipeline)
+    _run(docs, ckpt, "run-2")
 
     # Third run: nothing left, no new snapshot.
-    assert run_resumable(docs, ckpt, _pipeline) is None
+    assert _run(docs, ckpt, "run-3") is None
     assert len(ckpt.snapshots()) == 2
+    lineage = CheckpointTable(ckpt.path + "-lineage")
+    assert [s["meta"]["results_snapshot"] for s in lineage.snapshots()] == [
+        s["id"] for s in ckpt.snapshots()
+    ]
 
     # Exactly-once per doc, and equal to the oracle.
     final = ckpt.read(spark)
@@ -58,7 +72,7 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
 def test_uncommitted_snapshot_is_invisible(spark, tmp_path, corpus):
     _, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "r2"))
-    run_resumable(docs.limit(10), ckpt, _pipeline)
+    _run(docs.limit(10), ckpt, "run-1")
     # Simulate a crash mid-append: parquet written but no log entry
     # committed -> write a stray dir directly.
     _pipeline(docs.limit(5)).write.mode("overwrite").parquet(
@@ -71,7 +85,7 @@ def test_lineage_accounts_for_all_docs(spark, tmp_path, corpus):
     rows, docs = corpus
     results = CheckpointTable(str(tmp_path / "res"))
     lineage = CheckpointTable(str(tmp_path / "lin"))
-    run_resumable_with_lineage(
+    snap = run_resumable_with_lineage(
         docs, results, lineage, _pipeline, run_id="run-1"
     )
     lin = lineage.read(spark)
@@ -87,19 +101,37 @@ def test_lineage_accounts_for_all_docs(spark, tmp_path, corpus):
     cols = set(lin.columns)
     assert {"run_id", "stage", "partition_id", "started", "ended", "status"} <= cols
 
+    # One row per part file of the committed snapshot, keyed by the
+    # write task's partition number and counting that file's docs (a
+    # read split may pack several small files together).
+    snap_dir = os.path.join(results.path, snap["dir"])
+    parts = {
+        int(re.match(r"part-(\d+)", name).group(1)):
+            pq.read_metadata(os.path.join(snap_dir, name)).num_rows
+        for name in os.listdir(snap_dir)
+        if name.startswith("part-")
+    }
+    assert len(parts) > 1
+    lin_rows = lin.collect()
+    assert len(lin_rows) == len(parts)
+    assert {r["partition_id"]: r["doc_count"] for r in lin_rows} == parts
+
 
 def test_lineage_conforms_to_declared_schema(spark, tmp_path, corpus):
     """LINEAGE_SCHEMA is the declared contract for lineage sinks — the
-    produced frame must match it name-for-name, type-for-type."""
+    frame produced from a committed snapshot must match it
+    name-for-name, type-for-type."""
     from datetime import datetime, timezone
 
     from mimeograph_spark.schema import LINEAGE_SCHEMA
     from mimeograph_spark.sources.lineage import lineage_rows
 
     _, docs = corpus
+    results = CheckpointTable(str(tmp_path / "res"))
+    snap = results.append(_pipeline(docs))
     lin = lineage_rows(
-        _pipeline(docs), "run-x", "extract",
-        datetime.now(timezone.utc),
+        spark.read.parquet(os.path.join(results.path, snap["dir"])),
+        "run-x", "extract", datetime.now(timezone.utc),
     )
     got = [(f.name, f.dataType.simpleString()) for f in lin.schema.fields]
     want = [(f.name, f.dataType.simpleString()) for f in LINEAGE_SCHEMA.fields]
@@ -146,7 +178,6 @@ def test_crashed_commit_is_invisible_and_blocks_nothing(spark, tmp_path, corpus)
     but before the commit link, leaves nothing a reader lists, and the
     next append commits as seq 0."""
     import json
-    import os
 
     _, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "crash"))

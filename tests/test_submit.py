@@ -1,14 +1,18 @@
 """The deployed entry point: `scripts/submit_extract.py` run against the
 `--py-files` artifact alone (no checkout on the path), twice over the
-same input.  The artifact must be self-contained, and the re-run must
-commit nothing new (exactly-once across runs)."""
+same input.  The artifact must be self-contained, the first run's
+lineage must account for every doc, and the re-run must commit nothing
+new to either table (exactly-once across runs)."""
 
 import json
 import os
 import subprocess
 import sys
 
+import pyspark.sql.functions as F
+
 from mimeograph_spark.corpus import corpus_df, generate_rows
+from mimeograph_spark.sources.checkpoint import CheckpointTable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,8 +52,15 @@ def test_submit_extract_from_zip_is_exactly_once(spark, tmp_path):
     first = _submit(tmp_path, zip_path, input_dir, "run-1")
     assert first["new_snapshot"] is not None
     assert first["docs_total"] == len(rows)
+    lineage = CheckpointTable(str(tmp_path / "lineage"))
+    assert [s["meta"]["results_snapshot"] for s in lineage.snapshots()] == [
+        first["new_snapshot"]
+    ]
+    lin = lineage.read(spark)
+    assert lin.agg(F.sum("doc_count")).first()[0] == len(rows)
 
     second = _submit(tmp_path, zip_path, input_dir, "run-2")
     assert second["new_snapshot"] is None
     assert second["docs_total"] == first["docs_total"]
     assert second["snapshots"] == first["snapshots"]
+    assert len(lineage.snapshots()) == 1
