@@ -7,15 +7,14 @@ blob round-trips PER PAGE — with vectorized in-process compute: one
 Arrow batch transfer amortizes the Python boundary over thousands of
 pages.
 
-Two physical paths, same semantics (pipeline.py routes between them):
+Two UDFs, same per-page semantics:
 
-- `ocr_refs_udf` (narrow): one call per document over its array of
-  media refs.  Zero shuffle: for the common case (docs with a bounded
-  page count) the entire OCR branch is a single narrow stage, and only
-  flat string arrays cross the Arrow boundary.
-- `ocr_page_udf` (page-parallel): one call per exploded page, used for
-  mega-page documents whose pages must spread across many tasks (the
-  reference's page-level fan-out, src/mimeograph.coffee:562-566).
+- `ocr_refs_udf`: one call per document over its offset-ordered array
+  of media refs; `extract` (plans/pipeline.py) runs it for every doc,
+  whatever its page count.  Zero shuffle: the whole OCR branch is one
+  narrow stage, and only flat string arrays cross the Arrow boundary.
+- `ocr_page_udf`: one call per page row; it serves the `ocr_pages`
+  driver query, which lists every page of the OCR-branch docs.
 
 Page errors never raise: a failed page yields NULL text and is
 accounted in `error_pages` downstream (src/mimeograph.coffee:729-759
@@ -41,14 +40,14 @@ def _ocr_batch(refs: Iterable[str]) -> list[str | None]:
 
 @F.pandas_udf(StringType())
 def ocr_page_udf(refs: pd.Series) -> pd.Series:
-    """Page-parallel path: media_ref -> page text (NULL = page error)."""
+    """Per page row: media_ref -> page text (NULL = page error)."""
     return pd.Series(_ocr_batch(refs), index=refs.index, dtype=object)
 
 
 @F.pandas_udf(ArrayType(StringType()))
 def ocr_refs_udf(refs: pd.Series) -> pd.Series:
-    """Narrow path: per-doc array of media refs -> aligned array of page
-    texts (NULL element = page error).
+    """Per doc: array of media refs -> aligned array of page texts
+    (NULL element = page error).
 
     Only flat string arrays cross the Arrow boundary — span structs are
     rebuilt JVM-side with zip_with (pipeline.py), which measured ~5x

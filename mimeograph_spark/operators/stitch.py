@@ -6,20 +6,19 @@ num_processed to num_pages (src/mimeograph.coffee:608-633), then pdftk
 concatenates per-page PDFs in sorted key order (:406-431), with failed
 pages excluded and recorded in a sorted error set (:668,676,757).
 
-Spark restatement: `groupBy(doc_id)` IS the barrier (the shuffle), and
-`array_sort(collect_list(struct(offset, ...)))` is the ordered
-reassembly — on the integer offset, so no >=10000-page drop (:166).
+`ocr_outcome` is the only place the failure rule lives: `extract`'s
+per-doc OCR projection (plans/pipeline.py) ends in it.  A doc's pages
+arrive there already in offset order, in one row, so `extract` needs
+no barrier shuffle.
 
-`ocr_outcome` is the only place the failure rule lives: both extract
-branches — the per-doc OCR projection (plans/pipeline.py) and this
-stitch — end in it.
-
-Skew (north_rule): one mega-page document concentrates its stitch on a
-single reducer.  `salted=True` runs a two-phase aggregation — partial
-per-(doc_id, salt) sorted arrays first, spreading the heavy shuffle
-fetch + partial-array build across NUM_SALTS tasks, then a final
-cheap merge of the (few) partial arrays per doc.  Results are
-byte-identical to the unsalted plan (tested).
+`stitch_pages` is the shuffle form of the same reassembly, kept off
+`extract`'s path for the benchmark's per-layer trace: `groupBy(doc_id)`
+is the barrier and `array_sort(collect_list(struct(offset, ...)))` the
+ordered reassembly, on the integer offset, so no >=10000-page drop
+(:166).  `salted=True` runs it in two phases — partial
+per-(doc_id, salt) sorted arrays first, over NUM_SALTS tasks, then a
+merge of the few partial arrays per doc.  Results are byte-identical
+to the unsalted plan (tested).
 """
 
 from __future__ import annotations

@@ -1,35 +1,20 @@
 """End-to-end extraction pipeline: the reference's eight-job chain
 (extract -> split -> convert -> hocr -> pdf -> layer -> stitch ->
 lastextract, src/mimeograph.coffee:436-444) as one declarative Spark
-plan.
-
-`extract` first runs one probe job: a limit-1 scan for a mega-page doc
-(more media pages than `page_threshold`, no native text).  The answer
-picks one of two plan shapes.
-
-No mega doc (the common case): one scan, no exchange.
+plan, the same for every input: one scan, no exchange.
 
     read documents -> classify + native projection + per-doc OCR,
                       fused into one narrow projection
 
 The OCR UDF receives an EMPTY ref array for native docs, so the
 doc-level short-circuit (src/mimeograph.coffee:542-547) costs nothing
-in Python.
-
-At least one mega doc: two exchanges, both in the mega docs' stitch.
-
-    read documents
-      |-- per-doc branch  (narrow) not mega: the projection above
-      |-- page branch (2 exchanges) mega: explode -> page UDF
-      |                                   -> salted two-phase stitch
-      '-- unionByName
-
-Mega-page documents (FIXTURES.md `megapage`) get page-level
-parallelism — the reference's worker-queue fan-out (:562-566) — plus
-salting so no single reducer owns a 50k-page stitch.  The reference
-fans out only the documents that need it; the probe does the same for
-the plan, so an input without mega docs never pays for the page
-branch's second scan, its Python stage or its stitch.
+in Python.  A scanned doc of any size crosses the Arrow boundary once,
+as its offset-ordered ref array; its pages are already together in one
+task, so ordering them needs no shuffle.  The reference fans a doc's
+pages out over its worker pool (:562-566); here the pages of one doc
+run in the task that scanned it, and docs spread over tasks.  Python
+worker memory stays bounded by the Arrow batch caps in
+`session.APP_CONF`.
 """
 
 from __future__ import annotations
@@ -40,40 +25,22 @@ from pyspark.sql.types import ArrayType
 
 from ..operators.classify import (
     HAS_NATIVE,
-    N_MEDIA,
     sort_spans_by_offset,
     with_doc_class,
 )
-from ..operators.ocr import ocr_page_udf, ocr_refs_udf
-from ..operators.stitch import ocr_outcome, stitch_pages
+from ..operators.ocr import ocr_refs_udf
+from ..operators.stitch import ocr_outcome
 from ..schema import KIND_MEDIA, KIND_TEXT, SPAN_TYPE
 
-# Docs with more media pages than this go through the exploded
-# page-parallel path; tune so an Arrow batch of `threshold`-page docs
-# stays comfortably in Python-worker memory.
+# Mega-doc page count for perfbench's per-layer trace; extract does not read it.
 DEFAULT_PAGE_THRESHOLD = 512
 
 
-def extract(
-    documents: DataFrame, page_threshold: int = DEFAULT_PAGE_THRESHOLD
-) -> DataFrame:
-    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA).
-
-    Runs one Spark job when called: the probe that decides whether the
-    plan needs the page branch (module docstring)."""
+def extract(documents: DataFrame) -> DataFrame:
+    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA): native
+    and per-doc OCR docs in one narrow pass.  Runs no Spark job until
+    the caller's action."""
     classified = with_doc_class(documents)
-    # size test first, so the \s regex of HAS_NATIVE runs only on the
-    # docs that pass it
-    is_mega = (F.col(N_MEDIA) > page_threshold) & ~F.col(HAS_NATIVE)
-    if classified.filter(is_mega).isEmpty():
-        return _per_doc(classified)
-    return _per_doc(classified.filter(~is_mega)).unionByName(
-        _paged(classified.filter(is_mega))
-    )
-
-
-def _per_doc(classified: DataFrame) -> DataFrame:
-    """Native and per-doc OCR docs in one narrow pass."""
     native_sorted = sort_spans_by_offset(
         F.filter("spans", lambda s: s["kind"] == KIND_TEXT)
     )
@@ -132,29 +99,6 @@ def _per_doc(classified: DataFrame) -> DataFrame:
         status,
         error_pages,
     )
-
-
-def _paged(mega: DataFrame) -> DataFrame:
-    """Mega docs: one row per page through the page UDF, then the
-    salted stitch."""
-    pages = mega.select(
-        "doc_id",
-        F.explode(
-            F.filter("spans", lambda s: s["kind"] == KIND_MEDIA)
-        ).alias("s"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
-    ocr_pages = pages.select(
-        "doc_id",
-        "offset",
-        "media_ref",
-        F.lit("ocr").alias("kind"),
-        ocr_page_udf("media_ref").alias("text"),
-    )
-    return stitch_pages(ocr_pages, salted=True)
 
 
 def extract_flat(documents: DataFrame) -> DataFrame:

@@ -47,8 +47,9 @@ def driver_memory() -> str:
     return f"{min(heap_mb, HEAP_CAP_MB)}m"
 
 
-# Arrow batch cap for pandas UDFs: one batch of mega-page docs must
-# stay within Python-worker memory.
+# Arrow batch row cap for pandas UDFs.  A batch of mega-page docs is
+# bounded by bytes instead: spark.sql.execution.arrow.maxBytesPerBatch
+# (64 MiB by default) also splits UDF input batches.
 ARROW_MAX_RECORDS = 4096
 
 # App-level settings, applied by get_spark and by the spark-submit

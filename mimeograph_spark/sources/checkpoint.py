@@ -100,13 +100,13 @@ class CheckpointTable:
                 os.unlink(tmp)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        """Union of committed snapshots (None if the table is empty)."""
+        """Union of committed snapshots (None if the table is empty).
+        Every snapshot is written with the same schema, so none is
+        merged."""
         dirs = [os.path.join(self.path, s["dir"]) for s in self.snapshots()]
         if not dirs:
             return None
-        # mergeSchema: snapshots written after an add-column evolve
-        # the table schema; older rows surface NULL for new columns.
-        return spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return spark.read.parquet(*dirs)
 
 
 def resume_filter(documents: DataFrame, ckpt: CheckpointTable) -> DataFrame:

@@ -86,21 +86,3 @@ def run_resumable_with_lineage(
     )
     return snap
 
-
-def observe_results(results: DataFrame):
-    """Attach a Spark `Observation` to a RESULT_SCHEMA frame: the same
-    doc/span/error/failed counters as `lineage_rows`, but collected
-    AS A SIDE EFFECT of whatever action the caller already runs — zero
-    extra jobs, zero extra scans (lineage_rows costs one more
-    aggregation pass; an Observation rides the existing one).  Returns
-    (observed_df, observation); read `observation.get` after the first
-    action completes.
-
-    This is the in-flight half of the reference's job bookkeeping
-    (mimeograph.coffee:507-678 updates Redis counters while the job
-    runs); the persisted half stays `lineage_rows` -> CheckpointTable.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("extract_metrics")
-    return results.observe(obs, *_counters()), obs

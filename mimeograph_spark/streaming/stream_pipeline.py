@@ -7,10 +7,9 @@ equivalent: a file-source `readStream` over the documents table's
 directory (each new parquet file = newly ingested docs), with the
 whole batch pipeline applied per micro-batch via `foreachBatch`.
 
-foreachBatch (rather than pure streaming operators) because the
-pipeline's mega-doc path contains a groupBy-collect stitch that has no
-incremental formulation — and because it lets each micro-batch run the
-batch increment itself, `lineage.run_resumable_with_lineage`, as run
+foreachBatch (rather than pure streaming operators) because it lets
+each micro-batch run the batch increment itself,
+`lineage.run_resumable_with_lineage`, as run
 `stream-<run_stream call id>-<batch_id>`.  Exactly-once per doc_id
 comes from its anti-join against the results table's commit log,
 layered on Structured Streaming's at-least-once redelivery: a replayed
@@ -25,7 +24,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.pipeline import DEFAULT_PAGE_THRESHOLD, extract
+from ..plans.pipeline import extract
 from ..schema import DOCUMENTS_SCHEMA
 from ..sources.checkpoint import CheckpointTable
 from ..sources.lineage import run_resumable_with_lineage
@@ -38,7 +37,6 @@ def run_stream(
     lineage_path: str,
     stream_checkpoint_dir: str,
     available_now: bool = True,
-    page_threshold: int = DEFAULT_PAGE_THRESHOLD,
 ) -> StreamingQuery:
     """Start the streaming extraction over `input_dir` parquet files;
     results go to `results_ckpt`, lineage to the table at `lineage_path`.
@@ -59,7 +57,7 @@ def run_stream(
             batch_df,
             results_ckpt,
             lineage,
-            lambda todo: extract(todo, page_threshold),
+            extract,
             run_id=f"stream-{call_id}-{batch_id}",
         )
 

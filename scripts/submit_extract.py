@@ -9,8 +9,7 @@ Usage:
         --input  /path/to/documents_parquet \\
         --results /path/to/results_table \\
         --lineage /path/to/lineage_table \\
-        --run-id  run-2026-08-16 \\
-        [--page-threshold N]
+        --run-id  run-2026-08-16
 
 Reads the documents table (nested span schema, DOCUMENTS_SCHEMA), runs
 the resumable increment `lineage.run_resumable_with_lineage` (the one
@@ -30,16 +29,13 @@ import sys
 
 
 def main() -> int:
-    from mimeograph_spark.plans.pipeline import DEFAULT_PAGE_THRESHOLD, extract
+    from mimeograph_spark.plans.pipeline import extract
 
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--results", required=True)
     p.add_argument("--lineage", required=True)
     p.add_argument("--run-id", required=True)
-    p.add_argument(
-        "--page-threshold", type=int, default=DEFAULT_PAGE_THRESHOLD
-    )
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -64,7 +60,7 @@ def main() -> int:
         docs,
         results,
         lineage,
-        lambda df: extract(df, page_threshold=args.page_threshold),
+        extract,
         run_id=args.run_id,
     )
     done = results.read(spark)

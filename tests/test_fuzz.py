@@ -1,8 +1,7 @@
 """Property-based fuzz: extract() must match the pure-Python oracle on
 ARBITRARY span configurations, not just the FIXTURES.md scenario mix —
 empty docs, null/whitespace-only texts, all-bad-page docs, interleaved
-kinds, shuffled span order, and a low page_threshold so the mega-doc
-path executes.
+kinds and shuffled span order.
 
 One Spark round-trip per hypothesis example (the example IS a whole
 corpus) keeps the job count bounded.
@@ -63,7 +62,7 @@ def test_extract_matches_oracle_on_arbitrary_spans(spark, docs, rnd):
     rows = _build_rows(docs, rnd)
     got = {
         r["doc_id"]: r
-        for r in extract(corpus_df(spark, rows), page_threshold=3).collect()
+        for r in extract(corpus_df(spark, rows)).collect()
     }
     expected = expected_results(rows)
     assert set(got) == set(expected)

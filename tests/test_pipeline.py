@@ -4,7 +4,6 @@ the per-row invariant from BASELINE.json input_hint:
 """
 
 import pyspark.sql.functions as F
-import pytest
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.operators.ocr import ocr_page_udf
@@ -35,49 +34,19 @@ def _assert_matches_oracle(actual, rows):
         assert act["spans_out"] == exp["spans_out"], doc_id
 
 
-@pytest.mark.parametrize("page_threshold", [0, 64, 1000])
-def test_extract_matches_oracle(spark, page_threshold):
-    """With threshold 0 every doc that has pages is stitched, so each
-    scenario's outcome comes from stitch_pages; with 64 only megapage
-    docs are; with 1000 none is, so the single-pass plan decides every
-    scenario."""
+def test_extract_matches_oracle(spark):
+    """Every FIXTURES.md scenario, 700-page megapage docs included,
+    through the one extract plan."""
     rows = generate_rows(n_docs=90, seed=7, megapage_spans=700)
     df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df, page_threshold=page_threshold))
+    actual = _collect_results(extract(df))
     _assert_matches_oracle(actual, rows)
-
-
-def test_mega_probe_boundary(spark):
-    """A doc is mega when it has more media pages than the threshold
-    and no native text: exactly 8 scanned pages stays single-pass, 9
-    takes the page branch, and 9 pages beside native text stays
-    single-pass."""
-
-    def media(n):
-        return [
-            {"kind": "media", "text": None, "media_ref": f"fx:b:{i}",
-             "offset": i + 1}
-            for i in range(n)
-        ]
-
-    native = [{"kind": "text", "text": "words", "media_ref": None,
-               "offset": 0}]
-    for spans, python_nodes in (
-        (media(8), 1),
-        (media(9), 2),
-        (native + media(9), 1),
-    ):
-        rows = [{"doc_id": "b", "spans": spans}]
-        out = extract(corpus_df(spark, rows), page_threshold=8)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == python_nodes, plan
-        _assert_matches_oracle(_collect_results(out), rows)
 
 
 def test_extract_order_invariant_to_input_span_order(spark):
     rows = generate_rows(n_docs=54, seed=11, megapage_spans=300, shuffle_span_order=True)
     df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df, page_threshold=32))
+    actual = _collect_results(extract(df))
     _assert_matches_oracle(actual, rows)
 
 
@@ -105,15 +74,15 @@ def test_salted_stitch_equals_unsalted(spark):
 def test_result_invariant_to_repartitioning(spark):
     rows = generate_rows(n_docs=45, seed=5, megapage_spans=200)
     df = corpus_df(spark, rows)
-    base = _collect_results(extract(df, page_threshold=16))
-    repart = _collect_results(extract(df.repartition(13), page_threshold=16))
+    base = _collect_results(extract(df))
+    repart = _collect_results(extract(df.repartition(13)))
     assert base == repart
 
 
 def test_native_docs_have_no_ocr_spans(spark):
     rows = generate_rows(n_docs=90, seed=9, megapage_spans=100)
     df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df, page_threshold=16))
+    actual = _collect_results(extract(df))
     expected = expected_results(rows)
     for doc_id, exp in expected.items():
         kinds = {s["kind"] for s in actual[doc_id]["spans_out"]}
@@ -127,7 +96,7 @@ def test_megapage_all_pages_present_and_ordered(spark):
             if r["scenario"] == "megapage"]
     assert rows
     df = corpus_df(spark, rows)
-    res = _collect_results(extract(df, page_threshold=64))
+    res = _collect_results(extract(df))
     for r in rows:
         spans = res[r["doc_id"]]["spans_out"]
         errs = res[r["doc_id"]]["error_pages"]
@@ -160,23 +129,3 @@ def test_interleaved_example_assembly(spark):
     assert r["media_refs_csv"] == "m:a,m:b"
     assert r["n_media"] == 2 and r["n_text"] == 2
 
-
-def test_observation_metrics_ride_the_action(spark):
-    """observe_results collects the lineage counters as a side effect
-    of the caller's own action — and they must equal the explicit
-    lineage_rows aggregation over the same results."""
-    from mimeograph_spark.corpus import corpus_df, generate_rows
-    from mimeograph_spark.plans.pipeline import extract
-    from mimeograph_spark.sources.lineage import observe_results
-
-    docs = corpus_df(spark, generate_rows(n_docs=30, seed=11))
-    observed, obs = observe_results(extract(docs))
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    rows = extract(docs).collect()
-    assert got["doc_count"] == len(rows) == 30
-    assert got["span_count"] == sum(len(r["spans_out"]) for r in rows)
-    assert got["error_count"] == sum(len(r["error_pages"]) for r in rows)
-    assert got["failed_doc_count"] == sum(
-        1 for r in rows if r["status"] == "failed"
-    )

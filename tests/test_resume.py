@@ -23,14 +23,10 @@ def corpus(spark):
     return rows, corpus_df(spark, rows)
 
 
-def _pipeline(df):
-    return extract(df, page_threshold=32)
-
-
 def _run(docs, results, run_id):
     """One resumable increment, its lineage in a sibling table."""
     lineage = CheckpointTable(results.path + "-lineage")
-    return run_resumable_with_lineage(docs, results, lineage, _pipeline, run_id)
+    return run_resumable_with_lineage(docs, results, lineage, extract, run_id)
 
 
 def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
@@ -75,7 +71,7 @@ def test_uncommitted_snapshot_is_invisible(spark, tmp_path, corpus):
     _run(docs.limit(10), ckpt, "run-1")
     # Simulate a crash mid-append: parquet written but no log entry
     # committed -> write a stray dir directly.
-    _pipeline(docs.limit(5)).write.mode("overwrite").parquet(
+    extract(docs.limit(5)).write.mode("overwrite").parquet(
         str(tmp_path / "r2" / "snap-orphan")
     )
     assert ckpt.read(spark).count() == 10  # orphan invisible
@@ -86,7 +82,7 @@ def test_lineage_accounts_for_all_docs(spark, tmp_path, corpus):
     results = CheckpointTable(str(tmp_path / "res"))
     lineage = CheckpointTable(str(tmp_path / "lin"))
     snap = run_resumable_with_lineage(
-        docs, results, lineage, _pipeline, run_id="run-1"
+        docs, results, lineage, extract, run_id="run-1"
     )
     lin = lineage.read(spark)
     agg = lin.agg(
@@ -128,7 +124,7 @@ def test_lineage_conforms_to_declared_schema(spark, tmp_path, corpus):
 
     _, docs = corpus
     results = CheckpointTable(str(tmp_path / "res"))
-    snap = results.append(_pipeline(docs))
+    snap = results.append(extract(docs))
     lin = lineage_rows(
         spark.read.parquet(os.path.join(results.path, snap["dir"])),
         "run-x", "extract", datetime.now(timezone.utc),
@@ -219,17 +215,3 @@ def test_old_manifest_table_is_refused(tmp_path):
     with pytest.raises(ValueError, match="manifest.json"):
         CheckpointTable(str(table))
 
-
-def test_schema_evolution_add_column(spark, tmp_path):
-    """A later snapshot may add a column; reads merge schemas and old
-    rows surface NULL (the Iceberg add-column contract)."""
-    ckpt = CheckpointTable(str(tmp_path / "evo"))
-    ckpt.append(spark.createDataFrame([(1, "a")], "k long, s string"))
-    ckpt.append(
-        spark.createDataFrame([(2, "b", "en")], "k long, s string, lang string")
-    )
-
-    raw = ckpt.read(spark)
-    assert set(raw.columns) == {"k", "s", "lang"}
-    got = {r["k"]: r["lang"] for r in raw.collect()}
-    assert got == {1: None, 2: "en"}

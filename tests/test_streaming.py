@@ -26,7 +26,7 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
     lineage_dir = str(tmp_path / "lineage")
     q = run_stream(
         spark, input_dir, ckpt, lineage_dir, str(tmp_path / "stream_ckpt"),
-        available_now=True, page_threshold=32,
+        available_now=True,
     )
     q.awaitTermination(120)
 
@@ -60,7 +60,7 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
     # exactly-once, and commit neither a results nor a lineage snapshot.
     q2 = run_stream(
         spark, input_dir, ckpt, lineage_dir, str(tmp_path / "stream_ckpt2"),
-        available_now=True, page_threshold=32,
+        available_now=True,
     )
     q2.awaitTermination(120)
     assert ckpt.read(spark).count() == len(rows)

@@ -27,7 +27,6 @@ def _submit(tmp_path, zip_path, input_dir, run_id):
             "--results", str(tmp_path / "results"),
             "--lineage", str(tmp_path / "lineage"),
             "--run-id", run_id,
-            "--page-threshold", "32",
         ],
         cwd=tmp_path,
         env=env,
