@@ -4,6 +4,7 @@ the per-row invariant from BASELINE.json input_hint:
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.operators.ocr import ocr_page_udf
@@ -34,12 +35,21 @@ def _assert_matches_oracle(actual, rows):
         assert act["spans_out"] == exp["spans_out"], doc_id
 
 
-def test_extract_matches_oracle(spark):
+@pytest.mark.parametrize("max_records_per_batch", [0, 64, 1000])
+def test_extract_matches_oracle(spark, max_records_per_batch):
     """Every FIXTURES.md scenario, 700-page megapage docs included,
-    through the one extract plan."""
-    rows = generate_rows(n_docs=90, seed=7, megapage_spans=700)
-    df = corpus_df(spark, rows)
-    actual = _collect_results(extract(df))
+    through the one extract plan, whatever the Arrow batch split: on
+    one partition of 90 docs, 0 (no row cap) and 1000 hand the UDF one
+    batch, 64 splits it in two."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(max_records_per_batch))
+    try:
+        rows = generate_rows(n_docs=90, seed=7, megapage_spans=700)
+        df = corpus_df(spark, rows).coalesce(1)
+        actual = _collect_results(extract(df))
+    finally:
+        spark.conf.set(key, saved)
     _assert_matches_oracle(actual, rows)
 
 
