@@ -213,7 +213,6 @@ def generate_rows(
     n_docs: int = 100,
     seed: int = 42,
     megapage_spans: int = 5000,
-    scenarios: tuple[str, ...] = SCENARIOS,
     shuffle_span_order: bool = False,
 ) -> list[dict]:
     """Deterministic scenario-mix corpus as plain Python rows.
@@ -225,7 +224,7 @@ def generate_rows(
     rng = random.Random(seed)
     rows = []
     for d in range(n_docs):
-        scenario = scenarios[d % len(scenarios)]
+        scenario = SCENARIOS[d % len(SCENARIOS)]
         spans = _spans_for(scenario, rng, d, megapage_spans)
         if shuffle_span_order:
             rng.shuffle(spans)

@@ -53,7 +53,9 @@ RESULT_SCHEMA = StructType(
 
 # Per-partition lineage/metrics rows (north_rule accounting), mirroring
 # the job-hash bookkeeping fields started/ended/num_pages/num_processed
-# (src/mimeograph.coffee:507,564,611,677).
+# (src/mimeograph.coffee:507,564,611,677).  The increment commits them
+# in its results log entry, `meta["lineage"]`, one JSON object per row
+# keyed by these names, with started/ended as ISO-8601 UTC strings.
 LINEAGE_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), nullable=False),

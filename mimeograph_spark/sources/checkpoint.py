@@ -13,8 +13,9 @@ left-anti join; the increment itself is `lineage.py`'s).
 No iceberg-spark-runtime jar ships in this sandbox, so this module
 implements the minimal slice of the Iceberg table contract the
 pipeline needs: append-only snapshots and snapshot isolation for
-readers.  Each snapshot is a parquet dir plus one entry in the commit
-log `<table>/_log/<seq:06d>.json`.  An entry is committed by a
+readers.  Each snapshot is a parquet dir plus one entry, with a
+`meta` like an Iceberg snapshot `summary`, in the commit log
+`<table>/_log/<seq:06d>.json`.  An entry is committed by a
 put-if-absent `os.link` of a fully written, fsynced temp file: two
 writers that race for one sequence number cannot both win, and the
 loser retries at the next number (what an Iceberg catalog's
@@ -34,6 +35,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..schema import RESULT_SCHEMA
 
 
 class CheckpointTable:
@@ -69,18 +72,21 @@ class CheckpointTable:
                 snaps.append(json.load(f))
         return snaps
 
-    def append(self, df: DataFrame, meta: dict | None = None) -> dict:
-        """Write df as a new snapshot and commit it as the next log
-        entry.  Any number of writers may append concurrently: data
-        dirs are uuid-unique, and a writer whose sequence number was
-        taken by another commit retries at the next one."""
-        uid = uuid.uuid4().hex[:12]
-        data_dir = f"snap-{uid}"
+    def write(self, df: DataFrame) -> str:
+        """Write df to a new uuid-unique data dir, which no reader sees
+        until `commit` names it."""
+        data_dir = f"snap-{uuid.uuid4().hex[:12]}"
         df.write.mode("overwrite").parquet(os.path.join(self.path, data_dir))
+        return data_dir
+
+    def commit(self, data_dir: str, meta: dict | None = None) -> dict:
+        """Commit a written data dir as the next log entry.  Any number
+        of writers may commit concurrently: a writer whose sequence
+        number was taken by another commit retries at the next one."""
         seq = len(self._seqs())
         while True:
             snap = {
-                "id": f"snap-{seq:06d}-{uid}",
+                "id": f"snap-{seq:06d}-{data_dir[len('snap-'):]}",
                 "dir": data_dir,
                 "committed_at": time.time(),
                 "meta": meta or {},
@@ -99,14 +105,20 @@ class CheckpointTable:
             finally:
                 os.unlink(tmp)
 
+    def append(self, df: DataFrame, meta: dict | None = None) -> dict:
+        """Write df and commit it as one snapshot."""
+        return self.commit(self.write(df), meta)
+
+    def scan(self, spark: SparkSession, *data_dirs: str) -> DataFrame:
+        """The given data dirs of this table, read with RESULT_SCHEMA:
+        a declared schema runs no footer-inference job."""
+        paths = [os.path.join(self.path, d) for d in data_dirs]
+        return spark.read.schema(RESULT_SCHEMA).parquet(*paths)
+
     def read(self, spark: SparkSession) -> DataFrame | None:
-        """Union of committed snapshots (None if the table is empty).
-        Every snapshot is written with the same schema, so none is
-        merged."""
-        dirs = [os.path.join(self.path, s["dir"]) for s in self.snapshots()]
-        if not dirs:
-            return None
-        return spark.read.parquet(*dirs)
+        """Union of committed snapshots (None if the table is empty)."""
+        dirs = [s["dir"] for s in self.snapshots()]
+        return self.scan(spark, *dirs) if dirs else None
 
 
 def resume_filter(documents: DataFrame, ckpt: CheckpointTable) -> DataFrame:

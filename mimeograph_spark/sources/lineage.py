@@ -8,6 +8,8 @@ The rows mirror the reference's per-job Redis hash bookkeeping —
 (:677-678) — but at the granularity Spark actually executes: one row
 per (run, stage, writing partition), so a 1000-executor run exposes
 exactly which partitions produced what and where errors concentrated.
+Like the reference's hash, they live with the job: in its results log
+entry (`meta["lineage"]`), so results and lineage commit atomically.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.pipeline import extract
 from ..schema import STATUS_COMPLETE, STATUS_FAILED
 from .checkpoint import CheckpointTable, resume_filter
 
@@ -39,8 +42,8 @@ def _counters() -> list:
 def lineage_rows(
     results: DataFrame, run_id: str, stage: str, started: datetime
 ) -> DataFrame:
-    """One lineage/metrics row per partition that wrote a committed
-    result snapshot (RESULT_SCHEMA, read back from its files).  Its id
+    """One lineage/metrics row per partition that wrote a result
+    snapshot (RESULT_SCHEMA, read back from its files).  Its id
     is the write task's `part-NNNNN` file number: a read split packs
     small files, so the read's `spark_partition_id()` is not it."""
     ended = datetime.now(timezone.utc)
@@ -59,30 +62,27 @@ def lineage_rows(
 
 
 def run_resumable_with_lineage(
-    documents: DataFrame,
-    results_ckpt: CheckpointTable,
-    lineage_ckpt: CheckpointTable,
-    pipeline_fn,
-    run_id: str,
+    documents: DataFrame, results_ckpt: CheckpointTable, run_id: str
 ) -> dict | None:
-    """One resumable increment: anti-join the committed doc_ids, run
-    the pipeline on the rest, commit the results, then commit the
-    per-partition lineage of the COMMITTED snapshot.  Returns the
-    results snapshot, or None (committing nothing) if no doc is left.
-    A crash before the results commit leaves no visible state, so a
-    rerun redoes exactly the unfinished work; a crash between the two
-    commits costs only lineage, never result correctness."""
+    """One resumable increment: anti-join the committed doc_ids,
+    extract the rest, write them, and commit the written dir as one
+    log entry whose meta holds the run id and the per-partition
+    lineage of exactly those files.  Returns the snapshot, or None
+    (committing nothing) if no doc is left.  A crash at any point
+    before the commit leaves no visible results and no lineage, so a
+    rerun redoes exactly the unfinished work."""
     started = datetime.now(timezone.utc)
     todo = resume_filter(documents, results_ckpt)
+    # One job, cheaper than writing and dropping an empty snapshot dir.
     if todo.isEmpty():
         return None
-    snap = results_ckpt.append(pipeline_fn(todo), meta={"run_id": run_id})
-    committed = documents.sparkSession.read.parquet(
-        f"{results_ckpt.path}/{snap['dir']}"
-    )
-    lineage_ckpt.append(
-        lineage_rows(committed, run_id, "extract", started),
-        meta={"run_id": run_id, "results_snapshot": snap["id"]},
-    )
-    return snap
-
+    data_dir = results_ckpt.write(extract(todo))
+    written = results_ckpt.scan(documents.sparkSession, data_dir)
+    rows = lineage_rows(written, run_id, "extract", started).collect()
+    # JSON rows; timestamps (collected as naive local time) as ISO UTC.
+    lineage = [
+        {k: v.astimezone(timezone.utc).isoformat()
+         if isinstance(v, datetime) else v for k, v in r.asDict().items()}
+        for r in sorted(rows, key=lambda r: r.partition_id)
+    ]
+    return results_ckpt.commit(data_dir, {"run_id": run_id, "lineage": lineage})

@@ -10,11 +10,11 @@ whole batch pipeline applied per micro-batch via `foreachBatch`.
 foreachBatch (rather than pure streaming operators) because it lets
 each micro-batch run the batch increment itself,
 `lineage.run_resumable_with_lineage`, as run
-`stream-<run_stream call id>-<batch_id>`.  Exactly-once per doc_id
+`stream-<run_stream call id>-<batch_id>`: one results log entry per
+micro-batch, carrying that batch's lineage.  Exactly-once per doc_id
 comes from its anti-join against the results table's commit log,
 layered on Structured Streaming's at-least-once redelivery: a replayed
-micro-batch finds its doc_ids already committed and commits neither
-results nor lineage.
+micro-batch finds its doc_ids already committed and commits nothing.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.pipeline import extract
 from ..schema import DOCUMENTS_SCHEMA
 from ..sources.checkpoint import CheckpointTable
 from ..sources.lineage import run_resumable_with_lineage
@@ -34,17 +33,15 @@ def run_stream(
     spark: SparkSession,
     input_dir: str,
     results_ckpt: CheckpointTable,
-    lineage_path: str,
     stream_checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the streaming extraction over `input_dir` parquet files;
-    results go to `results_ckpt`, lineage to the table at `lineage_path`.
+    results and their lineage go to `results_ckpt`.
 
     `available_now=True` processes everything currently present and
     stops (the batch-replay / backfill mode); False runs continuously.
     """
-    lineage = CheckpointTable(lineage_path)
     call_id = uuid.uuid4().hex[:12]
     stream = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
@@ -54,11 +51,7 @@ def run_stream(
 
     def process_batch(batch_df, batch_id: int) -> None:
         run_resumable_with_lineage(
-            batch_df,
-            results_ckpt,
-            lineage,
-            extract,
-            run_id=f"stream-{call_id}-{batch_id}",
+            batch_df, results_ckpt, run_id=f"stream-{call_id}-{batch_id}"
         )
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

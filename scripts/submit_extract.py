@@ -8,17 +8,16 @@ Usage:
         scripts/submit_extract.py \\
         --input  /path/to/documents_parquet \\
         --results /path/to/results_table \\
-        --lineage /path/to/lineage_table \\
         --run-id  run-2026-08-16
 
 Reads the documents table (nested span schema, DOCUMENTS_SCHEMA), runs
 the resumable increment `lineage.run_resumable_with_lineage` (the one
-the streaming front-end runs per micro-batch), which commits results +
-per-partition lineage to snapshot checkpoint tables, and prints a
-one-line JSON summary.  Re-running after a crash processes only the
-documents without committed results (left-anti join on the snapshots
-in the results table's commit log); a re-run with nothing left commits
-no snapshot to either table.
+the streaming front-end runs per micro-batch), which commits the
+results and their per-partition lineage as one snapshot of the results
+checkpoint table, and prints a one-line JSON summary.  Re-running after
+a crash processes only the documents without committed results
+(left-anti join on the snapshots in the results table's commit log); a
+re-run with nothing left commits no snapshot.
 """
 
 from __future__ import annotations
@@ -29,12 +28,9 @@ import sys
 
 
 def main() -> int:
-    from mimeograph_spark.plans.pipeline import extract
-
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
     p.add_argument("--results", required=True)
-    p.add_argument("--lineage", required=True)
     p.add_argument("--run-id", required=True)
     args = p.parse_args()
 
@@ -55,14 +51,7 @@ def main() -> int:
 
     docs = spark.read.parquet(args.input)
     results = CheckpointTable(args.results)
-    lineage = CheckpointTable(args.lineage)
-    snap = run_resumable_with_lineage(
-        docs,
-        results,
-        lineage,
-        extract,
-        run_id=args.run_id,
-    )
+    snap = run_resumable_with_lineage(docs, results, run_id=args.run_id)
     done = results.read(spark)
     summary = {
         "run_id": args.run_id,

@@ -1,10 +1,12 @@
 """Checkpoint/resume semantics: kill-and-resume produces exactly-once
 per-doc results identical to a single uninterrupted run (replay
-semantics of src/mimeograph.coffee:500-512), plus lineage accounting.
+semantics of src/mimeograph.coffee:500-512), plus lineage accounting
+in the results log entry each increment commits.
 """
 
 import os
 import re
+from datetime import datetime, timedelta
 
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
@@ -13,6 +15,7 @@ import pytest
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.oracle import expected_results
 from mimeograph_spark.plans.pipeline import extract
+from mimeograph_spark.schema import LINEAGE_SCHEMA
 from mimeograph_spark.sources.checkpoint import CheckpointTable, resume_filter
 from mimeograph_spark.sources.lineage import run_resumable_with_lineage
 
@@ -23,12 +26,6 @@ def corpus(spark):
     return rows, corpus_df(spark, rows)
 
 
-def _run(docs, results, run_id):
-    """One resumable increment, its lineage in a sibling table."""
-    lineage = CheckpointTable(results.path + "-lineage")
-    return run_resumable_with_lineage(docs, results, lineage, extract, run_id)
-
-
 def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
     rows, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "results"))
@@ -36,22 +33,25 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
     # "First run" processes only half the docs, then dies (simulated by
     # feeding the pipeline a partial input before the crash).
     first_half = docs.filter(F.crc32("doc_id") % 2 == 0)
-    _run(first_half, ckpt, "run-1")
+    run_resumable_with_lineage(first_half, ckpt, "run-1")
     n_first = ckpt.read(spark).count()
     assert 0 < n_first < len(rows)
 
     # Resume over the FULL input: only the missing docs run.
     todo = resume_filter(docs, ckpt)
     assert todo.count() == len(rows) - n_first
-    _run(docs, ckpt, "run-2")
+    run_resumable_with_lineage(docs, ckpt, "run-2")
 
     # Third run: nothing left, no new snapshot.
-    assert _run(docs, ckpt, "run-3") is None
+    assert run_resumable_with_lineage(docs, ckpt, "run-3") is None
     assert len(ckpt.snapshots()) == 2
-    lineage = CheckpointTable(ckpt.path + "-lineage")
-    assert [s["meta"]["results_snapshot"] for s in lineage.snapshots()] == [
-        s["id"] for s in ckpt.snapshots()
-    ]
+
+    # Every committed entry carries the lineage of its own docs.
+    for snap in ckpt.snapshots():
+        assert snap["meta"]["lineage"]
+        assert sum(r["doc_count"] for r in snap["meta"]["lineage"]) == (
+            ckpt.scan(spark, snap["dir"]).count()
+        )
 
     # Exactly-once per doc, and equal to the oracle.
     final = ckpt.read(spark)
@@ -65,10 +65,10 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path, corpus):
         assert list(row["error_pages"]) == exp["error_pages"]
 
 
-def test_uncommitted_snapshot_is_invisible(spark, tmp_path, corpus):
-    _, docs = corpus
+def test_uncommitted_snapshot_is_invisible(spark, tmp_path, corpus, monkeypatch):
+    rows, docs = corpus
     ckpt = CheckpointTable(str(tmp_path / "r2"))
-    _run(docs.limit(10), ckpt, "run-1")
+    run_resumable_with_lineage(docs.limit(10), ckpt, "run-1")
     # Simulate a crash mid-append: parquet written but no log entry
     # committed -> write a stray dir directly.
     extract(docs.limit(5)).write.mode("overwrite").parquet(
@@ -76,26 +76,48 @@ def test_uncommitted_snapshot_is_invisible(spark, tmp_path, corpus):
     )
     assert ckpt.read(spark).count() == 10  # orphan invisible
 
+    # A crash between the increment's write and its commit: the written
+    # results and their lineage are both invisible.
+    def crash(self, data_dir, meta=None):
+        raise RuntimeError("crashed before commit")
+
+    dirs = set(os.listdir(ckpt.path))
+    monkeypatch.setattr(CheckpointTable, "commit", crash)
+    with pytest.raises(RuntimeError, match="crashed before commit"):
+        run_resumable_with_lineage(docs, ckpt, "run-2")
+    monkeypatch.undo()
+    assert len(set(os.listdir(ckpt.path)) - dirs) == 1  # the written dir
+    assert [s["meta"]["run_id"] for s in ckpt.snapshots()] == ["run-1"]
+    assert ckpt.read(spark).count() == 10
+
+    # The rerun commits the rest exactly once, with its lineage.
+    snap = run_resumable_with_lineage(docs, ckpt, "run-3")
+    assert [s["meta"]["run_id"] for s in ckpt.snapshots()] == ["run-1", "run-3"]
+    assert ckpt.read(spark).count() == len(rows)
+    lineage = snap["meta"]["lineage"]
+    assert sum(r["doc_count"] for r in lineage) == len(rows) - 10
+    for r in lineage:
+        started = datetime.fromisoformat(r["started"])
+        ended = datetime.fromisoformat(r["ended"])
+        assert started.utcoffset() == ended.utcoffset() == timedelta(0)
+        assert started <= ended
+
 
 def test_lineage_accounts_for_all_docs(spark, tmp_path, corpus):
     rows, docs = corpus
     results = CheckpointTable(str(tmp_path / "res"))
-    lineage = CheckpointTable(str(tmp_path / "lin"))
-    snap = run_resumable_with_lineage(
-        docs, results, lineage, extract, run_id="run-1"
-    )
-    lin = lineage.read(spark)
-    agg = lin.agg(
-        F.sum("doc_count").alias("docs"),
-        F.sum("span_count").alias("spans"),
-        F.sum("error_count").alias("errs"),
-    ).collect()[0]
-    assert agg["docs"] == len(rows)
+    snap = run_resumable_with_lineage(docs, results, run_id="run-1")
+    lin_rows = snap["meta"]["lineage"]
+    assert [s["meta"] for s in results.snapshots()] == [snap["meta"]]
+    assert sum(r["doc_count"] for r in lin_rows) == len(rows)
     expected = expected_results(rows)
-    assert agg["spans"] == sum(len(e["spans_out"]) for e in expected.values())
-    assert agg["errs"] == sum(len(e["error_pages"]) for e in expected.values())
-    cols = set(lin.columns)
-    assert {"run_id", "stage", "partition_id", "started", "ended", "status"} <= cols
+    assert sum(r["span_count"] for r in lin_rows) == sum(
+        len(e["spans_out"]) for e in expected.values()
+    )
+    assert sum(r["error_count"] for r in lin_rows) == sum(
+        len(e["error_pages"]) for e in expected.values()
+    )
+    assert all(list(r) == LINEAGE_SCHEMA.names for r in lin_rows)
 
     # One row per part file of the committed snapshot, keyed by the
     # write task's partition number and counting that file's docs (a
@@ -108,7 +130,6 @@ def test_lineage_accounts_for_all_docs(spark, tmp_path, corpus):
         if name.startswith("part-")
     }
     assert len(parts) > 1
-    lin_rows = lin.collect()
     assert len(lin_rows) == len(parts)
     assert {r["partition_id"]: r["doc_count"] for r in lin_rows} == parts
 
@@ -132,6 +153,25 @@ def test_lineage_conforms_to_declared_schema(spark, tmp_path, corpus):
     got = [(f.name, f.dataType.simpleString()) for f in lin.schema.fields]
     want = [(f.name, f.dataType.simpleString()) for f in LINEAGE_SCHEMA.fields]
     assert got == want
+
+
+def test_resume_filter_runs_no_job(spark, tmp_path, corpus):
+    """Building the anti-join and reading the table run no Spark job:
+    the snapshots are read with their declared schema, so no job reads
+    parquet footers to infer it."""
+    _, docs = corpus
+    ckpt = CheckpointTable(str(tmp_path / "nojob"))
+    ckpt.append(extract(docs.filter(F.crc32("doc_id") % 3 == 0)))
+    ckpt.append(extract(docs.filter(F.crc32("doc_id") % 3 == 1)))
+    sc = spark.sparkContext
+    group = "resume-filter-plan-only"
+    sc.setJobGroup(group, "build the resume anti-join")
+    try:
+        resume_filter(docs, ckpt)
+        ckpt.read(spark)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_concurrent_appends_keep_all_snapshots(spark, tmp_path, corpus):

@@ -1,8 +1,8 @@
 """Streaming front-end: same results as batch, exactly-once across
 redelivered files (the queue semantics of the reference's resque
 worker pool, recast as Structured Streaming + an anti-join against the
-checkpoint's commit log), and a lineage snapshot for every results
-snapshot a micro-batch commits.
+checkpoint's commit log), and lineage in every results log entry a
+micro-batch commits.
 """
 
 import pyspark.sql.functions as F
@@ -23,9 +23,8 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
     df.filter(F.crc32("doc_id") % 2 == 1).write.mode("append").parquet(input_dir)
 
     ckpt = CheckpointTable(str(tmp_path / "results"))
-    lineage_dir = str(tmp_path / "lineage")
     q = run_stream(
-        spark, input_dir, ckpt, lineage_dir, str(tmp_path / "stream_ckpt"),
+        spark, input_dir, ckpt, str(tmp_path / "stream_ckpt"),
         available_now=True,
     )
     q.awaitTermination(120)
@@ -39,30 +38,26 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
         assert [s.asDict() for s in row["spans_out"]] == exp["spans_out"]
         assert row["status"] == exp["status"]
 
-    # Each micro-batch's results snapshot has one lineage snapshot,
-    # under its own run id, and the lineage accounts for every doc.
-    lineage = CheckpointTable(lineage_dir)
-    lin_snaps = lineage.snapshots()
-    assert [s["meta"]["results_snapshot"] for s in lin_snaps] == [
-        s["id"] for s in ckpt.snapshots()
-    ]
-    run_ids = [s["meta"]["run_id"] for s in lin_snaps]
+    # Each micro-batch's results entry carries its lineage, under its
+    # own run id, and the lineage accounts for every doc.
+    snaps = ckpt.snapshots()
+    run_ids = [s["meta"]["run_id"] for s in snaps]
     assert len(set(run_ids)) == len(run_ids)
     assert all(r.startswith("stream-") for r in run_ids)
-    lin = lineage.read(spark)
-    assert lin.agg(F.sum("doc_count")).first()[0] == len(rows)
-    assert {r["run_id"] for r in lin.select("run_id").collect()} == set(run_ids)
-    n_results, n_lineage = len(ckpt.snapshots()), len(lin_snaps)
+    for s in snaps:
+        assert {r["run_id"] for r in s["meta"]["lineage"]} == {s["meta"]["run_id"]}
+    lin = [r for s in snaps for r in s["meta"]["lineage"]]
+    assert sum(r["doc_count"] for r in lin) == len(rows)
+    n_results = len(snaps)
 
     # Redelivery: run a SECOND stream over the same input with a FRESH
     # streaming checkpoint (simulating lost stream state / replay).
     # The anti-join against committed snapshots must keep results
-    # exactly-once, and commit neither a results nor a lineage snapshot.
+    # exactly-once, and commit nothing.
     q2 = run_stream(
-        spark, input_dir, ckpt, lineage_dir, str(tmp_path / "stream_ckpt2"),
+        spark, input_dir, ckpt, str(tmp_path / "stream_ckpt2"),
         available_now=True,
     )
     q2.awaitTermination(120)
     assert ckpt.read(spark).count() == len(rows)
     assert len(ckpt.snapshots()) == n_results
-    assert len(lineage.snapshots()) == n_lineage

@@ -1,15 +1,13 @@
 """The deployed entry point: `scripts/submit_extract.py` run against the
 `--py-files` artifact alone (no checkout on the path), twice over the
-same input.  The artifact must be self-contained, the first run's
-lineage must account for every doc, and the re-run must commit nothing
-new to either table (exactly-once across runs)."""
+same input.  The artifact must be self-contained, the lineage in the
+first run's results log entry must account for every doc, and the
+re-run must commit nothing (exactly-once across runs)."""
 
 import json
 import os
 import subprocess
 import sys
-
-import pyspark.sql.functions as F
 
 from mimeograph_spark.corpus import corpus_df, generate_rows
 from mimeograph_spark.sources.checkpoint import CheckpointTable
@@ -25,7 +23,6 @@ def _submit(tmp_path, zip_path, input_dir, run_id):
             os.path.join(REPO, "scripts", "submit_extract.py"),
             "--input", input_dir,
             "--results", str(tmp_path / "results"),
-            "--lineage", str(tmp_path / "lineage"),
             "--run-id", run_id,
         ],
         cwd=tmp_path,
@@ -51,15 +48,14 @@ def test_submit_extract_from_zip_is_exactly_once(spark, tmp_path):
     first = _submit(tmp_path, zip_path, input_dir, "run-1")
     assert first["new_snapshot"] is not None
     assert first["docs_total"] == len(rows)
-    lineage = CheckpointTable(str(tmp_path / "lineage"))
-    assert [s["meta"]["results_snapshot"] for s in lineage.snapshots()] == [
-        first["new_snapshot"]
-    ]
-    lin = lineage.read(spark)
-    assert lin.agg(F.sum("doc_count")).first()[0] == len(rows)
+    results = CheckpointTable(str(tmp_path / "results"))
+    snaps = results.snapshots()
+    assert [s["id"] for s in snaps] == [first["new_snapshot"]]
+    lineage = snaps[0]["meta"]["lineage"]
+    assert sum(r["doc_count"] for r in lineage) == len(rows)
 
     second = _submit(tmp_path, zip_path, input_dir, "run-2")
     assert second["new_snapshot"] is None
     assert second["docs_total"] == first["docs_total"]
     assert second["snapshots"] == first["snapshots"]
-    assert len(lineage.snapshots()) == 1
+    assert len(results.snapshots()) == 1
