@@ -20,14 +20,8 @@ from pyspark.sql import functions as F
 
 from mimeograph_spark import sql_oracles
 from mimeograph_spark.corpus import derive_documents
-from mimeograph_spark.operators.classify import (
-    HAS_NATIVE,
-    N_MEDIA,
-    with_doc_class,
-)
-from mimeograph_spark.operators.ocr import ocr_page_udf
-from mimeograph_spark.plans.pipeline import assemble_interleaved, extract_flat
-from mimeograph_spark.schema import KIND_MEDIA
+from mimeograph_spark.operators.classify import HAS_NATIVE, N_MEDIA, with_doc_class
+from mimeograph_spark.plans import pipeline
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +32,7 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full chain: classify -> branch -> OCR (pandas UDF) -> stitch."""
-    return extract_flat(_documents(spark, sf_dir))
+    return pipeline.extract_flat(_documents(spark, sf_dir))
 
 
 def q_classify_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,23 +62,21 @@ def q_span_kind_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ocr_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-level OCR fan-out: every media page of OCR-branch docs with
-    its recognized text (tesseract stage, mimeograph.coffee:226-261)."""
-    docs = with_doc_class(_documents(spark, sf_dir))
-    pages = (
-        docs.filter(~F.col(HAS_NATIVE))
+    its recognized text (tesseract stage, mimeograph.coffee:226-261),
+    one row per page of extract's page stage."""
+    # inline_outer: a plain inline gets an inferred size(_pages) > 0
+    # filter below the projection, which then runs the OCR UDF twice
+    return (
+        pipeline.ocr_pages(_documents(spark, sf_dir))
+        .select("doc_id", F.inline_outer("_pages"))
+        .filter(F.col("kind").isNotNull())
         .select(
             "doc_id",
-            F.explode(
-                F.filter("spans", lambda s: s["kind"] == KIND_MEDIA)
-            ).alias("s"),
-        )
-        .select(
-            "doc_id",
-            F.col("s.offset").alias("page_offset"),
-            F.col("s.media_ref").alias("media_ref"),
+            F.col("offset").alias("page_offset"),
+            "media_ref",
+            F.col("text").alias("ocr_text"),
         )
     )
-    return pages.withColumn("ocr_text", ocr_page_udf("media_ref"))
 
 
 def q_interleaved_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,7 +87,7 @@ def q_interleaved_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside in the same order for the loader to resolve.  Pure
     array expressions per row (sort, indexed transform, filter) —
     zero shuffle, zero Python."""
-    return assemble_interleaved(_documents(spark, sf_dir))
+    return pipeline.assemble_interleaved(_documents(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -8,10 +8,10 @@ Arrow/pandas UDFs over tables of interleaved text+media documents.
 
 Not a port: the reference is a Redis-queue job chain spawning external
 binaries (pdftotext/pdftk/convert/tesseract); this engine expresses the
-same dataflow semantics with the public PySpark DataFrame API, letting
-Catalyst/Tungsten pick physical strategies and handling scale concerns
-(skew salting, shuffle-partition tuning, checkpoint resume, lineage)
-explicitly.
+same dataflow semantics with the public PySpark DataFrame API: one
+narrow plan per input (classify, per-doc OCR through one Arrow UDF,
+ordered stitch), letting Catalyst/Tungsten pick physical strategies,
+plus checkpoint resume and lineage for the runs.
 """
 
 __version__ = "0.1.0"

@@ -5,10 +5,10 @@ The reference's core value is "OCR only when necessary": after
 — no split/convert/OCR at all.  The branch is per-DOCUMENT, never
 per-page (src/mimeograph.coffee:542-547).
 
-Here that's a narrow, no-shuffle plan: `exists()` over the span array
-computes the predicate in whole-stage codegen; the native branch
-(plans/pipeline.py) projects ordered text spans with array functions
-only.
+`with_doc_class` computes that predicate with `exists()` over the span
+array, trimming as JS `String.prototype.trim` does (`JS_WHITESPACE`).
+`sort_spans_by_offset` is the one span order: the OCR page stage
+(`plans/pipeline.ocr_pages`) and the interleaved assembly both use it.
 """
 
 from __future__ import annotations
@@ -16,18 +16,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import KIND_MEDIA, KIND_TEXT
+from ..schema import JS_WHITESPACE, KIND_MEDIA, KIND_TEXT
 
 HAS_NATIVE = "has_native"
 N_MEDIA = "n_media"
 
 
 def _is_native_text(s: Column) -> Column:
-    # JS String.trim() strips ALL whitespace (src/mimeograph.coffee:544);
-    # Spark's trim() strips spaces only, so use a \s regex instead.
-    return (s["kind"] == KIND_TEXT) & (
-        F.length(F.regexp_replace(F.coalesce(s["text"], F.lit("")), r"\s", ""))
-        > 0
+    # a text span that JS trim() leaves non-empty (src/mimeograph.coffee:544)
+    return (s["kind"] == KIND_TEXT) & F.coalesce(s["text"], F.lit("")).rlike(
+        f"[^{JS_WHITESPACE}]"
     )
 
 

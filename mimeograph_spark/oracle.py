@@ -6,9 +6,9 @@ used by the test suite to assert exact span-sequence equality
 reference's eyeball-the-output testing (test/_testutils.coffee:1-5).
 
 Semantics mirrored from the reference:
-- doc-level OCR short-circuit: any text span with trimmed non-empty
-  text means the document's output is its ordered text spans and no OCR
-  runs at all (src/mimeograph.coffee:542-547);
+- doc-level OCR short-circuit: any text span that JS trim
+  (`JS_WHITESPACE`) leaves non-empty means the document's output is its
+  ordered text spans and no OCR runs at all (src/mimeograph.coffee:542-547);
 - otherwise each media span is OCR'd; pages whose hOCR is invalid land
   in error_pages but the document continues (src/mimeograph.coffee:
   729-759);
@@ -21,14 +21,17 @@ Semantics mirrored from the reference:
 from __future__ import annotations
 
 from .operators.hocr import ocr_text_closed_form
-from .schema import KIND_MEDIA, KIND_OCR, KIND_TEXT, STATUS_COMPLETE, STATUS_FAILED
+from .schema import (
+    JS_WHITESPACE, KIND_MEDIA, KIND_OCR, KIND_TEXT, STATUS_COMPLETE, STATUS_FAILED,
+)
 
 
 def expected_result(doc_id: str, spans: list[dict]) -> dict:
     """Compute the expected pipeline output row for one document."""
     ordered = sorted(spans, key=lambda s: s["offset"])
     has_native = any(
-        s["kind"] == KIND_TEXT and (s["text"] or "").strip() for s in ordered
+        s["kind"] == KIND_TEXT and (s["text"] or "").strip(JS_WHITESPACE)
+        for s in ordered
     )
     if has_native:
         out = [

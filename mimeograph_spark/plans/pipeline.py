@@ -3,18 +3,19 @@
 lastextract, src/mimeograph.coffee:436-444) as one declarative Spark
 plan, the same for every input: one scan, no exchange.
 
-    read documents -> classify + native projection + per-doc OCR,
-                      fused into one narrow projection
+    read documents -> ocr_pages: classify + native projection + per-doc
+                      OCR, fused into one narrow projection
+                   -> extract: stitch.ocr_outcome per doc
 
-The OCR UDF receives an EMPTY ref array for native docs, so the
-doc-level short-circuit (src/mimeograph.coffee:542-547) costs nothing
-in Python.  A scanned doc of any size crosses the Arrow boundary once,
-as its offset-ordered ref array; its pages are already together in one
-task, so ordering them needs no shuffle.  The reference fans a doc's
-pages out over its worker pool (:562-566); here the pages of one doc
-run in the task that scanned it, and docs spread over tasks.  Python
-worker memory stays bounded by the Arrow batch caps in
-`session.APP_CONF`.
+`ocr_pages` is the one page stage: it picks a doc's pages (none when
+the doc has native text, src/mimeograph.coffee:542-547, so a native doc
+sends an EMPTY ref array) and OCRs them in one `ocr_refs_udf` call per
+doc.  A scanned doc of any size crosses the Arrow boundary once, as its
+offset-ordered ref array; its pages are already together in one task,
+so ordering them needs no shuffle.  The reference fans a doc's pages
+out over its worker pool (:562-566); here the pages of one doc run in
+the task that scanned it, and docs spread over tasks.  Python worker
+memory stays bounded by the Arrow batch caps in `session.APP_CONF`.
 """
 
 from __future__ import annotations
@@ -30,16 +31,17 @@ from ..operators.classify import (
 )
 from ..operators.ocr import ocr_refs_udf
 from ..operators.stitch import ocr_outcome
-from ..schema import KIND_MEDIA, KIND_TEXT, SPAN_TYPE
+from ..schema import KIND_MEDIA, KIND_OCR, KIND_TEXT, SPAN_TYPE
 
 # Mega-doc page count for perfbench's per-layer trace; extract does not read it.
 DEFAULT_PAGE_THRESHOLD = 512
 
 
-def extract(documents: DataFrame) -> DataFrame:
-    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA): native
-    and per-doc OCR docs in one narrow pass.  Runs no Spark job until
-    the caller's action."""
+def ocr_pages(documents: DataFrame) -> DataFrame:
+    """documents (DOCUMENTS_SCHEMA) -> `doc_id`, `has_native`,
+    `_native` (the doc's text spans in offset order) and `_pages` (its
+    OCR'd pages in offset order: span structs of kind `ocr`, NULL text
+    for a page error, and an empty array for a native doc)."""
     classified = with_doc_class(documents)
     native_sorted = sort_spans_by_offset(
         F.filter("spans", lambda s: s["kind"] == KIND_TEXT)
@@ -61,11 +63,10 @@ def extract(documents: DataFrame) -> DataFrame:
         )
     )
     # Only an array<string> of refs crosses the Arrow boundary; span
-    # structs are rebuilt in whole-stage codegen via zip_with.  Native
-    # docs contribute an empty array -> near-zero Python cost.
+    # structs are rebuilt in whole-stage codegen via zip_with.
     staged = classified.select(
         "doc_id",
-        F.col(HAS_NATIVE).alias(HAS_NATIVE),
+        HAS_NATIVE,
         native_out.alias("_native"),
         media_sorted.alias("_media"),
     ).withColumn(
@@ -76,22 +77,24 @@ def extract(documents: DataFrame) -> DataFrame:
         F.col("_media"),
         F.col("_texts"),
         lambda m, t: F.struct(
-            F.lit("ocr").alias("kind"),
+            F.lit(KIND_OCR).alias("kind"),
             t.alias("text"),
             m["media_ref"].alias("media_ref"),
             m["offset"].alias("offset"),
         ),
     )
-    # staged as a real column so ocr_outcome's three reads share one
-    # zip_with struct rebuild per row; native docs have no pages, so
-    # their status and error_pages come out complete and empty
+    return staged.select("doc_id", HAS_NATIVE, "_native", zipped.alias("_pages"))
+
+
+def extract(documents: DataFrame) -> DataFrame:
+    """documents (DOCUMENTS_SCHEMA) -> results (RESULT_SCHEMA): the
+    page stage, then each doc's outcome.  Runs no Spark job until the
+    caller's action."""
+    # `_pages` is a column of the stage, so ocr_outcome's three reads
+    # share one zip_with struct rebuild per row; a native doc has no
+    # pages, so its status and error_pages come out complete and empty
     spans, status, error_pages = ocr_outcome(F.col("_pages"))
-    return staged.select(
-        "doc_id",
-        F.col(HAS_NATIVE).alias(HAS_NATIVE),
-        F.col("_native"),
-        zipped.alias("_pages"),
-    ).select(
+    return ocr_pages(documents).select(
         "doc_id",
         F.when(F.col(HAS_NATIVE), F.col("_native"))
         .otherwise(spans)
@@ -126,43 +129,34 @@ def assemble_interleaved(docs: DataFrame) -> DataFrame:
     the same order for the loader to resolve.  Pure array expressions
     per row — zero shuffle, zero Python; the slice-filter media
     ordinal is O(spans^2) per doc, bounded by the span cap."""
-    sp = F.array_sort(
-        F.transform(
-            "spans",
-            lambda s: F.struct(
-                s["offset"].alias("o"),
-                s["kind"].alias("k"),
-                s["text"].alias("t"),
-                s["media_ref"].alias("m"),
-            ),
-        )
+    staged = docs.select(
+        "doc_id", sort_spans_by_offset(F.col("spans")).alias("_sp")
     )
-    staged = docs.select("doc_id", sp.alias("_sp"))
+
+    def is_media(s):
+        return s["kind"] == KIND_MEDIA
+
     pieces = F.transform(
         "_sp",
         lambda s, i: F.when(
-            s["k"] == "text", F.coalesce(s["t"], F.lit(""))
+            s["kind"] == KIND_TEXT, F.coalesce(s["text"], F.lit(""))
         ).otherwise(
             F.concat(
                 F.lit("<|media_"),
-                F.size(
-                    F.filter(
-                        F.slice("_sp", 1, i), lambda x: x["k"] == "media"
-                    )
-                ).cast("string"),
+                F.size(F.filter(F.slice("_sp", 1, i), is_media)).cast("string"),
                 F.lit("|>"),
             )
         ),
     )
-    media = F.filter("_sp", lambda s: s["k"] == "media")
+    media = F.filter("_sp", is_media)
     return staged.select(
         "doc_id",
         F.array_join(pieces, " ").alias("example_text"),
-        F.array_join(F.transform(media, lambda s: s["m"]), ",").alias(
+        F.array_join(F.transform(media, lambda s: s["media_ref"]), ",").alias(
             "media_refs_csv"
         ),
         F.size(media).cast("long").alias("n_media"),
-        F.size(F.filter("_sp", lambda s: s["k"] == "text"))
+        F.size(F.filter("_sp", lambda s: s["kind"] == KIND_TEXT))
         .cast("long")
         .alias("n_text"),
     )

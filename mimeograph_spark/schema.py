@@ -77,3 +77,14 @@ STATUS_FAILED = "failed"
 KIND_TEXT = "text"
 KIND_MEDIA = "media"
 KIND_OCR = "ocr"
+
+# What JS String.prototype.trim strips (src/mimeograph.coffee:544):
+# ECMA-262 WhiteSpace (TAB, VT, FF, U+FEFF and every Zs character) plus
+# LineTerminator (LF, CR, U+2028, U+2029).  A text span is native text
+# iff it holds a character outside this set; the Spark predicate, the
+# Python oracle and the DuckDB oracle all read it.
+JS_WHITESPACE = (
+    "\t\n\x0b\x0c\r\u2028\u2029\ufeff"
+    " \xa0\u1680\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007"
+    "\u2008\u2009\u200a\u202f\u205f\u3000"
+)

@@ -1,9 +1,9 @@
 """SparkSession builder with scale-aware defaults.
 
 Local testing runs on local[N]; the same knobs are what you would set
-on a real 1000-executor cluster (AQE on, shuffle partitions sized to
-the stage, Arrow batches bounded so a mega-page document cannot blow an
-executor's Python worker memory).
+on a real 1000-executor cluster (shuffle partitions sized to the
+stage, Arrow batches bounded so a mega-page document cannot blow an
+executor's Python worker memory).  AQE is on by Spark's own default.
 """
 
 from __future__ import annotations
@@ -55,10 +55,6 @@ ARROW_MAX_RECORDS = 4096
 # App-level settings, applied by get_spark and by the spark-submit
 # entry point alike; the launcher owns master, heap, JVM options and UI.
 APP_CONF = {
-    # AQE: runtime coalescing + skew-join splitting for free.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
     # Session TZ pinned to UTC so results compare bit-exactly with

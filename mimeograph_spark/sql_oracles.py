@@ -11,15 +11,17 @@ from __future__ import annotations
 
 from .corpus import DERIVE_SPANS_SQL
 from .operators.hocr import ocr_text_sql
+from .schema import JS_WHITESPACE
 
 _OCR_TEXT = ocr_text_sql("s.media_ref")
 
-# Per-doc branch flags over the derived span rows.
-_FLAGS = r"""
+# Per-doc branch flags over the derived span rows; native text is a
+# character outside JS_WHITESPACE, as in JS trim().
+_FLAGS = f"""
   flags AS (
     SELECT doc_id,
            coalesce(bool_or(kind = 'text'
-                    AND coalesce(regexp_replace(text, '\s', '', 'g'), '') <> ''),
+                    AND regexp_matches(coalesce(text, ''), '[^{JS_WHITESPACE}]')),
                     FALSE) AS has_native,
            count(*) FILTER (WHERE kind = 'media') AS n_media
     FROM span_rows

@@ -46,10 +46,12 @@ def main() -> int:
         .getOrCreate()
     )
 
+    from mimeograph_spark.schema import DOCUMENTS_SCHEMA
     from mimeograph_spark.sources.checkpoint import CheckpointTable
     from mimeograph_spark.sources.lineage import run_resumable_with_lineage
 
-    docs = spark.read.parquet(args.input)
+    # the declared schema: a bare read runs a schema-inference job
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(args.input)
     results = CheckpointTable(args.results)
     snap = run_resumable_with_lineage(docs, results, run_id=args.run_id)
     done = results.read(spark)

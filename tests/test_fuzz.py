@@ -14,7 +14,12 @@ from mimeograph_spark.corpus import corpus_df
 from mimeograph_spark.oracle import expected_results
 from mimeograph_spark.plans.pipeline import extract
 
-TEXT_POOL = ["", " ", "\t \n", "word", "two words here", " padded ", None]
+# NBSP, U+3000 and U+FEFF are JS whitespace; U+001C is not, though
+# Python's bare str.strip() strips it
+TEXT_POOL = [
+    "", " ", "\t \n", "word", "two words here", " padded ", None,
+    "\xa0", "\u3000", "\ufeff", "\x1c",
+]
 
 span_st = st.tuples(
     st.sampled_from(["text", "media"]),
