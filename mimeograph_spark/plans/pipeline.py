@@ -63,7 +63,8 @@ def ocr_pages(documents: DataFrame) -> DataFrame:
         )
     )
     # Only an array<string> of refs crosses the Arrow boundary; span
-    # structs are rebuilt in whole-stage codegen via zip_with.
+    # structs are rebuilt in the JVM by zip_with, which the generated
+    # stage evaluates interpreted (ZipWith is CodegenFallback).
     staged = classified.select(
         "doc_id",
         HAS_NATIVE,
